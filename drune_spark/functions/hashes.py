@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from drune_spark.functions.text import let
+
 # Mersenne prime 2^61 - 1: keeps (a*x+b) mod p within long range when the
 # multiplication is done in the modular ring below.
 MERSENNE_P = (1 << 61) - 1
@@ -38,20 +40,27 @@ def char_shingles(col: Column, k: int = 5) -> Column:
 def word_shingles(tokens_col: Column, k: int = 3) -> Column:
     """Distinct word k-gram shingles from a token array. Docs with fewer
     than k tokens yield an empty array (guarded: Spark's ``sequence``
-    would otherwise count *down* for a negative span)."""
-    n = F.size(tokens_col) - F.lit(k - 1)
-    idx = F.when(n >= 1, F.sequence(F.lit(0), n - 1)).otherwise(
-        F.expr("cast(array() as array<int>)")
-    )
-    # element_at concat beats slice+concat_ws ~4× (no sub-array allocation).
-    return F.array_distinct(
-        F.transform(
-            idx,
-            lambda i: F.concat_ws(
-                " ", *[F.element_at(tokens_col, i + j + 1) for j in range(k)]
-            ),
+    would otherwise count *down* for a negative span). The token array
+    is let-bound, so the per-shingle lambda reads a variable instead of
+    re-running the tokenizer k times per shingle."""
+
+    def shingles(toks: Column) -> Column:
+        n = F.size(toks) - F.lit(k - 1)
+        idx = F.when(n >= 1, F.sequence(F.lit(0), n - 1)).otherwise(
+            F.expr("cast(array() as array<int>)")
         )
-    )
+        # element_at concat beats slice+concat_ws ~4× (no sub-array
+        # allocation).
+        return F.array_distinct(
+            F.transform(
+                idx,
+                lambda i: F.concat_ws(
+                    " ", *[F.element_at(toks, i + j + 1) for j in range(k)]
+                ),
+            )
+        )
+
+    return let(tokens_col, shingles)
 
 
 def rolling_min_fingerprint(col: Column, k: int = 8) -> Column:

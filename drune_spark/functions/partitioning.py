@@ -83,11 +83,18 @@ def key_skew_profile(df: DataFrame, key_col: str, k: int = 20) -> DataFrame:
 
 
 def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+    """Round-robin ``df`` to at least ``min_partitions`` (default: the
+    session's default parallelism) when its scan is narrower. Decided
+    from the plan; runs no Spark job. An adaptive plan already has an
+    exchange, which AQE sizes, so it is returned as is: asking its RDD
+    for a partition count would execute every query stage, and the
+    next action would run them again."""
     spark = df.sparkSession
     target = min_partitions or spark.sparkContext.defaultParallelism
-    # getNumPartitions on the logical plan is cheap (no job); only
-    # repartition when the scan is narrower than the target.
     try:
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            return df
         current = df.rdd.getNumPartitions()
     except Exception:
         current = 1

@@ -8,6 +8,8 @@ n_chars) but generic to any string column.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -32,6 +34,20 @@ TOKEN_REGEX = r"[A-Za-z0-9]+|[^A-Za-z0-9\s]"  # BPE-ish: words + single punct ma
 def normalize_text(col: Column) -> Column:
     """Lowercase + collapse whitespace — canonical form for fingerprints."""
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
+
+
+def let(value: Column, body: Callable[[Column], Column]) -> Column:
+    """Evaluate ``value`` once per row and ``body`` over it:
+    ``transform(array(value), body)[0]``.
+
+    Inside ``body`` every reference to ``value`` is a lambda variable,
+    which no Catalyst rule copies. A projected alias gives no such
+    guarantee: PushDownPredicates substitutes it into every reference
+    of a pushed filter, and CollapseProject into a single reference —
+    HOF lambdas included, where the copy then runs once per array
+    element. Bind any expensive value (a regex chain, a split) that a
+    lambda or several metrics read."""
+    return F.transform(F.array(value), body)[0]
 
 
 def tokens(col: Column) -> Column:
@@ -161,16 +177,17 @@ def word_ngrams(toks: Column, n: int) -> Column:
     tokens. (Guarded: Spark's sequence(1, k) counts DOWN for k < 1.)"""
     if n == 1:
         return toks
-    sz = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(1), sz - (n - 1)),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, i + j) for j in range(n)]
-        ),
-    )
-    return F.when(sz >= n, grams).otherwise(
-        F.array().cast("array<string>")
-    )
+
+    def grams(w: Column) -> Column:
+        sz = F.size(w)
+        return F.when(sz >= n, F.transform(
+            F.sequence(F.lit(1), sz - (n - 1)),
+            lambda i: F.concat_ws(
+                " ", *[F.element_at(w, i + j) for j in range(n)]
+            ),
+        )).otherwise(F.array().cast("array<string>"))
+
+    return let(toks, grams)
 
 
 def token_char_count(toks: Column) -> Column:
@@ -221,9 +238,9 @@ def top_ngram_char_frac_of(
     """Fraction of token characters covered by the single most-covering
     n-gram (count * gram char length / total token chars), capped at 1.0
     since overlapping occurrences are position-counted. Defined as a max
-    over grams of a number — no tie-break needed. Pass MATERIALIZED
-    ``grams``/``chars`` columns (from a prior projection) so the arrays
-    are built once per row, not once per reference."""
+    over grams of a number — no tie-break needed. ``grams`` and
+    ``chars`` are each read twice: pass let-bound values (see
+    ``repetition_metrics``) so they are built once per row."""
     best = _run_length_fold(grams, overhead, "max_cover")
     return F.when(
         (F.size(grams) > 0) & (chars > 0),
@@ -236,7 +253,7 @@ def dup_ngram_char_frac_of(
 ) -> Column:
     """Fraction of token characters sitting inside n-grams that occur
     more than once in the doc (position-weighted, capped at 1.0). Same
-    materialized-column contract as ``top_ngram_char_frac_of``."""
+    let-bound contract as ``top_ngram_char_frac_of``."""
     total = _run_length_fold(grams, overhead, "dup_chars")
     return F.when(
         (F.size(grams) > 0) & (chars > 0),
@@ -244,17 +261,46 @@ def dup_ngram_char_frac_of(
     ).otherwise(F.lit(0.0))
 
 
-def top_ngram_char_frac(toks: Column, n: int) -> Column:
-    """Convenience form over a raw token column (builds the gram array
-    inline — fine for single-metric use; batch callers should
-    materialize, see operators/text_analysis.py)."""
-    return top_ngram_char_frac_of(
-        word_ngrams(toks, n), token_char_count(toks), n - 1
-    )
+def repetition_metrics(col: Column, top_unigram: bool = False) -> Column:
+    """Gopher repetition and shape metrics of one document as ONE
+    let-bound struct: trimmed text → tokens → chars, 2-grams, 3-grams →
+    metrics. Each stage is evaluated once per row and every later read
+    is a lambda variable, so no optimizer rule can copy the tokenizer
+    (or whatever produced ``col``, e.g. a redaction chain) into the
+    per-gram lambdas. Fields, all rounded to 6 places except the count:
+    n_tokens, avg_token_len, dup_token_frac, [top_unigram_char_frac,]
+    top_2gram_char_frac, dup_3gram_char_frac. ``n_tokens`` is
+    ``token_count(col)``; the tokens are ``tokens(col)``."""
 
+    def metrics(w: Column, s: Column) -> Column:
+        n, chars = s["n"], s["chars"]
+        fields = [
+            n.alias("n_tokens"),
+            F.when(n > 0, F.round(chars.cast("double") / n, 6))
+             .otherwise(F.lit(0.0)).alias("avg_token_len"),
+            F.round(dup_token_frac(w), 6).alias("dup_token_frac"),
+        ]
+        if top_unigram:
+            fields.append(F.round(top_ngram_char_frac_of(w, chars, 0), 6)
+                          .alias("top_unigram_char_frac"))
+        return F.struct(
+            *fields,
+            F.round(top_ngram_char_frac_of(s["g2"], chars, 1), 6)
+             .alias("top_2gram_char_frac"),
+            F.round(dup_ngram_char_frac_of(s["g3"], chars, 2), 6)
+             .alias("dup_3gram_char_frac"),
+        )
 
-def dup_ngram_char_frac(toks: Column, n: int) -> Column:
-    """Convenience form — see ``top_ngram_char_frac``."""
-    return dup_ngram_char_frac_of(
-        word_ngrams(toks, n), token_char_count(toks), n - 1
-    )
+    return let(F.trim(col), lambda tt: let(
+        F.split(tt, r"\s+"),
+        lambda w: let(
+            F.struct(
+                F.when(F.length(tt) == 0, F.lit(0))
+                 .otherwise(F.size(w)).alias("n"),
+                token_char_count(w).alias("chars"),
+                word_ngrams(w, 2).alias("g2"),
+                word_ngrams(w, 3).alias("g3"),
+            ),
+            lambda s: metrics(w, s),
+        ),
+    ))

@@ -86,13 +86,9 @@ def shingle_cells(
     position-explode form — the one shingle builder every shingle
     consumer should share.
 
-    ``word_shingles``' transform evaluates INTERPRETED and its lambda
-    references the ``tokens(...)`` split expression, so HOF evaluation
-    re-runs the whole tokenize per element_at reference — k× per
-    shingle per doc (the r5 HOF rule). The r10 profile measured the
-    decontaminate benchmark+corpus shingle builds at 65.6 + 23.9 task-
-    seconds at sf0.1; this form is fully whole-stage-codegen (split
-    runs once per row, each shingle is k array reads).
+    ``word_shingles``' transform evaluates INTERPRETED, outside
+    codegen (the r5 HOF rule); this form is fully whole-stage-codegen
+    (split runs once per row, each shingle is k array reads).
 
     Value parity with explode(word_shingles(...)): concat_ws over the
     same 1-based positions, and DISTINCT on (doc, shingle) ==
@@ -1442,22 +1438,21 @@ def connected_components(
                 if rb < ra:
                     ra, rb = rb, ra
                 parent[rb] = ra
-        from pyspark.sql.types import StructField, StructType
-
-        node_type = both.schema["src"].dataType
+        node_type = both.schema["src"].dataType.simpleString()
         nontrivial = [
             (n, root)
             for n in {r[0] for r in rows}
             if (root := _find(n)) != n
         ]
         from drune_spark.functions.partitioning import local_frame
+        # A DDL schema lets local_frame build a literal frame, whose
+        # size estimate is its real size. The createDataFrame fallback's
+        # estimate is the default (huge): a caller's join over this
+        # result would plan a sort-merge join that AQE demotes to a
+        # broadcast only if this side's stage finishes first, a timing
+        # race that makes the shuffle volume vary between runs.
         small = local_frame(
-            spark,
-            nontrivial,
-            StructType([
-                StructField("node", node_type, False),
-                StructField("label", node_type, False),
-            ]),
+            spark, nontrivial, f"node {node_type}, label {node_type}"
         )
         return (
             all_nodes.select(

@@ -60,53 +60,23 @@ def fingerprints(df: DataFrame, text_col: str, id_col: str, k: int = 8) -> DataF
 def repetition_profile(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Gopher-style repetition metrics per document (word-level: this
     corpus has no newlines; line-level metrics are the same machinery
-    over split(text, '\\n')). All narrow JVM array ops — one pass.
+    over split(text, '\\n')). One let-bound struct per document
+    (``repetition_metrics``, shared with ``gopher_filter``) — one pass.
 
     Reference heuristic set: Rae et al. 2021 (Gopher) app. A1.1;
     reimagined as Spark column arithmetic (no counterpart in
     /root/reference — driver-mandated LLM-data extension).
     """
-    from drune_spark.functions.text import (
-        dup_ngram_char_frac_of,
-        dup_token_frac,
-        token_char_count,
-        token_count,
-        tokens,
-        top_ngram_char_frac_of,
-        word_ngrams,
-    )
     from drune_spark.functions.partitioning import fan_out
+    from drune_spark.functions.text import repetition_metrics
 
     # Interpreted-HOF work is CPU-bound per row: widen single-split
     # inputs first (on a real cluster parallelism comes from file
     # splits; locally one parquet file = one task).
-    t = F.col(text_col)
-    staged = fan_out(df.select(F.col(id_col), t)).select(
-        F.col(id_col),
-        token_count(t).alias("n_tokens"),
-        tokens(t).alias("__w"),
-    ).select(
-        # second stage: gram arrays built ONCE per row (CollapseProject
-        # never inlines expensive multi-referenced aliases)
-        F.col(id_col),
-        "n_tokens",
-        "__w",
-        token_char_count(F.col("__w")).alias("__chars"),
-        word_ngrams(F.col("__w"), 2).alias("__g2"),
-        word_ngrams(F.col("__w"), 3).alias("__g3"),
-    )
-    w, chars = F.col("__w"), F.col("__chars")
-    return staged.select(
-        F.col(id_col),
-        F.col("n_tokens"),
-        F.round(dup_token_frac(w), 6).alias("dup_token_frac"),
-        F.round(top_ngram_char_frac_of(w, chars, 0), 6)
-         .alias("top_unigram_char_frac"),
-        F.round(top_ngram_char_frac_of(F.col("__g2"), chars, 1), 6)
-         .alias("top_2gram_char_frac"),
-        F.round(dup_ngram_char_frac_of(F.col("__g3"), chars, 2), 6)
-         .alias("dup_3gram_char_frac"),
-    )
+    m = repetition_metrics(F.col(text_col), top_unigram=True)
+    return fan_out(df.select(F.col(id_col), F.col(text_col))).select(
+        F.col(id_col), m.alias("__m")
+    ).select(id_col, "__m.*").drop("avg_token_len")
 
 
 def gopher_filter(
@@ -123,56 +93,29 @@ def gopher_filter(
     """Document-quality gate combining the repetition + shape heuristics:
     returns (id, n_tokens, metrics..., keep). Filter on ``keep`` to get
     the retained corpus; emitting the flag keeps both populations
-    auditable (and oracle-checkable). Staged narrow selects — no join,
-    no data-dependent shuffle (fan_out round-robins single-split inputs
-    for the CPU-bound gram folds; see repetition_profile)."""
-    from drune_spark.functions.text import (
-        dup_ngram_char_frac_of,
-        dup_token_frac,
-        token_char_count,
-        token_count,
-        tokens,
-        top_ngram_char_frac_of,
-        word_ngrams,
-    )
+    auditable (and oracle-checkable). No join, no data-dependent shuffle
+    (fan_out round-robins single-split inputs for the CPU-bound gram
+    folds). The flag sits in the same let-bound struct as the metrics,
+    so a filter on ``keep`` pushed down to the scan carries one copy of
+    the text expression, not one per metric reference."""
     from drune_spark.functions.partitioning import fan_out
+    from drune_spark.functions.text import let, repetition_metrics
 
-    t = F.col(text_col)
-    staged = fan_out(df.select(F.col(id_col), t)).select(
-        F.col(id_col),
-        token_count(t).alias("n_tokens"),
-        tokens(t).alias("__w"),
-    ).select(
-        F.col(id_col),
-        "n_tokens",
-        "__w",
-        token_char_count(F.col("__w")).alias("__chars"),
-        word_ngrams(F.col("__w"), 2).alias("__g2"),
-        word_ngrams(F.col("__w"), 3).alias("__g3"),
-    )
-    w, chars = F.col("__w"), F.col("__chars")
-    out = staged.select(
-        F.col(id_col),
-        F.col("n_tokens"),
-        F.when(
-            F.col("n_tokens") > 0,
-            F.round(chars.cast("double") / F.col("n_tokens"), 6),
-        ).otherwise(F.lit(0.0)).alias("avg_token_len"),
-        F.round(dup_token_frac(w), 6).alias("dup_token_frac"),
-        F.round(top_ngram_char_frac_of(F.col("__g2"), chars, 1), 6)
-         .alias("top_2gram_char_frac"),
-        F.round(dup_ngram_char_frac_of(F.col("__g3"), chars, 2), 6)
-         .alias("dup_3gram_char_frac"),
-    )
-    keep = (
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("n_tokens") <= max_tokens)
-        & (F.col("avg_token_len") >= min_avg_token_len)
-        & (F.col("avg_token_len") <= max_avg_token_len)
-        & (F.col("top_2gram_char_frac") <= max_top_2gram_char_frac)
-        & (F.col("dup_3gram_char_frac") <= max_dup_3gram_char_frac)
-    )
-    return out.withColumn("keep", keep)
+    def gate(m):
+        keep = (
+            (m["n_tokens"] >= min_tokens)
+            & (m["n_tokens"] <= max_tokens)
+            & (m["avg_token_len"] >= min_avg_token_len)
+            & (m["avg_token_len"] <= max_avg_token_len)
+            & (m["top_2gram_char_frac"] <= max_top_2gram_char_frac)
+            & (m["dup_3gram_char_frac"] <= max_dup_3gram_char_frac)
+        )
+        return m.withField("keep", keep)
+
+    g = let(repetition_metrics(F.col(text_col)), gate)
+    return fan_out(df.select(F.col(id_col), F.col(text_col))).select(
+        F.col(id_col), g.alias("__m")
+    ).select(id_col, "__m.*")
 
 
 def collocations(

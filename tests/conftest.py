@@ -5,6 +5,11 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+# The session's default driver heap (32g) lets the test JVM grow past the
+# RAM of a small box, where the kernel kills it and every later Spark
+# test fails. 4g holds the whole suite; children (CLI tests) inherit it.
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
+
 
 @pytest.fixture(scope="session")
 def spark():

@@ -258,6 +258,26 @@ class TestDedup:
         assert fast[3] == 1 and fast[9] == 5 and fast[12] == 11
         assert fast[4] == 4 and fast[13] == 13
 
+    def test_connected_components_driver_path_plans_broadcast(self, spark):
+        """The driver path's label frame must carry its real size, so a
+        caller's join over the components plans a broadcast up front.
+        With an unknown size it planned a sort-merge join that AQE
+        turned into a broadcast only when the components' stage happened
+        to finish first: the shuffle volume changed from run to run."""
+        from drune_spark.operators.dedup import connected_components
+
+        edges = spark.createDataFrame([(1, 2), (2, 3), (5, 7)],
+                                      ["id_a", "id_b"])
+        nodes = spark.range(1, 14).withColumnRenamed("id", "doc_id")
+        clusters = connected_components(edges, nodes)
+        keep = clusters.filter(F.col("doc_id") == F.col("cluster_id"))
+        out = nodes.join(keep.select("doc_id"), "doc_id", "left_semi")
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" not in plan
+        assert "BroadcastHashJoin" in plan
+        assert sorted(r.doc_id for r in out.collect()) == [
+            1, 4, 5, 6, 8, 9, 10, 11, 12, 13]
+
     def test_jaccard_pairs_driver_path_matches_distributed(self, spark):
         """The small-corpus driver pair fast path (r10) must be
         row-identical to the distributed shingle self-join: same pairs,
@@ -799,6 +819,49 @@ class TestRepetition:
         assert row.dup_token_frac == 0.0
         assert row.top_2gram_char_frac == 0.0
         assert row.dup_3gram_char_frac == 0.0
+
+    # NULL, empty, whitespace-only with a leading newline (Spark's trim
+    # strips spaces only, so it splits to ['', '']), then 1-, 2- and
+    # 3-token docs. Values pinned from the staged-select implementation.
+    EDGE_DOCS = [(1, None), (2, ""), (3, "\n   \t "), (4, "word"),
+                 (5, "ab cd"), (6, "ab cd ab")]
+
+    def _edge_df(self, spark):
+        return spark.createDataFrame(
+            self.EDGE_DOCS, "doc_id bigint, text string")
+
+    def test_repetition_edge_values(self, spark):
+        from drune_spark.operators.text_analysis import repetition_profile
+
+        rows = repetition_profile(self._edge_df(spark), "text", "doc_id")
+        assert sorted(tuple(r) for r in rows.collect()) == [
+            (1, None, 0.0, 0.0, 0.0, 0.0),
+            (2, 0, 0.0, 0.0, 0.0, 0.0),
+            (3, 2, 0.5, 0.0, 0.0, 0.0),
+            (4, 1, 0.0, 1.0, 0.0, 0.0),
+            (5, 2, 0.0, 0.5, 1.0, 0.0),
+            (6, 3, 0.333333, 0.666667, 0.666667, 0.0),
+        ]
+
+    def test_gopher_filter_edge_values(self, spark):
+        from drune_spark.operators.text_analysis import gopher_filter
+
+        gf = gopher_filter(self._edge_df(spark), "text", "doc_id",
+                           min_tokens=1)
+        assert gf.columns == [
+            "doc_id", "n_tokens", "avg_token_len", "dup_token_frac",
+            "top_2gram_char_frac", "dup_3gram_char_frac", "keep"]
+        assert sorted(tuple(r) for r in gf.collect()) == [
+            (1, None, 0.0, 0.0, 0.0, 0.0, False),
+            (2, 0, 0.0, 0.0, 0.0, 0.0, False),
+            (3, 2, 0.0, 0.5, 0.0, 0.0, False),
+            (4, 1, 4.0, 0.0, 0.0, 0.0, True),
+            (5, 2, 2.0, 0.0, 1.0, 0.0, False),
+            (6, 3, 2.0, 0.333333, 0.666667, 0.0, False),
+        ]
+        # only the thresholds moved: the default gate keeps none of them
+        assert not gopher_filter(self._edge_df(spark), "text", "doc_id") \
+            .filter("keep").count()
 
     def test_gopher_filter_splits_corpus_without_shuffle(self, spark):
         from drune_spark.operators.text_analysis import gopher_filter

@@ -60,6 +60,46 @@ class TestPlans:
         assert "hashpartitioning" not in plan
         assert "rangepartitioning" not in plan
 
+    def test_text_kernels_tokenize_once(self, spark):
+        """redact → quality_filter through the step registry: the keep
+        filter Catalyst pushes to the scan must carry ONE tokenizer and
+        one redaction chain, not a copy per metric reference or per
+        n-gram lambda (pushdown and CollapseProject inline projected
+        aliases; the let-bound metrics struct leaves nothing to
+        inline). Same for the MinHash shingle builder."""
+        import drune_spark.operators.llm_steps  # noqa: F401 (registers)
+        from drune_spark.operators.dedup import _doc_shingles
+        from drune_spark.operators.redaction import DEFAULT_PATTERNS
+        from drune_spark.operators.registry import StepRegistry
+
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+        red = StepRegistry.get("redact")(spark, "scrub").execute(
+            {}, docs, text_col="text")
+        out = StepRegistry.get("quality_filter")(spark, "gate").execute(
+            {}, red, text_col="text", id_col="doc_id")
+
+        def find(node, name):
+            if node.nodeName() == name:
+                return node
+            kids = node.children()
+            for i in range(kids.size()):
+                hit = find(kids.apply(i), name)
+                if hit is not None:
+                    return hit
+            return None
+
+        join = find(out._jdf.queryExecution().optimizedPlan(), "Join")
+        assert join is not None and "LeftSemi" in join.toString()
+        chain = len(DEFAULT_PATTERNS)  # regexp_replace calls per chain
+        gate = join.right().toString()
+        assert gate.count("split(") == 1
+        for side in (join.left().toString(), gate):
+            assert side.count("regexp_replace(") <= chain
+
+        sh = _doc_shingles(docs, "text", "doc_id", 5)
+        assert sh._jdf.queryExecution().optimizedPlan().toString() \
+            .count("split(") == 1
+
     def test_schema_apply_is_single_projection(self, spark, entry):
         plan = executed_plan(entry.q_p1_schema_apply(spark, SF))
         assert "Exchange" not in plan  # narrow: no shuffle at all

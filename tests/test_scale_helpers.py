@@ -125,6 +125,29 @@ class TestBloomPruneJoin:
             "SortMergeJoin" in plan or "BroadcastHashJoin" in plan
 
 
+class TestFanOut:
+    def test_shuffled_frame_runs_no_job(self, spark):
+        """An input that already shuffles is returned as is, decided
+        from the plan: probing its RDD would execute the AQE stages."""
+        sc = spark.sparkContext
+        df = spark.range(0, 100).groupBy((F.col("id") % 7).alias("k")) \
+            .count()
+        group = "fan_out_shuffled_probe"
+        sc.setJobGroup(group, group)
+        try:
+            out = fan_out(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+        assert out is df
+
+    def test_single_split_scan_is_widened(self, spark):
+        df = spark.range(0, 100, numPartitions=1)
+        out = fan_out(df, min_partitions=4)
+        assert out.rdd.getNumPartitions() == 4
+
+
 class TestStratifiedSample:
     def test_per_group_fractions_and_determinism(self, spark):
         from drune_spark.operators.sampling import (

@@ -3,8 +3,10 @@
 For each `queries()` entry, builds the DataFrame at a small scale
 factor and extracts the scale-relevant properties from the executed
 plan: shuffle (Exchange) count, join strategies, top-k pushdown,
-grouping-set Expand, window-limit partial pushdown, and whether any
-filter was pushed to a scan.
+grouping-set Expand, window-limit partial pushdown, whether any filter
+was pushed to a scan, and how many ``split(`` calls the optimized plan
+holds (a tokenizer that Catalyst copies into per-element lambdas shows
+up here as a jump).
 
 This is evidence, not vibes: the PERF.md scaling arguments claim plan
 shapes; this table lets a reviewer check every claim in one place,
@@ -42,6 +44,7 @@ MATERIALIZING = {
 def audit_one(name, df) -> dict:
     plan = df._jdf.queryExecution().executedPlan().toString()
     full = df._jdf.queryExecution().toString()
+    optimized = df._jdf.queryExecution().optimizedPlan().toString()
     return {
         "name": name,
         "exchanges": len(re.findall(r"\bExchange (?:hash|range|Single)",
@@ -56,6 +59,7 @@ def audit_one(name, df) -> dict:
         "expand": plan.count("Expand"),
         "pushed": ("PushedFilters: [" in full
                    and "PushedFilters: []" not in full),
+        "split": optimized.count("split("),
     }
 
 
@@ -86,7 +90,10 @@ def main() -> None:
             " sort-merge / nested-loop / cartesian join counts, top-k "
             "pushdown (TakeOrderedAndProject), WindowGroupLimit "
             "partials, Expand passes,"
-            " and whether any filter reached a scan. Entries marked (m)"
+            ", whether any filter reached a scan, and the number of "
+            "split( calls in the optimized logical plan (one per "
+            "tokenizer; more means Catalyst copied one into lambdas or "
+            "filters). Entries marked (m)"
             " materialize side effects (writers/streams): their plan "
             "is the read-back, not the pipeline.\n\n"
             "Audit invariant: NO query may plan a CartesianProduct, "
@@ -103,8 +110,8 @@ def main() -> None:
         if bad_joins:
             f.write(f"**VIOLATIONS: {bad_joins}**\n\n")
         f.write("| query | shuf | bhj | smj | bnl | cart | topk | wgl |"
-                " expand | pushed |\n")
-        f.write("|---|---|---|---|---|---|---|---|---|---|\n")
+                " expand | pushed | split |\n")
+        f.write("|---|---|---|---|---|---|---|---|---|---|---|\n")
         for r in rows:
             nm = r["name"] + (" (m)" if r["name"] in MATERIALIZING
                               else "")
@@ -112,7 +119,7 @@ def main() -> None:
                 f"| {nm} | {r['exchanges']} | {r['bhj']} | {r['smj']} |"
                 f" {r['bnl']} | {r['cart']} | {r['topk']} | {r['wgl']} |"
                 f" {r['expand']} |"
-                f" {'y' if r['pushed'] else ''} |\n"
+                f" {'y' if r['pushed'] else ''} | {r['split']} |\n"
             )
         if failed:
             f.write("\n## Failed to build\n\n")
