@@ -398,8 +398,8 @@ BENCH_QUERIES = [
     # admitted in the r10 optimization round after their driver fast
     # paths (k_truss/dbscan precedent — optimize first, then bench):
     # ivf_train 16-21s -> ~0.5-0.7s steady (numpy Lloyd replay below
-    # SPARK_GRAFT_IVF_DRIVER_CELLS), set_sim_join 31-42s -> ~4s steady
-    # (bitmask pair replay below SPARK_GRAFT_SETSIM_DRIVER_CELLS; its
+    # its replay.CUTOFFS entry), set_sim_join 31-42s -> ~4s steady
+    # (bitmask pair replay below its replay.CUTOFFS entry; its
     # 7.1M-row sf0.1 result materializes through the noop sink)
     "ivf_train",
     "set_sim_join",

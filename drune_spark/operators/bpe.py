@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from drune_spark.operators import replay
+
 
 def word_freq_table(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, freq) over whitespace tokens — the BPE trainer's input.
@@ -68,7 +70,6 @@ def bpe_train(
     df: DataFrame,
     n_merges: int = 3,
     text_col: str = "text",
-    driver_cutoff: int | None = None,
 ) -> DataFrame:
     """Learn ``n_merges`` BPE merges from the corpus. Returns the merge
     table (step, pair, merged, pair_count) — ``pair`` is the space-
@@ -77,9 +78,9 @@ def bpe_train(
 
     Size-adaptive driver fast path (r10, the connected_components /
     k_truss pattern): the merge loop runs over the VOCABULARY-sized
-    (repr, freq) table — below ``driver_cutoff`` rows
-    (SPARK_GRAFT_BPE_DRIVER_VOCAB, default 200k ≈ a few MB, the
-    broadcast-build memory class) one bounded collect replaces the
+    (repr, freq) table — below its ``replay.CUTOFFS`` entry (200k rows
+    ≈ a few MB, the broadcast-build memory class) one bounded collect
+    replaces the
     n_merges × (explode + aggregate + TakeOrdered + replace) job
     chain. Every value replays EXACTLY: ``str.strip(' ').split(' ')``
     == split(trim(repr), " "), python ``str.replace`` == Spark
@@ -87,26 +88,21 @@ def bpe_train(
     self-overlapping " a a a a " case), integer sums are exact, and
     the (count desc, pair asc) tie-break is the same order (python
     code-point string order == Spark UTF8 binary order). Above the
-    cutoff the distributed loop runs unchanged.
+    cutoff the distributed loop runs unchanged. Both paths stop early,
+    with the merges learned so far, once no word has a pair left.
     """
     spark = df.sparkSession
     words = word_freq_table(df, text_col).select(
         _spaced(F.col("word")).alias("repr"), "freq"
     )
     words = words.persist()
-    if driver_cutoff is None:
-        import os
-
-        driver_cutoff = int(
-            os.environ.get("SPARK_GRAFT_BPE_DRIVER_VOCAB", "200000")
-        )
-    if words.count() <= driver_cutoff:
-        rows = [(r[0], r[1]) for r in words.collect()]
+    tbl = replay.collect("bpe_train", words)
+    if tbl is not None:
         words.unpersist()
         from drune_spark.functions.partitioning import local_frame
 
-        reprs = [rp for rp, _ in rows]
-        freqs = [fq for _, fq in rows]
+        reprs = tbl.column("repr").to_pylist()
+        freqs = tbl.column("freq").to_pylist()
         merges = []
         for step in range(1, n_merges + 1):
             counts: dict = {}
@@ -115,6 +111,8 @@ def bpe_train(
                 for i in range(len(syms) - 1):
                     p = syms[i] + " " + syms[i + 1]
                     counts[p] = counts.get(p, 0) + fq
+            if not counts:
+                break
             best_count = max(counts.values())
             best_pair = min(
                 p for p, c in counts.items() if c == best_count
@@ -150,13 +148,16 @@ def bpe_train(
             ).alias("pair"),
             "freq",
         )
-        best = (
+        top = (
             pairs.groupBy("pair")
             .agg(F.sum("freq").alias("pair_count"))
             .orderBy(F.col("pair_count").desc(), F.col("pair").asc())
             .limit(1)
-            .collect()[0]  # 1-row control fetch (kmeans.py shape)
+            .collect()  # 1-row control fetch (kmeans.py shape)
         )
+        if not top:
+            break
+        best = top[0]
         merged = best["pair"].replace(" ", "")
         merges.append((step, best["pair"], merged, best["pair_count"]))
         # Column-form replace (not a formatted SQL literal): corpus
@@ -299,7 +300,6 @@ def wordpiece_train(
     df: DataFrame,
     n_merges: int = 3,
     text_col: str = "text",
-    driver_cutoff: int | None = None,
 ) -> DataFrame:
     """Learn ``n_merges`` WordPiece merges (Schuster & Nakajima 2012;
     the BERT tokenizer's trainer): where BPE merges the most FREQUENT
@@ -319,7 +319,8 @@ def wordpiece_train(
     position-explode (posexplode over a sequence + element_at
     projections — the round-5 rule), not a transform lambda.
 
-    Returns (step, pair, merged, pair_count, score).
+    Returns (step, pair, merged, pair_count, score); like bpe_train it
+    stops early once no pair is left.
     """
     spark = df.sparkSession
     words = word_freq_table(df, text_col).select(
@@ -334,16 +335,10 @@ def wordpiece_train(
     # max(sym_count)² — where a product could leave int64 (the
     # distributed ANSI path would raise) the loop falls through to the
     # distributed rounds on the still-persisted words table.
-    if driver_cutoff is None:
-        import os
-
-        driver_cutoff = int(
-            os.environ.get("SPARK_GRAFT_BPE_DRIVER_VOCAB", "200000")
-        )
-    if words.count() <= driver_cutoff:
-        rows = [(r[0], r[1]) for r in words.collect()]
-        reprs = [rp for rp, _ in rows]
-        freqs = [fq for _, fq in rows]
+    tbl = replay.collect("wordpiece_train", words)
+    if tbl is not None:
+        reprs = tbl.column("repr").to_pylist()
+        freqs = tbl.column("freq").to_pylist()
         ok = True
         py_merges: list = []
         for step in range(1, n_merges + 1):
@@ -356,12 +351,15 @@ def wordpiece_train(
                 for i in range(len(syms) - 1):
                     key = (syms[i], syms[i + 1])
                     pair_counts[key] = pair_counts.get(key, 0) + fq
+            if not pair_counts:
+                break
             max_cnt = max(sym_counts.values())
             max_pc = max(pair_counts.values())
             if max_pc * scale >= (1 << 63) or max_cnt * max_cnt >= (
                 1 << 63
             ):
                 ok = False
+                replay.decline("wordpiece_train", "overflow", len(reprs))
                 break
             pair = None
             score = pc = -1
@@ -429,11 +427,14 @@ def wordpiece_train(
                 ).alias("score"),
             )
         )
-        best = (
+        top = (
             scored.orderBy(F.col("score").desc(), F.col("pair").asc())
             .limit(1)
-            .collect()[0]
+            .collect()
         )
+        if not top:
+            break
+        best = top[0]
         merged = best["pair"].replace(" ", "")
         merges.append(
             (step, best["pair"], merged, best["pair_count"], best["score"])

@@ -34,6 +34,7 @@ from drune_spark.functions.hashes import (
     word_shingles,
 )
 from drune_spark.functions.text import tokens
+from drune_spark.operators import replay
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -213,9 +214,7 @@ _PAIRS_DRIVER_ID_TYPES = ("bigint", "int", "string")
 _PAIRS_DRIVER_MAX_PAIRS = 64_000_000
 
 
-def _driver_pair_counts(
-    exploded: DataFrame, n_cells: int, driver_cutoff: int | None
-):
+def _driver_pair_counts(op: str, exploded: DataFrame, n_cells: int):
     """The shared driver-fast-path gate for the exact pair operators:
     returns ``(id_type, uniq, sizes, a_codes, b_codes, counts)`` when
     the pair computation should replay on the driver, or ``None`` when
@@ -224,21 +223,15 @@ def _driver_pair_counts(
     past ``_PAIRS_DRIVER_MAX_PAIRS`` — estimated from the group sizes
     BEFORE any quadratic allocation). Genuine failures (MemoryError,
     numpy bugs) propagate loudly; nothing is silently retried."""
-    if driver_cutoff is None:
-        import os
-
-        driver_cutoff = int(
-            os.environ.get("SPARK_GRAFT_JACCARD_DRIVER_CELLS", "2000000")
-        )
-    if n_cells > driver_cutoff:
-        return None
     id_type = exploded.schema["doc"].dataType.simpleString()
     if id_type not in _PAIRS_DRIVER_ID_TYPES:
+        return replay.decline(op, "id_type", n_cells)
+    if not replay.admit(op, n_cells):
         return None
     try:
         res = _pair_counts_arrow(_grouped_doc_arrays(exploded))
     except OverflowError:
-        return None
+        return replay.decline(op, "pair_volume", n_cells)
     return (id_type, *res)
 
 
@@ -249,7 +242,6 @@ def ngram_jaccard_pairs(
     k: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = None,
-    driver_cutoff: int | None = None,
 ) -> DataFrame:
     """Exact Jaccard similarity over word k-gram shingle sets for every
     pair sharing at least one shingle. Returns (id_a, id_b, jaccard) with
@@ -309,12 +301,11 @@ def ngram_jaccard_pairs(
     # and the jaccard division replay on the driver with the identical
     # integer arithmetic and ONE IEEE double division (exact ints
     # < 2^53 → correctly-rounded quotient on both engines, numpy
-    # float64 == JVM double). Above the cutoff — or past the candidate
+    # float64 == JVM double). Above the cutoff (replay.CUTOFFS, 2M
+    # cells ≈ tens of MB of grouped id arrays) — or past the candidate
     # pair-volume cap — the distributed self-join below runs unchanged,
-    # the production path at corpus scale. Env-tunable for cluster
-    # memory (SPARK_GRAFT_JACCARD_DRIVER_CELLS, default 2M cells ≈
-    # tens of MB of grouped id arrays).
-    hit = _driver_pair_counts(exploded, n_cells, driver_cutoff)
+    # the production path at corpus scale.
+    hit = _driver_pair_counts("ngram_jaccard_pairs", exploded, n_cells)
     if hit is not None:
         id_type, uniq, sizes, ac, bc, counts = hit
         exploded.unpersist()
@@ -405,8 +396,7 @@ def _popcount_u64(x):
     return (x * np.uint64(0x0101010101010101)) >> np.uint64(56)
 
 
-def _setsim_replay_state(tok: DataFrame, n_cells: int,
-                         driver_cutoff: int | None):
+def _setsim_replay_state(tok: DataFrame, n_cells: int):
     """Replay gate for ``prefix_filter_join``: decides whether the exact
     all-pairs computation should replace the distributed PPJoin, and if
     so returns its compact state ``(uniq_docs, sizes, kind, arr,
@@ -433,16 +423,13 @@ def _setsim_replay_state(tok: DataFrame, n_cells: int,
     workers each touch 1/32nd, in parallel, and the result never makes
     a driver round trip at all.
     """
-    import os
-
-    if driver_cutoff is None:
-        driver_cutoff = int(
-            os.environ.get("SPARK_GRAFT_SETSIM_DRIVER_CELLS", "2000000")
-        )
-    if n_cells > driver_cutoff or n_cells == 0:
-        return None
+    op = "prefix_filter_join"
     id_type = tok.schema["doc"].dataType.simpleString()
     if id_type not in _PAIRS_DRIVER_ID_TYPES:
+        return replay.decline(op, "id_type", n_cells)
+    if n_cells == 0:
+        return replay.decline(op, "empty", n_cells)
+    if not replay.admit(op, n_cells):
         return None
     import numpy as np
 
@@ -451,7 +438,7 @@ def _setsim_replay_state(tok: DataFrame, n_cells: int,
     # here they would surface as float64 (int ids) breaking the bigint
     # schema, or as None objects np.unique cannot order — decline.
     if at.column("doc").null_count > 0:
-        return None
+        return replay.decline(op, "null_id", n_cells)
     doc_col = at.column("doc").combine_chunks().to_numpy(
         zero_copy_only=False)
     tok_col = at.column("token").combine_chunks().to_numpy(
@@ -460,10 +447,9 @@ def _setsim_replay_state(tok: DataFrame, n_cells: int,
     uniq_toks, tcodes = np.unique(tok_col, return_inverse=True)
     n, v = len(uniq_docs), len(uniq_toks)
     w = (v + 63) // 64
-    if n * w > _SETSIM_DRIVER_MAX_MASK_WORDS:
-        return None
-    if n * (n - 1) // 2 * w > _SETSIM_DRIVER_MAX_WORDOPS:
-        return None
+    if (n * w > _SETSIM_DRIVER_MAX_MASK_WORDS
+            or n * (n - 1) // 2 * w > _SETSIM_DRIVER_MAX_WORDOPS):
+        return replay.decline(op, "mask_budget", n_cells)
     # The distributed path COUNTS duplicate (doc, token) cells (a
     # repeated doc id contributes its cells once per row to sizes and
     # intersections); the bitmask OR / matrix assignment would dedupe
@@ -471,7 +457,7 @@ def _setsim_replay_state(tok: DataFrame, n_cells: int,
     # else declines.
     if len(np.unique(dcodes.astype(np.int64) * np.int64(v)
                      + tcodes.astype(np.int64))) != n_cells:
-        return None
+        return replay.decline(op, "duplicate_id", n_cells)
     dcodes = dcodes.astype(np.int64)
     tcodes = tcodes.astype(np.int64)
     # Cells are distinct (just verified), so the per-doc cell count IS
@@ -604,7 +590,6 @@ def prefix_filter_join(
     text_col: str,
     id_col: str,
     threshold_pct: int = 50,
-    driver_cutoff: int | None = None,
 ) -> DataFrame:
     """Exact set-similarity self-join with PPJoin-style prefix filtering
     (Xiao et al., WWW'08): find all doc pairs whose word-SET Jaccard is
@@ -658,8 +643,8 @@ def prefix_filter_join(
     # materializes |cand| · avg|doc| rows (~1e9 at sf0.1, where 57% of
     # ALL pairs pass the 0.6 threshold: 7.1M result rows from 5000
     # docs) — 31-42 s/pass for integer work a bitmask replay does in
-    # seconds. Below the cell cutoff (SPARK_GRAFT_SETSIM_DRIVER_CELLS)
-    # and the mask/word-op budgets, collect the (doc, token) cells once
+    # seconds. Below the cell cutoff (replay.CUTOFFS) and the
+    # mask/word-op budgets, collect the (doc, token) cells once
     # via Arrow into a packed state (0/1 float matrix for the BLAS
     # kernel within the dense budget, uint64 bitmasks past it), then
     # broadcast it and materialize the exact pair rows INSIDE executor
@@ -669,7 +654,7 @@ def prefix_filter_join(
     # result never transits the driver. Above any bound the distributed
     # PPJoin below runs unchanged — the production path, whose prefix
     # filter is what scales.
-    hit = _setsim_replay_state(tok, n_cells, driver_cutoff)
+    hit = _setsim_replay_state(tok, n_cells)
     if hit is not None:
         uniq_docs, sizes, kind, arr, id_type = hit
         tok.unpersist()
@@ -785,26 +770,22 @@ def minhash_signatures(
 
 
 def _minhash_replay_pairs(df, text_col, id_col, num_perm, bands, k,
-                          seed, min_est_jaccard, driver_cutoff):
+                          seed, min_est_jaccard):
     """Replay gate for ``minhash_lsh_pairs`` (portable=True): the
     (id_a, id_b, est_jaccard) frame from the shared numpy kernel, or
     ``None`` for the distributed path. See the caller's docstring."""
-    import os
-
-    if driver_cutoff is None:
-        driver_cutoff = int(
-            os.environ.get("SPARK_GRAFT_MINHASH_DRIVER_DOCS", "50000")
-        )
-    if driver_cutoff <= 0:
-        return None
+    op = "minhash_lsh_pairs"
     id_type = df.schema[id_col].dataType.simpleString()
     if id_type not in _PAIRS_DRIVER_ID_TYPES:
+        return replay.decline(op, "id_type")
+    at = replay.collect(
+        op, _doc_shingle_frame(df, text_col, id_col, k, hashed=True)
+    )
+    if at is None:
         return None
-    if df.count() > driver_cutoff:
-        return None
-    state = _doc_shingle_state(df, text_col, id_col, k, hashed=True)
+    state = _doc_shingle_state(at, hashed=True)
     if state is None:
-        return None
+        return replay.decline(op, "null_or_duplicate_id", at.num_rows)
     import numpy as np
 
     uniq, offs, flat, row_codes = state
@@ -814,7 +795,7 @@ def _minhash_replay_pairs(df, text_col, id_col, num_perm, bands, k,
         _PAIRS_DRIVER_MAX_PAIRS,
     )
     if cand is None:
-        return None
+        return replay.decline(op, "pair_volume", n)
     ck, agree, _ = cand
     est = agree.astype(np.float64) / num_perm
     keep = est >= min_est_jaccard
@@ -848,7 +829,6 @@ def minhash_lsh_pairs(
     seed: int = 42,
     min_est_jaccard: float = 0.0,
     portable: bool = False,
-    driver_cutoff: int | None = None,
 ) -> DataFrame:
     """LSH candidate pairs: docs agreeing on all rows of >= 1 band.
 
@@ -860,8 +840,8 @@ def minhash_lsh_pairs(
     equality ⟺ band-slice equality, which is what a SQL twin joins on).
 
     Size-adaptive replay (r11, portable only — xxhash64 has no python
-    mirror): below a doc cutoff (``SPARK_GRAFT_MINHASH_DRIVER_DOCS``,
-    default 50k — the broadcast memory class), ONE narrow collect of
+    mirror): below a doc cutoff (``replay.CUTOFFS``, 50k docs — the
+    broadcast memory class), ONE narrow collect of
     the Spark-computed ``_doc_shingles`` arrays replays signatures +
     banding + the agreement estimate in numpy
     (``_md5_band_candidates`` — the lsh_census_eval kernel) and
@@ -877,7 +857,7 @@ def minhash_lsh_pairs(
     if portable:
         hit = _minhash_replay_pairs(
             df, text_col, id_col, num_perm, bands, k, seed,
-            min_est_jaccard, driver_cutoff,
+            min_est_jaccard,
         )
         if hit is not None:
             return hit
@@ -949,7 +929,6 @@ def lsh_census_eval(
     seed: int = 42,
     min_est_jaccard: float = 0.5,
     exact_threshold: float = 0.5,
-    driver_cutoff: int | None = None,
 ) -> DataFrame:
     """MinHash-LSH index-quality census: the portable-md5 LSH candidate
     set scored against exact-Jaccard ground truth over the SAME word
@@ -958,8 +937,8 @@ def lsh_census_eval(
     band configuration ships.
 
     Size-adaptive replay (r11, the §20 pattern taken to the whole
-    census): below a DOC cutoff (``SPARK_GRAFT_LSHEVAL_DRIVER_DOCS``,
-    default 50k docs — the broadcast memory class: the collected
+    census): below a DOC cutoff (``replay.CUTOFFS``, 50k docs — the
+    broadcast memory class: the collected
     payload is each doc's distinct-shingle array), ONE narrow collect
     of the Spark-computed ``_doc_shingles`` arrays feeds a numpy replay
     of BOTH census sides — exact pair counts via the §20 triu trick,
@@ -979,20 +958,16 @@ def lsh_census_eval(
     composition of the independently-oracled ``ngram_jaccard_pairs`` +
     ``minhash_lsh_pairs`` runs unchanged (the production path).
     """
-    import os
-
-    if driver_cutoff is None:
-        driver_cutoff = int(
-            os.environ.get("SPARK_GRAFT_LSHEVAL_DRIVER_DOCS", "50000")
-        )
     out_schema = (
         "n_both bigint, n_only_exact bigint, n_only_lsh bigint, "
         "recall_ppm bigint, precision_ppm bigint"
     )
-    if driver_cutoff > 0 and docs.count() <= driver_cutoff:
+    at = replay.collect(
+        "lsh_census_eval", _doc_shingle_frame(docs, text_col, id_col, k)
+    )
+    if at is not None:
         row = _lsh_census_replay(
-            docs, text_col, id_col, num_perm, bands, k, seed,
-            min_est_jaccard, exact_threshold,
+            at, num_perm, bands, seed, min_est_jaccard, exact_threshold,
         )
         if row is not None:
             from drune_spark.functions.partitioning import local_frame
@@ -1005,10 +980,6 @@ def lsh_census_eval(
         docs, text_col, id_col,
         num_perm=num_perm, bands=bands, k=k, seed=seed,
         min_est_jaccard=min_est_jaccard, portable=True,
-        # the census cutoff governs the WHOLE census: a zero cutoff
-        # (parity tests, giant corpora) must exercise the genuinely
-        # distributed LSH side too, not its own inner replay
-        driver_cutoff=driver_cutoff,
     ).select("id_a", "id_b").withColumn("l", F.lit(1))
     joined = exact.join(lsh, ["id_a", "id_b"], "full")
     return joined.agg(
@@ -1027,23 +998,13 @@ def lsh_census_eval(
     )
 
 
-def _doc_shingle_state(docs, text_col, id_col, k, hashed=False):
-    """One narrow collect of the Spark-computed ``_doc_shingles``
-    arrays, decoded into replay state: ``(uniq, offs, flat,
-    row_codes)`` where ``uniq`` is the sorted distinct doc ids (value
-    order == Spark ``<`` for ints and strings), ``flat`` the
-    concatenated per-doc distinct shingles, ``offs`` the per-ROW
-    boundaries (row r owns ``flat[offs[r]:offs[r+1]]``), and
-    ``row_codes[r]`` row r's code in ``uniq`` order. With
-    ``hashed=True`` the md5_u32 shingle hashes are computed BY SPARK
-    inside the same collect (the exact expression the distributed
-    signature fold consumes) and ``flat`` is an int64 ndarray — the
-    replay then has NO python-side hashing at all (250k ``hashlib.md5``
-    calls measured 2-3 s at sf0.1). Returns ``None`` on NULL
-    ids/shingle arrays or duplicate ids (the distributed pipelines
-    handle those; the replay declines)."""
-    import numpy as np
-
+def _doc_shingle_frame(docs, text_col, id_col, k, hashed=False):
+    """(doc, shingles): the Spark-computed ``_doc_shingles`` arrays the
+    replays collect, one row per doc. With ``hashed=True`` the md5_u32
+    shingle hashes are computed BY SPARK inside the same collect (the
+    exact expression the distributed signature fold consumes) — the
+    replay then has NO python-side hashing at all (250k
+    ``hashlib.md5`` calls measured 2-3 s at sf0.1)."""
     from drune_spark.functions.hashes import md5_u32
 
     sh = _doc_shingles(
@@ -1053,7 +1014,21 @@ def _doc_shingle_state(docs, text_col, id_col, k, hashed=False):
         # ONE expression tree: the outer transform consumes the shingle
         # array operand once (no CollapseProject duplication risk).
         sh = sh.select("doc", F.transform("shingles", md5_u32).alias("shingles"))
-    at = sh.toArrow()
+    return sh
+
+
+def _doc_shingle_state(at, hashed=False):
+    """A collected ``_doc_shingle_frame`` table decoded into replay
+    state: ``(uniq, offs, flat, row_codes)`` where ``uniq`` is the
+    sorted distinct doc ids (value order == Spark ``<`` for ints and
+    strings), ``flat`` the concatenated per-doc distinct shingles (an
+    int64 ndarray when ``hashed``), ``offs`` the per-ROW boundaries
+    (row r owns ``flat[offs[r]:offs[r+1]]``), and ``row_codes[r]`` row
+    r's code in ``uniq`` order. Returns ``None`` on NULL ids/shingle
+    arrays or duplicate ids (the distributed pipelines handle those;
+    the replay declines)."""
+    import numpy as np
+
     if (at.column("doc").null_count > 0
             or at.column("shingles").null_count > 0):
         return None
@@ -1262,20 +1237,21 @@ def _cross_slice_candidates(sig_old, sig_new, slices, max_pairs):
     return np.unique(np.concatenate(parts))
 
 
-def _lsh_census_replay(docs, text_col, id_col, num_perm, bands, k, seed,
-                       min_est_jaccard, exact_threshold):
-    """One-collect numpy replay of the LSH census (see
-    ``lsh_census_eval``). Returns the single result tuple, or ``None``
-    to decline to the distributed composition. The shingle arrays are
-    SPARK-computed (``_doc_shingles`` — the same expressions both
-    distributed sides consume), so the replay's parity surface is only
-    the md5_u32 mirror, the integer permutation fold, and two IEEE
-    double divisions."""
+def _lsh_census_replay(at, num_perm, bands, seed, min_est_jaccard,
+                       exact_threshold):
+    """Numpy replay of the LSH census (see ``lsh_census_eval``) over a
+    collected ``_doc_shingle_frame``. Returns the single result tuple,
+    or ``None`` to decline to the distributed composition. The shingle
+    arrays are SPARK-computed (the same expressions both distributed
+    sides consume), so the replay's parity surface is only the md5_u32
+    mirror, the integer permutation fold, and two IEEE double
+    divisions."""
     import numpy as np
 
-    state = _doc_shingle_state(docs, text_col, id_col, k)
+    op = "lsh_census_eval"
+    state = _doc_shingle_state(at)
     if state is None:
-        return None
+        return replay.decline(op, "null_or_duplicate_id", at.num_rows)
     uniq, offs, flat, row_codes = state
     n = len(uniq)
     if n == 0:
@@ -1334,7 +1310,7 @@ def _lsh_census_replay(docs, text_col, id_col, num_perm, bands, k, seed,
         _PAIRS_DRIVER_MAX_PAIRS,
     )
     if cand is None:
-        return None
+        return replay.decline(op, "pair_volume", n)
     ck, agree, _ = cand
     l_keys = np.empty(0, dtype=np.int64)
     if len(ck):
@@ -1359,7 +1335,6 @@ def connected_components(
     pairs: DataFrame,
     all_nodes: DataFrame,
     max_iterations: int | None = 20,
-    driver_cutoff: int | None = None,
 ) -> DataFrame:
     """Dedup clustering: connected components over near-dup pairs via
     min-label propagation (HashMin). Returns (doc_id, cluster_id) where
@@ -1411,17 +1386,14 @@ def connected_components(
     # identical fixpoint, order-independent, so oracle hashes are
     # untouched. Above the cutoff (production graphs) the distributed
     # loop runs unchanged; the threshold is on DIRECTED edge rows
-    # (2|E|) and is env-tunable for cluster memory
-    # (SPARK_GRAFT_CC_DRIVER_EDGES, default 200k rows ≈ a few MB).
-    if driver_cutoff is None:
-        import os
-
-        driver_cutoff = int(
-            os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGES", "200000")
-        )
-    if m <= driver_cutoff:
-        rows = both.collect()
+    # (2|E|; replay.CUTOFFS, 200k rows ≈ a few MB). The count above also
+    # sizes the distributed loop, so the gate compares it directly.
+    if replay.admit("connected_components", m):
+        tbl = both.toArrow()
         both.unpersist()
+        rows = list(
+            zip(tbl.column("src").to_pylist(), tbl.column("dst").to_pylist())
+        )
         parent: dict = {}
 
         def _find(x):
@@ -1628,8 +1600,7 @@ def simhash_near_dup_pairs(
     return pairs
 
 
-def _simhash_replay_pairs(df, text_col, id_col, max_hamming,
-                          driver_cutoff):
+def _simhash_replay_pairs(df, text_col, id_col, max_hamming):
     """Replay gate for ``simhash_near_dup_pairs_portable``: the
     (id_a, id_b, hamming) frame from one collect of the SPARK-computed
     ``simhash_bits`` arrays (the identical expression the distributed
@@ -1638,19 +1609,10 @@ def _simhash_replay_pairs(df, text_col, id_col, max_hamming,
     the distributed path. Declines on NULL/duplicate ids, NULL bit
     arrays, unsupported id types, or bucket pair volume past
     ``_PAIRS_DRIVER_MAX_PAIRS``."""
-    import os
-
-    if driver_cutoff is None:
-        driver_cutoff = int(
-            os.environ.get("SPARK_GRAFT_SIMHASH_DRIVER_DOCS", "50000")
-        )
-    if driver_cutoff <= 0:
-        return None
+    op = "simhash_near_dup_pairs_portable"
     id_type = df.schema[id_col].dataType.simpleString()
     if id_type not in _PAIRS_DRIVER_ID_TYPES:
-        return None
-    if df.count() > driver_cutoff:
-        return None
+        return replay.decline(op, "id_type")
     from drune_spark.functions.partitioning import fan_out
 
     # Collect ONE uint64 per token — md5 halves packed by Spark as
@@ -1669,19 +1631,21 @@ def _simhash_replay_pairs(df, text_col, id_col, max_hamming,
             F.conv(F.substring(h, 1, 8), 16, 10).cast("long"), 32
         ).bitwiseOR(F.conv(F.substring(h, 9, 8), 16, 10).cast("long")),
     )
-    at = fan_out(df).select(
+    at = replay.collect(op, fan_out(df).select(
         F.col(id_col).alias("doc"), packed.alias("tok64"),
-    ).toArrow()
+    ))
+    if at is None:
+        return None
     if (at.column("doc").null_count > 0
             or at.column("tok64").null_count > 0):
-        return None
+        return replay.decline(op, "null_id", at.num_rows)
     import numpy as np
 
     doc_vals = at.column("doc").to_pylist()
     n = len(doc_vals)
     uniq = sorted(set(doc_vals))
-    if len(uniq) != n:
-        return None  # duplicate ids duplicate sig rows too
+    if len(uniq) != n:  # duplicate ids duplicate sig rows too
+        return replay.decline(op, "duplicate_id", n)
     tok_col = at.column("tok64").combine_chunks()
     offs = np.asarray(tok_col.offsets, dtype=np.int64)
     flat = tok_col.values.to_numpy(zero_copy_only=False).astype(
@@ -1716,7 +1680,7 @@ def _simhash_replay_pairs(df, text_col, id_col, max_hamming,
         _PAIRS_DRIVER_MAX_PAIRS,
     )
     if ck is None:
-        return None
+        return replay.decline(op, "pair_volume", n)
     a, b2 = ck // n, ck % n
     ham = (sig[a] != sig[b2]).sum(axis=1).astype(np.int32)
     keep = ham <= max_hamming
@@ -1742,7 +1706,6 @@ def simhash_near_dup_pairs_portable(
     text_col: str,
     id_col: str,
     max_hamming: int = 3,
-    driver_cutoff: int | None = None,
 ) -> DataFrame:
     """Oracle-mirrorable SimHash near-dup pairs: signatures are md5-based
     bit arrays (``simhash_bits``) instead of xxhash64 bigints, so a SQL
@@ -1752,14 +1715,12 @@ def simhash_near_dup_pairs_portable(
     variant remains the fast path for production corpora.
 
     Size-adaptive replay (r11, the minhash_lsh_pairs pattern): below
-    ``SPARK_GRAFT_SIMHASH_DRIVER_DOCS`` docs (default 50k — broadcast
-    memory class) one collect of the Spark-computed bit arrays replays
+    its ``replay.CUTOFFS`` entry (50k docs — broadcast memory class)
+    one collect of the Spark-computed bit arrays replays
     the 4×16-bit banding + hamming filter in numpy
     (``_simhash_replay_pairs``); the distributed self-join below runs
     unchanged above the cutoff (the production path)."""
-    hit = _simhash_replay_pairs(
-        df, text_col, id_col, max_hamming, driver_cutoff
-    )
+    hit = _simhash_replay_pairs(df, text_col, id_col, max_hamming)
     if hit is not None:
         return hit
     from drune_spark.functions.hashes import simhash_bits
@@ -2589,41 +2550,37 @@ def segment_dedup(
 
 
 def _incremental_replay(new_df, existing_df, text_col, id_col, num_perm,
-                        bands, k, seed, min_est_jaccard, driver_cutoff):
+                        bands, k, seed, min_est_jaccard):
     """Replay gate for ``incremental_minhash_dedup`` (portable=True):
     the per-new-doc verdict frame from the shared numpy minhash kernel
     (``_md5_signatures`` + the asymmetric ``_cross_slice_candidates``
-    banding), or ``None`` for the distributed batch-probe path. Shares
-    ``SPARK_GRAFT_MINHASH_DRIVER_DOCS`` (total docs across BOTH
-    frames) with ``minhash_lsh_pairs``; declines on NULL/duplicate
+    banding), or ``None`` for the distributed batch-probe path. Its
+    cutoff counts the docs of BOTH frames; declines on NULL/duplicate
     ids, NULL shingle arrays, unsupported id types, or a cross-bucket
     pair volume past ``_PAIRS_DRIVER_MAX_PAIRS``. est = agree/num_perm
     is the same exact dyadic double on both paths; n_matches counts
     the deduped candidate set exactly like the distributed
     dropDuplicates + groupBy."""
-    import os
-
-    if driver_cutoff is None:
-        driver_cutoff = int(
-            os.environ.get("SPARK_GRAFT_MINHASH_DRIVER_DOCS", "50000")
-        )
-    if driver_cutoff <= 0:
-        return None
+    op = "incremental_minhash_dedup"
     id_type = new_df.schema[id_col].dataType.simpleString()
     if (
         id_type != existing_df.schema[id_col].dataType.simpleString()
         or id_type not in _PAIRS_DRIVER_ID_TYPES
     ):
+        return replay.decline(op, "id_type")
+    hit = replay.collect(
+        op,
+        _doc_shingle_frame(new_df, text_col, id_col, k, hashed=True),
+        _doc_shingle_frame(existing_df, text_col, id_col, k, hashed=True),
+    )
+    if hit is None:
         return None
-    if new_df.count() + existing_df.count() > driver_cutoff:
-        return None
-    st_new = _doc_shingle_state(new_df, text_col, id_col, k, hashed=True)
-    if st_new is None:
-        return None
-    st_old = _doc_shingle_state(existing_df, text_col, id_col, k,
-                                hashed=True)
-    if st_old is None:
-        return None
+    st_new = _doc_shingle_state(hit[0], hashed=True)
+    st_old = _doc_shingle_state(hit[1], hashed=True)
+    if st_new is None or st_old is None:
+        return replay.decline(
+            op, "null_or_duplicate_id", hit[0].num_rows + hit[1].num_rows
+        )
     import numpy as np
 
     uniq_n, offs_n, flat_n, rc_n = st_new
@@ -2639,7 +2596,7 @@ def _incremental_replay(new_df, existing_df, text_col, id_col, num_perm,
         _PAIRS_DRIVER_MAX_PAIRS,
     )
     if ck is None:
-        return None
+        return replay.decline(op, "pair_volume", n_new + n_old)
     n_matches = np.zeros(n_new, dtype=np.int64)
     best = np.zeros(n_new, dtype=np.float64)
     if len(ck):
@@ -2683,7 +2640,6 @@ def incremental_minhash_dedup(
     seed: int = 42,
     min_est_jaccard: float = 0.5,
     portable: bool = False,
-    driver_cutoff: int | None = None,
 ) -> DataFrame:
     """Ingest-time dedup: probe a NEW batch against the EXISTING corpus
     index instead of self-joining the whole corpus — the steady-state
@@ -2703,7 +2659,7 @@ def incremental_minhash_dedup(
     the corpus.
 
     Size-adaptive replay (r11, portable only — xxhash64 signatures
-    have no python mirror): below ``SPARK_GRAFT_MINHASH_DRIVER_DOCS``
+    have no python mirror): below its ``replay.CUTOFFS`` entry in
     total docs, ONE narrow collect per side of the Spark-computed
     shingle-hash arrays replays signatures + the asymmetric banding
     probe + the verdicts in numpy (see ``_incremental_replay``) — the
@@ -2714,7 +2670,7 @@ def incremental_minhash_dedup(
     if portable:
         hit = _incremental_replay(
             new_df, existing_df, text_col, id_col, num_perm, bands, k,
-            seed, min_est_jaccard, driver_cutoff,
+            seed, min_est_jaccard,
         )
         if hit is not None:
             return hit
@@ -2805,7 +2761,6 @@ def containment_pairs(
     k: int = 3,
     min_containment_ppm: int = 800_000,
     max_shingle_df: int | None = None,
-    driver_cutoff: int | None = None,
 ) -> DataFrame:
     """Broder CONTAINMENT near-dup pairs — the asymmetric companion to
     ``ngram_jaccard_pairs``: containment(A→B) = |A∩B| / |A|. Symmetric
@@ -2848,7 +2803,7 @@ def containment_pairs(
     # both nonnegative, so int64 floor_divide == Spark div exactly,
     # and c·10⁶ ≤ cutoff·10⁶ < 2⁶³). Both directions of each unordered
     # pair are emitted, as in the join.
-    hit = _driver_pair_counts(exploded, n_cells, driver_cutoff)
+    hit = _driver_pair_counts("containment_pairs", exploded, n_cells)
     if hit is not None:
         id_type, uniq, sizes, ac, bc, counts = hit
         exploded.unpersist()

@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from drune_spark.operators import replay
+
 
 def transition_edges(
     df: DataFrame,
@@ -60,7 +62,7 @@ def _pagerank_driver_replay(
     damping_pct: int,
     scale: int,
     seed_nodes: list | None,
-    driver_cutoff: int | None,
+    op: str,
 ):
     """Size-adaptive driver replay shared by :func:`pagerank_int` and
     :func:`personalized_pagerank_int` (r10 — the hits_int/§18 family):
@@ -76,32 +78,22 @@ def _pagerank_driver_replay(
 
     Returns the ranks DataFrame, or None → run the distributed loop
     (cutoff exceeded, unsupported types, nonpositive weights, or an
-    overflow-risk bound). Env-tunable: SPARK_GRAFT_PAGERANK_DRIVER_EDGES
-    (default 1M rows — broadcast-build memory class, ~24 B/row)."""
-    import os
-
-    if driver_cutoff is None:
-        driver_cutoff = int(
-            os.environ.get("SPARK_GRAFT_PAGERANK_DRIVER_EDGES", "1000000")
-        )
+    overflow-risk bound). Cutoff: ``replay.CUTOFFS[op]``, edge rows."""
     if not (0 <= int(damping_pct) <= 100) or int(scale) <= 0:
-        return None
+        return replay.decline(op, "params")
     if seed_nodes is not None and len(seed_nodes) == 0:
-        return None  # the distributed build raises ZeroDivisionError
+        return replay.decline(op, "no_seeds")  # distributed: ZeroDivision
     spark = edges.sparkSession
     node_t = edges.schema["src"].dataType.simpleString()
     if (
         node_t != edges.schema["dst"].dataType.simpleString()
         or node_t not in ("int", "bigint", "string")
     ):
+        return replay.decline(op, "id_type")
+    tbl = replay.collect(op, edges.select("src", "dst", "w"))
+    if tbl is None:
         return None
-    e = edges.select("src", "dst", "w").persist()
-    n_edges = e.count()
-    if n_edges > driver_cutoff:
-        e.unpersist()
-        return None
-    tbl = e.toArrow()
-    e.unpersist()
+    n_edges = tbl.num_rows
     from drune_spark.functions.partitioning import local_frame
 
     schema = f"node {node_t}, rank_int bigint"
@@ -111,12 +103,12 @@ def _pagerank_driver_replay(
 
     w_arr = tbl.column("w").to_numpy(zero_copy_only=False)
     if w_arr.dtype not in (np.dtype(np.int64), np.dtype(np.int32)):
-        return None
+        return replay.decline(op, "weight_type", n_edges)
     if not bool((w_arr > 0).all()):
-        return None
+        return replay.decline(op, "nonpositive_weight", n_edges)
     # Σw exact in python ints (an int64 scatter-sum could itself wrap).
     if int(w_arr.astype(object).sum()) >= (1 << 63):
-        return None
+        return replay.decline(op, "overflow", n_edges)
     src_arr = tbl.column("src").to_numpy(zero_copy_only=False)
     dst_arr = tbl.column("dst").to_numpy(zero_copy_only=False)
     w64 = w_arr.astype(np.int64, copy=False)
@@ -138,7 +130,7 @@ def _pagerank_driver_replay(
             100 * len(seed_nodes)
         )
         if per_seed >= two63:
-            return None
+            return replay.decline(op, "overflow", n_edges)
         is_seed = np.isin(nodes, np.array(list(seed_nodes)))
         base_vec = np.where(is_seed, np.int64(per_seed), np.int64(0))
     rank = np.full(n_nodes, int(scale), dtype=np.int64)
@@ -149,7 +141,7 @@ def _pagerank_driver_replay(
         max_rank = int(rank.max())
         max_w = int(w64.max())
         if max_rank * max_w >= two63 or n_edges * max_rank >= two63:
-            return None
+            return replay.decline(op, "overflow", n_edges)
         contrib = (rank[src_idx] * w64) // w_out[src_idx]
         c_sum = np.zeros(n_nodes, dtype=np.int64)
         np.add.at(c_sum, dst_idx, contrib)
@@ -159,7 +151,7 @@ def _pagerank_driver_replay(
             or int(base_vec.max()) + (int(damping_pct) * max_c) // 100
             >= two63
         ):
-            return None
+            return replay.decline(op, "overflow", n_edges)
         rank = base_vec + (int(damping_pct) * c_sum) // 100
     return local_frame(
         spark, list(zip(nodes.tolist(), rank.tolist())), schema
@@ -171,12 +163,11 @@ def pagerank_int(
     n_iters: int = 3,
     damping_pct: int = 85,
     scale: int = 1_000_000,
-    driver_cutoff: int | None = None,
 ) -> DataFrame:
     """(node, rank_int) after ``n_iters`` integer-exact damped rounds
     from a uniform start of ``scale`` per node."""
     hit = _pagerank_driver_replay(
-        edges, n_iters, damping_pct, scale, None, driver_cutoff
+        edges, n_iters, damping_pct, scale, None, "pagerank_int"
     )
     if hit is not None:
         return hit
@@ -268,7 +259,6 @@ def _bfs_driver_result(
     src: str,
     dst: str,
     node: str,
-    driver_cutoff: int | None,
 ):
     """Size-adaptive driver replay for :func:`bfs_khop` (r11, the
     pagerank/§18 family): below an edge-row cutoff each hop's frontier
@@ -279,40 +269,33 @@ def _bfs_driver_result(
     construction. Returns the (node, dist) DataFrame, or None →
     distributed loop (cutoff exceeded, unsupported/NULL ids — a NULL
     seed row survives the distributed union at dist 0, so the replay
-    declines rather than mirror NULL semantics). Env-tunable:
-    SPARK_GRAFT_BFS_DRIVER_EDGES (default 1M rows)."""
-    import os
-
-    if driver_cutoff is None:
-        driver_cutoff = int(
-            os.environ.get("SPARK_GRAFT_BFS_DRIVER_EDGES", "1000000")
-        )
-    if driver_cutoff <= 0 or int(k) < 0:
-        return None
+    declines rather than mirror NULL semantics). Cutoff:
+    ``replay.CUTOFFS["bfs_khop"]``, edge plus seed rows."""
+    op = "bfs_khop"
+    if int(k) < 0:
+        return replay.decline(op, "params")
     node_t = edges.schema[src].dataType.simpleString()
     if (
         node_t != edges.schema[dst].dataType.simpleString()
         or node_t != seeds.schema[node].dataType.simpleString()
         or node_t not in ("int", "bigint", "string")
     ):
-        return None
+        return replay.decline(op, "id_type")
     spark = edges.sparkSession
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).persist()
-    s = seeds.select(F.col(node).alias("n")).persist()
-    if e.count() > driver_cutoff or s.count() > driver_cutoff:
-        e.unpersist()
-        s.unpersist()
+    hit = replay.collect(
+        op,
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")),
+        seeds.select(F.col(node).alias("n")),
+    )
+    if hit is None:
         return None
-    etbl = e.toArrow()
-    stbl = s.toArrow()
-    e.unpersist()
-    s.unpersist()
+    etbl, stbl = hit
     if (
         etbl.column("a").null_count > 0
         or etbl.column("b").null_count > 0
         or stbl.column("n").null_count > 0
     ):
-        return None
+        return replay.decline(op, "null_id")
     import numpy as np
 
     from drune_spark.functions.partitioning import local_frame
@@ -351,7 +334,6 @@ def bfs_khop(
     src: str = "src",
     dst: str = "dst",
     node: str = "node",
-    driver_cutoff: int | None = None,
 ) -> DataFrame:
     """Breadth-first hop distance from a seed set, bounded at ``k``
     hops: (node, dist) with dist = min #edges from any seed, dist <= k.
@@ -383,11 +365,11 @@ def bfs_khop(
     latency trade only pays when k is unbounded.
 
     Reference analog: none (drune has no iterative operators); the
-    unrolled-CTE oracle pattern follows pagerank_int above. Below
-    ``SPARK_GRAFT_BFS_DRIVER_EDGES`` edge rows the hops replay on the
-    driver with numpy set operations (see ``_bfs_driver_result``).
+    unrolled-CTE oracle pattern follows pagerank_int above. Below its
+    ``replay.CUTOFFS`` entry the hops replay on the driver with numpy
+    set operations (see ``_bfs_driver_result``).
     """
-    hit = _bfs_driver_result(edges, seeds, k, src, dst, node, driver_cutoff)
+    hit = _bfs_driver_result(edges, seeds, k, src, dst, node)
     if hit is not None:
         return hit
     # The edge list is read by EVERY round's frontier join; gates pass
@@ -457,7 +439,6 @@ def _kcore_driver_result(
     rounds: int,
     src: str,
     dst: str,
-    driver_cutoff: int | None,
 ):
     """Size-adaptive driver replay for :func:`kcore` (r11 — the
     pagerank/§18 family): below an edge-row cutoff the unrolled peels
@@ -469,38 +450,29 @@ def _kcore_driver_result(
     (node, degree) DataFrame, or None → run the distributed loop
     (cutoff exceeded, unsupported/NULL ids, or ``k < 1`` — a
     ``degree >= k`` filter with k <= 0 would admit zero-degree nodes
-    the distributed groupBy never emits rows for). Env-tunable:
-    SPARK_GRAFT_KCORE_DRIVER_EDGES (default 1M rows — broadcast-build
-    memory class, ~16 B/row)."""
-    import os
-
-    if driver_cutoff is None:
-        driver_cutoff = int(
-            os.environ.get("SPARK_GRAFT_KCORE_DRIVER_EDGES", "1000000")
-        )
-    if driver_cutoff <= 0 or int(k) < 1 or int(rounds) < 1:
-        return None
+    the distributed groupBy never emits rows for). Cutoff:
+    ``replay.CUTOFFS["kcore"]``, edge rows (~16 B/row)."""
+    op = "kcore"
+    if int(k) < 1 or int(rounds) < 1:
+        return replay.decline(op, "params")
     node_t = edges.schema[src].dataType.simpleString()
     if (
         node_t != edges.schema[dst].dataType.simpleString()
         or node_t not in ("int", "bigint", "string")
     ):
-        return None
+        return replay.decline(op, "id_type")
     spark = edges.sparkSession
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).persist()
-    n_edges = e.count()
-    if n_edges > driver_cutoff:
-        e.unpersist()
+    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    tbl = replay.collect(op, e)
+    if tbl is None:
         return None
-    tbl = e.toArrow()
-    e.unpersist()
     from drune_spark.functions.partitioning import local_frame
 
     schema = f"node {node_t}, degree bigint"
     if tbl.num_rows == 0:
         return local_frame(spark, [], schema)
     if tbl.column("a").null_count > 0 or tbl.column("b").null_count > 0:
-        return None  # distributed joins drop NULL keys; decline instead
+        return replay.decline(op, "null_id", tbl.num_rows)  # joins drop
     import numpy as np
 
     if node_t == "string":
@@ -536,7 +508,6 @@ def kcore(
     rounds: int = 4,
     src: str = "src",
     dst: str = "dst",
-    driver_cutoff: int | None = None,
 ) -> DataFrame:
     """Bounded-round k-core peeling over a SYMMETRIC edge list (both
     directions present): each round drops nodes whose degree within
@@ -550,11 +521,11 @@ def kcore(
     round is edges ⋈ survivors (both endpoints) + a node-cell degree
     count — shuffle carries (node, count) cells. Returns (node,
     degree) for nodes alive after the last round, with their
-    within-subgraph degree from that round. Below
-    ``SPARK_GRAFT_KCORE_DRIVER_EDGES`` edge rows the peels replay on
-    the driver in exact integer numpy (see ``_kcore_driver_result``).
+    within-subgraph degree from that round. Below its
+    ``replay.CUTOFFS`` entry the peels replay on the driver in exact
+    integer numpy (see ``_kcore_driver_result``).
     """
-    hit = _kcore_driver_result(edges, k, rounds, src, dst, driver_cutoff)
+    hit = _kcore_driver_result(edges, k, rounds, src, dst)
     if hit is not None:
         return hit
     e0 = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).persist()
@@ -580,7 +551,6 @@ def _lpa_driver_result(
     rounds: int,
     src: str,
     dst: str,
-    driver_cutoff: int | None,
 ):
     """Size-adaptive driver replay for :func:`label_propagation` (r11,
     the pagerank/§18 family): below an edge-row cutoff each round's
@@ -593,40 +563,33 @@ def _lpa_driver_result(
     the (node, label) DataFrame, or None → distributed loop (cutoff
     exceeded, non-integer/NULL ids, ids outside [0, 2³³) — the
     encoding's domain bound, where the ANSI distributed path is the
-    one that defines overflow behavior). Env-tunable:
-    SPARK_GRAFT_LPA_DRIVER_EDGES (default 1M rows)."""
-    import os
-
-    if driver_cutoff is None:
-        driver_cutoff = int(
-            os.environ.get("SPARK_GRAFT_LPA_DRIVER_EDGES", "1000000")
-        )
+    one that defines overflow behavior). Cutoff:
+    ``replay.CUTOFFS["label_propagation"]``, edge rows."""
+    op = "label_propagation"
     # rounds=0 would return label typed bigint where the distributed
     # path keeps the node column's type — decline degenerate params.
-    if driver_cutoff <= 0 or int(rounds) < 1:
-        return None
+    if int(rounds) < 1:
+        return replay.decline(op, "params")
     node_t = edges.schema[src].dataType.simpleString()
     if (
         node_t != edges.schema[dst].dataType.simpleString()
         or node_t not in ("int", "bigint")
     ):
-        return None
+        return replay.decline(op, "id_type")
     spark = edges.sparkSession
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).persist()
-    n_edges = e.count()
-    if n_edges > driver_cutoff:
-        e.unpersist()
+    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+    tbl = replay.collect(op, e)
+    if tbl is None:
         return None
-    tbl = e.toArrow()
-    e.unpersist()
+    n_edges = tbl.num_rows
     from drune_spark.functions.partitioning import local_frame
 
     K = 1 << 33
     schema = f"node {node_t}, label bigint"
-    if tbl.num_rows == 0:
+    if n_edges == 0:
         return local_frame(spark, [], schema)
     if tbl.column("a").null_count > 0 or tbl.column("b").null_count > 0:
-        return None
+        return replay.decline(op, "null_id", n_edges)
     import numpy as np
 
     a_vals = tbl.column("a").to_numpy(zero_copy_only=False).astype(
@@ -636,13 +599,13 @@ def _lpa_driver_result(
         np.int64, copy=False
     )
     if int(a_vals.min()) < 0 or int(b_vals.min()) < 0:
-        return None
+        return replay.decline(op, "id_domain", n_edges)
     if max(int(a_vals.max()), int(b_vals.max())) >= K:
-        return None
+        return replay.decline(op, "id_domain", n_edges)
     # cnt·K + K must stay in int64: cnt ≤ n_edges ≤ cutoff; exact check
     # in python ints (the distributed ANSI path would raise instead).
     if n_edges * K + K >= (1 << 63):
-        return None
+        return replay.decline(op, "overflow", n_edges)
     nodes = np.unique(a_vals)  # the distributed labels frame: distinct a
     n_nodes = len(nodes)
     a_idx = np.searchsorted(nodes, a_vals)
@@ -679,7 +642,6 @@ def label_propagation(
     src: str = "src",
     dst: str = "dst",
     shuffle_partitions: int | None = None,
-    driver_cutoff: int | None = None,
 ) -> DataFrame:
     """Synchronous label propagation community detection (Raghavan,
     Albert & Kumara 2007) over a SYMMETRIC edge list: every node
@@ -712,11 +674,11 @@ def label_propagation(
     default (and the oracle-gated plan shape). Label VALUES are
     width-invariant either way.
 
-    Returns (node, label) after ``rounds`` rounds. Below
-    ``SPARK_GRAFT_LPA_DRIVER_EDGES`` edge rows the rounds replay on
-    the driver in exact int64 numpy (see ``_lpa_driver_result``).
+    Returns (node, label) after ``rounds`` rounds. Below its
+    ``replay.CUTOFFS`` entry the rounds replay on the driver in exact
+    int64 numpy (see ``_lpa_driver_result``).
     """
-    hit = _lpa_driver_result(edges, rounds, src, dst, driver_cutoff)
+    hit = _lpa_driver_result(edges, rounds, src, dst)
     if hit is not None:
         return hit
     K = 1 << 33
@@ -754,7 +716,6 @@ def k_truss(
     rounds: int = 2,
     src: str = "src",
     dst: str = "dst",
-    driver_cutoff: int | None = None,
 ) -> DataFrame:
     """k-truss peel (Cohen 2008, 'Trusses: cohesive subgraphs for
     social network analysis'): the subgraph in which every edge closes
@@ -804,17 +765,13 @@ def k_truss(
     # in-memory peel replaces the loop. Support = |N(u) ∩ N(v)| per
     # round — the identical canonical triangle set, exact integer
     # counts, so oracle hashes are untouched. Above the cutoff
-    # (production graphs) the distributed peel runs unchanged; the
-    # threshold is env-tunable (SPARK_GRAFT_TRUSS_DRIVER_EDGES,
-    # default 200k rows ≈ a few MB, the CC cutoff class).
-    if driver_cutoff is None:
-        import os
-
-        driver_cutoff = int(
-            os.environ.get("SPARK_GRAFT_TRUSS_DRIVER_EDGES", "200000")
+    # (production graphs) the distributed peel runs unchanged (cutoff:
+    # replay.CUTOFFS, 200k rows ≈ a few MB, the CC cutoff class).
+    tbl = replay.collect("k_truss", e)
+    if tbl is not None:
+        rows = list(
+            zip(tbl.column("u").to_pylist(), tbl.column("v").to_pylist())
         )
-    if e.count() <= driver_cutoff:
-        rows = [(r[0], r[1]) for r in e.collect()]
 
         def _support(edge_set):
             adj: dict = {}
@@ -959,7 +916,6 @@ def anf_reach(
     rounds: int = 3,
     src: str = "src",
     dst: str = "dst",
-    driver_cutoff: int | None = None,
 ) -> DataFrame:
     """Approximate neighborhood function (ANF, Palmer/Gibbons/Faloutsos
     2002) over a SYMMETRIC edge list: per radius r, the total
@@ -1005,18 +961,15 @@ def anf_reach(
     # of the complement — all int64-domain integers, order-free, so
     # oracle hashes are untouched. Inner-join semantics mirrored: seeds
     # come from DISTINCT src values and a round keeps only nodes with
-    # ≥1 neighbor whose mask exists. Above the cutoff the distributed
-    # loop runs unchanged (SPARK_GRAFT_ANF_DRIVER_EDGES, default 200k).
-    if driver_cutoff is None:
-        import os
-
-        driver_cutoff = int(
-            os.environ.get("SPARK_GRAFT_ANF_DRIVER_EDGES", "200000")
-        )
-    if e0.count() <= driver_cutoff:
+    # ≥1 neighbor whose mask exists. Above the cutoff (replay.CUTOFFS,
+    # 200k rows) the distributed loop runs unchanged.
+    tbl = replay.collect("anf_reach", e0)
+    if tbl is not None:
         import hashlib
 
-        edge_rows = [(r[0], r[1]) for r in e0.collect()]
+        edge_rows = list(
+            zip(tbl.column("a").to_pylist(), tbl.column("b").to_pylist())
+        )
         e0.unpersist()
         nodes = {a for a, _ in edge_rows}
 
@@ -1129,9 +1082,11 @@ def anf_reach(
             T.StructField("reach_mass", T.LongType(), True),
         ]
     )
+    # An empty edge list sums no rows: reach_mass is NULL, the
+    # replay's 0.
     return spark.createDataFrame(
         [
-            (r, int(o.get["cells"]), int(o.get["reach_mass"]))
+            (r, int(o.get["cells"]), int(o.get["reach_mass"] or 0))
             for r, o in enumerate(observations)
         ],
         schema=schema,
@@ -1145,7 +1100,6 @@ def _modularity_driver_result(
     comm_col: str,
     src: str,
     dst: str,
-    driver_cutoff: int | None,
 ):
     """Size-adaptive driver replay for :func:`partition_modularity`
     (r11, the pagerank/§18 family): below an edge-row cutoff the two
@@ -1161,15 +1115,9 @@ def _modularity_driver_result(
     q_num) DataFrame sorted by community, or None → distributed path
     (cutoff exceeded, NULL edge endpoints, duplicate assign nodes —
     the distributed join INFLATES on those — or an overflow-risk
-    bound). Env-tunable: SPARK_GRAFT_MODULARITY_DRIVER_EDGES."""
-    import os
-
-    if driver_cutoff is None:
-        driver_cutoff = int(
-            os.environ.get("SPARK_GRAFT_MODULARITY_DRIVER_EDGES", "200000")
-        )
-    if driver_cutoff <= 0:
-        return None
+    bound). Cutoff: ``replay.CUTOFFS["partition_modularity"]``, edge
+    plus assignment rows."""
+    op = "partition_modularity"
     node_t = edges.schema[src].dataType.simpleString()
     comm_t = assign.schema[comm_col].dataType.simpleString()
     if (
@@ -1178,20 +1126,16 @@ def _modularity_driver_result(
         or node_t not in ("int", "bigint", "string")
         or comm_t not in ("int", "bigint", "string")
     ):
-        return None
+        return replay.decline(op, "id_type")
     spark = edges.sparkSession
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).persist()
-    am = assign.select(
-        F.col(node_col).alias("n"), F.col(comm_col).alias("c")
-    ).persist()
-    if e.count() > driver_cutoff or am.count() > driver_cutoff:
-        e.unpersist()
-        am.unpersist()
+    hit = replay.collect(
+        op,
+        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")),
+        assign.select(F.col(node_col).alias("n"), F.col(comm_col).alias("c")),
+    )
+    if hit is None:
         return None
-    etbl = e.toArrow()
-    atbl = am.toArrow()
-    e.unpersist()
-    am.unpersist()
+    etbl, atbl = hit
     from drune_spark.functions.partitioning import local_frame
 
     schema = (
@@ -1199,7 +1143,7 @@ def _modularity_driver_result(
         "q_num bigint"
     )
     if etbl.column("a").null_count > 0 or etbl.column("b").null_count > 0:
-        return None  # distributed joins drop NULL keys; decline
+        return replay.decline(op, "null_id", etbl.num_rows)  # joins drop
     n_vals = atbl.column("n").to_pylist()
     c_vals = atbl.column("c").to_pylist()
     cmap = {}
@@ -1207,7 +1151,8 @@ def _modularity_driver_result(
         if nv is None:
             continue  # the distributed equi-join drops NULL keys
         if nv in cmap:
-            return None  # duplicate assignment inflates joined counts
+            # a duplicate assignment inflates the joined counts
+            return replay.decline(op, "duplicate_id", etbl.num_rows)
         cmap[nv] = cv
     a_list = etbl.column("a").to_pylist()
     b_list = etbl.column("b").to_pylist()
@@ -1232,7 +1177,7 @@ def _modularity_driver_result(
         l2, d = cells[c]
         q = l2 * m2 - d * d  # exact in python ints
         if not (-two63 <= q < two63):
-            return None  # the ANSI distributed path defines overflow
+            return replay.decline(op, "overflow", etbl.num_rows)  # ANSI
         rows.append((c, l2, d, q))
     return local_frame(spark, rows, schema)
 
@@ -1244,7 +1189,6 @@ def partition_modularity(
     comm_col: str = "community",
     src: str = "src",
     dst: str = "dst",
-    driver_cutoff: int | None = None,
 ) -> DataFrame:
     """Newman modularity of a GIVEN node partition over a SYMMETRIC
     edge list, in exact integer arithmetic: per community c, with m2 =
@@ -1262,12 +1206,12 @@ def partition_modularity(
     any parallelism. ``assign`` must be a partition — one row per
     node (duplicate assignments would inflate the joined edge counts).
     Returns (community, l2_internal, degree_sum, q_num) ordered by
-    community. Below ``SPARK_GRAFT_MODULARITY_DRIVER_EDGES`` edge rows
-    the cells replay on the driver in exact python-int arithmetic
-    (see ``_modularity_driver_result``).
+    community. Below its ``replay.CUTOFFS`` entry the cells replay on
+    the driver in exact python-int arithmetic (see
+    ``_modularity_driver_result``).
     """
     hit = _modularity_driver_result(
-        edges, assign, node_col, comm_col, src, dst, driver_cutoff
+        edges, assign, node_col, comm_col, src, dst
     )
     if hit is not None:
         return hit
@@ -1333,7 +1277,6 @@ def personalized_pagerank_int(
     n_iters: int = 3,
     damping_pct: int = 85,
     scale: int = 1_000_000,
-    driver_cutoff: int | None = None,
 ) -> DataFrame:
     """Personalized PageRank (Page et al. 1999 §6 / Jeh & Widom 2003)
     with the pagerank_int integer discipline: the restart mass
@@ -1356,7 +1299,8 @@ def personalized_pagerank_int(
     Returns (node, rank_int).
     """
     hit = _pagerank_driver_replay(
-        edges, n_iters, damping_pct, scale, list(seed_nodes), driver_cutoff
+        edges, n_iters, damping_pct, scale, list(seed_nodes),
+        "personalized_pagerank_int",
     )
     if hit is not None:
         return hit
@@ -1401,7 +1345,6 @@ def hits_int(
     edges: DataFrame,
     n_iters: int = 3,
     scale: int = 1_000_000,
-    driver_cutoff: int | None = None,
 ) -> DataFrame:
     """HITS hubs-and-authorities (Kleinberg 1999) with integer-exact
     rounds: ``a(d) = Σ_{s→d} h(s)·w``, ``h(s) = Σ_{s→d} a(d)·w``, each
@@ -1443,17 +1386,10 @@ def hits_int(
     # division, and the domain is guarded — any sum that could leave
     # int64 (where the distributed ANSI path would raise) falls back to
     # the distributed loop instead of wrapping. Oracle hashes are
-    # untouched. Above the cutoff the loop runs unchanged
-    # (SPARK_GRAFT_HITS_DRIVER_EDGES, default 1M rows).
-    if driver_cutoff is None:
-        import os
-
-        driver_cutoff = int(
-            os.environ.get("SPARK_GRAFT_HITS_DRIVER_EDGES", "1000000")
-        )
-    n_edges = e.count()
-    if n_edges <= driver_cutoff:
-        tbl = e.toArrow()
+    # untouched. Above the cutoff (replay.CUTOFFS, 1M rows) the loop
+    # runs unchanged.
+    tbl = replay.collect("hits_int", e)
+    if tbl is not None:
         e.unpersist()
         if tbl.num_rows == 0:
             return spark.createDataFrame(
@@ -1520,6 +1456,7 @@ def hits_int(
                 + [(s, "hub", h) for s, h in hubs.items()],
                 schema,
             )
+        replay.decline("hits_int", "weight_domain", tbl.num_rows)
     e_src = e.repartition(width, "src").persist()
     e_dst = e.repartition(width, "dst").persist()
     hubs = e_src.select("src").distinct().select(

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from drune_spark.functions.vectors import to_double_array
+from drune_spark.operators import replay
 
 
 def quantize_unsigned(
@@ -105,7 +106,6 @@ def _ivf_driver_result(
     dim: int,
     id_col: str,
     with_stats: bool,
-    driver_cutoff: int | None,
 ):
     """Driver replay gate for ``ivf_train``: returns the final
     (centroid_id, centroid, n_members, sse) rows when the Lloyd loop
@@ -120,23 +120,19 @@ def _ivf_driver_result(
     floor division == the python ``//`` the distributed control loop
     itself uses), scatter-added SSE. Ragged/mismatched dims, NULL-bearing
     codes, non-integer ids or out-of-budget sizes decline to the
-    distributed path."""
-    import os
-
-    if driver_cutoff is None:
-        driver_cutoff = int(
-            os.environ.get("SPARK_GRAFT_IVF_DRIVER_CELLS", "2000000")
-        )
-    if driver_cutoff <= 0:
-        return None
+    distributed path. The cutoff counts code cells (rows × dim), so the
+    gate compares the cached frame's count itself."""
+    op = "ivf_train"
     if q.schema[id_col].dataType.simpleString() not in ("bigint", "int"):
-        return None
+        return replay.decline(op, "id_type")
     n = q.count()
-    if n == 0 or n * dim > driver_cutoff:
+    if n == 0:
+        return replay.decline(op, "empty", 0)
+    if not replay.admit(op, n * dim):
         return None
     # distance-matrix op budget per round (n·k·dim int64 mults)
     if n * max(1, k) * dim > 512_000_000:
-        return None
+        return replay.decline(op, "op_budget", n * dim)
     import numpy as np
 
     at = q.toArrow()
@@ -146,14 +142,14 @@ def _ivf_driver_result(
     offs = np.asarray(qv.offsets, dtype=np.int64)
     lens = np.diff(offs)
     if (lens != dim).any():
-        return None
+        return replay.decline(op, "ragged_dim", n * dim)
     flat = qv.values.to_numpy(zero_copy_only=False)
     flat = flat[offs[0]:offs[-1]]
     if flat.dtype != np.int64:  # NULL elements surface as float
-        return None
+        return replay.decline(op, "null_code", n * dim)
     codes = flat.reshape(int(n), dim)
     if ids.dtype.kind not in "iu":
-        return None
+        return replay.decline(op, "null_id", n * dim)
     mmax = int(np.abs(codes).max(initial=0))
     # Bound EVERY int64 sum by the actual sizes, not the default
     # cutoff: dist ≤ dim·(2M)² per row and SSE ≤ n·dim·(2M)², so
@@ -161,7 +157,7 @@ def _ivf_driver_result(
     # itself cannot overflow). Past it the distributed ANSI path is
     # the one that raises loudly instead of wrapping.
     if mmax > 0 and int(n) * dim * 4 * mmax * mmax >= (1 << 62):
-        return None
+        return replay.decline(op, "overflow", n * dim)
     order = np.argsort(ids)
     ids_s, codes_s = ids[order].astype(np.int64), codes[order]
     kk = min(int(k), int(n))
@@ -170,7 +166,7 @@ def _ivf_driver_result(
     # shared mean, while this replay would keep two independently
     # updating centroid rows — decline to the distributed path.
     if len(np.unique(ids_s[:kk])) != kk:
-        return None
+        return replay.decline(op, "duplicate_id", n * dim)
     cids = ids_s[:kk]
     cents = codes_s[:kk].copy()
 
@@ -215,7 +211,6 @@ def ivf_train(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     with_stats: bool = True,
-    driver_cutoff: int | None = None,
 ) -> DataFrame:
     """Train IVF coarse centroids with ``n_iters`` Lloyd rounds over
     quantized codes. Returns (centroid_id, centroid array<long>,
@@ -232,8 +227,8 @@ def ivf_train(
     q = quantize_unsigned(corpus, vec_col, id_col).persist()
     try:
         # Size-adaptive driver fast path (r10 §26): below a cell cutoff
-        # (SPARK_GRAFT_IVF_DRIVER_CELLS, n·dim rows — the broadcast
-        # memory class) ONE Arrow collect of the quantized codes replays
+        # (replay.CUTOFFS, n·dim cells — the broadcast memory class) ONE
+        # Arrow collect of the quantized codes replays
         # the whole Lloyd loop in int64 numpy. The distributed loop at
         # bench scale paid ~8 s PER ROUND: CollapseProject inlines the
         # ``_best_cell`` argmin struct into the post-posexplode
@@ -242,7 +237,6 @@ def ivf_train(
         # Above the cutoff the loop below runs (with the barrier fix).
         hit = _ivf_driver_result(
             q, n_centroids, n_iters, dim, id_col, with_stats,
-            driver_cutoff,
         )
         if hit is not None:
             from drune_spark.functions.partitioning import local_frame

@@ -32,6 +32,7 @@ from drune_spark.functions.vectors import (
     norm,
     to_double_array,
 )
+from drune_spark.operators import replay
 
 
 def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
@@ -1330,7 +1331,6 @@ def nsw_greedy_search(
     query_mod: int = 50,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    driver_cutoff: int | None = None,
 ) -> DataFrame:
     """Graph-ANN serving: greedy best-first walk over a navigable
     small-world neighbor graph (Malkov et al. 2014 — the single-layer
@@ -1375,26 +1375,20 @@ def nsw_greedy_search(
     # distributed build + 4-hop walk runs 47 sequential jobs (pair
     # join, top-M window, per-hop joins + eager localCheckpoints) at
     # ~0.1 s scheduling latency each for a corpus that fits one Arrow
-    # transfer. Below the row cutoff (SPARK_GRAFT_NSW_DRIVER_ROWS,
-    # default 5000 — n·d doubles plus n²/(2·n_cells) pair cosines is
-    # the driver-compute class there) the whole thing replays on the
+    # transfer. Below the row cutoff (replay.CUTOFFS, 5000 rows — n·d
+    # doubles plus n²/(2·n_cells) pair cosines is the driver-compute
+    # class there) the whole thing replays on the
     # driver bit-exactly (see _nsw_driver_rows); above it, or when the
     # replay declines (ragged dims, zero norms, negative ids), the
     # distributed path below runs unchanged.
-    if driver_cutoff is None:
-        import os
-
-        driver_cutoff = int(
-            os.environ.get("SPARK_GRAFT_NSW_DRIVER_ROWS", "5000")
-        )
-    n_rows = emb.count()
-    if n_rows <= driver_cutoff:
+    tbl = replay.collect("nsw_greedy_search", emb.select(
+        F.col(id_col).alias("nid"),
+        to_double_array(F.col(vec_col)).alias("v"),
+    ))
+    if tbl is not None:
         import numpy as np
 
-        tbl = emb.select(
-            F.col(id_col).alias("nid"),
-            to_double_array(F.col(vec_col)).alias("v"),
-        ).toArrow()
+        n_rows = tbl.num_rows
         ids = tbl.column("nid").combine_chunks().to_numpy(
             zero_copy_only=False
         ).astype(np.int64)
@@ -1418,6 +1412,7 @@ def nsw_greedy_search(
                 rows,
                 "query_id bigint, node bigint, cos_micro bigint",
             )
+        replay.decline("nsw_greedy_search", "vector_domain", n_rows)
 
     c = fan_out(emb).select(
         F.col(id_col).alias("nid"),

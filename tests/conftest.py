@@ -22,6 +22,23 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture()
+def both_modes():
+    """Runs a builder twice: at the default replay cutoffs, then under
+    ``replay.distributed()``, and returns both results. Operators pick
+    their path while the frame is built, so a builder should return
+    collected values (or a schema), not a lazy frame."""
+    from drune_spark.operators import replay
+
+    def run(build):
+        fast = build()
+        with replay.distributed():
+            slow = build()
+        return fast, slow
+
+    return run
+
+
 def assert_df_equal(actual, expected, sort_by=None):
     """chispa-style DataFrame equality: same columns (order-insensitive),
     same rows (order-insensitive unless sort_by given)."""

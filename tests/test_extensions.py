@@ -4,6 +4,7 @@ SimHash locality, multimodal plumbing, streaming batch-equivalence."""
 import pytest
 from pyspark.sql import functions as F
 
+from drune_spark.operators import replay
 from drune_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
@@ -110,9 +111,11 @@ class TestDedup:
         assert (1, 3) in cands
         assert (1, 4) not in cands
 
-    def test_portable_minhash_replay_matches_distributed(self, spark):
+    def test_portable_minhash_replay_matches_distributed(
+        self, spark, both_modes
+    ):
         """The r11 numpy replay of portable minhash_lsh_pairs (default
-        cutoff) and the distributed banding pipeline (cutoff 0) must
+        cutoff) and the distributed banding pipeline (forced) must
         return identical row SETS — including est values, short docs
         whose empty shingle arrays band together (est 1.0), and both
         id types. The xxhash64 bucket is a transport encoding of the
@@ -133,21 +136,13 @@ class TestDedup:
             df = spark.createDataFrame(
                 [(ids(i), t) for i, t in rows], schema
             )
-            fast = sorted(
+            fast, slow = both_modes(lambda: sorted(
                 (r.id_a, r.id_b, r.est_jaccard)
                 for r in minhash_lsh_pairs(
                     df, "text", "doc_id", num_perm=64, bands=16,
                     min_est_jaccard=0.25, portable=True,
                 ).collect()
-            )
-            slow = sorted(
-                (r.id_a, r.id_b, r.est_jaccard)
-                for r in minhash_lsh_pairs(
-                    df, "text", "doc_id", num_perm=64, bands=16,
-                    min_est_jaccard=0.25, portable=True,
-                    driver_cutoff=0,
-                ).collect()
-            )
+            ))
             assert fast == slow
             # the planted exact dup and the empty-doc family are found
             assert any(e == 1.0 for _, _, e in fast)
@@ -160,10 +155,12 @@ class TestDedup:
         assert pairs.get((1, 2)) == 0     # identical docs: hamming 0
         assert (1, 4) not in pairs
 
-    def test_portable_simhash_replay_matches_distributed(self, spark):
+    def test_portable_simhash_replay_matches_distributed(
+        self, spark, both_modes
+    ):
         """The r11 numpy replay of the portable simhash banding
         (default cutoff) and the distributed chunk self-join
-        (cutoff 0) must return identical row SETS — pairs AND hamming
+        (forced) must return identical row SETS — pairs AND hamming
         values — for int and string ids, including exact dups and
         empty docs (all-zero signatures band together)."""
         from drune_spark.operators.dedup import (
@@ -183,19 +180,12 @@ class TestDedup:
             df = spark.createDataFrame(
                 [(ids(i), t) for i, t in rows], schema
             )
-            fast = sorted(
+            fast, slow = both_modes(lambda: sorted(
                 (r.id_a, r.id_b, r.hamming)
                 for r in simhash_near_dup_pairs_portable(
                     df, "text", "doc_id", max_hamming=10
                 ).collect()
-            )
-            slow = sorted(
-                (r.id_a, r.id_b, r.hamming)
-                for r in simhash_near_dup_pairs_portable(
-                    df, "text", "doc_id", max_hamming=10,
-                    driver_cutoff=0,
-                ).collect()
-            )
+            ))
             assert fast == slow
             assert any(h == 0 for _, _, h in fast)  # planted exact dup
 
@@ -207,9 +197,9 @@ class TestDedup:
             [(i, i + 1) for i in range(6)], ["id_a", "id_b"]
         )
         nodes = spark.createDataFrame([(i,) for i in range(7)], ["doc_id"])
-        with pytest.warns(RuntimeWarning, match="did not converge"):
-            out = connected_components(edges, nodes, max_iterations=1,
-                                       driver_cutoff=0)
+        with pytest.warns(RuntimeWarning, match="did not converge"), \
+                replay.distributed():
+            out = connected_components(edges, nodes, max_iterations=1)
             out.collect()
 
     def test_connected_components_pointer_jump_handles_deep_chains(
@@ -227,8 +217,8 @@ class TestDedup:
             [(i, i + 1) for i in range(n - 1)], ["id_a", "id_b"]
         )
         nodes = spark.createDataFrame([(i,) for i in range(n)], ["doc_id"])
-        out = connected_components(edges, nodes, max_iterations=12,
-                                   driver_cutoff=0)
+        with replay.distributed():
+            out = connected_components(edges, nodes, max_iterations=12)
         labels = {r.doc_id: r.cluster_id for r in out.collect()}
         assert labels == {i: 0 for i in range(n)}
         assert not [
@@ -236,7 +226,7 @@ class TestDedup:
         ]
 
     def test_connected_components_driver_path_matches_distributed(
-        self, spark
+        self, spark, both_modes
     ):
         """The small-graph driver union-find fast path (r10) must be
         row-identical to the distributed HashMin loop: same min-id
@@ -249,11 +239,9 @@ class TestDedup:
         nodes = spark.createDataFrame(
             [(i,) for i in range(1, 14)], ["doc_id"]
         )
-        fast = {r.doc_id: r.cluster_id
-                for r in connected_components(edges, nodes).collect()}
-        slow = {r.doc_id: r.cluster_id
-                for r in connected_components(
-                    edges, nodes, driver_cutoff=0).collect()}
+        fast, slow = both_modes(lambda: {
+            r.doc_id: r.cluster_id
+            for r in connected_components(edges, nodes).collect()})
         assert fast == slow
         assert fast[3] == 1 and fast[9] == 5 and fast[12] == 11
         assert fast[4] == 4 and fast[13] == 13
@@ -278,7 +266,9 @@ class TestDedup:
         assert sorted(r.doc_id for r in out.collect()) == [
             1, 4, 5, 6, 8, 9, 10, 11, 12, 13]
 
-    def test_jaccard_pairs_driver_path_matches_distributed(self, spark):
+    def test_jaccard_pairs_driver_path_matches_distributed(
+        self, spark, both_modes
+    ):
         """The small-corpus driver pair fast path (r10) must be
         row-identical to the distributed shingle self-join: same pairs,
         same IEEE jaccard doubles, with and without the hot-shingle
@@ -298,19 +288,16 @@ class TestDedup:
             ["doc_id", "text"],
         )
         for cap in (None, 3):
-            fast = sorted(
+            fast, slow = both_modes(lambda: sorted(
                 map(tuple, ngram_jaccard_pairs(
                     docs, "text", "doc_id", k=3, threshold=0.3,
                     max_shingle_df=cap).collect())
-            )
-            slow = sorted(
-                map(tuple, ngram_jaccard_pairs(
-                    docs, "text", "doc_id", k=3, threshold=0.3,
-                    max_shingle_df=cap, driver_cutoff=0).collect())
-            )
+            ))
             assert fast == slow and len(fast) > 0
 
-    def test_containment_pairs_driver_path_matches_distributed(self, spark):
+    def test_containment_pairs_driver_path_matches_distributed(
+        self, spark, both_modes
+    ):
         """Same contract for the asymmetric containment op: both
         directions, integer ppm math, on a doc embedded in a larger
         one (the case jaccard misses)."""
@@ -324,16 +311,11 @@ class TestDedup:
             ],
             ["doc_id", "text"],
         )
-        fast = sorted(
+        fast, slow = both_modes(lambda: sorted(
             map(tuple, containment_pairs(
                 docs, "text", "doc_id", k=3,
                 min_containment_ppm=500_000).collect())
-        )
-        slow = sorted(
-            map(tuple, containment_pairs(
-                docs, "text", "doc_id", k=3,
-                min_containment_ppm=500_000, driver_cutoff=0).collect())
-        )
+        ))
         assert fast == slow and len(fast) > 0
         # the small doc must be reported as contained in the large one
         assert any(r[0] == 10 and r[1] == 20 and r[4] == 1_000_000
@@ -589,9 +571,9 @@ class TestPrefixFilterJoin:
         assert (r.a, r.b, r.n_common) == (1, 2, 3)
         assert r.jaccard_ppm == 1000000 * 3 // 5
 
-    def test_driver_path_matches_distributed(self, spark):
+    def test_driver_path_matches_distributed(self, spark, both_modes):
         """The r10 bitmask driver replay (default cutoff) and the
-        distributed PPJoin (cutoff 0) must return IDENTICAL rows —
+        distributed PPJoin (forced) must return IDENTICAL rows —
         int ids and string ids, a vocab spanning >64 tokens (multi-word
         masks), ties, exact dups, and a zero-overlap doc."""
         from drune_spark.operators.dedup import prefix_filter_join
@@ -608,25 +590,21 @@ class TestPrefixFilterJoin:
                 [(ids(i), txt) for i, txt in rows], schema
             )
             for t in (40, 75):
-                fast = prefix_filter_join(
-                    df, "text", "doc_id", threshold_pct=t
-                )
-                slow = prefix_filter_join(
-                    df, "text", "doc_id", threshold_pct=t,
-                    driver_cutoff=0,
-                )
-                assert sorted(map(tuple, fast.collect())) == sorted(
-                    map(tuple, slow.collect())
-                )
-                # names + types must match exactly (the oracle hashes
-                # values under sorted column names); nullability is
-                # plan metadata — counts are non-nullable only on the
-                # distributed side
-                assert [(f.name, f.dataType) for f in fast.schema] == [
-                    (f.name, f.dataType) for f in slow.schema
-                ]
+                def build():
+                    out = prefix_filter_join(
+                        df, "text", "doc_id", threshold_pct=t
+                    )
+                    # names + types must match exactly (the oracle
+                    # hashes values under sorted column names);
+                    # nullability is plan metadata — counts are
+                    # non-nullable only on the distributed side
+                    return (sorted(map(tuple, out.collect())),
+                            [(f.name, f.dataType) for f in out.schema])
 
-    def test_duplicate_doc_ids_match_distributed(self, spark):
+                fast, slow = both_modes(build)
+                assert fast == slow
+
+    def test_duplicate_doc_ids_match_distributed(self, spark, both_modes):
         """A repeated doc id makes (doc, token) cells non-distinct:
         the distributed path COUNTS duplicate cells into sizes and
         intersections, which a bitmask OR would collapse — the driver
@@ -636,11 +614,8 @@ class TestPrefixFilterJoin:
         from drune_spark.operators.dedup import prefix_filter_join
         rows = [(1, "a b"), (1, "b c"), (2, "a c d")]
         df = spark.createDataFrame(rows, "doc_id long, text string")
-        fast = sorted(map(tuple, prefix_filter_join(
-            df, "text", "doc_id", threshold_pct=40).collect()))
-        slow = sorted(map(tuple, prefix_filter_join(
-            df, "text", "doc_id", threshold_pct=40,
-            driver_cutoff=0).collect()))
+        fast, slow = both_modes(lambda: sorted(map(tuple, prefix_filter_join(
+            df, "text", "doc_id", threshold_pct=40).collect())))
         assert fast == slow
 
     def test_bitmask_kernel_matches_gemm(self, spark, monkeypatch):
@@ -663,7 +638,7 @@ class TestPrefixFilterJoin:
             df, "text", "doc_id", threshold_pct=40).collect())
         assert gemm == bitm and len(gemm) >= 1
 
-    def test_null_doc_id_match_distributed(self, spark):
+    def test_null_doc_id_match_distributed(self, spark, both_modes):
         """A NULL doc id must not crash the driver bitmask gate (int ids
         collect as float64 breaking the bigint schema; string ids as
         None that np.unique cannot order) — it declines, matching the
@@ -676,17 +651,15 @@ class TestPrefixFilterJoin:
              [("d1", "a b c"), ("d2", "a b d"), (None, "a b c")]),
         ):
             df = spark.createDataFrame(rows, schema)
-            fast = sorted(map(tuple, prefix_filter_join(
-                df, "text", "doc_id", threshold_pct=40).collect()))
-            slow = sorted(map(tuple, prefix_filter_join(
-                df, "text", "doc_id", threshold_pct=40,
-                driver_cutoff=0).collect()))
+            fast, slow = both_modes(lambda: sorted(map(
+                tuple, prefix_filter_join(
+                    df, "text", "doc_id", threshold_pct=40).collect())))
             assert fast == slow and len(fast) >= 1
 
-    def test_lsh_census_replay_matches_distributed(self, spark):
+    def test_lsh_census_replay_matches_distributed(self, spark, both_modes):
         """The r11 one-collect numpy census replay (default cutoff) and
         the distributed ngram_jaccard + minhash_lsh composition
-        (cutoff 0) must return the identical single row — including
+        (forced) must return the identical single row — including
         short-doc empty-signature buckets (docs with < k tokens all
         share the init signature and band together) and both id types."""
         from drune_spark.operators.dedup import lsh_census_eval
@@ -706,10 +679,8 @@ class TestPrefixFilterJoin:
             df = spark.createDataFrame(
                 [(ids(i), txt) for i, txt in rows], schema
             )
-            fast = [tuple(r) for r in lsh_census_eval(
-                df, "text", "doc_id").collect()]
-            slow = [tuple(r) for r in lsh_census_eval(
-                df, "text", "doc_id", driver_cutoff=0).collect()]
+            fast, slow = both_modes(lambda: [tuple(r) for r in lsh_census_eval(
+                df, "text", "doc_id").collect()])
             assert fast == slow
             assert fast[0][0] >= 1  # the planted dups must be found
 
@@ -2023,9 +1994,9 @@ class TestIvfTrain:
             assert rows[cid].n_members == 0 and rows[cid].sse == 0
             assert list(rows[cid].centroid) == [code] * dim
 
-    def test_driver_path_matches_distributed(self, spark):
+    def test_driver_path_matches_distributed(self, spark, both_modes):
         """The r10 numpy Lloyd replay (default cutoff) and the
-        distributed loop (cutoff 0) must return identical rows —
+        distributed loop (forced) must return identical rows —
         incl. argmin ties (duplicate vectors), empty cells, values
         outside [-1, 1] (negative quantized codes exercise the floor
         division on negatives), and with_stats=False."""
@@ -2041,23 +2012,16 @@ class TestIvfTrain:
             rows, "vec_id long, embedding array<double>"
         )
         for stats in (True, False):
-            fast = sorted(
+            fast, slow = both_modes(lambda: sorted(
                 (r.centroid_id, tuple(r.centroid), r.n_members, r.sse)
                 for r in ivf_train(
                     df, n_centroids=5, n_iters=2, dim=dim,
                     with_stats=stats,
                 ).collect()
-            )
-            slow = sorted(
-                (r.centroid_id, tuple(r.centroid), r.n_members, r.sse)
-                for r in ivf_train(
-                    df, n_centroids=5, n_iters=2, dim=dim,
-                    with_stats=stats, driver_cutoff=0,
-                ).collect()
-            )
+            ))
             assert fast == slow
 
-    def test_duplicate_seed_ids_match_distributed(self, spark):
+    def test_duplicate_seed_ids_match_distributed(self, spark, both_modes):
         """Duplicate ids among the k lowest seeds: the distributed
         rebuild keys its accumulator by cid and collapses both entries
         into ONE shared mean/count, while the numpy replay would keep
@@ -2070,16 +2034,11 @@ class TestIvfTrain:
         df = spark.createDataFrame(
             rows, "vec_id long, embedding array<double>"
         )
-        fast = sorted(
+        fast, slow = both_modes(lambda: sorted(
             (r.centroid_id, tuple(r.centroid), r.n_members, r.sse)
             for r in ivf_train(df, n_centroids=3, n_iters=2,
                                dim=dim).collect()
-        )
-        slow = sorted(
-            (r.centroid_id, tuple(r.centroid), r.n_members, r.sse)
-            for r in ivf_train(df, n_centroids=3, n_iters=2, dim=dim,
-                               driver_cutoff=0).collect()
-        )
+        ))
         assert fast == slow
 
 
@@ -3620,10 +3579,10 @@ class TestIncrementalDedup:
             new, old, "text", "doc_id").collect()[0]
         assert (row.n_matches, row.is_dup) == (0, 0)
 
-    def test_incremental_replay_matches_distributed(self, spark):
+    def test_incremental_replay_matches_distributed(self, spark, both_modes):
         """The r11 numpy replay of the portable batch-probe (default
         cutoff) and the distributed broadcast-band pipeline
-        (cutoff 0) must return identical row SETS — n_matches,
+        (forced) must return identical row SETS — n_matches,
         best_est and is_dup included — for int and string ids, with
         planted dups, novel docs, and empty docs on BOTH sides (empty
         shingle arrays band together at est 1.0)."""
@@ -3650,24 +3609,20 @@ class TestIncrementalDedup:
                             else "doc_id < 10")
             kw = dict(num_perm=64, bands=16, min_est_jaccard=0.25,
                       portable=True)
-            fast = sorted(
+            fast, slow = both_modes(lambda: sorted(
                 (r[0], r.n_matches, r.best_est, r.is_dup)
                 for r in incremental_minhash_dedup(
                     new, old, "text", "doc_id", **kw).collect()
-            )
-            slow = sorted(
-                (r[0], r.n_matches, r.best_est, r.is_dup)
-                for r in incremental_minhash_dedup(
-                    new, old, "text", "doc_id", driver_cutoff=0,
-                    **kw).collect()
-            )
+            ))
             assert fast == slow
             # one verdict row per new doc; empty docs matched (est 1.0)
             assert len(fast) == new.count()
             assert any(b == 1.0 for _, _, b, _ in fast)
             assert any(d == 0 for _, _, _, d in fast)
 
-    def test_incremental_replay_declines_on_nulls_and_dups(self, spark):
+    def test_incremental_replay_declines_on_nulls_and_dups(
+        self, spark, both_modes
+    ):
         """NULL or duplicate ids decline to the distributed path (the
         replay's null_count / uniq checks) — the call must still
         succeed and match the distributed output."""
@@ -3693,11 +3648,9 @@ class TestIncrementalDedup:
                 new_rows, "doc_id long, text string")
             old = spark.createDataFrame(
                 old_rows, "doc_id long, text string")
-            fast = set(map(tuple, incremental_minhash_dedup(
-                new, old, "text", "doc_id", **kw).collect()))
-            slow = set(map(tuple, incremental_minhash_dedup(
-                new, old, "text", "doc_id", driver_cutoff=0,
-                **kw).collect()))
+            fast, slow = both_modes(lambda: set(map(
+                tuple, incremental_minhash_dedup(
+                    new, old, "text", "doc_id", **kw).collect())))
             assert fast == slow
 
 
@@ -5958,10 +5911,10 @@ class TestLocalFrame:
 class TestGraphDriverFastPaths:
     """r10: the size-adaptive driver fast paths of k_truss / anf_reach /
     hits_int must be row-identical to the distributed loops (the
-    connected_components parity contract). driver_cutoff=0 pins the
-    distributed path."""
+    connected_components parity contract). ``replay.distributed()``
+    pins the distributed path."""
 
-    def test_k_truss_driver_matches_distributed(self, spark):
+    def test_k_truss_driver_matches_distributed(self, spark, both_modes):
         from drune_spark.operators.graph import k_truss
 
         # K4 + pendant triangle + an isolated edge: exercises peel,
@@ -5969,13 +5922,12 @@ class TestGraphDriverFastPaths:
         k4 = [(a, b) for a in range(4) for b in range(4) if a < b]
         extra = [(0, 10), (0, 11), (10, 11), (20, 21)]
         edges = spark.createDataFrame(k4 + extra, ["src", "dst"])
-        fast = sorted(map(tuple, k_truss(edges, k=3, rounds=2).collect()))
-        slow = sorted(map(tuple, k_truss(
-            edges, k=3, rounds=2, driver_cutoff=0).collect()))
+        fast, slow = both_modes(lambda: sorted(map(tuple, k_truss(
+            edges, k=3, rounds=2).collect())))
         assert fast == slow
         assert len(fast) == 9  # K4 (6) + pendant triangle (3) survive k=3
 
-    def test_kcore_driver_matches_distributed(self, spark):
+    def test_kcore_driver_matches_distributed(self, spark, both_modes):
         from drune_spark.operators.graph import kcore
 
         # K4 core + a chain that peels away round by round + isolated
@@ -5985,21 +5937,18 @@ class TestGraphDriverFastPaths:
         sym = und + [(b, a) for a, b in und]
         edges = spark.createDataFrame(sym, ["src", "dst"])
         for k, rounds in ((2, 3), (3, 2), (1, 1)):
-            fast = sorted(map(tuple, kcore(
-                edges, k=k, rounds=rounds).collect()))
-            slow = sorted(map(tuple, kcore(
-                edges, k=k, rounds=rounds, driver_cutoff=0).collect()))
+            fast, slow = both_modes(lambda: sorted(map(tuple, kcore(
+                edges, k=k, rounds=rounds).collect())))
             assert fast == slow
         # string node ids take the same replay
         s_edges = spark.createDataFrame(
             [(f"n{a}", f"n{b}") for a, b in sym], ["src", "dst"])
-        fast = sorted(map(tuple, kcore(s_edges, k=2, rounds=3).collect()))
-        slow = sorted(map(tuple, kcore(
-            s_edges, k=2, rounds=3, driver_cutoff=0).collect()))
+        fast, slow = both_modes(lambda: sorted(map(tuple, kcore(
+            s_edges, k=2, rounds=3).collect())))
         assert fast == slow
         assert len(fast) > 0
 
-    def test_lpa_driver_matches_distributed(self, spark):
+    def test_lpa_driver_matches_distributed(self, spark, both_modes):
         from drune_spark.operators.graph import label_propagation
 
         # two cliques joined by one bridge edge + an isolated pair:
@@ -6012,19 +5961,17 @@ class TestGraphDriverFastPaths:
         sym = c1 + c2 + und + [(b, a) for a, b in und]
         edges = spark.createDataFrame(sym, ["src", "dst"])
         for rounds in (1, 3, 4):
-            fast = sorted(map(tuple, label_propagation(
-                edges, rounds=rounds).collect()))
-            slow = sorted(map(tuple, label_propagation(
-                edges, rounds=rounds, driver_cutoff=0).collect()))
+            fast, slow = both_modes(lambda: sorted(map(
+                tuple, label_propagation(edges, rounds=rounds).collect())))
             assert fast == slow
         assert len(fast) == 10
         # rounds=0 declines (the distributed path keeps label typed as
         # the node column; the replay would return bigint) — schemas
         # must match across the cutoff
-        f0 = label_propagation(edges, rounds=0)
-        s0 = label_propagation(edges, rounds=0, driver_cutoff=0)
-        assert [(f.name, f.dataType) for f in f0.schema] == [
-            (f.name, f.dataType) for f in s0.schema]
+        f0, s0 = both_modes(lambda: [
+            (f.name, f.dataType)
+            for f in label_propagation(edges, rounds=0).schema])
+        assert f0 == s0
 
     def test_pair_agreement_chunking_exact(self):
         """The chunked agreement gather must equal the one-shot form
@@ -6043,7 +5990,7 @@ class TestGraphDriverFastPaths:
             got = _pair_agreement(sig_a, sig_b, ai, bi, chunk=chunk)
             assert (got == want).all()
 
-    def test_modularity_driver_matches_distributed(self, spark):
+    def test_modularity_driver_matches_distributed(self, spark, both_modes):
         from drune_spark.operators.graph import partition_modularity
 
         # two communities + an unassigned node (30) + a NULL-community
@@ -6056,14 +6003,14 @@ class TestGraphDriverFastPaths:
             [(1, "x"), (2, "x"), (3, "x"), (10, "y"), (11, "y"),
              (12, "y"), (31, None), (20, "z")],
             "node bigint, community string")
-        fast = sorted(map(tuple, partition_modularity(
-            edges, assign).collect()))
-        slow = sorted(map(tuple, partition_modularity(
-            edges, assign, driver_cutoff=0).collect()))
+        fast, slow = both_modes(lambda: sorted(map(
+            tuple, partition_modularity(edges, assign).collect())))
         assert fast == slow
         assert [r[0] for r in fast] == ["x", "y", "z"]
 
-    def test_modularity_driver_declines_on_duplicate_assign(self, spark):
+    def test_modularity_driver_declines_on_duplicate_assign(
+        self, spark, both_modes
+    ):
         """Duplicate assignment rows inflate the distributed join —
         the replay must decline and both paths still agree."""
         from drune_spark.operators.graph import partition_modularity
@@ -6073,13 +6020,11 @@ class TestGraphDriverFastPaths:
         assign = spark.createDataFrame(
             [(1, "x"), (1, "y"), (2, "x")],
             "node bigint, community string")
-        fast = sorted(map(tuple, partition_modularity(
-            edges, assign).collect()))
-        slow = sorted(map(tuple, partition_modularity(
-            edges, assign, driver_cutoff=0).collect()))
+        fast, slow = both_modes(lambda: sorted(map(
+            tuple, partition_modularity(edges, assign).collect())))
         assert fast == slow
 
-    def test_bfs_driver_matches_distributed(self, spark):
+    def test_bfs_driver_matches_distributed(self, spark, both_modes):
         from drune_spark.operators.graph import bfs_khop
 
         edges = spark.createDataFrame(
@@ -6089,36 +6034,33 @@ class TestGraphDriverFastPaths:
         # k large enough that the frontier drains early.
         seeds = spark.createDataFrame([(1,), (99,)], ["node"])
         for k in (0, 2, 3, 9):
-            fast = sorted(map(tuple, bfs_khop(
-                edges, seeds, k=k).collect()))
-            slow = sorted(map(tuple, bfs_khop(
-                edges, seeds, k=k, driver_cutoff=0).collect()))
+            fast, slow = both_modes(lambda: sorted(map(tuple, bfs_khop(
+                edges, seeds, k=k).collect())))
             assert fast == slow
         assert (99, 0) in fast and (6, 5) in fast
         # a custom seed column name must survive the replay (the
         # distributed path keeps the caller's name)
         vseeds = seeds.withColumnRenamed("node", "vertex")
-        f2 = bfs_khop(edges, vseeds, k=2, node="vertex")
-        s2 = bfs_khop(edges, vseeds, k=2, node="vertex", driver_cutoff=0)
-        assert f2.columns == s2.columns == ["vertex", "dist"]
-        assert sorted(map(tuple, f2.collect())) == sorted(
-            map(tuple, s2.collect()))
+        def build():
+            out = bfs_khop(edges, vseeds, k=2, node="vertex")
+            return out.columns, sorted(map(tuple, out.collect()))
 
-    def test_anf_reach_driver_matches_distributed(self, spark):
+        f2, s2 = both_modes(build)
+        assert f2 == s2 and f2[0] == ["vertex", "dist"]
+
+    def test_anf_reach_driver_matches_distributed(self, spark, both_modes):
         from drune_spark.operators.graph import anf_reach
 
         # path + triangle, symmetric edge rows (the gate contract)
         und = [(1, 2), (2, 3), (3, 4), (7, 8), (8, 9), (9, 7)]
         sym = und + [(b, a) for a, b in und]
         edges = spark.createDataFrame(sym, ["src", "dst"])
-        fast = sorted(map(tuple, anf_reach(
-            edges, trials=4, rounds=3).collect()))
-        slow = sorted(map(tuple, anf_reach(
-            edges, trials=4, rounds=3, driver_cutoff=0).collect()))
+        fast, slow = both_modes(lambda: sorted(map(tuple, anf_reach(
+            edges, trials=4, rounds=3).collect())))
         assert fast == slow
         assert [r[0] for r in fast] == [0, 1, 2, 3]
 
-    def test_pagerank_driver_matches_distributed(self, spark):
+    def test_pagerank_driver_matches_distributed(self, spark, both_modes):
         from drune_spark.operators.graph import pagerank_int
 
         # dangling node (10), source-only node (1), a 2-cycle, and
@@ -6128,28 +6070,28 @@ class TestGraphDriverFastPaths:
             [(1, 2, 3), (2, 3, 1), (3, 2, 2), (3, 10, 1), (2, 10, 4)],
             ["src", "dst", "w"],
         )
-        fast = sorted(map(tuple, pagerank_int(edges, n_iters=3).collect()))
-        slow = sorted(map(tuple, pagerank_int(
-            edges, n_iters=3, driver_cutoff=0).collect()))
-        assert fast == slow
-        schema_fast = pagerank_int(edges, n_iters=3).schema
-        schema_slow = pagerank_int(edges, n_iters=3, driver_cutoff=0).schema
-        assert [(f.name, f.dataType) for f in schema_fast] == [
-            (f.name, f.dataType) for f in schema_slow]
+        def build():
+            out = pagerank_int(edges, n_iters=3)
+            return (sorted(map(tuple, out.collect())),
+                    [(f.name, f.dataType) for f in out.schema])
 
-    def test_pagerank_driver_matches_distributed_string_nodes(self, spark):
+        fast, slow = both_modes(build)
+        assert fast == slow
+
+    def test_pagerank_driver_matches_distributed_string_nodes(
+        self, spark, both_modes
+    ):
         from drune_spark.operators.graph import pagerank_int
 
         edges = spark.createDataFrame(
             [("a", "b", 2), ("b", "c", 1), ("c", "a", 1), ("b", "a", 3)],
             ["src", "dst", "w"],
         )
-        fast = sorted(map(tuple, pagerank_int(edges, n_iters=2).collect()))
-        slow = sorted(map(tuple, pagerank_int(
-            edges, n_iters=2, driver_cutoff=0).collect()))
+        fast, slow = both_modes(lambda: sorted(map(tuple, pagerank_int(
+            edges, n_iters=2).collect())))
         assert fast == slow
 
-    def test_ppr_driver_matches_distributed(self, spark):
+    def test_ppr_driver_matches_distributed(self, spark, both_modes):
         from drune_spark.operators.graph import personalized_pagerank_int
 
         edges = spark.createDataFrame(
@@ -6160,10 +6102,9 @@ class TestGraphDriverFastPaths:
         # seed in-graph plus a seed absent from the graph (teleport mass
         # to a missing node is simply dropped on both paths)
         for seeds in (["s"], ["s", "zz"]):
-            fast = sorted(map(tuple, personalized_pagerank_int(
-                edges, seeds, n_iters=3).collect()))
-            slow = sorted(map(tuple, personalized_pagerank_int(
-                edges, seeds, n_iters=3, driver_cutoff=0).collect()))
+            fast, slow = both_modes(lambda: sorted(map(
+                tuple, personalized_pagerank_int(
+                    edges, seeds, n_iters=3).collect())))
             assert fast == slow, seeds
 
     def test_pagerank_driver_nonpositive_weight_falls_back(self, spark):
@@ -6175,23 +6116,22 @@ class TestGraphDriverFastPaths:
             [(1, 2, 0), (2, 3, 1)], ["src", "dst", "w"]
         )
         assert _pagerank_driver_replay(
-            edges, 3, 85, 1_000_000, None, None) is None
+            edges, 3, 85, 1_000_000, None, "pagerank_int") is None
 
-    def test_hits_driver_matches_distributed(self, spark):
+    def test_hits_driver_matches_distributed(self, spark, both_modes):
         from drune_spark.operators.graph import hits_int
 
         edges = spark.createDataFrame(
             [(1, 10, 2), (2, 10, 1), (3, 10, 1), (3, 11, 3), (4, 12, 1)],
             ["src", "dst", "w"],
         )
-        fast = sorted(map(tuple, hits_int(edges, n_iters=3).collect()))
-        slow = sorted(map(tuple, hits_int(
-            edges, n_iters=3, driver_cutoff=0).collect()))
+        def build():
+            out = hits_int(edges, n_iters=3)
+            return (sorted(map(tuple, out.collect())),
+                    [(f.name, f.dataType) for f in out.schema])
+
+        fast, slow = both_modes(build)
         assert fast == slow
-        schema_fast = hits_int(edges, n_iters=3).schema
-        schema_slow = hits_int(edges, n_iters=3, driver_cutoff=0).schema
-        assert [(f.name, f.dataType) for f in schema_fast] == [
-            (f.name, f.dataType) for f in schema_slow]
 
 
 class TestBpeDriverFastPath:
@@ -6209,23 +6149,22 @@ class TestBpeDriverFastPath:
             [(t,) + (i,) for t, i in rows], ["text", "doc_id"]
         )
 
-    def test_bpe_train_driver_matches_distributed(self, spark):
+    def test_bpe_train_driver_matches_distributed(self, spark, both_modes):
         from drune_spark.operators.bpe import bpe_train
 
         docs = self._docs(spark)
-        fast = sorted(map(tuple, bpe_train(docs, n_merges=4).collect()))
-        slow = sorted(map(tuple, bpe_train(
-            docs, n_merges=4, driver_cutoff=0).collect()))
+        fast, slow = both_modes(lambda: sorted(map(tuple, bpe_train(
+            docs, n_merges=4).collect())))
         assert fast == slow
         assert len(fast) == 4
 
-    def test_wordpiece_train_driver_matches_distributed(self, spark):
+    def test_wordpiece_train_driver_matches_distributed(
+        self, spark, both_modes
+    ):
         from drune_spark.operators.bpe import wordpiece_train
 
         docs = self._docs(spark)
-        fast = sorted(map(tuple, wordpiece_train(
-            docs, n_merges=3).collect()))
-        slow = sorted(map(tuple, wordpiece_train(
-            docs, n_merges=3, driver_cutoff=0).collect()))
+        fast, slow = both_modes(lambda: sorted(map(tuple, wordpiece_train(
+            docs, n_merges=3).collect())))
         assert fast == slow
         assert len(fast) == 3

@@ -9,6 +9,8 @@ these would pass value-level tests and still be 10-100× slower at scale.
 
 import pytest
 
+from drune_spark.operators import replay
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -479,15 +481,13 @@ class TestRound4ThirdWavePlans:
         assert "Window" not in plan
         assert "HashAggregate" in plan
 
-    def test_incremental_dedup_batch_side_broadcasts(
-        self, spark, entry, monkeypatch
-    ):
-        """DISTRIBUTED batch-probe (pinned via a zero driver cutoff):
+    def test_incremental_dedup_batch_side_broadcasts(self, spark, entry):
+        """DISTRIBUTED batch-probe (pinned via replay.distributed()):
         the arriving batch's band table must ride a broadcast — the
         corpus band index is probed map-side (no corpus shuffle into
         the candidate join)."""
-        monkeypatch.setenv("SPARK_GRAFT_MINHASH_DRIVER_DOCS", "0")
-        plan = executed_plan(entry.q_incremental_dedup(spark, SF))
+        with replay.distributed():
+            plan = executed_plan(entry.q_incremental_dedup(spark, SF))
         assert "BroadcastHashJoin" in plan
         assert "CartesianProduct" not in plan
 
@@ -578,19 +578,17 @@ class TestRound4ThirdWavePlans:
         assert "hashpartitioning(hash_hi" in plan
         assert "hashpartitioning(content" not in plan
 
-    def test_modularity_single_pass_no_branch_replan(
-        self, spark, entry, monkeypatch
-    ):
-        """DISTRIBUTED partition_modularity (pinned via a zero driver
-        cutoff): l2_internal/degree_sum/m2 all read ONE eagerly-
+    def test_modularity_single_pass_no_branch_replan(self, spark, entry):
+        """DISTRIBUTED partition_modularity (pinned via
+        replay.distributed()): l2_internal/degree_sum/m2 all read ONE eagerly-
         persisted aggregate over the tagged edge list (r10 one-pass
         shape): both plan branches consume the cache, so the lineitem
         self-join executes exactly once regardless of how many textual
         copies the InMemoryRelation snapshot embeds (a raw join count
         over the plan string double-counts the cached subtree's final
         + initial AQE plan texts)."""
-        monkeypatch.setenv("SPARK_GRAFT_MODULARITY_DRIVER_EDGES", "0")
-        plan = executed_plan(entry.q_modularity(spark, SF))
+        with replay.distributed():
+            plan = executed_plan(entry.q_modularity(spark, SF))
         assert "BroadcastNestedLoopJoin" in plan  # bounded 1-row cross
         assert "CartesianProduct" not in plan
         # both the output cells and the m2 total read the persisted
@@ -612,18 +610,16 @@ class TestRound4ThirdWavePlans:
                    "BroadcastNestedLoopJoin"):
             assert op not in plan
 
-    def test_set_sim_join_reads_cached_token_table(
-        self, spark, entry, monkeypatch
-    ):
-        """DISTRIBUTED prefix_filter_join (pinned via a zero driver
-        cutoff) persists the (doc, token) table (5 consumers) and the
+    def test_set_sim_join_reads_cached_token_table(self, spark, entry):
+        """DISTRIBUTED prefix_filter_join (pinned via
+        replay.distributed()) persists the (doc, token) table (5 consumers) and the
         candidate pairs (2 consumers): without the caches the pair
         verification re-tokenizes the corpus per branch (r10 interleaved
         A/B at sf0.1: 128-145 s/pass unpersisted vs 31-42 s). Pin that
         the executed plan reads the caches — an unpersist-hygiene
         cleanup would silently restore the re-runs."""
-        monkeypatch.setenv("SPARK_GRAFT_SETSIM_DRIVER_CELLS", "0")
-        plan = executed_plan(entry.q_set_sim_join(spark, SF))
+        with replay.distributed():
+            plan = executed_plan(entry.q_set_sim_join(spark, SF))
         assert "InMemoryTableScan" in plan
         # the verification join consumes ta AND tb from the token cache
         # plus the candidate cache in two branches — several reads even

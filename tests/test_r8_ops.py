@@ -80,7 +80,7 @@ class TestNswGreedySearch:
 
         assert nsw_greedy_search(emb).count() == 0
 
-    def test_driver_path_matches_distributed(self, spark):
+    def test_driver_path_matches_distributed(self, spark, both_modes):
         """The r10 driver replay (build + walk in numpy with the exact
         fold FP order) must be row-identical to the distributed path
         on the planted two-cluster graph, including the float→double
@@ -96,13 +96,8 @@ class TestNswGreedySearch:
         from drune_spark.operators.similarity import nsw_greedy_search
 
         kw = dict(n_cells=2, m_edges=3, hops=3, query_mod=5)
-        fast = sorted(map(tuple, nsw_greedy_search(emb, **kw).collect()))
-        slow = sorted(
-            map(
-                tuple,
-                nsw_greedy_search(emb, driver_cutoff=0, **kw).collect(),
-            )
-        )
+        fast, slow = both_modes(lambda: sorted(map(
+            tuple, nsw_greedy_search(emb, **kw).collect())))
         assert fast == slow and len(fast) == 4
 
 

@@ -19,6 +19,7 @@ than ingest size — fix the operator, don't bury the number.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import string
 import sys
@@ -202,40 +203,26 @@ def build(spark) -> None:
         print(f"built {dst}", flush=True)
 
 
-# Driver fast-path operators → the env cutoff that disables the replay
-# (VERDICT r10 #5: the distributed branches must get systematic
-# above-cutoff measurement each optimization round — the ONE time a
-# curve ran above a cutoff it found a 49 s distributed defect, §22).
-# `--distributed` runs each listed query at 1× and 3× with its cutoff
-# forced to 0, min-of-2, and reports the Spark JOB COUNT per pass
-# alongside wall time (the §2.6 sequencing-latency evidence).
-DISTRIBUTED_PROBES = {
-    "dedup_clusters": "SPARK_GRAFT_CC_DRIVER_EDGES",
-    "k_truss": "SPARK_GRAFT_TRUSS_DRIVER_EDGES",
-    "anf_reach": "SPARK_GRAFT_ANF_DRIVER_EDGES",
-    "hits_scores": "SPARK_GRAFT_HITS_DRIVER_EDGES",
-    "pagerank": "SPARK_GRAFT_PAGERANK_DRIVER_EDGES",
-    "ppr_seeded": "SPARK_GRAFT_PAGERANK_DRIVER_EDGES",
-    "bpe_train": "SPARK_GRAFT_BPE_DRIVER_VOCAB",
-    "wordpiece_train": "SPARK_GRAFT_BPE_DRIVER_VOCAB",
-    "dedup_jaccard": "SPARK_GRAFT_JACCARD_DRIVER_CELLS",
-    "containment": "SPARK_GRAFT_JACCARD_DRIVER_CELLS",
-    "set_sim_join": "SPARK_GRAFT_SETSIM_DRIVER_CELLS",
-    "nsw_search": "SPARK_GRAFT_NSW_DRIVER_ROWS",
-    "ivf_train": "SPARK_GRAFT_IVF_DRIVER_CELLS",
-    "lsh_eval": "SPARK_GRAFT_LSHEVAL_DRIVER_DOCS",
-    "dedup_minhash_lsh": "SPARK_GRAFT_MINHASH_DRIVER_DOCS",
-    "incremental_dedup": "SPARK_GRAFT_MINHASH_DRIVER_DOCS",
-    "dedup_simhash": "SPARK_GRAFT_SIMHASH_DRIVER_DOCS",
-    "kcore": "SPARK_GRAFT_KCORE_DRIVER_EDGES",
-    "label_propagation": "SPARK_GRAFT_LPA_DRIVER_EDGES",
-    "bfs_khop": "SPARK_GRAFT_BFS_DRIVER_EDGES",
-    "modularity": "SPARK_GRAFT_MODULARITY_DRIVER_EDGES",
-}
+# Registry queries whose operators have a driver replay (VERDICT r10
+# #5: the distributed branches must get systematic above-cutoff
+# measurement each optimization round — the ONE time a curve ran above
+# a cutoff it found a 49 s distributed defect, §22). `--distributed`
+# runs each listed query at 1× and 3× inside replay.distributed(),
+# min-of-2, and reports the Spark JOB COUNT per pass alongside wall
+# time (the §2.6 sequencing-latency evidence). A probe fails when any
+# replay record appears during it: the distributed path did not run.
+DISTRIBUTED_PROBES = (
+    "dedup_clusters", "k_truss", "anf_reach", "hits_scores", "pagerank",
+    "ppr_seeded", "bpe_train", "wordpiece_train", "dedup_jaccard",
+    "containment", "set_sim_join", "nsw_search", "ivf_train", "lsh_eval",
+    "dedup_minhash_lsh", "incremental_dedup", "dedup_simhash", "kcore",
+    "label_propagation", "bfs_khop", "modularity",
+)
 
 
 def main() -> None:
     import __spark_entry__ as entrymod
+    from drune_spark.operators import replay
     from drune_spark.session import get_spark
 
     spark = get_spark("drune_scale_curve")
@@ -263,22 +250,26 @@ def main() -> None:
         selected = args or list(DISTRIBUTED_PROBES)
         unknown = [n for n in selected if n not in DISTRIBUTED_PROBES]
         assert not unknown, f"not distributed probes: {unknown}"
+        replay.log.setLevel(logging.DEBUG)
         for name in selected:
-            env = DISTRIBUTED_PROBES[name]
-            saved = os.environ.get(env)
-            os.environ[env] = "0"
+            seen: set[str] = set()
+
+            def watch(record: logging.LogRecord) -> bool:
+                if record.path == "replay":
+                    seen.add(record.op)
+                return False  # observed only, never emitted
+
+            replay.log.addFilter(watch)
             try:
-                (a1, j1), (b1, _) = run(name, SRC), run(name, SRC)
-                (a3, j3), (b3, _) = run(name, OUT), run(name, OUT)
+                with replay.distributed():
+                    (a1, j1), (b1, _) = run(name, SRC), run(name, SRC)
+                    (a3, j3), (b3, _) = run(name, OUT), run(name, OUT)
             finally:
-                if saved is None:
-                    os.environ.pop(env, None)
-                else:
-                    os.environ[env] = saved
+                replay.log.removeFilter(watch)
             spark.catalog.clearCache()
             t1, t3 = min(a1, b1), min(a3, b3)
             report[name] = {
-                "cutoff_env": env,
+                "replayed": sorted(seen),
                 "sf0.1_s": round(t1, 2),
                 "sf0.3_s": round(t3, 2),
                 "ratio": round(t3 / t1, 2),
@@ -287,6 +278,9 @@ def main() -> None:
             }
             print(json.dumps({name: report[name]}), flush=True)
         print(json.dumps({"distributed_curve": report}))
+        failed = [n for n, r in report.items() if r["replayed"]]
+        if failed:
+            sys.exit(f"replay ran under replay.distributed(): {failed}")
         return
     selected = args or QUERIES
     unknown = [n for n in selected if n not in qs]
