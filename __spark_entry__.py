@@ -337,7 +337,8 @@ def q_setops_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dq_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """§2.6: single-pass constraint engine — warn (no-op count), drop
-    (isbetween), set_null (pattern). One scan, one agg for all counts."""
+    (isbetween), set_null (pattern). Only ``passed`` is read, so no
+    counts are collected: one scan with every flag fused into it."""
     _tune(spark)
     from drune_spark.config.models import ColumnSpec, ConstraintSpec, SchemaSpec
     from drune_spark.quality.manager import apply_constraints
@@ -359,7 +360,8 @@ def q_dq_constraints(spark: SparkSession, sf_dir: str) -> DataFrame:
     from drune_spark.plans.schema_apply import apply_schema
 
     df = apply_schema(_t(spark, sf_dir, "orders"), schema)
-    result = apply_constraints(df, schema, pipeline_name="dq_demo")
+    result = apply_constraints(df, schema, pipeline_name="dq_demo",
+                               collect_counts=False)
     return result.passed.select(
         "cd_order", "cd_cust", "st_order", "vl_total", "ds_priority"
     )
@@ -847,14 +849,13 @@ def q_w7_validation_log(spark: SparkSession, sf_dir: str) -> DataFrame:
                        rule="greater_than_or_equal_to:0", on_fail="drop")]),
     ])
     cust = apply_schema(_t(spark, sf_dir, "customer"), schema)
-    res = apply_constraints(cust, schema, pipeline_name="w7")
+    res = apply_constraints(cust, schema, pipeline_name="w7",
+                            collect_counts=False)
     path = tempfile.mkdtemp(prefix="drune_gate_w7_") + "/log.parquet"
     write_validation_log(spark, res.failures, path)
-    out = spark.read.parquet(path).select(
+    return spark.read.parquet(path).select(
         "pipeline_name", "validation_rule", "failed_column", "failed_value"
     )
-    res.unpersist()
-    return out
 
 
 def q_d2_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:

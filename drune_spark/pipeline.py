@@ -7,8 +7,11 @@ last-writer-wins per key, made deterministic here), then:
 
 read → apply_schema → constraints → steps → write
 
-All phases compose one lazy Catalyst plan; the only actions are the
-constraint-count aggregate and the final write. ``run(stop_at=...)``
+All phases compose one lazy Catalyst plan, and the final write is its
+only action: constraint counts ride that write as observed metrics. A
+source runs one earlier action (filling its flag-frame cache) only when
+it has a fail rule, which must abort before anything is written, or
+when a failure-log sink reads its flag frame too. ``run(stop_at=...)``
 supports breakpointed execution and re-entry (step_manager.py:54-99).
 """
 
@@ -161,9 +164,18 @@ class Pipeline:
                 df = apply_schema(df, spec.schema_)
                 if spec.schema_.primary_key:
                     df = add_hash_key(df, spec.schema_.primary_key)
+                # Counts up front only when they gate the run (fail rules
+                # abort before the write) or a failure-log sink is a
+                # second reader of the flag frame; otherwise they ride
+                # the target write.
+                eager = bool(self._log_sink()) or any(
+                    c.on_fail == "fail"
+                    for col in spec.schema_.columns for c in col.constraints
+                )
                 try:
                     quality = apply_constraints(
-                        df, spec.schema_, pipeline_name=self.model.pipeline_name
+                        df, spec.schema_, pipeline_name=self.model.pipeline_name,
+                        collect_counts=eager,
                     )
                 except ConstraintError as err:
                     # Write the audit trail before aborting (the
@@ -183,20 +195,20 @@ class Pipeline:
             self.target_df = self.sources[self.model.sources[0].name]
         return self
 
+    def _log_sink(self) -> Optional[str]:
+        return self.model.validation_log_table or self.failed_records_path
+
     def _write_failure_log(self, failures: Optional[DataFrame]) -> None:
-        if failures is None:
-            return
-        if self.model.validation_log_table:
-            write_validation_log(self.spark, failures,
-                                 self.model.validation_log_table)
-        elif self.failed_records_path:
-            write_validation_log(self.spark, failures,
-                                 self.failed_records_path)
+        sink = self._log_sink()
+        if failures is not None and sink:
+            write_validation_log(self.spark, failures, sink)
 
     def _log_failures(self, quality: QualityResult) -> None:
         self.quality = quality
-        self._quality_results.append(quality)  # every source's persisted frame
-        if quality.failures is not None and quality.failed_total() > 0:
+        # every source's result: write() takes its counts and releases
+        # its flag-frame cache, if it has one
+        self._quality_results.append(quality)
+        if self._log_sink() and quality.failed_total() > 0:
             self._write_failure_log(quality.failures)
 
     # -- step phase ----------------------------------------------------------
@@ -224,8 +236,15 @@ class Pipeline:
             df = add_data_hash(df, track)
         if tgt.schema_ is not None and tgt.schema_.primary_key:
             df = add_audit_columns(df)
+        early = [q.observed_early() for q in self._quality_results]
         write_target(self.spark, df, tgt)
-        for quality in self._quality_results:
+        for quality, stale in zip(self._quality_results, early):
+            # An action before the write may have read only part of the
+            # flag frame (show, limit) and fixed partial counts.
+            if stale:
+                quality.recount()
+            else:
+                quality.take_observed()
             quality.unpersist()
         self._quality_results = []
 
@@ -343,7 +362,7 @@ class Pipeline:
         # Constraint-failure rows stream into the configured audit sink in
         # parallel (their own checkpoint; same exactly-once semantics).
         failure_query = None
-        log_sink = self.model.validation_log_table or self.failed_records_path
+        log_sink = self._log_sink()
         if failure_streams and log_sink:
             failures = failure_streams[0]
             for frame in failure_streams[1:]:
@@ -382,8 +401,9 @@ class Pipeline:
             raise GoldenTestFailure(f"schema mismatch: {a.columns} vs {e.columns}")
         a = a.select(*sorted(a.columns))
         e = e.select(*sorted(e.columns))
-        if a.count() != e.count():
-            raise GoldenTestFailure(f"row count {a.count()} != {e.count()}")
+        n_a, n_e = a.count(), e.count()
+        if n_a != n_e:
+            raise GoldenTestFailure(f"row count {n_a} != {n_e}")
         extra = a.exceptAll(e)
         missing = e.exceptAll(a)
         n_extra, n_missing = extra.count(), missing.count()

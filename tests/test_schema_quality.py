@@ -302,3 +302,188 @@ class TestQuality:
         ]
         rows = result.failures.collect()
         assert len(rows) == 1 and rows[0].pipeline_name == "pl"
+
+
+def _jobs_in(spark, group, fn):
+    """Run ``fn`` under a job group; return (result, job ids it ran)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _rows(df):
+    return sorted(map(repr, df.collect()))
+
+
+class TestObservedCounts:
+    """Counts observed on the flag frame (``collect_counts=False``) must
+    equal the eagerly collected ones, without an action of their own."""
+
+    def _abc(self, spark):
+        return spark.createDataFrame(
+            [(1, "A"), (2, "B"), (None, "C"), (4, "A")], ["col1", "col2"]
+        )
+
+    def _cases(self, spark):
+        v = spark.createDataFrame([(1.0,), (None,), (30.0,)], ["v"])
+        chain = spark.createDataFrame([(5.0,), (55.0,), (200.0,)], ["v"])
+        return {
+            "null_input": (v, SchemaSpec(columns=[
+                col("v", type="double", constraints=[
+                    ConstraintSpec(rule="greater_than:5", on_fail="warn")]),
+            ])),
+            "repeated_fn_chain": (chain, SchemaSpec(columns=[
+                col("v", type="double", constraints=[
+                    ConstraintSpec(rule="isbetween:[0,10]|isbetween:[0,100]",
+                                   on_fail="warn")]),
+            ])),
+            "set_null": (self._abc(spark), SchemaSpec(columns=[
+                col("col2", type="str", constraints=[
+                    ConstraintSpec(rule="pattern:'^[AB]$'", on_fail="set_null")]),
+            ])),
+            "unique": (self._abc(spark), SchemaSpec(columns=[
+                col("col2", type="str", constraints=[
+                    ConstraintSpec(rule="unique", on_fail="drop")]),
+            ])),
+            "warn_drop_mix": (self._abc(spark), SchemaSpec(columns=[
+                col("col1", type="int", constraints=[
+                    ConstraintSpec(rule="not_null", on_fail="drop")]),
+                col("col2", type="str", constraints=[
+                    ConstraintSpec(rule="isin:['A','B']", on_fail="warn")]),
+            ])),
+        }
+
+    def test_deferred_counts_equal_eager(self, spark):
+        for name, (df, schema) in self._cases(spark).items():
+            eager = apply_constraints(df, schema)
+            eager_rows, eager_counts = _rows(eager.passed), eager.counts
+            eager.unpersist()
+            lazy = apply_constraints(df, schema, collect_counts=False)
+            assert _rows(lazy.passed) == eager_rows, name
+            # collecting `passed` resolved the observation: no job left
+            counts, jobs = _jobs_in(spark, f"dq_eq_{name}", lambda: lazy.counts)
+            assert counts == eager_counts, name
+            assert jobs == [], name
+            assert sum(eager_counts.values()) > 0, name
+            # one failure-log row per failed (row, rule)
+            assert lazy.failures.count() == sum(counts.values()), name
+
+    def test_counts_resolve_without_any_prior_action(self, spark):
+        df, schema = self._cases(spark)["warn_drop_mix"]
+        lazy = apply_constraints(df, schema, collect_counts=False)
+        assert sorted(lazy.counts.values()) == [1, 1]
+        assert lazy.failed_total() == 2
+
+    def test_deferred_runs_no_job(self, spark):
+        df, schema = self._cases(spark)["warn_drop_mix"]
+        res, jobs = _jobs_in(
+            spark, "dq_deferred_no_job",
+            lambda: apply_constraints(df, schema, collect_counts=False))
+        assert jobs == []
+        assert "InMemoryRelation" not in \
+            res.passed._jdf.queryExecution().optimizedPlan().toString()
+
+    def test_two_set_null_rules_on_one_column_compose(self, spark):
+        schema = SchemaSpec(columns=[
+            col("col2", type="str", constraints=[
+                ConstraintSpec(rule="pattern:'^[ABC]$'", on_fail="set_null"),
+                ConstraintSpec(rule="isin:['A','C']", on_fail="set_null"),
+            ]),
+        ])
+        res = apply_constraints(self._abc(spark), schema)
+        by_id = {r.col1: r.col2 for r in res.passed.collect()}
+        # 'B' fails only the second rule, and is nulled
+        assert by_id == {1: "A", 2: None, None: "C", 4: "A"}
+        assert sorted(res.counts.values()) == [0, 1]
+
+    def _pipeline(self, spark, tmp_path, steps, **kw):
+        from drune_spark.config.models import PipelineModel
+        from drune_spark.pipeline import Pipeline
+
+        src = tmp_path / "src"
+        self._abc(spark).write.parquet(str(src))
+        model = PipelineModel.model_validate({
+            "pipeline_name": "observed",
+            "sources": [{"name": "s", "type": "file", "format": "parquet",
+                         "path": str(src),
+                         "schema": {"columns": [
+                             {"name": "col1", "type": "int",
+                              "constraints": [{"rule": "not_null",
+                                               "on_fail": "drop"}]},
+                             {"name": "col2", "type": "str",
+                              "constraints": [{"rule": "isin:['A','B']",
+                                               "on_fail": "warn"}]},
+                         ]}}],
+            "steps": steps,
+            "target": {"name": "out", "type": "file", "format": "parquet",
+                       "path": str(tmp_path / "out.parquet"),
+                       "mode": "overwrite"},
+        })
+        return Pipeline(spark, model, **kw), str(tmp_path / "out.parquet")
+
+    def _eager_counts(self, spark, pipe):
+        spec = pipe.model.sources[0]
+        df = apply_schema(spark.read.parquet(spec.path), spec.schema_)
+        eager = apply_constraints(df, spec.schema_)
+        counts = eager.counts
+        eager.unpersist()
+        return counts
+
+    def test_pipeline_counts_ride_the_write(self, spark, tmp_path,
+                                            monkeypatch):
+        import drune_spark.pipeline as pipeline_mod
+
+        written = []
+        real_write = pipeline_mod.write_target
+
+        def capture(spark_, df, spec):
+            written.append(df)
+            return real_write(spark_, df, spec)
+
+        monkeypatch.setattr(pipeline_mod, "write_target", capture)
+        pipe, out = self._pipeline(spark, tmp_path, [])
+        pipe.execute()
+        plan = written[0]._jdf.queryExecution().optimizedPlan().toString()
+        assert "InMemoryRelation" not in plan
+        counts, jobs = _jobs_in(spark, "dq_pipeline_counts",
+                                lambda: pipe.quality.counts)
+        assert jobs == []
+        assert counts == self._eager_counts(spark, pipe)
+        assert spark.read.parquet(out).count() == 3
+
+    def test_partial_action_before_write_is_recounted(self, spark, tmp_path):
+        pipe, _ = self._pipeline(spark, tmp_path, [])
+        pipe.read()
+        pipe.run().limit(1).collect()  # resolves the observation on 1 row
+        pipe.write()
+        assert pipe.quality.counts == self._eager_counts(spark, pipe)
+
+    def test_sql_self_join_counts_once(self, spark, tmp_path):
+        pipe, out = self._pipeline(spark, tmp_path, [
+            {"name": "pairs", "type": "sql", "params": {
+                "query": "SELECT a.col1, b.col2 FROM s a "
+                         "JOIN s b ON a.col1 = b.col1"}},
+        ])
+        pipe.execute()
+        assert sorted(r.col1 for r in spark.read.parquet(out).collect()) \
+            == [1, 2, 4]
+        counts, jobs = _jobs_in(spark, "dq_self_join_counts",
+                                lambda: pipe.quality.counts)
+        assert jobs == []
+        assert counts == self._eager_counts(spark, pipe)
+        assert pipe.quality.failed_total() == 2
+
+    def test_log_sink_keeps_counts_eager(self, spark, tmp_path):
+        log_path = str(tmp_path / "failed.parquet")
+        pipe, _ = self._pipeline(spark, tmp_path, [],
+                                 failed_records_path=log_path)
+        pipe.read()
+        logged = spark.read.parquet(log_path).collect()
+        assert sorted(r.failed_column for r in logged) == ["col1", "col2"]
+        assert pipe.quality.failed_total() == 2
+        pipe.quality.unpersist()
