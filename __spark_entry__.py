@@ -2128,25 +2128,23 @@ def q_set_sim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(64 perms)+LSH(16 bands) candidate pairs — the 100 TB dedup
-    path. The gate entry runs the PORTABLE variant (md5-based shingle
-    hashes, same plan shape) so the DuckDB oracle reproduces signatures,
-    candidate pairs, and est_jaccard bit-for-bit; the xxhash64 fast path
-    stays covered by pytest. est_jaccard = n/64 is an exact dyadic
+    path. Shingle hashes are md5-based (md5 is the only shingle hash),
+    so the DuckDB oracle reproduces signatures, candidate pairs, and
+    est_jaccard bit-for-bit. est_jaccard = n/64 is an exact dyadic
     rational — identical double in both engines, no rounding needed."""
     _tune(spark)
     from drune_spark.operators.dedup import minhash_lsh_pairs
 
     return minhash_lsh_pairs(
         _t(spark, sf_dir, "documents"), "text", "doc_id",
-        num_perm=64, bands=16, min_est_jaccard=0.5, portable=True,
+        num_perm=64, bands=16, min_est_jaccard=0.5,
     ).select("id_a", "id_b", "est_jaccard")
 
 
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs via 16-bit chunk banding (Hamming <= 3).
-    Gate entry uses the portable md5-bit-array variant — pairs AND
-    hamming values hash-checked against the DuckDB mirror; the xxhash64
-    bigint fast path stays covered by pytest."""
+    Signatures are md5 bit arrays — pairs AND hamming values
+    hash-checked against the DuckDB mirror."""
     _tune(spark)
     from drune_spark.operators.dedup import simhash_near_dup_pairs_portable
 
@@ -5300,7 +5298,7 @@ def q_dedup_recent(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return minhash_lsh_pairs_recent(
         docs, "text", "doc_id", "day",
-        horizon_days=7, min_est_jaccard=0.5, portable=True,
+        horizon_days=7, min_est_jaccard=0.5,
     )
 
 
@@ -6435,9 +6433,7 @@ def q_cross_source_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
-    pairs = minhash_lsh_pairs(
-        docs, "text", "doc_id", min_est_jaccard=0.5, portable=True
-    )
+    pairs = minhash_lsh_pairs(docs, "text", "doc_id", min_est_jaccard=0.5)
     src = docs.select("doc_id", "source")
     sa = src.select(F.col("doc_id").alias("id_a"),
                     F.col("source").alias("source_a"))
@@ -7525,7 +7521,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return incremental_minhash_dedup(
         splits["batch"], splits["corpus"], "text", "doc_id",
-        num_perm=64, bands=16, min_est_jaccard=0.5, portable=True,
+        num_perm=64, bands=16, min_est_jaccard=0.5,
     )
 
 

@@ -2,8 +2,10 @@
 
 Used by dedup (exact + MinHash + SimHash) and document fingerprinting.
 Everything is JVM-side; MinHash permutations are the classic
-``(a*x + b) mod p`` family over xxhash64 shingle hashes — deterministic
-across runs and cluster sizes (no Python, no RNG at execution time).
+``(a*x + b) mod p`` family over ``md5_u32`` shingle hashes, SimHash is
+``simhash_bits`` over md5 token bits — deterministic across runs and
+cluster sizes (no Python, no RNG at execution time), and mirrored
+expression for expression by the DuckDB oracle twins.
 """
 
 from __future__ import annotations
@@ -72,16 +74,6 @@ def rolling_min_fingerprint(col: Column, k: int = 8) -> Column:
     return F.array_min(hashes)
 
 
-def shingle_hashes(shingles: Column) -> Column:
-    """Non-negative 32-bit hash per shingle (xxhash64 folded into [0, 2^32)).
-
-    32 bits keeps the MinHash permutation ``a*x + b`` (a, b < 2^31) under
-    2^63 — no 64-bit overflow — while leaving collision probability
-    negligible for dedup purposes.
-    """
-    return F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(1 << 32)))
-
-
 def md5_u32(col: Column) -> Column:
     """Portable 32-bit content hash: the first 8 hex chars of md5 parsed
     as an unsigned int. Identical in any engine with md5 + base
@@ -112,9 +104,8 @@ def md5_bits64(col: Column) -> Column:
 def simhash_bits(tokens_col: Column) -> Column:
     """Portable SimHash as array<int>[64] of 0/1 bits: md5-derived token
     bit arrays, one ``aggregate`` fold summing +1/-1 votes per bit, sign
-    of the vote gives the bit (votes > 0 → 1, matching ``simhash64``).
-    Oracle-mirrorable (md5 + integer arithmetic only); ``simhash64``
-    (xxhash64, single bigint) remains the fast path."""
+    of the vote gives the bit (votes > 0 → 1). Oracle-mirrorable (md5 +
+    integer arithmetic only)."""
     token_bits = F.transform(tokens_col, md5_bits64)
     votes = F.aggregate(
         token_bits,
@@ -131,30 +122,3 @@ def make_coeffs(num_perm: int, seed: int = 42) -> list[tuple[int, int]]:
     rng = random.Random(seed)
     return [(rng.randrange(1, 1 << 31), rng.randrange(0, 1 << 31))
             for _ in range(num_perm)]
-
-
-def simhash64(tokens_col: Column) -> Column:
-    """64-bit SimHash over a token array.
-
-    For each of 64 bit positions, sum +1/-1 contributions of each token's
-    xxhash64 bit; the sign of the sum gives the output bit. Expressed as
-    pure array/bit arithmetic (one aggregate over tokens per bit group) —
-    JVM-side, no UDF.
-    """
-    th = F.transform(tokens_col, lambda t: F.xxhash64(t))
-    result = F.lit(0).cast("long")
-    for bit in range(64):
-        # Bit 63 must be expressed as the signed long -2^63.
-        mask_val = (1 << bit) if bit < 63 else -(1 << 63)
-        mask = F.lit(mask_val).cast("long")
-        votes = F.aggregate(
-            th,
-            F.lit(0),
-            lambda acc, h: acc + F.when(h.bitwiseAND(mask) != 0, 1).otherwise(-1),
-        )
-        result = result + F.when(votes > 0, mask).otherwise(F.lit(0).cast("long"))
-    return result
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))

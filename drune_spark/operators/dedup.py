@@ -10,18 +10,23 @@ Four strategies, all DataFrame-native and shuffle-conscious:
   pairs that share >= 1 shingle. Exact but O(sum bucket^2) — the
   correctness oracle for MinHash. Use at audit scale, not 100 TB.
 - ``minhash_lsh_pairs``: MinHash signatures (deterministic (a*x+b) mod p
-  permutations over xxhash64 shingle hashes) banded into LSH buckets;
+  permutations over md5_u32 shingle hashes) banded into LSH buckets;
   pairs sharing a band-bucket are candidates, optionally verified with
   their estimated Jaccard (signature agreement). This is the 100 TB
   path: cost is #docs × num_perm narrow work + one shuffle on band
   buckets; bucket skew is bounded because identical band-hash means
-  near-identical docs.
-- ``simhash_dedup``: 64-bit SimHash; near-dup = Hamming distance <= d.
-  Banding on 4×16-bit chunks finds all pairs within distance 3 with one
-  shuffle per chunk (pigeonhole), avoiding any O(n²) compare.
+  near-identical docs. ``minhash_lsh_pairs_recent`` (blocked self-join)
+  and ``incremental_minhash_dedup`` (cross-probe) are built from the
+  same signature, banding and agreement helpers.
+- ``simhash_near_dup_pairs_portable``: 64-bit md5 SimHash bit arrays;
+  near-dup = Hamming distance <= d. Banding on 4×16-bit chunks finds
+  all pairs within distance 3 with one self-join (pigeonhole),
+  avoiding any O(n²) compare.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -30,7 +35,8 @@ from drune_spark.functions.hashes import (
     MERSENNE_P,
     fingerprint_md5,
     make_coeffs,
-    simhash64,
+    md5_u32,
+    simhash_bits,
     word_shingles,
 )
 from drune_spark.functions.text import tokens
@@ -731,33 +737,23 @@ def minhash_signatures(
     num_perm: int = 64,
     k: int = 3,
     seed: int = 42,
-    portable: bool = False,
 ) -> DataFrame:
     """(doc, signature array<bigint>[num_perm]).
 
     Shuffle-free formulation: one ``F.aggregate`` fold over the doc's
-    shingle-hash array with an array<bigint>[num_perm] accumulator —
-    each shingle hash is permuted num_perm ways and ``least``-merged in
-    place. The hash array is materialized once per doc (the naive
-    per-permutation ``array_min(transform(...))`` recomputes the shingle
-    hashing num_perm times → ~10× slower; an explode+groupBy agg adds a
-    shuffle and 64 aggregation buffers → also slower). Entirely narrow:
-    signatures are computed where the docs already live.
+    md5_u32 shingle-hash array with an array<bigint>[num_perm]
+    accumulator — each shingle hash is permuted num_perm ways and
+    ``least``-merged in place. The hash array is materialized once per
+    doc (the naive per-permutation ``array_min(transform(...))``
+    recomputes the shingle hashing num_perm times → ~10× slower; an
+    explode+groupBy agg adds a shuffle and 64 aggregation buffers →
+    also slower). Entirely narrow: signatures are computed where the
+    docs already live. md5_u32 is what the SQL oracle twins and the
+    numpy replay (``_md5_signatures``) reproduce bit-for-bit.
     """
-    from drune_spark.functions.hashes import md5_u32
-
     coeffs = make_coeffs(num_perm, seed)
     sh = _doc_shingles(df, text_col, id_col, k)
-    # portable=True swaps the shingle hash for md5_u32 so a SQL oracle
-    # can reproduce the signatures bit-for-bit; xxhash64 stays the fast
-    # default (one JVM call vs md5 + base conversion per shingle).
-    shingle_hash = (
-        md5_u32 if portable
-        else (lambda s: F.pmod(F.xxhash64(s), F.lit(1 << 32)))
-    )
-    hashes = sh.select(
-        "doc", F.transform("shingles", shingle_hash).alias("h")
-    )
+    hashes = sh.select("doc", F.transform("shingles", md5_u32).alias("h"))
     init = F.array_repeat(F.lit(MERSENNE_P).cast("long"), num_perm)
 
     def step(acc, x):
@@ -769,11 +765,114 @@ def minhash_signatures(
     return hashes.select("doc", F.aggregate("h", init, step).alias("sig"))
 
 
+# ---- the MinHash LSH core: the self-join (minhash_lsh_pairs), blocked
+# self-join (minhash_lsh_pairs_recent) and cross-probe
+# (incremental_minhash_dedup) modes, distributed and replayed, are built
+# from the helpers below.
+
+def _band_slices(num_perm: int, bands: int) -> list[tuple[int, int]]:
+    """The (lo, hi) signature slot range of each band. Rejects a band
+    count outside ``1 <= bands <= num_perm``: zero-width bands would put
+    every doc in one bucket (quadratic candidate volume)."""
+    if not 1 <= bands <= num_perm:
+        raise ValueError(
+            f"bands must be in [1, num_perm={num_perm}], got {bands}"
+        )
+    r = num_perm // bands
+    return [(b * r, (b + 1) * r) for b in range(bands)]
+
+
+def _eager_signatures(sigs: DataFrame) -> DataFrame:
+    """Persist a signature frame and fill the cache now.
+
+    EAGER persist (r10): the banding and the signature joins all read
+    it, and the signature-side joins run as CONCURRENT broadcast-build
+    jobs that race a lazy persist mark — each racer re-ran the whole
+    shingle+md5 fold lineage (interleaved A/B at sf0.1 on the
+    cross_source_dups shape: lazy 30.4/4.1/2.5 s/pass vs eager
+    3.8/0.9/1.8; on the incremental probe 39-77 vs 27-42 taskSec — the
+    §14 incremental_dedup family). Left cached after return on purpose
+    (the result is lazy and still reads it); LRU eviction is the
+    long-lived-session backstop."""
+    sigs = sigs.persist()
+    sigs.count()
+    return sigs
+
+
+def _band_rows(sigs: DataFrame, num_perm: int, bands: int,
+               *carry) -> DataFrame:
+    """One (``carry``..., band, bucket) row per doc and band. The bucket
+    is the xxhash64 of the band's signature slice: a pure transport
+    encoding (bucket equality ⟺ slice equality, which is what the SQL
+    twins and the replays join on). Rows carry only ids and small keys,
+    never the num_perm-slot signatures."""
+    rows = sigs.select(*carry, F.explode(F.array(*[
+        F.struct(
+            F.lit(b).alias("band"),
+            F.xxhash64(F.slice("sig", lo + 1, hi - lo)).alias("bucket"),
+        )
+        for b, (lo, hi) in enumerate(_band_slices(num_perm, bands))
+    ])).alias("bb"))
+    return rows.select(*rows.columns[:-1], "bb.band", "bb.bucket")
+
+
+def _band_join(a: DataFrame, b: DataFrame, *keys: str) -> DataFrame:
+    """Self-join candidates: rows of ``a`` (alias "a") and ``b`` (alias
+    "b") in one band bucket (and equal on ``keys``), ``a.doc < b.doc``."""
+    cond = reduce(Column.__and__, [
+        F.col(f"a.{c}") == F.col(f"b.{c}") for c in ("band", "bucket", *keys)
+    ] + [F.col("a.doc") < F.col("b.doc")])
+    return a.alias("a").join(b.alias("b"), cond)
+
+
+def _scored(cands: DataFrame, sigs_a: DataFrame, sigs_b: DataFrame,
+            num_perm: int, min_est_jaccard: float) -> DataFrame:
+    """Candidate (id_a, id_b, ...) rows with ``est_jaccard`` — the share
+    of the num_perm signature slots on which id_a's signature (from
+    ``sigs_a``) and id_b's (from ``sigs_b``) agree — at least
+    ``min_est_jaccard``. est = agree/num_perm is an exact dyadic
+    rational: the same double in Spark, numpy and DuckDB."""
+    est = F.size(
+        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
+                 lambda v: v)
+    ).cast("double") / F.lit(num_perm)
+    return (
+        cands
+        .join(sigs_a.select(F.col("doc").alias("id_a"),
+                            F.col("sig").alias("sig_a")), "id_a")
+        .join(sigs_b.select(F.col("doc").alias("id_b"),
+                            F.col("sig").alias("sig_b")), "id_b")
+        .withColumn("est_jaccard", est)
+        .filter(F.col("est_jaccard") >= min_est_jaccard)
+    )
+
+
+def _replay_frame(spark, id_type: str, uniq, ids: dict, **extra):
+    """The Arrow-backed result frame of a replay: one ``id_type`` column
+    per ``ids`` entry (name → code array into the sorted distinct ids
+    ``uniq``), then one column per ``extra`` entry (name → (SQL type,
+    values)), in that order."""
+    import numpy as np
+    import pyarrow as pa
+
+    arrow = {"string": pa.string(), "int": pa.int32(), "bigint": pa.int64(),
+             "double": pa.float64()}
+    uniq_arr = np.asarray(uniq)
+    cols = {name: pa.array(uniq_arr[codes] if len(codes) else [],
+                           type=arrow[id_type])
+            for name, codes in ids.items()}
+    cols.update({name: pa.array(vals, type=arrow[t])
+                 for name, (t, vals) in extra.items()})
+    schema = ", ".join([f"{name} {id_type}" for name in ids]
+                       + [f"{name} {t}" for name, (t, _) in extra.items()])
+    return spark.createDataFrame(pa.table(cols), schema=schema)
+
+
 def _minhash_replay_pairs(df, text_col, id_col, num_perm, bands, k,
                           seed, min_est_jaccard):
-    """Replay gate for ``minhash_lsh_pairs`` (portable=True): the
-    (id_a, id_b, est_jaccard) frame from the shared numpy kernel, or
-    ``None`` for the distributed path. See the caller's docstring."""
+    """Replay gate for ``minhash_lsh_pairs``: the (id_a, id_b,
+    est_jaccard) frame from the shared numpy kernel, or ``None`` for
+    the distributed path. See the caller's docstring."""
     op = "minhash_lsh_pairs"
     id_type = df.schema[id_col].dataType.simpleString()
     if id_type not in _PAIRS_DRIVER_ID_TYPES:
@@ -784,7 +883,7 @@ def _minhash_replay_pairs(df, text_col, id_col, num_perm, bands, k,
     if at is None:
         return None
     state = _doc_shingle_state(at, hashed=True)
-    if state is None:
+    if isinstance(state, str):
         return replay.decline(op, "null_or_duplicate_id", at.num_rows)
     import numpy as np
 
@@ -796,26 +895,13 @@ def _minhash_replay_pairs(df, text_col, id_col, num_perm, bands, k,
     )
     if cand is None:
         return replay.decline(op, "pair_volume", n)
-    ck, agree, _ = cand
+    ck, agree = cand
     est = agree.astype(np.float64) / num_perm
     keep = est >= min_est_jaccard
     ck, est = ck[keep], est[keep]
-    uniq_arr = np.asarray(uniq)
-    import pyarrow as pa
-
-    pa_id = pa.string() if id_type == "string" else (
-        pa.int32() if id_type == "int" else pa.int64()
-    )
-    tbl = pa.table({
-        "id_a": pa.array(uniq_arr[ck // n] if len(ck) else [],
-                         type=pa_id),
-        "id_b": pa.array(uniq_arr[ck % n] if len(ck) else [],
-                         type=pa_id),
-        "est_jaccard": pa.array(est, type=pa.float64()),
-    })
-    return df.sparkSession.createDataFrame(
-        tbl,
-        schema=f"id_a {id_type}, id_b {id_type}, est_jaccard double",
+    return _replay_frame(
+        df.sparkSession, id_type, uniq, {"id_a": ck // n, "id_b": ck % n},
+        est_jaccard=("double", est),
     )
 
 
@@ -828,20 +914,18 @@ def minhash_lsh_pairs(
     k: int = 3,
     seed: int = 42,
     min_est_jaccard: float = 0.0,
-    portable: bool = False,
+    portable: bool = True,
 ) -> DataFrame:
     """LSH candidate pairs: docs agreeing on all rows of >= 1 band.
 
     Returns (id_a, id_b, est_jaccard) where est_jaccard is the fraction
     of the num_perm signature slots that agree. Scale path: one shuffle
     keyed on (band_id, band_hash); candidates deduped before the
-    signature-compare join. ``portable=True`` uses md5-based shingle
-    hashes (oracle-mirrorable; the band bucket stays xxhash64 — bucket
-    equality ⟺ band-slice equality, which is what a SQL twin joins on).
+    signature-compare join. ``portable`` is accepted for existing
+    callers and must stay True: md5_u32 is the only shingle hash.
 
-    Size-adaptive replay (r11, portable only — xxhash64 has no python
-    mirror): below a doc cutoff (``replay.CUTOFFS``, 50k docs — the
-    broadcast memory class), ONE narrow collect of
+    Size-adaptive replay (r11): below a doc cutoff (``replay.CUTOFFS``,
+    50k docs — the broadcast memory class), ONE narrow collect of
     the Spark-computed ``_doc_shingles`` arrays replays signatures +
     banding + the agreement estimate in numpy
     (``_md5_band_candidates`` — the lsh_census_eval kernel) and
@@ -854,68 +938,25 @@ def minhash_lsh_pairs(
     duplicate ids, NULL shingle arrays, unsupported id types, or a
     bucket pair volume past ``_PAIRS_DRIVER_MAX_PAIRS``.
     """
-    if portable:
-        hit = _minhash_replay_pairs(
-            df, text_col, id_col, num_perm, bands, k, seed,
-            min_est_jaccard,
-        )
-        if hit is not None:
-            return hit
-    rows_per_band = num_perm // bands
-    # EAGER persist (r10): banding and the two signature joins below all
-    # read this, and the signature-side joins run as CONCURRENT
-    # broadcast-build jobs that race a lazy persist mark — each racer
-    # re-ran the whole shingle+md5 fold lineage (interleaved A/B at
-    # sf0.1 on the cross_source_dups shape: lazy 30.4/4.1/2.5 s/pass vs
-    # eager 3.8/0.9/1.8 — the §14 incremental_dedup family). Left
-    # cached after return on purpose (the result is lazy and still
-    # reads it); LRU eviction is the long-lived-session backstop.
-    sigs = minhash_signatures(
-        df, text_col, id_col, num_perm, k, seed, portable
-    ).persist()
-    sigs.count()
-    # The self-join carries only (doc, band, bucket) — 24 bytes/row —
-    # never the 64-slot signatures; those join back onto the (much
-    # smaller) deduped candidate set afterwards.
-    banded = sigs.select(
-        "doc",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(b).alias("band"),
-                    F.xxhash64(F.slice("sig", b * rows_per_band + 1, rows_per_band))
-                     .alias("bucket"),
-                )
-                for b in range(bands)
-            ])
-        ).alias("bb"),
-    ).select("doc", "bb.band", "bb.bucket")
-
+    if not portable:
+        raise ValueError("md5_u32 is the only shingle hash: portable=True")
+    _band_slices(num_perm, bands)
+    hit = _minhash_replay_pairs(
+        df, text_col, id_col, num_perm, bands, k, seed, min_est_jaccard,
+    )
+    if hit is not None:
+        return hit
+    sigs = _eager_signatures(
+        minhash_signatures(df, text_col, id_col, num_perm, k, seed)
+    )
+    banded = _band_rows(sigs, num_perm, bands, "doc")
     cands = (
-        banded.alias("a")
-        .join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
+        _band_join(banded, banded)
         .select(F.col("a.doc").alias("id_a"), F.col("b.doc").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    paired = (
-        cands
-        .join(sigs.select(F.col("doc").alias("id_a"),
-                          F.col("sig").alias("sig_a")), "id_a")
-        .join(sigs.select(F.col("doc").alias("id_b"),
-                          F.col("sig").alias("sig_b")), "id_b")
-    )
-    est = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v)
-    ).cast("double") / F.lit(num_perm)
-    return (
-        paired.withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= min_est_jaccard)
-        .select("id_a", "id_b", "est_jaccard")
+    return _scored(cands, sigs, sigs, num_perm, min_est_jaccard).select(
+        "id_a", "id_b", "est_jaccard"
     )
 
 
@@ -958,6 +999,7 @@ def lsh_census_eval(
     composition of the independently-oracled ``ngram_jaccard_pairs`` +
     ``minhash_lsh_pairs`` runs unchanged (the production path).
     """
+    _band_slices(num_perm, bands)
     out_schema = (
         "n_both bigint, n_only_exact bigint, n_only_lsh bigint, "
         "recall_ppm bigint, precision_ppm bigint"
@@ -979,7 +1021,7 @@ def lsh_census_eval(
     lsh = minhash_lsh_pairs(
         docs, text_col, id_col,
         num_perm=num_perm, bands=bands, k=k, seed=seed,
-        min_est_jaccard=min_est_jaccard, portable=True,
+        min_est_jaccard=min_est_jaccard,
     ).select("id_a", "id_b").withColumn("l", F.lit(1))
     joined = exact.join(lsh, ["id_a", "id_b"], "full")
     return joined.agg(
@@ -1005,8 +1047,6 @@ def _doc_shingle_frame(docs, text_col, id_col, k, hashed=False):
     exact expression the distributed signature fold consumes) — the
     replay then has NO python-side hashing at all (250k
     ``hashlib.md5`` calls measured 2-3 s at sf0.1)."""
-    from drune_spark.functions.hashes import md5_u32
-
     sh = _doc_shingles(
         docs.select(F.col(id_col), F.col(text_col)), text_col, id_col, k
     )
@@ -1017,28 +1057,28 @@ def _doc_shingle_frame(docs, text_col, id_col, k, hashed=False):
     return sh
 
 
-def _doc_shingle_state(at, hashed=False):
-    """A collected ``_doc_shingle_frame`` table decoded into replay
-    state: ``(uniq, offs, flat, row_codes)`` where ``uniq`` is the
-    sorted distinct doc ids (value order == Spark ``<`` for ints and
-    strings), ``flat`` the concatenated per-doc distinct shingles (an
-    int64 ndarray when ``hashed``), ``offs`` the per-ROW boundaries
-    (row r owns ``flat[offs[r]:offs[r+1]]``), and ``row_codes[r]`` row
-    r's code in ``uniq`` order. Returns ``None`` on NULL ids/shingle
-    arrays or duplicate ids (the distributed pipelines handle those;
-    the replay declines)."""
+def _doc_shingle_state(at, hashed=False, col="shingles"):
+    """A collected (doc, ``col``) array table — a ``_doc_shingle_frame``
+    or the simhash token words — decoded into replay state: ``(uniq,
+    offs, flat, row_codes)`` where ``uniq`` is the sorted distinct doc
+    ids (value order == Spark ``<`` for ints and strings), ``flat`` the
+    concatenated per-doc array elements (an int64 ndarray when
+    ``hashed``), ``offs`` the per-ROW boundaries (row r owns
+    ``flat[offs[r]:offs[r+1]]``), and ``row_codes[r]`` row r's code in
+    ``uniq`` order. Returns the decline reason instead — ``"null_id"``
+    on NULL ids or arrays, ``"duplicate_id"`` on duplicate ids (the
+    distributed pipelines handle those; the replay declines)."""
     import numpy as np
 
-    if (at.column("doc").null_count > 0
-            or at.column("shingles").null_count > 0):
-        return None
+    if at.column("doc").null_count > 0 or at.column(col).null_count > 0:
+        return "null_id"
     doc_vals = at.column("doc").to_pylist()
     n = len(doc_vals)
     uniq = sorted(set(doc_vals))
     if len(uniq) != n:
-        return None  # duplicate ids: sig rows would duplicate too
+        return "duplicate_id"  # sig rows would duplicate too
     code_of = {v: i for i, v in enumerate(uniq)}
-    sh_col = at.column("shingles").combine_chunks()
+    sh_col = at.column(col).combine_chunks()
     offs = np.asarray(sh_col.offsets, dtype=np.int64)
     if hashed:
         flat = sh_col.values.to_numpy(zero_copy_only=False).astype(
@@ -1065,8 +1105,6 @@ def _md5_signatures(hvals, offs, row_codes, n, num_perm, seed):
     init (MERSENNE_P) in every slot, exactly like the distributed
     aggregate."""
     import numpy as np
-
-    from drune_spark.functions.hashes import MERSENNE_P, make_coeffs
 
     sig = np.full((n, num_perm), MERSENNE_P, dtype=np.int64)
     if len(hvals):
@@ -1104,44 +1142,27 @@ def _pair_agreement(sig_a, sig_b, ai, bi, chunk=2_000_000):
 
 def _md5_band_candidates(hvals, offs, row_codes, n, num_perm, bands,
                          seed, max_pairs):
-    """Numpy replay of the portable-md5 MinHash + banding candidate
-    stage over precomputed md5_u32 shingle hashes ``hvals`` (int64,
-    laid out per ``offs``/``row_codes`` — see ``_doc_shingle_state``):
-    signatures as a per-permutation ``min((a·h+b) mod P)`` segmented
-    fold (a, b < 2³¹ and h < 2³² keep every product < 2⁶³ — the same
-    bound the Spark fold relies on; ``np.minimum.reduceat`` over the
-    per-row segments with one reused buffer — the dense
-    len(flat)×num_perm ``np.minimum.at`` form measured 1-2 s of
-    ufunc.at scatter + 133 MB fresh allocation per pass), banding by
-    rows_per_band-slot slice EQUALITY — what the SQL oracle twin
-    joins on (the xxhash64 bucket is a pure transport encoding of the
-    slice). Docs with zero shingles keep the fold's init value in
-    every slot and band together, exactly like the distributed path.
+    """Numpy replay of the MinHash + banding candidate stage over
+    precomputed md5_u32 shingle hashes ``hvals`` (int64, laid out per
+    ``offs``/``row_codes`` — see ``_doc_shingle_state``): signatures
+    from ``_md5_signatures``, banding by band-slice EQUALITY — what the
+    SQL oracle twin joins on (the xxhash64 bucket of ``_band_rows`` is
+    a pure transport encoding of the slice). Docs with zero shingles
+    keep the fold's init value in every slot and band together,
+    exactly like the distributed path.
 
-    Returns ``(ck, agree, sig)``: deduped candidate pair keys
-    (a·n + b, a < b in code order), per-pair signature-agreement slot
-    counts, and the signature matrix — or ``None`` when the bucket
-    pair volume exceeds ``max_pairs`` (a hot bucket is exactly as
-    quadratic here as in the distributed join, but there it spreads
-    across tasks)."""
-    import numpy as np
-
-    rows_per_band = num_perm // bands
+    Returns ``(ck, agree)``: deduped candidate pair keys (a·n + b,
+    a < b in code order) and per-pair signature-agreement slot counts
+    — or ``None`` when the bucket pair volume exceeds ``max_pairs`` (a
+    hot bucket is exactly as quadratic here as in the distributed
+    join, but there it spreads across tasks)."""
     sig = _md5_signatures(hvals, offs, row_codes, n, num_perm, seed)
     ck = _slice_candidate_pairs(
-        sig,
-        [(b * rows_per_band, (b + 1) * rows_per_band)
-         for b in range(bands)],
-        n, max_pairs,
+        sig, _band_slices(num_perm, bands), n, max_pairs
     )
     if ck is None:
         return None
-    if not len(ck):
-        z = np.empty(0, dtype=np.int64)
-        return z, z, sig
-    a, b2 = ck // n, ck % n
-    agree = _pair_agreement(sig, sig, a, b2)
-    return ck, agree, sig
+    return ck, _pair_agreement(sig, sig, ck // n, ck % n)
 
 
 def _slice_candidate_pairs(sig, slices, n, max_pairs):
@@ -1250,7 +1271,7 @@ def _lsh_census_replay(at, num_perm, bands, seed, min_est_jaccard,
 
     op = "lsh_census_eval"
     state = _doc_shingle_state(at)
-    if state is None:
+    if isinstance(state, str):
         return replay.decline(op, "null_or_duplicate_id", at.num_rows)
     uniq, offs, flat, row_codes = state
     n = len(uniq)
@@ -1311,7 +1332,7 @@ def _lsh_census_replay(at, num_perm, bands, seed, min_est_jaccard,
     )
     if cand is None:
         return replay.decline(op, "pair_volume", n)
-    ck, agree, _ = cand
+    ck, agree = cand
     l_keys = np.empty(0, dtype=np.int64)
     if len(ck):
         est = agree.astype(np.float64) / num_perm
@@ -1546,68 +1567,14 @@ def connected_components(
     )
 
 
-def simhash_fingerprints(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """(doc, simhash bigint). Narrow; 64 aggregate passes fused by codegen."""
-    from drune_spark.functions.partitioning import fan_out
-    df = fan_out(df)
-    return df.select(
-        F.col(id_col).alias("doc"),
-        simhash64(tokens(F.lower(F.col(text_col)))).alias("simhash"),
-    )
-
-
-def simhash_near_dup_pairs(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    max_hamming: int = 3,
-) -> DataFrame:
-    """Near-dup pairs with Hamming(simhash) <= max_hamming via 16-bit-chunk
-    banding (any pair within distance 3 shares one of 4 exact chunks).
-    Signatures are persisted — the chunk self-join reads them twice."""
-    sigs = simhash_fingerprints(df, text_col, id_col).persist()
-    chunks = sigs.select(
-        "doc",
-        "simhash",
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("chunk"),
-                    F.shiftrightunsigned("simhash", i * 16)
-                     .bitwiseAND(F.lit(0xFFFF)).alias("key"),
-                )
-                for i in range(4)
-            ])
-        ).alias("ck"),
-    ).select("doc", "simhash", "ck.chunk", "ck.key")
-    pairs = (
-        chunks.alias("a")
-        .join(
-            chunks.alias("b"),
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("id_a"),
-            F.col("b.doc").alias("id_b"),
-            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-             .alias("hamming"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    return pairs
-
-
 def _simhash_replay_pairs(df, text_col, id_col, max_hamming):
     """Replay gate for ``simhash_near_dup_pairs_portable``: the
     (id_a, id_b, hamming) frame from one collect of the SPARK-computed
-    ``simhash_bits`` arrays (the identical expression the distributed
-    self-join consumes — the replay's python surface is banding +
-    hamming on 0/1 ints, NO hashing and NO floats), or ``None`` for
-    the distributed path. Declines on NULL/duplicate ids, NULL bit
-    arrays, unsupported id types, or bucket pair volume past
+    md5 token words (the same bits the distributed ``simhash_bits``
+    fold consumes — the replay's python surface is the vote sum,
+    banding and hamming on 0/1 ints, NO hashing and NO floats), or
+    ``None`` for the distributed path. Declines on NULL/duplicate ids,
+    NULL token arrays, unsupported id types, or bucket pair volume past
     ``_PAIRS_DRIVER_MAX_PAIRS``."""
     op = "simhash_near_dup_pairs_portable"
     id_type = df.schema[id_col].dataType.simpleString()
@@ -1636,25 +1603,13 @@ def _simhash_replay_pairs(df, text_col, id_col, max_hamming):
     ))
     if at is None:
         return None
-    if (at.column("doc").null_count > 0
-            or at.column("tok64").null_count > 0):
-        return replay.decline(op, "null_id", at.num_rows)
+    state = _doc_shingle_state(at, hashed=True, col="tok64")
+    if isinstance(state, str):
+        return replay.decline(op, state, at.num_rows)
     import numpy as np
 
-    doc_vals = at.column("doc").to_pylist()
-    n = len(doc_vals)
-    uniq = sorted(set(doc_vals))
-    if len(uniq) != n:  # duplicate ids duplicate sig rows too
-        return replay.decline(op, "duplicate_id", n)
-    tok_col = at.column("tok64").combine_chunks()
-    offs = np.asarray(tok_col.offsets, dtype=np.int64)
-    flat = tok_col.values.to_numpy(zero_copy_only=False).astype(
-        np.int64, copy=False
-    )
-    code_of = {v: i for i, v in enumerate(uniq)}
-    row_codes = np.fromiter(
-        (code_of[v] for v in doc_vals), dtype=np.int64, count=n
-    )
+    uniq, offs, flat, row_codes = state
+    n = len(uniq)
     # Per-token bit matrix (LSB-first across the full 64-bit word ==
     # md5_bits64 element order), per-doc vote = 2·Σbits − n_tokens,
     # signature bit = vote > 0 — exactly simhash_bits' fold.
@@ -1684,20 +1639,9 @@ def _simhash_replay_pairs(df, text_col, id_col, max_hamming):
     a, b2 = ck // n, ck % n
     ham = (sig[a] != sig[b2]).sum(axis=1).astype(np.int32)
     keep = ham <= max_hamming
-    a, b2, ham = a[keep], b2[keep], ham[keep]
-    uniq_arr = np.asarray(uniq)
-    import pyarrow as pa
-
-    pa_id = pa.string() if id_type == "string" else (
-        pa.int32() if id_type == "int" else pa.int64()
-    )
-    tbl = pa.table({
-        "id_a": pa.array(uniq_arr[a] if len(a) else [], type=pa_id),
-        "id_b": pa.array(uniq_arr[b2] if len(b2) else [], type=pa_id),
-        "hamming": pa.array(ham, type=pa.int32()),
-    })
-    return df.sparkSession.createDataFrame(
-        tbl, schema=f"id_a {id_type}, id_b {id_type}, hamming int",
+    return _replay_frame(
+        df.sparkSession, id_type, uniq, {"id_a": a[keep], "id_b": b2[keep]},
+        hamming=("int", ham[keep]),
     )
 
 
@@ -1707,23 +1651,20 @@ def simhash_near_dup_pairs_portable(
     id_col: str,
     max_hamming: int = 3,
 ) -> DataFrame:
-    """Oracle-mirrorable SimHash near-dup pairs: signatures are md5-based
-    bit arrays (``simhash_bits``) instead of xxhash64 bigints, so a SQL
-    twin reproduces pairs AND hamming values exactly. Same plan shape as
-    ``simhash_near_dup_pairs`` — 4×16-bit pigeonhole banding, one
-    self-join on (chunk, key), signatures persisted. The xxhash64
-    variant remains the fast path for production corpora.
+    """SimHash near-dup pairs over md5-based 64-bit signature arrays
+    (``simhash_bits``), so a SQL twin reproduces pairs AND hamming
+    values exactly: 4×16-bit pigeonhole banding, one self-join on
+    (chunk, key), signatures persisted.
 
     Size-adaptive replay (r11, the minhash_lsh_pairs pattern): below
     its ``replay.CUTOFFS`` entry (50k docs — broadcast memory class)
-    one collect of the Spark-computed bit arrays replays
-    the 4×16-bit banding + hamming filter in numpy
+    one collect of the Spark-computed md5 token words replays the
+    SimHash fold, the 4×16-bit banding and the hamming filter in numpy
     (``_simhash_replay_pairs``); the distributed self-join below runs
     unchanged above the cutoff (the production path)."""
     hit = _simhash_replay_pairs(df, text_col, id_col, max_hamming)
     if hit is not None:
         return hit
-    from drune_spark.functions.hashes import simhash_bits
     from drune_spark.functions.partitioning import fan_out
 
     d = fan_out(df)
@@ -1789,7 +1730,6 @@ def decontaminate(
     for a giant holdout, falling back to a shuffle join on the hash).
     The md5-based hash keeps the op engine-portable / oracle-checkable.
     """
-    from drune_spark.functions.hashes import md5_u32
 
     def sh(df: DataFrame) -> DataFrame:
         # Codegen position-explode shingles (shared shingle_cells; the
@@ -2084,7 +2024,6 @@ def minhash_lsh_pairs_recent(
     k: int = 3,
     seed: int = 42,
     min_est_jaccard: float = 0.0,
-    portable: bool = False,
 ) -> DataFrame:
     """Temporally-blocked LSH near-dup pairs: only pairs whose
     ``day_col`` values differ by at most ``horizon_days`` — the
@@ -2098,53 +2037,26 @@ def minhash_lsh_pairs_recent(
     100 TB this is the difference between candidate volume growing
     with corpus AGE versus staying proportional to weekly INGEST. An
     exact |Δday| <= horizon residual filter then trims the corner
-    pairs the coarse week grid admits. Same signature math as
-    minhash_lsh_pairs (shuffle-free folds, pairs carry 24-byte keys).
+    pairs the coarse week grid admits. Same signature, banding and
+    agreement core as minhash_lsh_pairs (shuffle-free folds, pairs
+    carry 24-byte keys).
 
     Returns (id_a, id_b, day_a, day_b, est_jaccard).
     """
-    rows_per_band = num_perm // bands
+    _band_slices(num_perm, bands)
     days = df.select(F.col(id_col).alias("doc"),
                      F.col(day_col).alias("day"))
-    # Eager persist: same concurrent-broadcast-build race as
-    # minhash_lsh_pairs (the two signature joins below) — see the A/B
-    # evidence there.
-    sigs = minhash_signatures(
-        df, text_col, id_col, num_perm, k, seed, portable
-    ).join(days, "doc").persist()
-    sigs.count()
+    sigs = _eager_signatures(
+        minhash_signatures(df, text_col, id_col, num_perm, k, seed)
+        .join(days, "doc")
+    )
     week = F.expr(f"day div {int(horizon_days)}")
-
-    def banded(fan_out: bool):
-        weeks = (
-            F.explode(F.array(week - 1, week, week + 1))
-            if fan_out else week
-        )
-        return sigs.select(
-            "doc", "day",
-            weeks.alias("wk"),
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.slice("sig", b * rows_per_band + 1,
-                                    rows_per_band)
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ])
-            ).alias("bb"),
-        ).select("doc", "day", "wk", "bb.band", "bb.bucket")
-
+    probe = F.explode(F.array(week - 1, week, week + 1))
     cands = (
-        banded(False).alias("a")
-        .join(
-            banded(True).alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.wk") == F.col("b.wk"))
-            & (F.col("a.doc") < F.col("b.doc")),
+        _band_join(
+            _band_rows(sigs, num_perm, bands, "doc", "day", week.alias("wk")),
+            _band_rows(sigs, num_perm, bands, "doc", "day", probe.alias("wk")),
+            "wk",
         )
         .filter(
             F.abs(F.col("a.day") - F.col("b.day"))
@@ -2156,21 +2068,8 @@ def minhash_lsh_pairs_recent(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    paired = (
-        cands
-        .join(sigs.select(F.col("doc").alias("id_a"),
-                          F.col("sig").alias("sig_a")), "id_a")
-        .join(sigs.select(F.col("doc").alias("id_b"),
-                          F.col("sig").alias("sig_b")), "id_b")
-    )
-    est = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                 lambda v: v)
-    ).cast("double") / F.lit(num_perm)
-    return (
-        paired.withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= min_est_jaccard)
-        .select("id_a", "id_b", "day_a", "day_b", "est_jaccard")
+    return _scored(cands, sigs, sigs, num_perm, min_est_jaccard).select(
+        "id_a", "id_b", "day_a", "day_b", "est_jaccard"
     )
 
 
@@ -2551,8 +2450,8 @@ def segment_dedup(
 
 def _incremental_replay(new_df, existing_df, text_col, id_col, num_perm,
                         bands, k, seed, min_est_jaccard):
-    """Replay gate for ``incremental_minhash_dedup`` (portable=True):
-    the per-new-doc verdict frame from the shared numpy minhash kernel
+    """Replay gate for ``incremental_minhash_dedup``: the per-new-doc
+    verdict frame from the shared numpy minhash kernel
     (``_md5_signatures`` + the asymmetric ``_cross_slice_candidates``
     banding), or ``None`` for the distributed batch-probe path. Its
     cutoff counts the docs of BOTH frames; declines on NULL/duplicate
@@ -2577,7 +2476,7 @@ def _incremental_replay(new_df, existing_df, text_col, id_col, num_perm,
         return None
     st_new = _doc_shingle_state(hit[0], hashed=True)
     st_old = _doc_shingle_state(hit[1], hashed=True)
-    if st_new is None or st_old is None:
+    if isinstance(st_new, str) or isinstance(st_old, str):
         return replay.decline(
             op, "null_or_duplicate_id", hit[0].num_rows + hit[1].num_rows
         )
@@ -2586,14 +2485,10 @@ def _incremental_replay(new_df, existing_df, text_col, id_col, num_perm,
     uniq_n, offs_n, flat_n, rc_n = st_new
     uniq_o, offs_o, flat_o, rc_o = st_old
     n_new, n_old = len(uniq_n), len(uniq_o)
-    rows_per_band = num_perm // bands
     sig_n = _md5_signatures(flat_n, offs_n, rc_n, n_new, num_perm, seed)
     sig_o = _md5_signatures(flat_o, offs_o, rc_o, n_old, num_perm, seed)
     ck = _cross_slice_candidates(
-        sig_o, sig_n,
-        [(b * rows_per_band, (b + 1) * rows_per_band)
-         for b in range(bands)],
-        _PAIRS_DRIVER_MAX_PAIRS,
+        sig_o, sig_n, _band_slices(num_perm, bands), _PAIRS_DRIVER_MAX_PAIRS,
     )
     if ck is None:
         return replay.decline(op, "pair_volume", n_new + n_old)
@@ -2607,25 +2502,11 @@ def _incremental_replay(new_df, existing_df, text_col, id_col, num_perm,
         ni, est = ni[keep], est[keep]
         np.add.at(n_matches, ni, 1)
         np.maximum.at(best, ni, est)
-    import pyarrow as pa
-
-    pa_id = pa.string() if id_type == "string" else (
-        pa.int32() if id_type == "int" else pa.int64()
-    )
-    tbl = pa.table({
-        id_col: pa.array(list(uniq_n), type=pa_id),
-        "n_matches": pa.array(n_matches, type=pa.int64()),
-        "best_est": pa.array(best, type=pa.float64()),
-        "is_dup": pa.array(
-            (n_matches > 0).astype(np.int32), type=pa.int32()
-        ),
-    })
-    return new_df.sparkSession.createDataFrame(
-        tbl,
-        schema=(
-            f"{id_col} {id_type}, n_matches bigint, "
-            "best_est double, is_dup int"
-        ),
+    return _replay_frame(
+        new_df.sparkSession, id_type, uniq_n, {id_col: np.arange(n_new)},
+        n_matches=("bigint", n_matches),
+        best_est=("double", best),
+        is_dup=("int", (n_matches > 0).astype(np.int32)),
     )
 
 
@@ -2639,7 +2520,6 @@ def incremental_minhash_dedup(
     k: int = 3,
     seed: int = 42,
     min_est_jaccard: float = 0.5,
-    portable: bool = False,
 ) -> DataFrame:
     """Ingest-time dedup: probe a NEW batch against the EXISTING corpus
     index instead of self-joining the whole corpus — the steady-state
@@ -2658,8 +2538,7 @@ def incremental_minhash_dedup(
     is_dup) — ``is_dup = 0`` rows are the novel documents that enter
     the corpus.
 
-    Size-adaptive replay (r11, portable only — xxhash64 signatures
-    have no python mirror): below its ``replay.CUTOFFS`` entry in
+    Size-adaptive replay (r11): below its ``replay.CUTOFFS`` entry in
     total docs, ONE narrow collect per side of the Spark-computed
     shingle-hash arrays replays signatures + the asymmetric banding
     probe + the verdicts in numpy (see ``_incremental_replay``) — the
@@ -2667,82 +2546,44 @@ def incremental_minhash_dedup(
     band probe and two signature joins (~8 micro-jobs) for integer
     work a vectorized fold does in milliseconds.
     """
-    if portable:
-        hit = _incremental_replay(
-            new_df, existing_df, text_col, id_col, num_perm, bands, k,
-            seed, min_est_jaccard,
-        )
-        if hit is not None:
-            return hit
-    rows_per_band = num_perm // bands
-
-    def _banded(sigs: DataFrame) -> DataFrame:
-        return sigs.select(
-            "doc",
-            F.explode(
-                F.array(*[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            F.slice("sig", b * rows_per_band + 1,
-                                    rows_per_band)
-                        ).alias("bucket"),
-                    )
-                    for b in range(bands)
-                ])
-            ).alias("bb"),
-        ).select("doc", "bb.band", "bb.bucket")
-
-    # EAGER persists (r10): sigs_old feeds TWO stages of one job (the
-    # band probe and the signature join) and sigs_new feeds two
-    # concurrent broadcast builds — lazily-persisted, each consumer
-    # re-ran the full minhash (portable md5 = the expensive path;
-    # interleaved A/B at sf0.1: 39-77 taskSec lazy vs 27-42 eager,
-    # eager 3/3 on task time). Residency = corpus signature rows
-    # (~0.5% of text bytes); at production scale the corpus index is a
-    # precomputed table, not an in-session frame (docstring above).
-    sigs_new = minhash_signatures(
-        new_df, text_col, id_col, num_perm, k, seed, portable
-    ).persist()
-    sigs_old = minhash_signatures(
-        existing_df, text_col, id_col, num_perm, k, seed, portable
-    ).persist()
-    sigs_old.count()
-    sigs_new.count()
+    _band_slices(num_perm, bands)
+    hit = _incremental_replay(
+        new_df, existing_df, text_col, id_col, num_perm, bands, k,
+        seed, min_est_jaccard,
+    )
+    if hit is not None:
+        return hit
+    # Residency = corpus signature rows (~0.5% of text bytes); at
+    # production scale the corpus index is a precomputed table, not an
+    # in-session frame (docstring above).
+    sigs_new = _eager_signatures(
+        minhash_signatures(new_df, text_col, id_col, num_perm, k, seed)
+    )
+    sigs_old = _eager_signatures(
+        minhash_signatures(existing_df, text_col, id_col, num_perm, k, seed)
+    )
     cands = (
-        _banded(sigs_old)
+        _band_rows(sigs_old, num_perm, bands, "doc")
         .join(
-            F.broadcast(_banded(sigs_new).withColumnRenamed("doc", "new_doc")),
+            F.broadcast(_band_rows(sigs_new, num_perm, bands, "doc")
+                        .withColumnRenamed("doc", "id_b")),
             ["band", "bucket"],
         )
-        .select(F.col("new_doc"), F.col("doc").alias("old_doc"))
-        .dropDuplicates(["new_doc", "old_doc"])
+        .select(F.col("doc").alias("id_a"), "id_b")
+        .dropDuplicates(["id_a", "id_b"])
     )
-    est = F.size(
-        F.filter(
-            F.zip_with("sig_new", "sig_old", lambda x, y: x == y),
-            lambda v: v,
-        )
-    ).cast("double") / F.lit(num_perm)
     matches = (
-        cands.join(
-            sigs_old.select(F.col("doc").alias("old_doc"),
-                            F.col("sig").alias("sig_old")), "old_doc")
-        .join(
-            F.broadcast(sigs_new.select(F.col("doc").alias("new_doc"),
-                                        F.col("sig").alias("sig_new"))),
-            "new_doc")
-        .withColumn("est", est)
-        .filter(F.col("est") >= min_est_jaccard)
-        .groupBy("new_doc")
+        _scored(cands, sigs_old, F.broadcast(sigs_new), num_perm,
+                min_est_jaccard)
+        .groupBy("id_b")
         .agg(
             F.count(F.lit(1)).alias("n_matches"),
-            F.max("est").alias("best_est"),
+            F.max("est_jaccard").alias("best_est"),
         )
     )
     return (
         sigs_new.select(F.col("doc").alias(id_col))
-        .join(matches.withColumnRenamed("new_doc", id_col), id_col, "left")
+        .join(matches.withColumnRenamed("id_b", id_col), id_col, "left")
         .select(
             id_col,
             F.coalesce("n_matches", F.lit(0)).alias("n_matches"),
@@ -2891,8 +2732,6 @@ def winnow_fingerprints(
     Returns one row per selected fingerprint:
     (id_col, fp_pos INT, fp BIGINT, n_grams INT).
     """
-    from drune_spark.functions.hashes import md5_u32
-
     if w < 2 or k < 1:
         raise ValueError(f"need w >= 2 and k >= 1 (got w={w}, k={k})")
     toks = df.select(
@@ -3045,8 +2884,6 @@ def soft_dedup(
     Returns (id_col, cluster_id, cluster_size, kept 0/1).
     """
     from pyspark.sql import Window
-
-    from drune_spark.functions.hashes import md5_u32
 
     labels = connected_components(pairs, docs.select(id_col),
                                   max_iterations)

@@ -145,19 +145,22 @@ class Pipeline:
         self.runner = StepRunner(spark)
         self.sources: dict[str, DataFrame] = {}
         self.target_df: Optional[DataFrame] = None
-        self.quality: Optional[QualityResult] = None
-        self._quality_results: list[QualityResult] = []
+        # every constrained source's result, by source name: write() takes
+        # its counts and releases its flag-frame cache, if it has one
+        self.quality: dict[str, QualityResult] = {}
 
     def reset(self) -> None:
         self.runner.reset()
         self.sources = {}
         self.target_df = None
-        self.quality = None
-        self._quality_results = []
+        self.quality = {}
 
     # -- read phase ----------------------------------------------------------
     def read(self, src_paths: Optional[dict[str, str]] = None) -> "Pipeline":
         src_paths = src_paths or {}
+        for replaced in self.quality.values():
+            replaced.unpersist()
+        self.quality = {}
         for spec in self.model.sources:
             df = read_source(self.spark, spec, src_paths.get(spec.name))
             if spec.schema_ is not None:
@@ -184,7 +187,9 @@ class Pipeline:
                     if err.flagged is not None:
                         err.flagged.unpersist()
                     raise
-                self._log_failures(quality)
+                self.quality[spec.name] = quality
+                if self._log_sink() and quality.failed_total() > 0:
+                    self._write_failure_log(quality.failures)
                 df = quality.passed
             self.sources[spec.name] = df
             # Dependency views (Q1): later type='sql' sources and SQL
@@ -202,14 +207,6 @@ class Pipeline:
         sink = self._log_sink()
         if failures is not None and sink:
             write_validation_log(self.spark, failures, sink)
-
-    def _log_failures(self, quality: QualityResult) -> None:
-        self.quality = quality
-        # every source's result: write() takes its counts and releases
-        # its flag-frame cache, if it has one
-        self._quality_results.append(quality)
-        if self._log_sink() and quality.failed_total() > 0:
-            self._write_failure_log(quality.failures)
 
     # -- step phase ----------------------------------------------------------
     def run(self, stop_at: Optional[str] = None) -> Optional[DataFrame]:
@@ -236,9 +233,9 @@ class Pipeline:
             df = add_data_hash(df, track)
         if tgt.schema_ is not None and tgt.schema_.primary_key:
             df = add_audit_columns(df)
-        early = [q.observed_early() for q in self._quality_results]
+        early = [q.observed_early() for q in self.quality.values()]
         write_target(self.spark, df, tgt)
-        for quality, stale in zip(self._quality_results, early):
+        for quality, stale in zip(self.quality.values(), early):
             # An action before the write may have read only part of the
             # flag frame (show, limit) and fixed partial counts.
             if stale:
@@ -246,7 +243,6 @@ class Pipeline:
             else:
                 quality.take_observed()
             quality.unpersist()
-        self._quality_results = []
 
     def execute(self, src_paths: Optional[dict[str, str]] = None) -> None:
         self.read(src_paths)

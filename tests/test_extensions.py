@@ -1,6 +1,8 @@
 """Extension-operator tests: dedup recall/precision, ANN recall vs exact,
 SimHash locality, multimodal plumbing, streaming batch-equivalence."""
 
+import contextlib
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -9,7 +11,6 @@ from drune_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
-    simhash_near_dup_pairs,
 )
 from drune_spark.operators.similarity import (
     brute_force_topk,
@@ -93,16 +94,10 @@ class TestDedup:
         assert (1, 2) in cands    # identical docs always collide
         assert (1, 3) in cands    # near-dup should be found at 16 bands
 
-    def test_simhash_identical_and_near(self, spark, docs):
-        pairs = {(r.id_a, r.id_b): r.hamming
-                 for r in simhash_near_dup_pairs(docs, "text", "doc_id",
-                                                 max_hamming=10).collect()}
-        assert pairs.get((1, 2)) == 0
-        assert (1, 4) not in pairs
-
     def test_portable_minhash_same_locality(self, spark, docs):
-        """md5-based shingle hashing (the oracle-mirrorable gate path)
-        preserves the LSH locality behavior of the xxhash64 fast path."""
+        """md5-based shingle hashing (the oracle-mirrorable path) keeps
+        LSH locality: identical docs agree on every slot, a one-word
+        edit collides, an unrelated doc does not."""
         cands = {(r.id_a, r.id_b): r.est_jaccard
                  for r in minhash_lsh_pairs(docs, "text", "doc_id",
                                             num_perm=64, bands=16,
@@ -111,16 +106,90 @@ class TestDedup:
         assert (1, 3) in cands
         assert (1, 4) not in cands
 
+    def test_minhash_rejects_second_hash(self, spark, docs):
+        with pytest.raises(ValueError, match="only shingle hash"):
+            minhash_lsh_pairs(docs, "text", "doc_id", portable=False)
+
+    def test_lsh_entry_points_reject_bad_band_counts(self, spark, docs):
+        """bands outside [1, num_perm] raise before any Spark job, in
+        both modes, for all three LSH entry points (zero-width bands
+        would bucket every doc together)."""
+        from drune_spark.operators.dedup import (
+            incremental_minhash_dedup,
+            minhash_lsh_pairs_recent,
+        )
+        dated = docs.withColumn("day", F.lit(0))
+        calls = {
+            "pairs": lambda b: minhash_lsh_pairs(
+                docs, "text", "doc_id", num_perm=8, bands=b),
+            "recent": lambda b: minhash_lsh_pairs_recent(
+                dated, "text", "doc_id", "day", num_perm=8, bands=b),
+            "incremental": lambda b: incremental_minhash_dedup(
+                docs, docs, "text", "doc_id", num_perm=8, bands=b),
+        }
+        sc = spark.sparkContext
+        for name, call in calls.items():
+            for mode in (contextlib.nullcontext, replay.distributed):
+                for bands in (0, 9):
+                    group = f"bad_bands_{name}_{bands}"
+                    sc.setJobGroup(group, group)
+                    try:
+                        with mode(), pytest.raises(ValueError,
+                                                   match="bands"):
+                            call(bands)
+                    finally:
+                        sc.setJobGroup("", "")
+                    assert sc.statusTracker().getJobIdsForGroup(group) \
+                        == [], (name, bands)
+
+    def test_minhash_modes_agree_on_edge_inputs(self, spark, both_modes):
+        """Replay and distributed minhash_lsh_pairs return the same
+        schema and row set on NULL ids, duplicate ids, an empty frame
+        and an id column not named doc_id, for int and string ids (the
+        replay declines on NULL and duplicate ids)."""
+        base = "the quick brown fox jumps over the lazy dog and runs"
+        near = base.replace("lazy", "sleepy")
+        other = "completely different words about spark sql engines"
+        cases = {
+            "null_id": [(1, base), (None, base), (2, near), (3, other)],
+            "duplicate_id": [(1, base), (1, near), (2, base), (3, other)],
+            "empty": [],
+            "plain": [(1, base), (2, near), (3, base), (4, other)],
+        }
+        for id_type, ids in (("bigint", lambda i: i),
+                             ("string", lambda i: None if i is None
+                              else f"d{i}")):
+            for case, rows in cases.items():
+                df = spark.createDataFrame(
+                    [(ids(i), t) for i, t in rows],
+                    f"key {id_type}, body string",
+                )
+
+                def build():
+                    out = minhash_lsh_pairs(df, "body", "key",
+                                            min_est_jaccard=0.25)
+                    return (out.schema.simpleString(),
+                            sorted(map(tuple, out.collect()), key=repr))
+
+                fast, slow = both_modes(build)
+                assert fast == slow, (id_type, case)
+                assert fast[0] == (
+                    f"struct<id_a:{id_type},id_b:{id_type},"
+                    "est_jaccard:double>"
+                )
+                if case == "plain":
+                    assert len(fast[1]) >= 2, fast  # (1,3) dup, (1,2) near
+
     def test_portable_minhash_replay_matches_distributed(
         self, spark, both_modes
     ):
-        """The r11 numpy replay of portable minhash_lsh_pairs (default
-        cutoff) and the distributed banding pipeline (forced) must
-        return identical row SETS — including est values, short docs
-        whose empty shingle arrays band together (est 1.0), and both
-        id types. The xxhash64 bucket is a transport encoding of the
-        band slice, so slice-equality banding is the same candidate
-        set wherever the oracle passes."""
+        """The r11 numpy replay of minhash_lsh_pairs (default cutoff)
+        and the distributed banding pipeline (forced) must return
+        identical row SETS — including est values, short docs whose
+        empty shingle arrays band together (est 1.0), and both id
+        types. The xxhash64 bucket is a transport encoding of the band
+        slice, so slice-equality banding is the same candidate set
+        wherever the oracle passes."""
         from drune_spark.operators.dedup import minhash_lsh_pairs
         vocab = [f"w{j:02d}" for j in range(30)]
         rows = [
@@ -140,7 +209,7 @@ class TestDedup:
                 (r.id_a, r.id_b, r.est_jaccard)
                 for r in minhash_lsh_pairs(
                     df, "text", "doc_id", num_perm=64, bands=16,
-                    min_est_jaccard=0.25, portable=True,
+                    min_est_jaccard=0.25,
                 ).collect()
             ))
             assert fast == slow
@@ -3580,7 +3649,7 @@ class TestIncrementalDedup:
         assert (row.n_matches, row.is_dup) == (0, 0)
 
     def test_incremental_replay_matches_distributed(self, spark, both_modes):
-        """The r11 numpy replay of the portable batch-probe (default
+        """The r11 numpy replay of the batch-probe (default
         cutoff) and the distributed broadcast-band pipeline
         (forced) must return identical row SETS — n_matches,
         best_est and is_dup included — for int and string ids, with
@@ -3607,8 +3676,7 @@ class TestIncrementalDedup:
                             else "doc_id >= 10")
             old = df.filter("doc_id < 'd10'" if is_str
                             else "doc_id < 10")
-            kw = dict(num_perm=64, bands=16, min_est_jaccard=0.25,
-                      portable=True)
+            kw = dict(num_perm=64, bands=16, min_est_jaccard=0.25)
             fast, slow = both_modes(lambda: sorted(
                 (r[0], r.n_matches, r.best_est, r.is_dup)
                 for r in incremental_minhash_dedup(
@@ -3628,7 +3696,7 @@ class TestIncrementalDedup:
         succeed and match the distributed output."""
         from drune_spark.operators.dedup import incremental_minhash_dedup
 
-        kw = dict(portable=True, min_est_jaccard=0.25)
+        kw = dict(min_est_jaccard=0.25)
         cases = [
             # duplicate new-side ids
             ([(1, "alpha beta gamma delta"),

@@ -401,7 +401,7 @@ class TestObservedCounts:
         assert by_id == {1: "A", 2: None, None: "C", 4: "A"}
         assert sorted(res.counts.values()) == [0, 1]
 
-    def _pipeline(self, spark, tmp_path, steps, **kw):
+    def _pipeline(self, spark, tmp_path, steps, extra_sources=(), **kw):
         from drune_spark.config.models import PipelineModel
         from drune_spark.pipeline import Pipeline
 
@@ -418,7 +418,7 @@ class TestObservedCounts:
                              {"name": "col2", "type": "str",
                               "constraints": [{"rule": "isin:['A','B']",
                                                "on_fail": "warn"}]},
-                         ]}}],
+                         ]}}, *extra_sources],
             "steps": steps,
             "target": {"name": "out", "type": "file", "format": "parquet",
                        "path": str(tmp_path / "out.parquet"),
@@ -451,7 +451,7 @@ class TestObservedCounts:
         plan = written[0]._jdf.queryExecution().optimizedPlan().toString()
         assert "InMemoryRelation" not in plan
         counts, jobs = _jobs_in(spark, "dq_pipeline_counts",
-                                lambda: pipe.quality.counts)
+                                lambda: pipe.quality["s"].counts)
         assert jobs == []
         assert counts == self._eager_counts(spark, pipe)
         assert spark.read.parquet(out).count() == 3
@@ -461,7 +461,7 @@ class TestObservedCounts:
         pipe.read()
         pipe.run().limit(1).collect()  # resolves the observation on 1 row
         pipe.write()
-        assert pipe.quality.counts == self._eager_counts(spark, pipe)
+        assert pipe.quality["s"].counts == self._eager_counts(spark, pipe)
 
     def test_sql_self_join_counts_once(self, spark, tmp_path):
         pipe, out = self._pipeline(spark, tmp_path, [
@@ -473,10 +473,30 @@ class TestObservedCounts:
         assert sorted(r.col1 for r in spark.read.parquet(out).collect()) \
             == [1, 2, 4]
         counts, jobs = _jobs_in(spark, "dq_self_join_counts",
-                                lambda: pipe.quality.counts)
+                                lambda: pipe.quality["s"].counts)
         assert jobs == []
         assert counts == self._eager_counts(spark, pipe)
-        assert pipe.quality.failed_total() == 2
+        assert pipe.quality["s"].failed_total() == 2
+
+    def test_every_source_keeps_its_counts(self, spark, tmp_path):
+        """Two sources, only the first with rules: after execute() the
+        first source's counts are still readable, equal the eager
+        counts and run no job."""
+        other = tmp_path / "other"
+        spark.createDataFrame([(1, "x")], "k int, v string") \
+            .write.parquet(str(other))
+        pipe, _ = self._pipeline(spark, tmp_path, [], extra_sources=[{
+            "name": "t", "type": "file", "format": "parquet",
+            "path": str(other),
+            "schema": {"columns": [{"name": "k", "type": "int"}]},
+        }])
+        pipe.execute()
+        assert set(pipe.quality) == {"s", "t"}
+        counts, jobs = _jobs_in(spark, "dq_two_sources",
+                                lambda: pipe.quality["s"].counts)
+        assert jobs == []
+        assert counts == self._eager_counts(spark, pipe)
+        assert pipe.quality["t"].counts == {}
 
     def test_log_sink_keeps_counts_eager(self, spark, tmp_path):
         log_path = str(tmp_path / "failed.parquet")
@@ -485,5 +505,5 @@ class TestObservedCounts:
         pipe.read()
         logged = spark.read.parquet(log_path).collect()
         assert sorted(r.failed_column for r in logged) == ["col1", "col2"]
-        assert pipe.quality.failed_total() == 2
-        pipe.quality.unpersist()
+        assert pipe.quality["s"].failed_total() == 2
+        pipe.quality["s"].unpersist()

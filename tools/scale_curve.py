@@ -217,6 +217,8 @@ DISTRIBUTED_PROBES = (
     "containment", "set_sim_join", "nsw_search", "ivf_train", "lsh_eval",
     "dedup_minhash_lsh", "incremental_dedup", "dedup_simhash", "kcore",
     "label_propagation", "bfs_khop", "modularity",
+    # no replay: always distributed, probed with the other LSH modes
+    "dedup_recent",
 )
 
 
