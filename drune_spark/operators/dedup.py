@@ -1394,27 +1394,11 @@ def connected_components(
     # parallelism.
     m = both.count()
     spark = pairs.sparkSession
-    # Size-adaptive driver fast path (r10): below the cutoff the whole
-    # iterative loop is replaced by ONE bounded collect + union-find on
-    # the driver — the same memory class as a broadcast-join build
-    # (the edge list ALREADY had to be small enough to persist and to
-    # broadcast labels against). The distributed HashMin loop costs
-    # ~6 sequential jobs/round (neighbor-min broadcast build, stepped
-    # checkpoint, pointer-jump build, observe checkpoint) at ~0.1 s of
-    # driver latency each, so a 512-edge bench graph paid ~2 s of pure
-    # job sequencing for microseconds of union-find work. Union by
-    # min-root + path compression yields root = component min — the
-    # identical fixpoint, order-independent, so oracle hashes are
-    # untouched. Above the cutoff (production graphs) the distributed
-    # loop runs unchanged; the threshold is on DIRECTED edge rows
-    # (2|E|; replay.CUTOFFS, 200k rows ≈ a few MB). The count above also
-    # sizes the distributed loop, so the gate compares it directly.
-    if replay.admit("connected_components", m):
-        tbl = both.toArrow()
-        both.unpersist()
-        rows = list(
-            zip(tbl.column("src").to_pylist(), tbl.column("dst").to_pylist())
-        )
+    # Driver replay: union by min-root + path compression yields root =
+    # component min, the distributed loop's fixpoint. The gate compares
+    # the count above, which also sizes the distributed loop, against
+    # the cutoff on DIRECTED edge rows (2|E|).
+    def components(g):
         parent: dict = {}
 
         def _find(x):
@@ -1425,28 +1409,25 @@ def connected_components(
                 parent[x], x = r, parent[x]
             return r
 
+        rows = list(zip(g.cols["src"].tolist(), g.cols["dst"].tolist()))
         for row in rows:
             ra, rb = _find(row[0]), _find(row[1])
             if ra != rb:
                 if rb < ra:
                     ra, rb = rb, ra
                 parent[rb] = ra
-        node_type = both.schema["src"].dataType.simpleString()
-        nontrivial = [
+        return [
             (n, root)
             for n in {r[0] for r in rows}
             if (root := _find(n)) != n
         ]
-        from drune_spark.functions.partitioning import local_frame
-        # A DDL schema lets local_frame build a literal frame, whose
-        # size estimate is its real size. The createDataFrame fallback's
-        # estimate is the default (huge): a caller's join over this
-        # result would plan a sort-merge join that AQE demotes to a
-        # broadcast only if this side's stage finishes first, a timing
-        # race that makes the shuffle volume vary between runs.
-        small = local_frame(
-            spark, nontrivial, f"node {node_type}, label {node_type}"
-        )
+
+    small = replay.graph(
+        "connected_components", [both], ("src", "dst"),
+        "node {id}, label {id}", components, size=m,
+    )
+    if small is not None:
+        both.unpersist()
         return (
             all_nodes.select(
                 F.col(all_nodes.columns[0]).alias("node")

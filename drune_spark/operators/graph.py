@@ -1,31 +1,33 @@
-"""Graph operators: weighted transition graphs and integer-exact
-PageRank.
+"""Graph operators over (src, dst[, w]) edge lists: transition graphs,
+integer-exact ranking (PageRank, personalized PageRank, HITS),
+traversal (bounded BFS, ANF reach), peels (k-core, k-truss),
+communities (label propagation, partition modularity) and triangles.
 
 ``transition_edges`` builds a weighted directed graph from an event
 log: one edge (src → dst, weight = occurrences) per consecutive pair
 within a key's (order_cols)-sorted sequence — one window pass, shuffle
 keyed on the sequence key.
 
-``pagerank_int`` is Lloyd-style iterative PageRank in EXACT INTEGER
-arithmetic so every engine agrees bit-for-bit: ranks are scaled by
-``scale`` (default 10^6); a node's contribution along an edge is
-``(rank * w) div W_out`` (integer floor division, nonnegative), and
-the damped update is ``new = (100-d)*scale div 100 + d*Σcontrib div
-100``. Integer sums are order-independent, so there is no FP
-accumulation-order hazard at any parallelism — the property that makes
-the result oracle-checkable after any number of distributed rounds.
-Dangling-node mass is dropped (the standard simplification); nodes
-with no in-edges settle at the teleport base.
+Every iterative operator is all-integer (or bit-OR) arithmetic, so sums
+are order-free at any parallelism and a DuckDB oracle replays every
+round bit-for-bit with unrolled CTEs. ``pagerank_int`` scales ranks by
+``scale``; a contribution along an edge is ``(rank * w) div W_out`` and
+the damped update ``(100-d)*scale div 100 + d*Σcontrib div 100``.
+Dangling-node mass is dropped; nodes with no in-edges settle at the
+teleport base.
 
-Each round is one (ranks ⋈ edges on src) join + one dst-keyed sum —
-both shuffles on the node key, so a real deployment co-partitions
-ranks and edges once and every round reuses the partitioning
-(plus a persist per round to cut lineage; at 5 nodes here the frames
-are trivially broadcast).
-
-No counterpart in /root/reference; driver-mandated analytics
-extension (iterative graph algorithm beyond connected_components'
-label propagation — dedup.py:212).
+Replay contract. Each iterative operator (and ``connected_components``
+in dedup.py) also replays on the driver below its ``replay.CUTOFFS``
+entry, where the distributed rounds would be job sequencing rather than
+work. Every replay enters through ``replay.graph``, which applies the
+shared rules once: id columns of one type among int, bigint and string,
+the bounded fetch, a NULL id declines, an empty input gives the empty
+result typed by the node type, and results are literal frames with a
+DDL schema. Anything else runs distributed, and both paths return the
+same schema and rows (``tests/test_replay.py`` checks every graph
+replay under ``replay.distributed()``). A kernel keeps only its own
+rules: parameters, weight and overflow guards, duplicate assignments
+and id domains.
 """
 
 from __future__ import annotations
@@ -64,97 +66,73 @@ def _pagerank_driver_replay(
     seed_nodes: list | None,
     op: str,
 ):
-    """Size-adaptive driver replay shared by :func:`pagerank_int` and
-    :func:`personalized_pagerank_int` (r10 — the hits_int/§18 family):
-    below an edge-row cutoff the unrolled damped rounds cost ~5-6
-    sequential jobs of scheduling latency EACH at bench scale for a
-    graph whose edge list is a few hundred rows. Collect the edges once
-    (Arrow) and replay every round in exact int64 numpy — integer sums
-    are order-free, floor division of nonnegative int64 == Spark
-    ``div``, and every bound that could leave int64 (where the
-    distributed ANSI path would raise) falls back to the distributed
-    loop instead of wrapping. Oracle hashes are untouched: the replay
-    produces the same (node, rank_int) integers.
-
-    Returns the ranks DataFrame, or None → run the distributed loop
-    (cutoff exceeded, unsupported types, nonpositive weights, or an
-    overflow-risk bound). Cutoff: ``replay.CUTOFFS[op]``, edge rows."""
+    """Replay of :func:`pagerank_int` and :func:`personalized_pagerank_int`
+    in exact int64 numpy: floor division of nonnegative int64 == Spark
+    ``div``. Its own declines: params, no seeds, non-integer or
+    nonpositive weights, and every bound that could leave int64 (where
+    the distributed ANSI path would raise instead of wrapping)."""
     if not (0 <= int(damping_pct) <= 100) or int(scale) <= 0:
         return replay.decline(op, "params")
     if seed_nodes is not None and len(seed_nodes) == 0:
         return replay.decline(op, "no_seeds")  # distributed: ZeroDivision
-    spark = edges.sparkSession
-    node_t = edges.schema["src"].dataType.simpleString()
-    if (
-        node_t != edges.schema["dst"].dataType.simpleString()
-        or node_t not in ("int", "bigint", "string")
-    ):
-        return replay.decline(op, "id_type")
-    tbl = replay.collect(op, edges.select("src", "dst", "w"))
-    if tbl is None:
-        return None
-    n_edges = tbl.num_rows
-    from drune_spark.functions.partitioning import local_frame
-
-    schema = f"node {node_t}, rank_int bigint"
-    if tbl.num_rows == 0:
-        return local_frame(spark, [], schema)
     import numpy as np
 
-    w_arr = tbl.column("w").to_numpy(zero_copy_only=False)
-    if w_arr.dtype not in (np.dtype(np.int64), np.dtype(np.int32)):
-        return replay.decline(op, "weight_type", n_edges)
-    if not bool((w_arr > 0).all()):
-        return replay.decline(op, "nonpositive_weight", n_edges)
-    # Σw exact in python ints (an int64 scatter-sum could itself wrap).
-    if int(w_arr.astype(object).sum()) >= (1 << 63):
-        return replay.decline(op, "overflow", n_edges)
-    src_arr = tbl.column("src").to_numpy(zero_copy_only=False)
-    dst_arr = tbl.column("dst").to_numpy(zero_copy_only=False)
-    w64 = w_arr.astype(np.int64, copy=False)
-    nodes = np.unique(np.concatenate([src_arr, dst_arr]))
-    n_nodes = len(nodes)
-    src_idx = np.searchsorted(nodes, src_arr)
-    dst_idx = np.searchsorted(nodes, dst_arr)
-    w_out = np.zeros(n_nodes, dtype=np.int64)
-    np.add.at(w_out, src_idx, w64)
-    two63 = 1 << 63
-    if seed_nodes is None:
-        base_val = ((100 - int(damping_pct)) * int(scale)) // 100
-        base_vec = np.full(n_nodes, int(base_val), dtype=np.int64)
-    else:
-        # PPR teleport: total restart mass matches the global variant's
-        # Σ base, split over the seeds (matches the distributed build's
-        # exact python-int arithmetic with n_nodes from nodes.count()).
-        per_seed = ((100 - int(damping_pct)) * int(scale) * n_nodes) // (
-            100 * len(seed_nodes)
-        )
-        if per_seed >= two63:
+    def ranks(g):
+        n_edges = g.n_rows
+        w_arr = g.cols["w"]
+        if w_arr.dtype not in (np.dtype(np.int64), np.dtype(np.int32)):
+            return replay.decline(op, "weight_type", n_edges)
+        if not bool((w_arr > 0).all()):
+            return replay.decline(op, "nonpositive_weight", n_edges)
+        # Σw exact in python ints (an int64 scatter-sum could itself wrap).
+        if int(w_arr.astype(object).sum()) >= (1 << 63):
             return replay.decline(op, "overflow", n_edges)
-        is_seed = np.isin(nodes, np.array(list(seed_nodes)))
-        base_vec = np.where(is_seed, np.int64(per_seed), np.int64(0))
-    rank = np.full(n_nodes, int(scale), dtype=np.int64)
-    for _ in range(int(n_iters)):
-        # Exact pre-guards in python ints BEFORE any int64 op could
-        # wrap: per-edge product ≤ max_rank·max_w; each contrib term
-        # ≤ rank[src] (w ≤ w_out), so any dst's sum ≤ n_edges·max_rank.
-        max_rank = int(rank.max())
-        max_w = int(w64.max())
-        if max_rank * max_w >= two63 or n_edges * max_rank >= two63:
-            return replay.decline(op, "overflow", n_edges)
-        contrib = (rank[src_idx] * w64) // w_out[src_idx]
-        c_sum = np.zeros(n_nodes, dtype=np.int64)
-        np.add.at(c_sum, dst_idx, contrib)
-        max_c = int(c_sum.max())
-        if (
-            int(damping_pct) * max_c >= two63
-            or int(base_vec.max()) + (int(damping_pct) * max_c) // 100
-            >= two63
-        ):
-            return replay.decline(op, "overflow", n_edges)
-        rank = base_vec + (int(damping_pct) * c_sum) // 100
-    return local_frame(
-        spark, list(zip(nodes.tolist(), rank.tolist())), schema
+        nodes, src_idx, dst_idx = g.nodes, g.cols["src"], g.cols["dst"]
+        w64 = w_arr.astype(np.int64, copy=False)
+        n_nodes = len(nodes)
+        w_out = np.zeros(n_nodes, dtype=np.int64)
+        np.add.at(w_out, src_idx, w64)
+        two63 = 1 << 63
+        if seed_nodes is None:
+            base_val = ((100 - int(damping_pct)) * int(scale)) // 100
+            base_vec = np.full(n_nodes, int(base_val), dtype=np.int64)
+        else:
+            # PPR teleport: total restart mass matches the global
+            # variant's Σ base, split over the seeds (matches the
+            # distributed build's exact python-int arithmetic with
+            # n_nodes from nodes.count()).
+            per_seed = ((100 - int(damping_pct)) * int(scale) * n_nodes) // (
+                100 * len(seed_nodes)
+            )
+            if per_seed >= two63:
+                return replay.decline(op, "overflow", n_edges)
+            is_seed = np.isin(nodes, np.array(list(seed_nodes)))
+            base_vec = np.where(is_seed, np.int64(per_seed), np.int64(0))
+        rank = np.full(n_nodes, int(scale), dtype=np.int64)
+        for _ in range(int(n_iters)):
+            # Exact pre-guards in python ints BEFORE any int64 op could
+            # wrap: per-edge product ≤ max_rank·max_w; each contrib term
+            # ≤ rank[src] (w ≤ w_out), so any dst's sum ≤ n_edges·max_rank.
+            max_rank = int(rank.max())
+            max_w = int(w64.max())
+            if max_rank * max_w >= two63 or n_edges * max_rank >= two63:
+                return replay.decline(op, "overflow", n_edges)
+            contrib = (rank[src_idx] * w64) // w_out[src_idx]
+            c_sum = np.zeros(n_nodes, dtype=np.int64)
+            np.add.at(c_sum, dst_idx, contrib)
+            max_c = int(c_sum.max())
+            if (
+                int(damping_pct) * max_c >= two63
+                or int(base_vec.max()) + (int(damping_pct) * max_c) // 100
+                >= two63
+            ):
+                return replay.decline(op, "overflow", n_edges)
+            rank = base_vec + (int(damping_pct) * c_sum) // 100
+        return list(zip(nodes.tolist(), rank.tolist()))
+
+    return replay.graph(
+        op, [edges.select("src", "dst", "w")], ("src", "dst"),
+        "node {id}, rank_int bigint", ranks, codes=True,
     )
 
 
@@ -165,7 +143,9 @@ def pagerank_int(
     scale: int = 1_000_000,
 ) -> DataFrame:
     """(node, rank_int) after ``n_iters`` integer-exact damped rounds
-    from a uniform start of ``scale`` per node."""
+    from a uniform start of ``scale`` per node. Each round is one
+    (ranks ⋈ edges on src) join + one dst-keyed sum, both shuffles on
+    the node key."""
     hit = _pagerank_driver_replay(
         edges, n_iters, damping_pct, scale, None, "pagerank_int"
     )
@@ -260,71 +240,44 @@ def _bfs_driver_result(
     dst: str,
     node: str,
 ):
-    """Size-adaptive driver replay for :func:`bfs_khop` (r11, the
-    pagerank/§18 family): below an edge-row cutoff each hop's frontier
-    equi-join + distinct + anti-join is micro-job sequencing at bench
-    scale. Collect edges and seeds once (Arrow) and replay the
-    level-synchronous expansion with numpy set operations — all
-    integer/equality work, no arithmetic at all, so parity is exact by
-    construction. Returns the (node, dist) DataFrame, or None →
-    distributed loop (cutoff exceeded, unsupported/NULL ids — a NULL
-    seed row survives the distributed union at dist 0, so the replay
-    declines rather than mirror NULL semantics). Cutoff:
-    ``replay.CUTOFFS["bfs_khop"]``, edge plus seed rows."""
+    """Replay of :func:`bfs_khop`: the level-synchronous expansion as
+    numpy set operations on node codes, equality work only. Its own
+    decline: ``k < 0``."""
     op = "bfs_khop"
     if int(k) < 0:
         return replay.decline(op, "params")
-    node_t = edges.schema[src].dataType.simpleString()
-    if (
-        node_t != edges.schema[dst].dataType.simpleString()
-        or node_t != seeds.schema[node].dataType.simpleString()
-        or node_t not in ("int", "bigint", "string")
-    ):
-        return replay.decline(op, "id_type")
-    spark = edges.sparkSession
-    hit = replay.collect(
-        op,
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")),
-        seeds.select(F.col(node).alias("n")),
-    )
-    if hit is None:
-        return None
-    etbl, stbl = hit
-    if (
-        etbl.column("a").null_count > 0
-        or etbl.column("b").null_count > 0
-        or stbl.column("n").null_count > 0
-    ):
-        return replay.decline(op, "null_id")
     import numpy as np
 
-    from drune_spark.functions.partitioning import local_frame
+    def hops(g):
+        a, b = g.cols["a"], g.cols["b"]
+        visited = frontier = np.unique(g.cols["n"])
+        levels = [visited]
+        for _ in range(int(k)):
+            nxt = np.unique(b[np.isin(a, frontier)])
+            nxt = nxt[~np.isin(nxt, visited)]
+            if len(nxt) == 0:
+                break
+            levels.append(nxt)
+            visited = np.union1d(visited, nxt)
+            frontier = nxt
+        return [
+            (v, hop)
+            for hop, level in enumerate(levels)
+            for v in g.nodes[level].tolist()
+        ]
 
-    # the distributed path keeps the caller's seed column name
-    schema = f"{node} {node_t}, dist int"
-    if node_t == "string":
-        a_vals = np.asarray(etbl.column("a").to_pylist(), dtype=object)
-        b_vals = np.asarray(etbl.column("b").to_pylist(), dtype=object)
-        s_vals = np.asarray(stbl.column("n").to_pylist(), dtype=object)
-    else:
-        a_vals = etbl.column("a").to_numpy(zero_copy_only=False)
-        b_vals = etbl.column("b").to_numpy(zero_copy_only=False)
-        s_vals = stbl.column("n").to_numpy(zero_copy_only=False)
-    rows: list = []
-    visited = np.unique(s_vals)
-    rows.extend((v, 0) for v in visited.tolist())
-    frontier = visited
-    for hop in range(1, int(k) + 1):
-        if len(frontier) == 0:
-            break
-        nxt = np.unique(b_vals[np.isin(a_vals, frontier)])
-        nxt = nxt[~np.isin(nxt, visited)]
-        if len(nxt) == 0:
-            break
-        rows.extend((v, hop) for v in nxt.tolist())
-        visited = np.union1d(visited, nxt)
-        frontier = nxt
-    return local_frame(spark, rows, schema)
+    return replay.graph(
+        op,
+        [
+            edges.select(F.col(src).alias("a"), F.col(dst).alias("b")),
+            seeds.select(F.col(node).alias("n")),
+        ],
+        ("a", "b", "n"),
+        # the distributed path keeps the caller's seed column name
+        node + " {id}, dist int",
+        hops,
+        codes=True,
+    )
 
 
 def bfs_khop(
@@ -359,10 +312,11 @@ def bfs_khop(
     exactly this trade). Residency is bounded by one invocation's
     working set; long-lived multi-query callers bound accumulation via
     spark.catalog.clearCache() between queries (bench.py does). For
-    large k an eager per-round count() loop runs instead: the count is
-    the level-synchronous barrier, enables early exit once the
-    frontier drains, and bounds plan depth and cache residency — the
-    latency trade only pays when k is unbounded.
+    large k an eager loop runs instead: each round's frames are
+    localCheckpointed, which is the level-synchronous barrier, bounds
+    plan depth and cache residency, and counts the new frontier for an
+    early exit once it drains — the latency trade only pays when k is
+    unbounded.
 
     Reference analog: none (drune has no iterative operators); the
     unrolled-CTE oracle pattern follows pagerank_int above. Below its
@@ -381,20 +335,23 @@ def bfs_khop(
     edge_list = edges.select(F.col(src), F.col(dst)).persist()
     visited = seeds.select(F.col(node)).distinct().withColumn(
         "dist", F.lit(0)
-    ).persist()
-    frontier = visited.select(node)
+    )
+
+    def expand(frontier, visited, hop):
+        return (
+            edge_list.join(frontier, edge_list[src] == frontier[node])
+            .select(F.col(dst).alias(node))
+            .distinct()
+            .join(visited.select(node), node, "left_anti")
+            .withColumn("dist", F.lit(hop))
+        )
 
     if k <= 8:
+        visited = visited.persist()
+        frontier = visited.select(node)
         rounds = [visited]
         for hop in range(1, k + 1):
-            nxt = (
-                edge_list.join(frontier, edge_list[src] == frontier[node])
-                .select(F.col(dst).alias(node))
-                .distinct()
-                .join(visited.select(node), node, "left_anti")
-                .withColumn("dist", F.lit(hop))
-                .persist()
-            )
+            nxt = expand(frontier, visited, hop).persist()
             visited = visited.unionByName(nxt).persist()
             frontier = nxt.select(node)
             rounds.append(nxt)
@@ -403,32 +360,23 @@ def bfs_khop(
             result = result.unionByName(nxt)
         return result
 
-    visited.count()
-    prev_nxt: DataFrame | None = None  # stays cached: it IS the frontier
+    # Each round reads `visited` twice (anti-join and union), so without
+    # lineage truncation the logical plan doubles per round; an
+    # eager localCheckpoint per frame keeps it O(1), and the new
+    # frontier's row count rides its checkpoint job as an observation.
+    from pyspark.sql import Observation
+
+    visited = visited.localCheckpoint()
+    frontier = visited.select(node)
     for hop in range(1, k + 1):
-        nxt = (
-            edge_list.join(frontier, edge_list[src] == frontier[node])
-            .select(F.col(dst).alias(node))
-            .distinct()
-            .join(visited.select(node), node, "left_anti")
-            .withColumn("dist", F.lit(hop))
-            .persist()
-        )
-        n_new = nxt.count()  # materialize BEFORE retiring its parents
-        if prev_nxt is not None:
-            prev_nxt.unpersist()
-        if n_new == 0:
-            nxt.unpersist()
-            prev_nxt = None
+        obs = Observation()
+        nxt = expand(frontier, visited, hop).observe(
+            obs, F.count(F.lit(1)).alias("n")
+        ).localCheckpoint()
+        if obs.get["n"] == 0:
             break
-        new_visited = visited.unionByName(nxt).persist()
-        new_visited.count()
-        visited.unpersist()
-        visited = new_visited
+        visited = visited.unionByName(nxt).localCheckpoint()
         frontier = nxt.select(node)
-        prev_nxt = nxt
-    if prev_nxt is not None:
-        prev_nxt.unpersist()
     edge_list.unpersist()
     return visited
 
@@ -440,65 +388,34 @@ def _kcore_driver_result(
     src: str,
     dst: str,
 ):
-    """Size-adaptive driver replay for :func:`kcore` (r11 — the
-    pagerank/§18 family): below an edge-row cutoff the unrolled peels
-    cost a chain of micro-joins and (node, count) aggregates of pure
-    scheduling latency at bench scale. Collect the edge list once
-    (Arrow) and replay every peel in exact integer numpy — degree
-    counts are ``bincount`` (order-free integer sums), the survivor
-    filter a plain comparison; no floats anywhere. Returns the
-    (node, degree) DataFrame, or None → run the distributed loop
-    (cutoff exceeded, unsupported/NULL ids, or ``k < 1`` — a
-    ``degree >= k`` filter with k <= 0 would admit zero-degree nodes
-    the distributed groupBy never emits rows for). Cutoff:
-    ``replay.CUTOFFS["kcore"]``, edge rows (~16 B/row)."""
+    """Replay of :func:`kcore` in exact integer numpy: degrees are
+    ``bincount`` on node codes, the survivor filter a comparison. Its
+    own decline: ``k < 1`` (a ``degree >= k`` filter with k <= 0 would
+    admit zero-degree nodes the distributed groupBy never emits) or
+    ``rounds < 1``."""
     op = "kcore"
     if int(k) < 1 or int(rounds) < 1:
         return replay.decline(op, "params")
-    node_t = edges.schema[src].dataType.simpleString()
-    if (
-        node_t != edges.schema[dst].dataType.simpleString()
-        or node_t not in ("int", "bigint", "string")
-    ):
-        return replay.decline(op, "id_type")
-    spark = edges.sparkSession
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    tbl = replay.collect(op, e)
-    if tbl is None:
-        return None
-    from drune_spark.functions.partitioning import local_frame
-
-    schema = f"node {node_t}, degree bigint"
-    if tbl.num_rows == 0:
-        return local_frame(spark, [], schema)
-    if tbl.column("a").null_count > 0 or tbl.column("b").null_count > 0:
-        return replay.decline(op, "null_id", tbl.num_rows)  # joins drop
     import numpy as np
 
-    if node_t == "string":
-        a_vals = np.asarray(tbl.column("a").to_pylist(), dtype=object)
-        b_vals = np.asarray(tbl.column("b").to_pylist(), dtype=object)
-    else:
-        a_vals = tbl.column("a").to_numpy(zero_copy_only=False)
-        b_vals = tbl.column("b").to_numpy(zero_copy_only=False)
-    nodes = np.unique(np.concatenate([a_vals, b_vals]))
-    n_nodes = len(nodes)
-    a_idx = np.searchsorted(nodes, a_vals)
-    b_idx = np.searchsorted(nodes, b_vals)
-    # Round 1 counts the FULL edge list (the distributed loop's deg
-    # before any survivor join), later rounds only edges with both
-    # endpoints alive.
-    deg = np.bincount(a_idx, minlength=n_nodes).astype(np.int64)
-    alive = deg >= int(k)
-    for _ in range(1, int(rounds)):
-        mask = alive[a_idx] & alive[b_idx]
-        deg = np.bincount(a_idx[mask], minlength=n_nodes).astype(np.int64)
+    def peel(g):
+        a_idx, b_idx, n_nodes = g.cols["a"], g.cols["b"], len(g.nodes)
+        # Round 1 counts the FULL edge list (the distributed loop's deg
+        # before any survivor join), later rounds only edges with both
+        # endpoints alive.
+        deg = np.bincount(a_idx, minlength=n_nodes).astype(np.int64)
         alive = deg >= int(k)
-    keep = np.flatnonzero(alive)
-    return local_frame(
-        spark,
-        list(zip(nodes[keep].tolist(), deg[keep].tolist())),
-        schema,
+        for _ in range(1, int(rounds)):
+            mask = alive[a_idx] & alive[b_idx]
+            deg = np.bincount(
+                a_idx[mask], minlength=n_nodes).astype(np.int64)
+            alive = deg >= int(k)
+        keep = np.flatnonzero(alive)
+        return list(zip(g.nodes[keep].tolist(), deg[keep].tolist()))
+
+    return replay.graph(
+        op, [edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))],
+        ("a", "b"), "node {id}, degree bigint", peel, codes=True,
     )
 
 
@@ -552,87 +469,53 @@ def _lpa_driver_result(
     src: str,
     dst: str,
 ):
-    """Size-adaptive driver replay for :func:`label_propagation` (r11,
-    the pagerank/§18 family): below an edge-row cutoff each round's
-    edges ⋈ labels join plus two (node, label)-cell aggregates is pure
-    micro-job sequencing at bench scale. Collect the edge list once
-    (Arrow) and replay the rounds in exact int64 numpy: neighbor-label
-    counts via ``np.unique`` on packed (node, label) keys, the argmax
-    via the SAME integer encoding ``max(cnt·K + (K−1−label))`` the
-    distributed loop aggregates (integer max is order-free). Returns
-    the (node, label) DataFrame, or None → distributed loop (cutoff
-    exceeded, non-integer/NULL ids, ids outside [0, 2³³) — the
-    encoding's domain bound, where the ANSI distributed path is the
-    one that defines overflow behavior). Cutoff:
-    ``replay.CUTOFFS["label_propagation"]``, edge rows."""
+    """Replay of :func:`label_propagation` in exact int64 numpy:
+    neighbor-label counts via ``np.unique`` on packed (node code, label)
+    keys, the argmax via the SAME integer encoding ``max(cnt·K +
+    (K−1−label))`` the distributed loop aggregates. Its own declines:
+    ``rounds < 1`` (the distributed path keeps the node type for
+    ``label`` there), string ids and ids outside [0, 2³³) — the
+    encoding's domain, where the ANSI distributed path is the one that
+    defines overflow behavior."""
     op = "label_propagation"
-    # rounds=0 would return label typed bigint where the distributed
-    # path keeps the node column's type — decline degenerate params.
     if int(rounds) < 1:
         return replay.decline(op, "params")
-    node_t = edges.schema[src].dataType.simpleString()
-    if (
-        node_t != edges.schema[dst].dataType.simpleString()
-        or node_t not in ("int", "bigint")
-    ):
-        return replay.decline(op, "id_type")
-    spark = edges.sparkSession
-    e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-    tbl = replay.collect(op, e)
-    if tbl is None:
-        return None
-    n_edges = tbl.num_rows
-    from drune_spark.functions.partitioning import local_frame
-
-    K = 1 << 33
-    schema = f"node {node_t}, label bigint"
-    if n_edges == 0:
-        return local_frame(spark, [], schema)
-    if tbl.column("a").null_count > 0 or tbl.column("b").null_count > 0:
-        return replay.decline(op, "null_id", n_edges)
     import numpy as np
 
-    a_vals = tbl.column("a").to_numpy(zero_copy_only=False).astype(
-        np.int64, copy=False
-    )
-    b_vals = tbl.column("b").to_numpy(zero_copy_only=False).astype(
-        np.int64, copy=False
-    )
-    if int(a_vals.min()) < 0 or int(b_vals.min()) < 0:
-        return replay.decline(op, "id_domain", n_edges)
-    if max(int(a_vals.max()), int(b_vals.max())) >= K:
-        return replay.decline(op, "id_domain", n_edges)
-    # cnt·K + K must stay in int64: cnt ≤ n_edges ≤ cutoff; exact check
-    # in python ints (the distributed ANSI path would raise instead).
-    if n_edges * K + K >= (1 << 63):
-        return replay.decline(op, "overflow", n_edges)
-    nodes = np.unique(a_vals)  # the distributed labels frame: distinct a
-    n_nodes = len(nodes)
-    a_idx = np.searchsorted(nodes, a_vals)
-    # b → label lookup is by node VALUE; b values outside the labeled
-    # set drop from the join exactly like the distributed equi-join.
-    b_pos = np.searchsorted(nodes, b_vals)
-    b_pos_c = np.minimum(b_pos, n_nodes - 1)
-    b_in = nodes[b_pos_c] == b_vals
-    label = nodes.copy()  # label[i] = current label of nodes[i]
-    present = np.ones(n_nodes, dtype=bool)
-    for _ in range(int(rounds)):
-        mask = b_in & present[b_pos_c]
-        ai = a_idx[mask]
-        lv = label[b_pos_c[mask]]
-        # pack (a_idx, label) — a_idx < n_nodes ≤ cutoff, label < K, so
-        # a_idx·K + label < cutoff·K + K < 2⁶³ (guard above).
-        uk, cnt = np.unique(ai * K + lv, return_counts=True)
-        enc = cnt.astype(np.int64) * K + (K - 1 - (uk % K))
-        best = np.full(n_nodes, -1, dtype=np.int64)
-        np.maximum.at(best, (uk // K).astype(np.int64), enc)
-        present = best >= 0
-        label = np.where(present, (K - 1) - (best % K), label)
-    keep = np.flatnonzero(present)
-    return local_frame(
-        spark,
-        list(zip(nodes[keep].tolist(), label[keep].tolist())),
-        schema,
+    K = 1 << 33
+
+    def propagate(g):
+        nodes, n_edges, n_nodes = g.nodes, g.n_rows, len(g.nodes)
+        if int(nodes[0]) < 0 or int(nodes[-1]) >= K:
+            return replay.decline(op, "id_domain", n_edges)
+        # cnt·K + K (cnt ≤ n_edges) and the packed key a_idx·K + label
+        # (a_idx < n_nodes) must stay in int64; exact check in python
+        # ints (the distributed ANSI path would raise instead).
+        if max(n_edges, n_nodes) * K + K >= (1 << 63):
+            return replay.decline(op, "overflow", n_edges)
+        a_idx, b_idx = g.cols["a"], g.cols["b"]
+        label = nodes.astype(np.int64)  # label[i] = current label of i
+        # the distributed labels frame starts as the distinct a values;
+        # an edge whose b holds no label drops from the equi-join
+        present = np.zeros(n_nodes, dtype=bool)
+        present[a_idx] = True
+        for _ in range(int(rounds)):
+            mask = present[b_idx]
+            ai = a_idx[mask]
+            lv = label[b_idx[mask]]
+            uk, cnt = np.unique(ai * K + lv, return_counts=True)
+            enc = cnt.astype(np.int64) * K + (K - 1 - (uk % K))
+            best = np.full(n_nodes, -1, dtype=np.int64)
+            np.maximum.at(best, (uk // K).astype(np.int64), enc)
+            present = best >= 0
+            label = np.where(present, (K - 1) - (best % K), label)
+        keep = np.flatnonzero(present)
+        return list(zip(nodes[keep].tolist(), label[keep].tolist()))
+
+    return replay.graph(
+        op, [edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))],
+        ("a", "b"), "node {id}, label bigint", propagate, codes=True,
+        id_types=("int", "bigint"),
     )
 
 
@@ -641,7 +524,6 @@ def label_propagation(
     rounds: int = 4,
     src: str = "src",
     dst: str = "dst",
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Synchronous label propagation community detection (Raghavan,
     Albert & Kumara 2007) over a SYMMETRIC edge list: every node
@@ -663,17 +545,6 @@ def label_propagation(
     shuffles carry cells, never adjacency lists. Rounds are lazily
     unrolled (bfs_khop small-k shape).
 
-    ``shuffle_partitions`` widens the per-round edges ⋈ labels join —
-    the stage whose volume is |E| before convergence and the measured
-    super-linear term at fixed width (4.05 ratio at 3×, PERF.md). When
-    set, both join inputs are explicitly hash-repartitioned on the key
-    to that width, so the join runs at width ∝ edge count regardless
-    of the session's spark.sql.shuffle.partitions; the aggregates keep
-    their map-side partial combine at session width. On a real cluster
-    pass ~(|E| / target-partition-rows); None preserves the session
-    default (and the oracle-gated plan shape). Label VALUES are
-    width-invariant either way.
-
     Returns (node, label) after ``rounds`` rounds. Below its
     ``replay.CUTOFFS`` entry the rounds replay on the driver in exact
     int64 numpy (see ``_lpa_driver_result``).
@@ -683,17 +554,14 @@ def label_propagation(
         return hit
     K = 1 << 33
     e0 = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).persist()
-    ej = e0.repartition(shuffle_partitions, "b") if shuffle_partitions else e0
     labels = (
         e0.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("label", F.col("node"))
     )
     for _ in range(rounds):
-        lj = labels.withColumnRenamed("node", "b")
-        if shuffle_partitions:
-            lj = lj.repartition(shuffle_partitions, "b")
-        nb = ej.join(lj, "b").select(F.col("a").alias("node"), "label")
+        nb = e0.join(labels.withColumnRenamed("node", "b"), "b").select(
+            F.col("a").alias("node"), "label")
         cnt = nb.groupBy("node", "label").agg(
             F.count(F.lit(1)).alias("cnt")
         )
@@ -745,7 +613,8 @@ def k_truss(
     connected_components fix — so both execution and planning stay
     O(1) per round; callers bound storage with clearCache.
 
-    Returns canonical (src, dst, support).
+    Returns canonical (src, dst, support). Below its ``replay.CUTOFFS``
+    entry the peel replays on the driver with python sets.
     """
     e = (
         edges.select(
@@ -756,23 +625,10 @@ def k_truss(
         .distinct()
         .localCheckpoint()
     )
-    # Size-adaptive driver fast path (r10, the connected_components
-    # pattern): the peel runs ~6 sequential jobs per round at ~0.1 s of
-    # driver latency each — a few-thousand-edge bench graph paid ~4 s of
-    # job sequencing for microseconds of set-intersection work. Below
-    # the cutoff (edge rows; the checkpointed list is ALREADY
-    # materialized and broadcast-class small) ONE bounded collect +
-    # in-memory peel replaces the loop. Support = |N(u) ∩ N(v)| per
-    # round — the identical canonical triangle set, exact integer
-    # counts, so oracle hashes are untouched. Above the cutoff
-    # (production graphs) the distributed peel runs unchanged (cutoff:
-    # replay.CUTOFFS, 200k rows ≈ a few MB, the CC cutoff class).
-    tbl = replay.collect("k_truss", e)
-    if tbl is not None:
-        rows = list(
-            zip(tbl.column("u").to_pylist(), tbl.column("v").to_pylist())
-        )
 
+    # Driver replay: support = |N(u) ∩ N(v)| per round over the same
+    # canonical edge set (already materialized by the checkpoint).
+    def peel(g):
         def _support(edge_set):
             adj: dict = {}
             for u, v in edge_set:
@@ -782,29 +638,19 @@ def k_truss(
                 (u, v): len(adj[u] & adj[v]) for u, v in edge_set
             }
 
-        cur_edges = list(rows)
+        cur_edges = list(zip(g.cols["u"].tolist(), g.cols["v"].tolist()))
         for _ in range(rounds):
             sup = _support(cur_edges)
             cur_edges = [uv for uv in cur_edges if sup[uv] >= k - 2]
         final = _support(cur_edges)
-        from pyspark.sql.types import LongType, StructField, StructType
+        return [(u, v, final[(u, v)]) for u, v in cur_edges]
 
-        from drune_spark.functions.partitioning import local_frame
-
-        node_type = e.schema["u"].dataType
-        nt = node_type.simpleString()
-        out_rows = [(u, v, final[(u, v)]) for u, v in cur_edges]
-        # String schema where possible: local_frame's JVM-literal path
-        # (no python scan) only engages for simple string schemas.
-        if nt in ("int", "bigint", "string", "double", "boolean"):
-            schema = f"src {nt}, dst {nt}, support bigint"
-        else:
-            schema = StructType([
-                StructField("src", node_type, True),
-                StructField("dst", node_type, True),
-                StructField("support", LongType(), True),
-            ])
-        return local_frame(edges.sparkSession, out_rows, schema)
+    hit = replay.graph(
+        "k_truss", [e], ("u", "v"), "src {id}, dst {id}, support bigint",
+        peel,
+    )
+    if hit is not None:
+        return hit
 
     def support(edf: DataFrame) -> DataFrame:
         # Degree-ordered orientation (the standard triangle-counting
@@ -950,27 +796,16 @@ def anf_reach(
     e0 = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).persist()
-    # Size-adaptive driver fast path (r10, the connected_components /
-    # k_truss pattern): each round costs several sequential jobs of
-    # ~0.1 s driver latency for microseconds of bit-OR work on a
-    # bench-scale graph. Below the cutoff (directed edge rows — the
-    # persisted list is broadcast-class small) ONE bounded collect
-    # replaces the loop; every value is replayed EXACTLY: seed bit =
-    # lowest set bit of md5_u32(node:trial:anf) | 2^31 (hashlib md5 on
-    # the identical string), masks merge with |, mass = lowest set bit
-    # of the complement — all int64-domain integers, order-free, so
-    # oracle hashes are untouched. Inner-join semantics mirrored: seeds
-    # come from DISTINCT src values and a round keeps only nodes with
-    # ≥1 neighbor whose mask exists. Above the cutoff (replay.CUTOFFS,
-    # 200k rows) the distributed loop runs unchanged.
-    tbl = replay.collect("anf_reach", e0)
-    if tbl is not None:
+    # Driver replay, every value exact: seed bit = lowest set bit of
+    # md5_u32(node:trial:anf) | 2^31 (hashlib md5 on the identical
+    # string), masks merge with |, mass = lowest set bit of the
+    # complement. Inner-join semantics mirrored: seeds come from
+    # DISTINCT src values and a round keeps only nodes with ≥1 neighbor
+    # whose mask exists.
+    def reach(g):
         import hashlib
 
-        edge_rows = list(
-            zip(tbl.column("a").to_pylist(), tbl.column("b").to_pylist())
-        )
-        e0.unpersist()
+        edge_rows = list(zip(g.cols["a"].tolist(), g.cols["b"].tolist()))
         nodes = {a for a, _ in edge_rows}
 
         def _seed(node, trial):
@@ -1003,15 +838,16 @@ def anf_reach(
                 if key in masks
             }
             out_rows.append((r, *_metrics(masks)))
-        from drune_spark.functions.partitioning import local_frame
+        return out_rows
 
-        # String schema: engages local_frame's JVM-literal path
-        # (a StructType falls back to the pickled python scan).
-        return local_frame(
-            edges.sparkSession,
-            out_rows,
-            "radius int, cells bigint, reach_mass bigint",
-        )
+    hit = replay.graph(
+        "anf_reach", [e0], ("a", "b"),
+        "radius int, cells bigint, reach_mass bigint", reach,
+        empty=[(r, 0, 0) for r in range(rounds + 1)],
+    )
+    if hit is not None:
+        e0.unpersist()
+        return hit
     h = md5_u32(
         F.concat_ws(
             ":", F.col("node").cast("string"),
@@ -1101,85 +937,57 @@ def _modularity_driver_result(
     src: str,
     dst: str,
 ):
-    """Size-adaptive driver replay for :func:`partition_modularity`
-    (r11, the pagerank/§18 family): below an edge-row cutoff the two
-    assign joins, the tagged aggregate, the eager persist and the m2
-    broadcast cross are micro-job sequencing at bench scale. Collect
-    the edge list and the assignment once (Arrow) and replay the
-    all-integer cells with a plain python-int dict fold — counts and
-    Σdeg are order-free integer sums, q_num = l2·m2 − d² is exact in
-    unbounded python ints (one guarded cast back to int64). The python
-    loop caps the sensible cutoff: default 200k edge rows (the
-    connected_components class, ~0.1 s of driver CPU), NOT the numpy
-    replays' 1M. Returns the (community, l2_internal, degree_sum,
-    q_num) DataFrame sorted by community, or None → distributed path
-    (cutoff exceeded, NULL edge endpoints, duplicate assign nodes —
-    the distributed join INFLATES on those — or an overflow-risk
-    bound). Cutoff: ``replay.CUTOFFS["partition_modularity"]``, edge
-    plus assignment rows."""
+    """Replay of :func:`partition_modularity` as a python-int dict fold:
+    counts and Σdeg are order-free integer sums, q_num = l2·m2 − d² is
+    exact in unbounded python ints. Its own declines: duplicate assign
+    nodes (the distributed join INFLATES on those) and a q_num outside
+    int64 (where the ANSI cast would raise)."""
     op = "partition_modularity"
-    node_t = edges.schema[src].dataType.simpleString()
-    comm_t = assign.schema[comm_col].dataType.simpleString()
-    if (
-        node_t != edges.schema[dst].dataType.simpleString()
-        or node_t != assign.schema[node_col].dataType.simpleString()
-        or node_t not in ("int", "bigint", "string")
-        or comm_t not in ("int", "bigint", "string")
-    ):
-        return replay.decline(op, "id_type")
-    spark = edges.sparkSession
-    hit = replay.collect(
-        op,
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b")),
-        assign.select(F.col(node_col).alias("n"), F.col(comm_col).alias("c")),
-    )
-    if hit is None:
-        return None
-    etbl, atbl = hit
-    from drune_spark.functions.partitioning import local_frame
 
-    schema = (
-        f"community {comm_t}, l2_internal bigint, degree_sum bigint, "
-        "q_num bigint"
+    def cells_of(g):
+        n_edges = g.n_rows
+        cmap = {}
+        for nv, cv in zip(g.cols["n"].tolist(), g.cols["c"].tolist()):
+            if nv in cmap:
+                return replay.decline(op, "duplicate_id", n_edges)
+            cmap[nv] = cv
+        # all-integer cells: community -> [l2_internal, degree_sum]
+        cells: dict = {}
+        for av, bv in zip(g.cols["a"].tolist(), g.cols["b"].tolist()):
+            ca = cmap.get(av)
+            if ca is None:
+                continue
+            cell = cells.get(ca)
+            if cell is None:
+                cell = cells[ca] = [0, 0]
+            cb = cmap.get(bv)
+            if cb is not None:
+                cell[1] += 1
+                if ca == cb:
+                    cell[0] += 1
+        two63 = 1 << 63
+        rows = []
+        for c in sorted(cells):
+            l2, d = cells[c]
+            q = l2 * n_edges - d * d  # n_edges = m2
+            if not (-two63 <= q < two63):
+                return replay.decline(op, "overflow", n_edges)
+            rows.append((c, l2, d, q))
+        return rows
+
+    return replay.graph(
+        op,
+        [
+            edges.select(F.col(src).alias("a"), F.col(dst).alias("b")),
+            assign.select(
+                F.col(node_col).alias("n"), F.col(comm_col).alias("c")),
+        ],
+        ("a", "b", "n"),
+        "community {label}, l2_internal bigint, degree_sum bigint, "
+        "q_num bigint",
+        cells_of,
+        label="c",
     )
-    if etbl.column("a").null_count > 0 or etbl.column("b").null_count > 0:
-        return replay.decline(op, "null_id", etbl.num_rows)  # joins drop
-    n_vals = atbl.column("n").to_pylist()
-    c_vals = atbl.column("c").to_pylist()
-    cmap = {}
-    for nv, cv in zip(n_vals, c_vals):
-        if nv is None:
-            continue  # the distributed equi-join drops NULL keys
-        if nv in cmap:
-            # a duplicate assignment inflates the joined counts
-            return replay.decline(op, "duplicate_id", etbl.num_rows)
-        cmap[nv] = cv
-    a_list = etbl.column("a").to_pylist()
-    b_list = etbl.column("b").to_pylist()
-    m2 = len(a_list)
-    # all-integer cells: community -> [l2_internal, degree_sum]
-    cells: dict = {}
-    for av, bv in zip(a_list, b_list):
-        ca = cmap.get(av)
-        if ca is None:
-            continue
-        cell = cells.get(ca)
-        if cell is None:
-            cell = cells[ca] = [0, 0]
-        cb = cmap.get(bv)
-        if cb is not None:
-            cell[1] += 1
-            if ca == cb:
-                cell[0] += 1
-    two63 = 1 << 63
-    rows = []
-    for c in sorted(cells):
-        l2, d = cells[c]
-        q = l2 * m2 - d * d  # exact in python ints
-        if not (-two63 <= q < two63):
-            return replay.decline(op, "overflow", etbl.num_rows)  # ANSI
-        rows.append((c, l2, d, q))
-    return local_frame(spark, rows, schema)
 
 
 def partition_modularity(
@@ -1341,6 +1149,42 @@ def personalized_pagerank_int(
     return ranks
 
 
+_HITS_SCHEMA = "node {id}, kind string, score_int bigint"
+
+
+def _hits_replay(g, n_iters: int, scale: int):
+    """Replay of :func:`hits_int` in exact int64 numpy: each half-step
+    is one ``np.add.at`` scatter-sum on node codes + one renormalize
+    (floor division of nonnegative int64 == Spark ``div``). Its own
+    decline: weights that are not positive int64, or a bound that could
+    leave int64 — every half-step sum is at most scale · Σw (scores
+    start AT scale and never exceed it after a renormalize), the
+    renormalizer at most scale² · Σw."""
+    import numpy as np
+
+    w64 = g.cols["w"]
+    if (
+        w64.dtype != np.int64
+        or not bool((w64 > 0).all())
+        # Σw via exact python ints (an int64 sum could itself wrap)
+        or scale * scale * int(w64.astype(object).sum()) >= (1 << 63)
+    ):
+        return replay.decline("hits_int", "weight_domain", g.n_rows)
+    src_idx, dst_idx, n_nodes = g.cols["src"], g.cols["dst"], len(g.nodes)
+    h = np.full(n_nodes, int(scale), dtype=np.int64)
+    for _ in range(n_iters):
+        acc = np.zeros(n_nodes, dtype=np.int64)
+        np.add.at(acc, dst_idx, h[src_idx] * w64)
+        a = acc * int(scale) // int(acc.max())
+        acc = np.zeros(n_nodes, dtype=np.int64)
+        np.add.at(acc, src_idx, a[dst_idx] * w64)
+        h = acc * int(scale) // int(acc.max())
+    nodes = g.nodes.tolist()
+    return [
+        (nodes[i], "auth", int(a[i])) for i in np.unique(dst_idx)
+    ] + [(nodes[i], "hub", int(h[i])) for i in np.unique(src_idx)]
+
+
 def hits_int(
     edges: DataFrame,
     n_iters: int = 3,
@@ -1361,7 +1205,8 @@ def hits_int(
     materialization.
 
     Returns (node, kind 'hub'|'auth', score_int) for every node on the
-    matching side of at least one edge.
+    matching side of at least one edge. Below its ``replay.CUTOFFS``
+    entry the rounds replay on the driver (see ``_hits_replay``).
     """
     # Two persisted copies of the edge list, pre-partitioned on each
     # half-step's join key (the label_propagation lesson in join form):
@@ -1375,88 +1220,13 @@ def hits_int(
         int(spark.conf.get("spark.sql.shuffle.partitions")),
     ))
     e = edges.select("src", "dst", "w").persist()
-    # Size-adaptive driver fast path (r10, the connected_components /
-    # k_truss pattern): the distributed loop costs 2 half-steps × 3
-    # jobs × n_iters of sequential driver latency (~40 jobs) plus two
-    # edge repartition+persists — on a bench-scale graph that is pure
-    # job sequencing. Below the cutoff (edge rows; collected via Arrow,
-    # ~24 B/row — broadcast-build memory class) the rounds replay on
-    # the driver in EXACT int64 arithmetic: integer sums are
-    # order-free, the renormalizer is the same nonnegative floor
-    # division, and the domain is guarded — any sum that could leave
-    # int64 (where the distributed ANSI path would raise) falls back to
-    # the distributed loop instead of wrapping. Oracle hashes are
-    # untouched. Above the cutoff (replay.CUTOFFS, 1M rows) the loop
-    # runs unchanged.
-    tbl = replay.collect("hits_int", e)
-    if tbl is not None:
+    hit = replay.graph(
+        "hits_int", [e], ("src", "dst"), _HITS_SCHEMA,
+        lambda g: _hits_replay(g, n_iters, scale), codes=True,
+    )
+    if hit is not None:
         e.unpersist()
-        if tbl.num_rows == 0:
-            return spark.createDataFrame(
-                [], "node bigint, kind string, score_int bigint"
-            )
-        import numpy as np
-
-        src_arr = tbl.column("src").to_numpy(zero_copy_only=False)
-        dst_arr = tbl.column("dst").to_numpy(zero_copy_only=False)
-        w_arr = tbl.column("w").to_numpy(zero_copy_only=False)
-        # Overflow guard: every half-step sum is bounded by
-        # scale · Σw (scores never exceed `scale` after the first
-        # renormalize and start AT scale) and the renormalizer by
-        # max_r · scale ≤ scale² · Σw. If that bound could leave
-        # int64 — where the distributed ANSI path would raise — run
-        # distributed; the numpy path must never wrap silently.
-        # Σw via exact python ints (an int64 sum could itself wrap).
-        total_w = int(w_arr.astype(object).sum())
-        if (
-            w_arr.dtype == np.int64
-            and scale * scale * total_w < (1 << 63)
-            and bool((w_arr > 0).all())
-        ):
-            # Vectorized exact-int64 replay: factorize node ids, then
-            # each half-step is one np.add.at scatter-sum + one
-            # elementwise renormalize — floor division of nonnegative
-            # int64 == Spark `div`; every product is under the guard
-            # bound, so all arithmetic is exact.
-            src_uniq, src_idx = np.unique(src_arr, return_inverse=True)
-            dst_uniq, dst_idx = np.unique(dst_arr, return_inverse=True)
-            w64 = w_arr.astype(np.int64, copy=False)
-            h = np.full(len(src_uniq), int(scale), dtype=np.int64)
-            a = None
-            for _ in range(n_iters):
-                acc = np.zeros(len(dst_uniq), dtype=np.int64)
-                np.add.at(acc, dst_idx, h[src_idx] * w64)
-                a = acc * int(scale) // int(acc.max())
-                acc = np.zeros(len(src_uniq), dtype=np.int64)
-                np.add.at(acc, src_idx, a[dst_idx] * w64)
-                h = acc * int(scale) // int(acc.max())
-            auth = dict(zip(dst_uniq.tolist(), a.tolist()))
-            hubs = dict(zip(src_uniq.tolist(), h.tolist()))
-            from drune_spark.functions.partitioning import local_frame
-
-            node_t = e.schema["dst"].dataType.simpleString()
-            hub_t = e.schema["src"].dataType.simpleString()
-            if node_t == hub_t and node_t in (
-                "int", "bigint", "string", "double", "boolean"
-            ):
-                schema = f"node {node_t}, kind string, score_int bigint"
-            else:
-                from pyspark.sql.types import (
-                    LongType, StringType, StructField, StructType,
-                )
-
-                schema = StructType([
-                    StructField("node", e.schema["dst"].dataType, True),
-                    StructField("kind", StringType(), False),
-                    StructField("score_int", LongType(), True),
-                ])
-            return local_frame(
-                spark,
-                [(d, "auth", a) for d, a in auth.items()]
-                + [(s, "hub", h) for s, h in hubs.items()],
-                schema,
-            )
-        replay.decline("hits_int", "weight_domain", tbl.num_rows)
+        return hit
     e_src = e.repartition(width, "src").persist()
     e_dst = e.repartition(width, "dst").persist()
     hubs = e_src.select("src").distinct().select(
@@ -1480,9 +1250,8 @@ def hits_int(
         if max_a is None:  # no edges at all — empty-graph guard
             for f in (a_raw, e_src, e_dst, e):
                 f.unpersist()
-            return spark.createDataFrame(
-                [], "node bigint, kind string, score_int bigint"
-            )
+            node_t = e.schema["dst"].dataType.simpleString()
+            return replay.frame(spark, [], _HITS_SCHEMA, node_t)
         if prev_h is not None:
             prev_h.unpersist()
         auth = a_raw.select(

@@ -4,19 +4,21 @@ Twenty-one operators also carry a numpy/python "driver replay" of their
 semantics that runs below a size cutoff, where the distributed plan
 would spend its time scheduling jobs rather than working (the F1 Query
 centralized-vs-distributed choice, made per call from the input size).
-Each operator keeps its own decline rules (NULL or duplicate ids, types,
+Each operator keeps its own decline rules (duplicate ids, parameters,
 overflow bounds); this module holds what the gates share: the cutoffs,
 the bounded collect, one DEBUG log record per decision (op, path,
 reason, size, cutoff; nothing is built while the logger is off and no
-record runs a Spark job) and ``distributed()``, the test switch that
-forces the distributed path. A decline after a successful collect logs
-a second record, which supersedes the replay one.
+record runs a Spark job), ``distributed()``, the test switch that
+forces the distributed path, and ``graph``, the front end of the ten
+graph replays with their shared id rules. A decline after a successful
+collect logs a second record, which supersedes the replay one.
 """
 
 from __future__ import annotations
 
 import logging
 from contextlib import contextmanager
+from typing import NamedTuple
 
 from pyspark import StorageLevel
 
@@ -120,3 +122,90 @@ def collect(op: str, *frames):
             f.unpersist()
     _record(op, "replay", "within_cutoff", size)
     return tables[0] if len(tables) == 1 else tuple(tables)
+
+
+# The id types a graph replay takes; any other runs distributed.
+ID_TYPES = ("int", "bigint", "string")
+
+
+class Graph(NamedTuple):
+    """A graph replay's input: ``cols`` maps each fetched column to a
+    numpy array (strings and NULL-bearing columns as object arrays),
+    the id columns as codes into ``nodes`` (the sorted distinct ids)
+    when the kernel asked for codes; ``n_rows`` counts the first
+    frame's rows."""
+
+    cols: dict
+    nodes: object
+    n_rows: int
+
+
+def frame(spark, rows, schema: str, id_type: str, label_type=None):
+    """A graph result as a literal frame: DDL ``schema`` with ``{id}``
+    (``{label}``) standing for the node (label) type. A literal frame's
+    size estimate is its real size, so a caller's join over it plans a
+    broadcast from the start instead of racing AQE for one."""
+    from drune_spark.functions.partitioning import local_frame
+
+    return local_frame(
+        spark, rows, schema.format(id=id_type, label=label_type))
+
+
+def graph(op: str, frames, ids, schema: str, kernel, *, codes=False,
+          id_types=ID_TYPES, label=None, size=None, empty=()):
+    """The front end of every graph replay: the rules they share, so
+    both execution modes see the same inputs the same way.
+
+    1. The ``ids`` columns (across ``frames``) share one type among
+       ``id_types``, and the ``label`` column, if any, has an id type
+       of its own; otherwise ``op`` declines ``id_type`` before any
+       Spark job.
+    2. The bounded fetch: ``collect``, or, when the caller already
+       counted the rows (``size``), ``admit`` plus one Arrow fetch of
+       each frame.
+    3. A NULL id declines ``null_id`` (read from Arrow, no job): the
+       distributed joins drop NULL keys while its unions keep them.
+    4. When every frame is empty the result is the ``empty`` rows.
+    5. Otherwise ``kernel(Graph)`` returns the result rows, or ``None``
+       after declining for a reason of its own.
+
+    Returns the result ``frame``, or ``None``: run distributed."""
+    cols = {c: f for f in frames for c in f.columns}
+    types = {cols[c].schema[c].dataType.simpleString() for c in ids}
+    id_type = types.pop() if len(types) == 1 else None
+    label_type = label and cols[label].schema[label].dataType.simpleString()
+    if id_type not in id_types or (label and label_type not in ID_TYPES):
+        return decline(op, "id_type")
+    if size is None:
+        tables = collect(op, *frames)
+        if tables is None:
+            return None
+        if len(frames) == 1:
+            tables = (tables,)
+    elif admit(op, size):
+        tables = [f.toArrow() for f in frames]
+    else:
+        return None
+    arrow = {c: t.column(c) for t in tables for c in t.column_names}
+    n_rows = tables[0].num_rows
+    if any(arrow[c].null_count for c in ids):
+        return decline(op, "null_id", n_rows)
+    spark = frames[0].sparkSession
+    if not any(t.num_rows for t in tables):
+        return frame(spark, list(empty), schema, id_type, label_type)
+    import numpy as np
+
+    arrays = {
+        c: np.asarray(a.to_pylist(), dtype=object) if a.null_count
+        else a.to_numpy(zero_copy_only=False)
+        for c, a in arrow.items()
+    }
+    nodes = None
+    if codes:
+        nodes = np.unique(np.concatenate([arrays[c] for c in ids]))
+        for c in ids:
+            arrays[c] = np.searchsorted(nodes, arrays[c])
+    rows = kernel(Graph(arrays, nodes, n_rows))
+    if rows is None:
+        return None
+    return frame(spark, rows, schema, id_type, label_type)

@@ -46,7 +46,9 @@ from drune_spark.quality.manager import (
     apply_constraints,
 )
 from drune_spark.sources.readers import read_source
-from drune_spark.sinks.writers import write_target, write_validation_log
+from drune_spark.sinks.writers import (
+    log_sink_kind, write_target, write_validation_log,
+)
 
 
 class GoldenTestFailure(AssertionError):
@@ -369,14 +371,16 @@ class Pipeline:
                 .option("checkpointLocation", ckpt + "_failures")
                 .trigger(availableNow=True)
             )
-            if "/" in log_sink or log_sink.endswith(".parquet"):
-                failure_query = (
-                    fw.format("parquet").option("path", log_sink).start()
-                )
-            else:
+            kind = log_sink_kind(log_sink)
+            if kind == "table":
                 # Table-name sinks stream via toTable — previously these
                 # rows were silently dropped (round-1 advisory).
                 failure_query = fw.toTable(log_sink)
+            else:
+                failure_query = (
+                    fw.format(kind).option("header", "true")
+                    .option("path", log_sink).start()
+                )
         if trigger_available_now:
             query.awaitTermination()
             if failure_query is not None:

@@ -339,15 +339,26 @@ def scd2_snapshot(spark: SparkSession, path: str, as_of) -> DataFrame:
     )
 
 
+def log_sink_kind(table_or_path: str) -> str:
+    """How a failure-log sink is written, for the batch and the
+    streaming writer alike: ``"csv"`` (with a header) for a ``.csv``
+    path, ``"parquet"`` for any other path, ``"table"`` for a name."""
+    if table_or_path.endswith(".csv"):
+        return "csv"
+    if "/" in table_or_path or table_or_path.endswith(".parquet"):
+        return "parquet"
+    return "table"
+
+
 def write_validation_log(spark: SparkSession, failures: DataFrame,
                          table_or_path: str) -> None:
     """Append the consolidated failure log (validator.py:47-61 schema) to
     the audit sink — table name, parquet path, or csv path (W7/W8; the
     reference's Gen-2 default is a ``failed_records.csv``,
     quality_manager.py:48-58)."""
-    if table_or_path.endswith(".csv"):
-        failures.write.mode("append").option("header", "true").csv(table_or_path)
-    elif "/" in table_or_path or table_or_path.endswith(".parquet"):
-        failures.write.mode("append").parquet(table_or_path)
+    w = failures.write.mode("append")
+    kind = log_sink_kind(table_or_path)
+    if kind == "table":
+        w.saveAsTable(table_or_path)
     else:
-        failures.write.mode("append").saveAsTable(table_or_path)
+        w.format(kind).option("header", "true").save(table_or_path)

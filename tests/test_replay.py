@@ -1,10 +1,13 @@
 """The replay module: the bounded collect, the decision records and the
 ``distributed()`` switch, plus the edge cases where the two execution
-modes used to disagree (empty inputs, a corpus that runs out of pairs)."""
+modes used to disagree (empty inputs, NULL ids, a corpus that runs out
+of pairs), and a differential of every graph replay against its
+distributed path."""
 
 import logging
 
 import pytest
+from pyspark.sql import functions as F
 
 from drune_spark.operators import replay
 
@@ -151,3 +154,135 @@ class TestModeEdgeCases:
         fast, slow = both_modes(
             lambda: train(empty, n_merges=3).collect())
         assert fast == slow == []
+
+
+# The replays that are not graph operators; every other key of
+# replay.CUTOFFS is an edge replay and needs a GRAPH_OPS entry below.
+NON_GRAPH_REPLAYS = {
+    "ngram_jaccard_pairs", "containment_pairs", "prefix_filter_join",
+    "minhash_lsh_pairs", "incremental_minhash_dedup", "lsh_census_eval",
+    "simhash_near_dup_pairs_portable", "bpe_train", "wordpiece_train",
+    "ivf_train", "nsw_greedy_search",
+}
+
+
+def _graph_ops():
+    """op -> build(case) for every graph replay; a case carries the
+    edge list (src, dst, w), its node frame, a node -> community
+    assignment and the seed ids."""
+    from drune_spark.operators import graph
+    from drune_spark.operators.dedup import connected_components
+
+    return {
+        "connected_components": lambda c: connected_components(
+            c.edges.select(F.col("src").alias("id_a"),
+                           F.col("dst").alias("id_b")),
+            c.nodes),
+        "k_truss": lambda c: graph.k_truss(c.edges, k=3),
+        "anf_reach": lambda c: graph.anf_reach(c.edges, trials=2, rounds=2),
+        "partition_modularity": lambda c: graph.partition_modularity(
+            c.edges, c.assign),
+        "pagerank_int": lambda c: graph.pagerank_int(c.edges),
+        "personalized_pagerank_int": lambda c:
+            graph.personalized_pagerank_int(c.edges, c.seeds),
+        "bfs_khop": lambda c: graph.bfs_khop(
+            c.edges, c.nodes.filter(F.col("node").isin(c.seeds)), k=2),
+        "kcore": lambda c: graph.kcore(c.edges, k=2),
+        "label_propagation": lambda c: graph.label_propagation(
+            c.edges, rounds=2),
+        "hits_int": lambda c: graph.hits_int(c.edges),
+    }
+
+
+GRAPH_OPS = sorted(_graph_ops())
+# A symmetric graph on 1..5 with a duplicate edge and a self-loop.
+_SYM = [(1, 2), (1, 3), (2, 3), (2, 4), (3, 4), (4, 5)]
+_BASE = _SYM + [(b, a) for a, b in _SYM] + [(1, 2), (3, 3)]
+
+
+class _Case:
+    def __init__(self, spark, id_type, pairs):
+        conv = str if id_type == "string" else int
+        rows = [
+            (None if a is None else conv(a), None if b is None else conv(b),
+             1 + ((a or 0) + (b or 0)) % 3)
+            for a, b in pairs
+        ]
+        ids = sorted({x for a, b, _ in rows for x in (a, b) if x is not None})
+        self.edges = spark.createDataFrame(
+            rows, f"src {id_type}, dst {id_type}, w bigint")
+        self.nodes = spark.createDataFrame(
+            [(n,) for n in ids], f"node {id_type}")
+        self.assign = spark.createDataFrame(
+            [(n, i % 2) for i, n in enumerate(ids)],
+            f"node {id_type}, community bigint")
+        self.seeds = [conv(1)]
+
+
+_CASES = {
+    "bigint": ("bigint", _BASE),
+    "int": ("int", _BASE),
+    "string": ("string", _BASE),
+    "bigint_null": ("bigint", _BASE + [(None, 2), (2, None)]),
+    "string_null": ("string", _BASE + [(None, 2), (2, None)]),
+    "bigint_empty": ("bigint", []),
+    "string_empty": ("string", []),
+}
+
+
+@pytest.fixture(scope="module")
+def graph_cases(spark):
+    return {name: _Case(spark, *spec) for name, spec in _CASES.items()}
+
+
+def _outcome(df):
+    return (
+        [(f.name, f.dataType.simpleString()) for f in df.schema.fields],
+        sorted(map(repr, map(tuple, df.collect()))),
+    )
+
+
+class TestGraphDifferential:
+    def test_lists_every_graph_replay(self):
+        """A new edge replay cannot ship without a mode-equivalence
+        case: the differential covers every replay.CUTOFFS key that is
+        not a known non-graph replay."""
+        assert NON_GRAPH_REPLAYS <= set(replay.CUTOFFS)
+        assert GRAPH_OPS == sorted(set(replay.CUTOFFS) - NON_GRAPH_REPLAYS)
+
+    @pytest.mark.parametrize("op", GRAPH_OPS)
+    def test_modes_agree(self, op, graph_cases, both_modes, records):
+        """Same schema and rows from the replay and the distributed
+        path on duplicate edges with a self-loop, int, bigint and
+        string ids, NULL ids and empty edge lists; a NULL id declines
+        once, with ``null_id``, in the default mode."""
+        build = _graph_ops()[op]
+        for name, case in graph_cases.items():
+            seen = len(records())
+            fast, slow = both_modes(lambda: _outcome(build(case)))
+            assert fast == slow, (op, name)
+            declines = [
+                r for r in records()[seen:]
+                if r.op == op and r.reason == "null_id"
+            ]
+            # k_truss's canonical u < v filter drops NULL ids first;
+            # label_propagation declines string ids by their type
+            want = int(name.endswith("_null") and op != "k_truss" and not (
+                op == "label_propagation" and name.startswith("string")))
+            assert len(declines) == want, (op, name)
+
+    @pytest.mark.parametrize("pairs, reached", [
+        ([(i, i + 1) for i in range(11)], 11),  # a 12-node chain
+        ([(0, 1), (1, 2), (5, 6)], 3),  # the frontier drains before k
+    ], ids=["chain", "drained"])
+    def test_bfs_khop_eager_loop(self, spark, both_modes, pairs, reached):
+        """k > 8 takes bfs_khop's eager per-round loop; it matches the
+        replay on a chain longer than k and on an early exit."""
+        from drune_spark.operators.graph import bfs_khop
+
+        edges = spark.createDataFrame(pairs, "src bigint, dst bigint")
+        seeds = spark.createDataFrame([(0,)], "node bigint")
+        fast, slow = both_modes(
+            lambda: _outcome(bfs_khop(edges, seeds, k=10)))
+        assert fast == slow
+        assert fast[1] == sorted(repr((i, i)) for i in range(reached))

@@ -2,6 +2,7 @@
 
 import datetime as dt
 import importlib.util
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -225,6 +226,50 @@ class TestStreamingPipeline:
                 str(tmp_path / "stream_out" / "out.parquet")).collect()
         }
         assert stream_rows == batch_rows and len(batch_rows) > 0
+
+    def test_streamed_csv_failure_log(self, spark, tmp_path):
+        """A ``.csv`` failed-records path gets CSV with a header from
+        both entry points: the streamed log holds the batch log's rows
+        (``log_timestamp`` aside)."""
+        from drune_spark.config.models import PipelineModel
+        from drune_spark.pipeline import Pipeline
+
+        src = tmp_path / "src"
+        spark.createDataFrame(
+            [(k, 25_000.0 * k) for k in range(12)],
+            "o_orderkey bigint, o_totalprice double",
+        ).coalesce(2).write.parquet(str(src))
+        model = PipelineModel.model_validate({
+            "pipeline_name": "stream_csv_log",
+            "sources": [{"name": "orders_src", "type": "file",
+                         "format": "parquet", "path": str(src),
+                         "schema": {"columns": [
+                             {"name": "cd_order", "from": "o_orderkey",
+                              "type": "long"},
+                             {"name": "vl_total", "from": "o_totalprice",
+                              "type": "double",
+                              "constraints": [{"rule": "isbetween:[0, 100000]",
+                                               "on_fail": "drop"}]},
+                         ]}}],
+            "steps": [],
+            "target": {"name": "out", "type": "file", "format": "parquet",
+                       "path": str(tmp_path / "out"), "mode": "overwrite"},
+        })
+
+        def logged(path):
+            df = spark.read.option("header", "true").csv(path)
+            return sorted(map(tuple, df.drop("log_timestamp").collect()))
+
+        batch_log = str(tmp_path / "batch_failed.csv")
+        Pipeline(spark, model, failed_records_path=batch_log).execute()
+        stream_log = str(tmp_path / "stream_failed.csv")
+        model.target.path = str(tmp_path / "stream_out")
+        Pipeline(spark, model,
+                 failed_records_path=stream_log).execute_streaming()
+        assert not [n for n in os.listdir(stream_log)
+                    if n.endswith(".parquet")]
+        batch_rows = logged(batch_log)
+        assert batch_rows and logged(stream_log) == batch_rows
 
     def test_streaming_aggregation_upserts_to_merge_target(
         self, spark, tmp_path
