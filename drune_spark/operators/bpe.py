@@ -99,8 +99,6 @@ def bpe_train(
     tbl = replay.collect("bpe_train", words)
     if tbl is not None:
         words.unpersist()
-        from drune_spark.functions.partitioning import local_frame
-
         reprs = tbl.column("repr").to_pylist()
         freqs = tbl.column("freq").to_pylist()
         merges = []
@@ -121,7 +119,7 @@ def bpe_train(
             merges.append((step, best_pair, merged, best_count))
             pat, rep = f" {best_pair} ", f" {merged} "
             reprs = [rp.replace(pat, rep) for rp in reprs]
-        return local_frame(
+        return replay.frame(
             spark, merges,
             "step int, pair string, merged string, pair_count bigint",
         )
@@ -374,9 +372,7 @@ def wordpiece_train(
             reprs = [rp.replace(pat, rep) for rp in reprs]
         if ok:
             words.unpersist()
-            from drune_spark.functions.partitioning import local_frame
-
-            return local_frame(
+            return replay.frame(
                 spark, py_merges,
                 "step int, pair string, merged string,"
                 " pair_count bigint, score bigint",

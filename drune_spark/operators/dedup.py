@@ -326,9 +326,7 @@ def ngram_jaccard_pairs(
                     j[keep].tolist(),
                 )
             )
-        from drune_spark.functions.partitioning import local_frame
-
-        return local_frame(
+        return replay.frame(
             df.sparkSession,
             rows,
             f"id_a {id_type}, id_b {id_type}, jaccard double",
@@ -848,10 +846,10 @@ def _scored(cands: DataFrame, sigs_a: DataFrame, sigs_b: DataFrame,
 
 
 def _replay_frame(spark, id_type: str, uniq, ids: dict, **extra):
-    """The Arrow-backed result frame of a replay: one ``id_type`` column
-    per ``ids`` entry (name → code array into the sorted distinct ids
-    ``uniq``), then one column per ``extra`` entry (name → (SQL type,
-    values)), in that order."""
+    """The Arrow-backed result frame of a replay, held: one ``id_type``
+    column per ``ids`` entry (name → code array into the sorted distinct
+    ids ``uniq``), then one column per ``extra`` entry (name → (SQL
+    type, values)), in that order."""
     import numpy as np
     import pyarrow as pa
 
@@ -865,7 +863,8 @@ def _replay_frame(spark, id_type: str, uniq, ids: dict, **extra):
                  for name, (t, vals) in extra.items()})
     schema = ", ".join([f"{name} {id_type}" for name in ids]
                        + [f"{name} {t}" for name, (t, _) in extra.items()])
-    return spark.createDataFrame(pa.table(cols), schema=schema)
+    table = pa.table(cols)
+    return replay.hold(spark.createDataFrame(table, schema=schema), table)
 
 
 def _minhash_replay_pairs(df, text_col, id_col, num_perm, bands, k,
@@ -1012,9 +1011,7 @@ def lsh_census_eval(
             at, num_perm, bands, seed, min_est_jaccard, exact_threshold,
         )
         if row is not None:
-            from drune_spark.functions.partitioning import local_frame
-
-            return local_frame(docs.sparkSession, [row], out_schema)
+            return replay.frame(docs.sparkSession, [row], out_schema)
     exact = ngram_jaccard_pairs(
         docs, text_col, id_col, k=k, threshold=exact_threshold
     ).select("id_a", "id_b").withColumn("e", F.lit(1))
@@ -1375,29 +1372,14 @@ def connected_components(
     round count, never the result — oracle hashes are untouched.
     """
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    # Persisted: every propagation round AND its convergence-check action
-    # read the edge list, and `pairs` is typically an expensive near-dup
-    # join (the exact-Jaccard path cost 12s/query at sf0.1 before this —
-    # each round re-ran the shingle self-join). Edges are pair-sized, far
-    # smaller than the job that produced them; left cached for the
-    # caller's actions (LRU eviction is the backstop, as with the LSH
-    # signature persists above).
     both = edges.unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
-    # Width adaptation (round 8, the label_propagation lesson in
-    # reverse): checkpointed/cached scans are NOT AQE-coalesced, so a
-    # small edge list inherited 32 partitions and every round's stages
-    # scheduled 32 near-empty tasks — at gate scale the loop was pure
-    # task-scheduling overhead (dbscan's CC phase: 7.9s for 550 edges).
-    # Scale the loop's width to the edge count; big graphs keep full
-    # parallelism.
-    m = both.count()
+    )
     spark = pairs.sparkSession
+
     # Driver replay: union by min-root + path compression yields root =
     # component min, the distributed loop's fixpoint. The gate compares
-    # the count above, which also sizes the distributed loop, against
-    # the cutoff on DIRECTED edge rows (2|E|).
+    # the DIRECTED edge rows (2|E|) against the cutoff.
     def components(g):
         parent: dict = {}
 
@@ -1422,12 +1404,53 @@ def connected_components(
             if (root := _find(n)) != n
         ]
 
-    small = replay.graph(
-        "connected_components", [both], ("src", "dst"),
-        "node {id}, label {id}", components, size=m,
-    )
+    def replayed(size=None):
+        return replay.graph(
+            "connected_components", [both], ("src", "dst"),
+            "node {id}, label {id}", components, size=size,
+        )
+
+    # Hand-off: pairs a replay built (minhash_lsh_pairs,
+    # ngram_jaccard_pairs, ...) are on the driver already, so the gate
+    # reads their directed edge table with no persist, count or fetch.
+    # (Id columns of two types take the fetched path: the union widens.)
+    pairs_t = replay.held(pairs)
+    handed = pairs_t is not None and (
+        pairs_t.schema.field("id_a").type == pairs_t.schema.field("id_b").type)
+    small = None
+    if handed:
+        import pyarrow as pa
+
+        a, b = pairs_t.column("id_a"), pairs_t.column("id_b")
+        replay.hold(both, pa.table({
+            "src": pa.chunked_array(a.chunks + b.chunks, type=a.type),
+            "dst": pa.chunked_array(b.chunks + a.chunks, type=a.type),
+        }))
+        small = replayed()
+    if small is None:
+        # Persisted: every propagation round AND its convergence-check
+        # action read the edge list, and `pairs` is typically an
+        # expensive near-dup join (the exact-Jaccard path cost 12s/query
+        # at sf0.1 before this — each round re-ran the shingle
+        # self-join). Edges are pair-sized, far smaller than the job
+        # that produced them; left cached for the caller's actions (LRU
+        # eviction is the backstop, as with the LSH signature persists
+        # above).
+        both = both.persist()
+        # Width adaptation (round 8, the label_propagation lesson in
+        # reverse): checkpointed/cached scans are NOT AQE-coalesced, so
+        # a small edge list inherited 32 partitions and every round's
+        # stages scheduled 32 near-empty tasks — at gate scale the loop
+        # was pure task-scheduling overhead (dbscan's CC phase: 7.9s
+        # for 550 edges). Scale the loop's width to the edge count; big
+        # graphs keep full parallelism. The same count sizes the
+        # replay gate of a frame that is not held.
+        m = both.count()
+        if not handed:
+            small = replayed(m)
+            if small is not None:
+                both.unpersist()
     if small is not None:
-        both.unpersist()
         return (
             all_nodes.select(
                 F.col(all_nodes.columns[0]).alias("node")
@@ -2643,9 +2666,7 @@ def containment_pairs(
                         ppm[keep].tolist(),
                     )
                 )
-        from drune_spark.functions.partitioning import local_frame
-
-        return local_frame(
+        return replay.frame(
             df.sparkSession,
             rows,
             f"id_a {id_type}, id_b {id_type}, n_common bigint, "

@@ -1207,7 +1207,10 @@ def hits_int(
     Returns (node, kind 'hub'|'auth', score_int) for every node on the
     matching side of at least one edge. Below its ``replay.CUTOFFS``
     entry the rounds replay on the driver (see ``_hits_replay``).
+    ``n_iters`` must be at least 1.
     """
+    if n_iters < 1:
+        raise ValueError("hits_int needs n_iters >= 1")
     # Two persisted copies of the edge list, pre-partitioned on each
     # half-step's join key (the label_propagation lesson in join form):
     # an InMemoryTableScan keeps its outputPartitioning, so every round
@@ -1251,7 +1254,7 @@ def hits_int(
             for f in (a_raw, e_src, e_dst, e):
                 f.unpersist()
             node_t = e.schema["dst"].dataType.simpleString()
-            return replay.frame(spark, [], _HITS_SCHEMA, node_t)
+            return replay.frame(spark, [], _HITS_SCHEMA.format(id=node_t))
         if prev_h is not None:
             prev_h.unpersist()
         auth = a_raw.select(

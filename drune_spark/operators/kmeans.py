@@ -239,9 +239,7 @@ def ivf_train(
             q, n_centroids, n_iters, dim, id_col, with_stats,
         )
         if hit is not None:
-            from drune_spark.functions.partitioning import local_frame
-
-            return local_frame(
+            return replay.frame(
                 spark,
                 hit,
                 "centroid_id long, centroid array<long>, "

@@ -43,20 +43,30 @@ class DedupStep(Step):
 @StepRegistry.register("quality_filter")
 class QualityFilterStep(Step):
     """Gopher-style repetition/shape gate. ``keep_only`` (default true)
-    returns the retained rows of the ORIGINAL frame; false returns the
-    per-doc metric profile with the keep flag for auditing."""
+    returns the input rows that pass the gate, filtered in place: each
+    row is judged on its own text, so of two rows sharing an id only
+    the passing one survives, and rows with a NULL id are dropped.
+    false returns the per-doc metric profile with the keep flag for
+    auditing."""
 
     def execute(self, inputs, current, *, text_col: str, id_col: str,
                 keep_only: bool = True, source: Optional[str] = None,
                 **params: Any) -> DataFrame:
-        from drune_spark.operators.text_analysis import gopher_filter
+        from drune_spark.functions.partitioning import fan_out
+        from drune_spark.functions.text import let, repetition_metrics
+        from drune_spark.operators.text_analysis import (
+            gopher_filter,
+            gopher_keep,
+        )
 
         df = self.pick_input(inputs, current, source)
-        flags = gopher_filter(df, text_col, id_col, **params)
         if not keep_only:
-            return flags
-        keep_ids = flags.filter(F.col("keep")).select(id_col)
-        return df.join(keep_ids, id_col, "left_semi")
+            return gopher_filter(df, text_col, id_col, **params)
+        # One pass, no join: a semi-join against the kept ids evaluated
+        # the text chain twice and, at scale, shuffled the corpus by id.
+        keep = let(repetition_metrics(F.col(text_col)),
+                   lambda m: gopher_keep(m, **params))
+        return fan_out(df).filter(F.col(id_col).isNotNull() & keep)
 
 
 @StepRegistry.register("redact")

@@ -12,11 +12,20 @@ record runs a Spark job), ``distributed()``, the test switch that
 forces the distributed path, and ``graph``, the front end of the ten
 graph replays with their shared id rules. A decline after a successful
 collect logs a second record, which supersedes the replay one.
+
+A replay's result already sits on the driver when its frame is built,
+so the builders (``frame`` and dedup's ``_replay_frame``) ``hold`` the
+Arrow table beside the frame. A gate fed that very frame takes the
+``held`` table instead of fetching it back through Spark: no persist,
+no count, no collect job. Held tables are keyed weakly by the frame
+object, so one lives exactly as long as its frame; a frame derived
+from a held one (a select, a filter) is not held.
 """
 
 from __future__ import annotations
 
 import logging
+import weakref
 from contextlib import contextmanager
 from typing import NamedTuple
 
@@ -59,6 +68,9 @@ CUTOFFS: dict[str, int] = {
 
 _forced = 0
 
+# frame -> the Arrow table its replay built it from
+_held: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
 
 @contextmanager
 def distributed():
@@ -87,14 +99,34 @@ def decline(op: str, reason: str, size: int | None = None) -> None:
     _record(op, "distributed", reason, size)
 
 
-def admit(op: str, size: int) -> bool:
+def admit(op: str, size: int, reason: str = "within_cutoff") -> bool:
     """Whether ``op`` replays an input of ``size`` units on the driver;
-    records the decision."""
+    records the decision (``reason`` names how the input reached the
+    driver: counted, or ``held``)."""
     if _forced or size > CUTOFFS[op]:
         decline(op, "forced" if _forced else "above_cutoff", size)
         return False
-    _record(op, "replay", "within_cutoff", size)
+    _record(op, "replay", reason, size)
     return True
+
+
+def hold(df, table):
+    """Record ``table``, the rows ``df`` was built from, as what
+    ``df.toArrow()`` returns: cast to the Arrow schema ``toArrow`` casts
+    its batches to, so a gate reading it sees exactly the fetched
+    values. Returns ``df``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    _held[df] = table.cast(to_arrow_schema(
+        df.schema, error_on_duplicated_field_names_in_struct=True,
+        prefers_large_types=df.sparkSession._jconf.arrowUseLargeVarTypes(),
+    ))
+    return df
+
+
+def held(df):
+    """The Arrow table a replay built ``df`` from, or ``None``."""
+    return _held.get(df)
 
 
 def collect(op: str, *frames):
@@ -140,15 +172,19 @@ class Graph(NamedTuple):
     n_rows: int
 
 
-def frame(spark, rows, schema: str, id_type: str, label_type=None):
-    """A graph result as a literal frame: DDL ``schema`` with ``{id}``
-    (``{label}``) standing for the node (label) type. A literal frame's
-    size estimate is its real size, so a caller's join over it plans a
-    broadcast from the start instead of racing AQE for one."""
+def frame(spark, rows, schema: str):
+    """A replay result as a literal frame of DDL ``schema``, held. A
+    literal frame's size estimate is its real size, so a caller's join
+    over it plans a broadcast from the start instead of racing AQE for
+    one."""
+    import pyarrow as pa
+
     from drune_spark.functions.partitioning import local_frame
 
-    return local_frame(
-        spark, rows, schema.format(id=id_type, label=label_type))
+    rows = list(rows)
+    df = local_frame(spark, rows, schema)
+    cols = list(zip(*rows)) or [()] * len(df.columns)
+    return hold(df, pa.table(dict(zip(df.columns, map(list, cols)))))
 
 
 def graph(op: str, frames, ids, schema: str, kernel, *, codes=False,
@@ -160,9 +196,10 @@ def graph(op: str, frames, ids, schema: str, kernel, *, codes=False,
        ``id_types``, and the ``label`` column, if any, has an id type
        of its own; otherwise ``op`` declines ``id_type`` before any
        Spark job.
-    2. The bounded fetch: ``collect``, or, when the caller already
-       counted the rows (``size``), ``admit`` plus one Arrow fetch of
-       each frame.
+    2. The bounded fetch: when every frame is ``held``, ``admit`` of
+       their total rows and no Spark job; else ``collect``, or, when
+       the caller already counted the rows (``size``), ``admit`` plus
+       one Arrow fetch of each frame.
     3. A NULL id declines ``null_id`` (read from Arrow, no job): the
        distributed joins drop NULL keys while its unions keep them.
     4. When every frame is empty the result is the ``empty`` rows.
@@ -176,7 +213,12 @@ def graph(op: str, frames, ids, schema: str, kernel, *, codes=False,
     label_type = label and cols[label].schema[label].dataType.simpleString()
     if id_type not in id_types or (label and label_type not in ID_TYPES):
         return decline(op, "id_type")
-    if size is None:
+    schema = schema.format(id=id_type, label=label_type)
+    tables = [held(f) for f in frames]
+    if all(t is not None for t in tables):
+        if not admit(op, sum(t.num_rows for t in tables), "held"):
+            return None
+    elif size is None:
         tables = collect(op, *frames)
         if tables is None:
             return None
@@ -192,7 +234,7 @@ def graph(op: str, frames, ids, schema: str, kernel, *, codes=False,
         return decline(op, "null_id", n_rows)
     spark = frames[0].sparkSession
     if not any(t.num_rows for t in tables):
-        return frame(spark, list(empty), schema, id_type, label_type)
+        return frame(spark, empty, schema)
     import numpy as np
 
     arrays = {
@@ -208,4 +250,4 @@ def graph(op: str, frames, ids, schema: str, kernel, *, codes=False,
     rows = kernel(Graph(arrays, nodes, n_rows))
     if rows is None:
         return None
-    return frame(spark, rows, schema, id_type, label_type)
+    return frame(spark, rows, schema)

@@ -1405,9 +1405,7 @@ def nsw_greedy_search(
                 ids, V, n_cells, m_edges, hops, query_mod
             )
         if rows is not None:
-            from drune_spark.functions.partitioning import local_frame
-
-            return local_frame(
+            return replay.frame(
                 emb.sparkSession,
                 rows,
                 "query_id bigint, node bigint, cos_micro bigint",

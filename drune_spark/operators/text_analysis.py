@@ -7,7 +7,7 @@ and cost one pass at any scale.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from drune_spark.functions.hashes import fingerprint_md5, rolling_min_fingerprint
@@ -79,40 +79,49 @@ def repetition_profile(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     ).select(id_col, "__m.*").drop("avg_token_len")
 
 
-def gopher_filter(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
+def gopher_keep(
+    m: Column,
     min_tokens: int = 30,
     max_tokens: int = 100_000,
     min_avg_token_len: float = 2.0,
     max_avg_token_len: float = 12.0,
     max_top_2gram_char_frac: float = 0.10,
     max_dup_3gram_char_frac: float = 0.60,
+) -> Column:
+    """The Gopher keep flag over a ``repetition_metrics`` struct ``m``:
+    the document's length, mean token length and both repetition
+    fractions within bounds. Evaluate it inside the ``let`` that binds
+    ``m``, so the metrics (and the text under them) are computed once."""
+    return (
+        (m["n_tokens"] >= min_tokens)
+        & (m["n_tokens"] <= max_tokens)
+        & (m["avg_token_len"] >= min_avg_token_len)
+        & (m["avg_token_len"] <= max_avg_token_len)
+        & (m["top_2gram_char_frac"] <= max_top_2gram_char_frac)
+        & (m["dup_3gram_char_frac"] <= max_dup_3gram_char_frac)
+    )
+
+
+def gopher_filter(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    **thresholds,
 ) -> DataFrame:
     """Document-quality gate combining the repetition + shape heuristics:
-    returns (id, n_tokens, metrics..., keep). Filter on ``keep`` to get
-    the retained corpus; emitting the flag keeps both populations
-    auditable (and oracle-checkable). No join, no data-dependent shuffle
-    (fan_out round-robins single-split inputs for the CPU-bound gram
-    folds). The flag sits in the same let-bound struct as the metrics,
-    so a filter on ``keep`` pushed down to the scan carries one copy of
-    the text expression, not one per metric reference."""
+    returns (id, n_tokens, metrics..., keep). ``thresholds`` are
+    ``gopher_keep``'s bounds. Filter on ``keep`` to get the retained
+    corpus; emitting the flag keeps both populations auditable (and
+    oracle-checkable). No join, no data-dependent shuffle (fan_out
+    round-robins single-split inputs for the CPU-bound gram folds). The
+    flag sits in the same let-bound struct as the metrics, so a filter
+    on ``keep`` pushed down to the scan carries one copy of the text
+    expression, not one per metric reference."""
     from drune_spark.functions.partitioning import fan_out
     from drune_spark.functions.text import let, repetition_metrics
 
-    def gate(m):
-        keep = (
-            (m["n_tokens"] >= min_tokens)
-            & (m["n_tokens"] <= max_tokens)
-            & (m["avg_token_len"] >= min_avg_token_len)
-            & (m["avg_token_len"] <= max_avg_token_len)
-            & (m["top_2gram_char_frac"] <= max_top_2gram_char_frac)
-            & (m["dup_3gram_char_frac"] <= max_dup_3gram_char_frac)
-        )
-        return m.withField("keep", keep)
-
-    g = let(repetition_metrics(F.col(text_col)), gate)
+    g = let(repetition_metrics(F.col(text_col)),
+            lambda m: m.withField("keep", gopher_keep(m, **thresholds)))
     return fan_out(df.select(F.col(id_col), F.col(text_col))).select(
         F.col(id_col), g.alias("__m")
     ).select(id_col, "__m.*")

@@ -39,6 +39,24 @@ def both_modes():
     return run
 
 
+@pytest.fixture()
+def jobs_in(spark):
+    """Runs ``fn`` under job group ``group``; returns its result and the
+    ids of the Spark jobs it ran."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
 def assert_df_equal(actual, expected, sort_by=None):
     """chispa-style DataFrame equality: same columns (order-insensitive),
     same rows (order-insensitive unless sort_by given)."""

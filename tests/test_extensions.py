@@ -922,6 +922,28 @@ class TestRepetition:
         assert "Exchange rangepartitioning" not in plan
 
 
+class TestQualityFilterStep:
+    """The quality_filter step keeps the input rows that pass the gate,
+    judged row by row: a filter over the input, not a join."""
+
+    @staticmethod
+    def _run(df, **params):
+        import drune_spark.operators.llm_steps  # noqa: F401 (registers)
+        from drune_spark.operators.registry import StepRegistry
+
+        return StepRegistry.get("quality_filter")(df.sparkSession, "q") \
+            .execute({}, df, text_col="text", id_col="doc_id", **params)
+
+    def test_duplicate_and_null_ids(self, spark):
+        """Of two rows sharing an id only the passing one survives (the
+        semi-join on kept ids kept both), and a NULL id is dropped."""
+        df = spark.createDataFrame(
+            [(7, "word"), (7, "ab cd"), (None, "word"), (8, "ab cd")],
+            "doc_id bigint, text string")
+        assert sorted(map(tuple, self._run(df, min_tokens=1).collect())) \
+            == [(7, "word")]
+
+
 class TestMultimodal:
     def test_extract_features_plumbing(self, spark):
         from drune_spark.operators.multimodal import (

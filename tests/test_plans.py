@@ -63,12 +63,14 @@ class TestPlans:
         assert "rangepartitioning" not in plan
 
     def test_text_kernels_tokenize_once(self, spark):
-        """redact → quality_filter through the step registry: the keep
-        filter Catalyst pushes to the scan must carry ONE tokenizer and
-        one redaction chain, not a copy per metric reference or per
-        n-gram lambda (pushdown and CollapseProject inline projected
-        aliases; the let-bound metrics struct leaves nothing to
-        inline). Same for the MinHash shingle builder."""
+        """redact → quality_filter through the step registry: the step
+        filters its input in place (no join), and the whole plan
+        carries ONE tokenizer and at most two redaction chains — the
+        keep filter Catalyst pushes to the scan and the output
+        projection — not a copy per metric reference or per n-gram
+        lambda (pushdown and CollapseProject inline projected aliases;
+        the let-bound metrics struct leaves nothing to inline). Same
+        for the MinHash shingle builder."""
         import drune_spark.operators.llm_steps  # noqa: F401 (registers)
         from drune_spark.operators.dedup import _doc_shingles
         from drune_spark.operators.redaction import DEFAULT_PATTERNS
@@ -90,17 +92,38 @@ class TestPlans:
                     return hit
             return None
 
-        join = find(out._jdf.queryExecution().optimizedPlan(), "Join")
-        assert join is not None and "LeftSemi" in join.toString()
+        plan = out._jdf.queryExecution().optimizedPlan()
+        assert find(plan, "Join") is None
         chain = len(DEFAULT_PATTERNS)  # regexp_replace calls per chain
-        gate = join.right().toString()
-        assert gate.count("split(") == 1
-        for side in (join.left().toString(), gate):
-            assert side.count("regexp_replace(") <= chain
+        text = plan.toString()
+        assert text.count("split(") == 1
+        assert text.count("regexp_replace(") <= 2 * chain
 
         sh = _doc_shingles(docs, "text", "doc_id", 5)
         assert sh._jdf.queryExecution().optimizedPlan().toString() \
             .count("split(") == 1
+
+    def test_quality_filter_step_matches_kept_id_semi_join(self, spark):
+        """On a corpus with unique ids the in-place quality_filter step
+        returns the rows the kept-id semi-join returned, all columns
+        included, and the single-file scan still gets fan_out's
+        round-robin exchange."""
+        import drune_spark.operators.llm_steps  # noqa: F401 (registers)
+        from pyspark.sql import functions as F
+
+        from drune_spark.operators.registry import StepRegistry
+        from drune_spark.operators.text_analysis import gopher_filter
+
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+        out = StepRegistry.get("quality_filter")(spark, "gate").execute(
+            {}, docs, text_col="text", id_col="doc_id")
+        kept = gopher_filter(docs, "text", "doc_id") \
+            .filter(F.col("keep")).select("doc_id")
+        want = docs.join(kept, "doc_id", "left_semi")
+        assert out.columns == docs.columns
+        got = sorted(map(repr, map(tuple, out.collect())))
+        assert got and got == sorted(map(repr, map(tuple, want.collect())))
+        assert "RoundRobinPartitioning" in executed_plan(out)
 
     def test_schema_apply_is_single_projection(self, spark, entry):
         plan = executed_plan(entry.q_p1_schema_apply(spark, SF))

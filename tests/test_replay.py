@@ -134,6 +134,22 @@ class TestModeEdgeCases:
             map(tuple, anf_reach(edges, trials=2, rounds=2).collect())))
         assert fast == slow == [(0, 0, 0), (1, 0, 0), (2, 0, 0)]
 
+    def test_hits_int_needs_an_iteration(self, spark, both_modes, jobs_in):
+        """n_iters=0 raises in both modes before any Spark job."""
+        from drune_spark.operators.graph import hits_int
+
+        edges = spark.createDataFrame(
+            [(1, 2, 1), (2, 3, 1)], "src bigint, dst bigint, w bigint")
+
+        def build():
+            with pytest.raises(ValueError, match="n_iters >= 1"):
+                hits_int(edges, n_iters=0)
+            return True
+
+        out, jobs = jobs_in("hits_zero", lambda: both_modes(build))
+        assert out == (True, True)
+        assert jobs == []
+
     @pytest.mark.parametrize("trainer", ["bpe_train", "wordpiece_train"])
     def test_trainers_stop_when_pairs_run_out(
         self, spark, both_modes, trainer
@@ -154,6 +170,148 @@ class TestModeEdgeCases:
         fast, slow = both_modes(
             lambda: train(empty, n_merges=3).collect())
         assert fast == slow == []
+
+
+class TestHandOff:
+    """A replay's result frame holds the Arrow table it was built from,
+    and connected_components reads a held ``pairs`` table directly."""
+
+    EDGE_SCHEMA = "a int, b bigint, s string, d double"
+    EDGE_ROWS = [
+        (1, 2**63 - 1, 'say "hi"', 1.5),
+        (None, -2**63, "back\\slash\nnew line", None),
+        (-7, None, None, float("inf")),
+        (0, 0, "it's", -0.0),
+    ]
+
+    @staticmethod
+    def _builders(spark):
+        import numpy as np
+
+        from drune_spark.operators.bpe import bpe_train
+        from drune_spark.operators.dedup import (
+            _replay_frame,
+            minhash_lsh_pairs,
+            ngram_jaccard_pairs,
+        )
+        from drune_spark.operators.graph import kcore
+
+        docs = spark.createDataFrame(
+            [(1, "a b c d e f"), (2, "a b c d e g"), (3, "x y z w v u"),
+             (4, "a b c d e f")], "doc_id bigint, text string")
+        sym = [(1, 2), (2, 1), (2, 3), (3, 2), (1, 3), (3, 1)]
+        return {
+            "frame": lambda: replay.frame(
+                spark, TestHandOff.EDGE_ROWS, TestHandOff.EDGE_SCHEMA),
+            "frame_empty": lambda: replay.frame(
+                spark, [], TestHandOff.EDGE_SCHEMA),
+            "replay_frame": lambda: _replay_frame(
+                spark, "string", np.array(['q"1', "b\\2", "c\n3"],
+                                          dtype=object),
+                {"id_a": np.array([0, 2]), "id_b": np.array([1, 1])},
+                n=("bigint", [2**63 - 1, -2**63]), x=("double", [0.1, 2.0])),
+            "minhash_lsh_pairs": lambda: minhash_lsh_pairs(
+                docs, "text", "doc_id", min_est_jaccard=0.1),
+            "ngram_jaccard_pairs": lambda: ngram_jaccard_pairs(
+                docs, "text", "doc_id", k=2, threshold=0.1),
+            "kcore": lambda: kcore(
+                spark.createDataFrame(sym, "src bigint, dst bigint"), k=2),
+            "bpe_train": lambda: bpe_train(docs.select("text"), n_merges=2),
+        }
+
+    @pytest.mark.parametrize("builder", [
+        "frame", "frame_empty", "replay_frame", "minhash_lsh_pairs",
+        "ngram_jaccard_pairs", "kcore", "bpe_train"])
+    def test_held_table_is_the_fetched_table(self, spark, builder):
+        """Each builder's held table equals ``toArrow()`` of its frame
+        in schema and values: NULLs, int64 bounds, strings with quotes,
+        backslashes and newlines, and doubles."""
+        df = self._builders(spark)[builder]()
+        held, fetched = replay.held(df), df.toArrow()
+        assert held is not None
+        assert held.schema == fetched.schema
+        assert held.equals(fetched)
+        if builder == "frame":
+            assert held.to_pylist() == [
+                dict(zip("absd", r)) for r in self.EDGE_ROWS]
+
+    @pytest.mark.parametrize("id_type, edges", [
+        ("bigint", [(1, 2), (2, 3), (5, 6), (6, 6)]),
+        ("string", [("a", "b"), ("b", "c"), ("x", "y")]),
+        ("bigint", [(1, 2), (None, 3), (4, None)]),
+        ("string", [("a", None), ("b", "c")]),
+        ("bigint", []),
+        ("string", []),
+    ], ids=["bigint", "string", "bigint_null", "string_null",
+            "bigint_empty", "string_empty"])
+    def test_components_over_held_pairs(
+        self, spark, both_modes, id_type, edges
+    ):
+        """connected_components over a held pairs frame returns what it
+        returns over a non-held copy of the same rows, in both modes."""
+        from drune_spark.operators.dedup import connected_components
+
+        schema = f"id_a {id_type}, id_b {id_type}, est_jaccard double"
+        rows = [(a, b, 0.5) for a, b in edges]
+        ids = {x for e in edges for x in e if x is not None}
+        extra = 9 if id_type == "bigint" else "z"  # an isolated node
+        nodes = spark.createDataFrame(
+            [(n,) for n in sorted(ids | {extra})], f"doc_id {id_type}")
+
+        def run(make):
+            return both_modes(lambda: _outcome(
+                connected_components(make(), nodes)))
+
+        held = run(lambda: replay.frame(spark, rows, schema))
+        copy = run(lambda: spark.createDataFrame(rows, schema))
+        assert held == copy
+        assert held[0] == held[1]
+
+    def test_held_call_runs_no_job(self, spark, jobs_in):
+        from drune_spark.operators.dedup import connected_components
+
+        pairs = replay.frame(spark, [(1, 2, 1.0), (2, 3, 1.0)],
+                             "id_a bigint, id_b bigint, est_jaccard double")
+        nodes = spark.createDataFrame([(n,) for n in range(1, 5)],
+                                      "doc_id bigint")
+        out, jobs = jobs_in(
+            "cc_held", lambda: connected_components(pairs, nodes))
+        assert jobs == []
+        assert sorted(map(tuple, out.collect())) == [
+            (1, 1), (2, 1), (3, 1), (4, 4)]
+
+    def test_hand_off_records(self, spark, records, monkeypatch):
+        """A held call logs one ``held`` replay record with its 2|E|
+        size; a held input declines as a fetched one does: one record
+        above the cutoff or under distributed(), and a NULL id's
+        ``null_id`` record supersedes the replay one."""
+        from drune_spark.operators.dedup import connected_components
+
+        op = "connected_components"
+        schema = "id_a bigint, id_b bigint, est_jaccard double"
+        pairs = replay.frame(spark, [(1, 2, 1.0), (2, 3, 1.0)], schema)
+        nodes = spark.createDataFrame([(1,), (2,), (3,)], "doc_id bigint")
+
+        def decisions(build):
+            seen = len(records())
+            build().collect()
+            return [(r.path, r.reason, r.size, r.cutoff)
+                    for r in records()[seen:] if r.op == op]
+
+        cutoff = replay.CUTOFFS[op]
+        assert decisions(lambda: connected_components(pairs, nodes)) == [
+            ("replay", "held", 4, cutoff)]
+        with replay.distributed():
+            assert decisions(
+                lambda: connected_components(pairs, nodes)) == [
+                ("distributed", "forced", 4, cutoff)]
+        nulls = replay.frame(spark, [(1, None, 1.0)], schema)
+        assert decisions(lambda: connected_components(nulls, nodes)) == [
+            ("replay", "held", 2, cutoff), ("distributed", "null_id", 2,
+                                            cutoff)]
+        monkeypatch.setitem(replay.CUTOFFS, op, 3)
+        assert decisions(lambda: connected_components(pairs, nodes)) == [
+            ("distributed", "above_cutoff", 4, 3)]
 
 
 # The replays that are not graph operators; every other key of

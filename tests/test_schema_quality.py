@@ -304,18 +304,6 @@ class TestQuality:
         assert len(rows) == 1 and rows[0].pipeline_name == "pl"
 
 
-def _jobs_in(spark, group, fn):
-    """Run ``fn`` under a job group; return (result, job ids it ran)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _rows(df):
     return sorted(map(repr, df.collect()))
 
@@ -358,7 +346,7 @@ class TestObservedCounts:
             ])),
         }
 
-    def test_deferred_counts_equal_eager(self, spark):
+    def test_deferred_counts_equal_eager(self, spark, jobs_in):
         for name, (df, schema) in self._cases(spark).items():
             eager = apply_constraints(df, schema)
             eager_rows, eager_counts = _rows(eager.passed), eager.counts
@@ -366,7 +354,7 @@ class TestObservedCounts:
             lazy = apply_constraints(df, schema, collect_counts=False)
             assert _rows(lazy.passed) == eager_rows, name
             # collecting `passed` resolved the observation: no job left
-            counts, jobs = _jobs_in(spark, f"dq_eq_{name}", lambda: lazy.counts)
+            counts, jobs = jobs_in(f"dq_eq_{name}", lambda: lazy.counts)
             assert counts == eager_counts, name
             assert jobs == [], name
             assert sum(eager_counts.values()) > 0, name
@@ -379,10 +367,10 @@ class TestObservedCounts:
         assert sorted(lazy.counts.values()) == [1, 1]
         assert lazy.failed_total() == 2
 
-    def test_deferred_runs_no_job(self, spark):
+    def test_deferred_runs_no_job(self, spark, jobs_in):
         df, schema = self._cases(spark)["warn_drop_mix"]
-        res, jobs = _jobs_in(
-            spark, "dq_deferred_no_job",
+        res, jobs = jobs_in(
+            "dq_deferred_no_job",
             lambda: apply_constraints(df, schema, collect_counts=False))
         assert jobs == []
         assert "InMemoryRelation" not in \
@@ -434,7 +422,7 @@ class TestObservedCounts:
         eager.unpersist()
         return counts
 
-    def test_pipeline_counts_ride_the_write(self, spark, tmp_path,
+    def test_pipeline_counts_ride_the_write(self, spark, jobs_in, tmp_path,
                                             monkeypatch):
         import drune_spark.pipeline as pipeline_mod
 
@@ -450,8 +438,8 @@ class TestObservedCounts:
         pipe.execute()
         plan = written[0]._jdf.queryExecution().optimizedPlan().toString()
         assert "InMemoryRelation" not in plan
-        counts, jobs = _jobs_in(spark, "dq_pipeline_counts",
-                                lambda: pipe.quality["s"].counts)
+        counts, jobs = jobs_in("dq_pipeline_counts",
+                               lambda: pipe.quality["s"].counts)
         assert jobs == []
         assert counts == self._eager_counts(spark, pipe)
         assert spark.read.parquet(out).count() == 3
@@ -463,7 +451,7 @@ class TestObservedCounts:
         pipe.write()
         assert pipe.quality["s"].counts == self._eager_counts(spark, pipe)
 
-    def test_sql_self_join_counts_once(self, spark, tmp_path):
+    def test_sql_self_join_counts_once(self, spark, jobs_in, tmp_path):
         pipe, out = self._pipeline(spark, tmp_path, [
             {"name": "pairs", "type": "sql", "params": {
                 "query": "SELECT a.col1, b.col2 FROM s a "
@@ -472,13 +460,13 @@ class TestObservedCounts:
         pipe.execute()
         assert sorted(r.col1 for r in spark.read.parquet(out).collect()) \
             == [1, 2, 4]
-        counts, jobs = _jobs_in(spark, "dq_self_join_counts",
-                                lambda: pipe.quality["s"].counts)
+        counts, jobs = jobs_in("dq_self_join_counts",
+                               lambda: pipe.quality["s"].counts)
         assert jobs == []
         assert counts == self._eager_counts(spark, pipe)
         assert pipe.quality["s"].failed_total() == 2
 
-    def test_every_source_keeps_its_counts(self, spark, tmp_path):
+    def test_every_source_keeps_its_counts(self, spark, jobs_in, tmp_path):
         """Two sources, only the first with rules: after execute() the
         first source's counts are still readable, equal the eager
         counts and run no job."""
@@ -492,8 +480,8 @@ class TestObservedCounts:
         }])
         pipe.execute()
         assert set(pipe.quality) == {"s", "t"}
-        counts, jobs = _jobs_in(spark, "dq_two_sources",
-                                lambda: pipe.quality["s"].counts)
+        counts, jobs = jobs_in("dq_two_sources",
+                               lambda: pipe.quality["s"].counts)
         assert jobs == []
         assert counts == self._eager_counts(spark, pipe)
         assert pipe.quality["t"].counts == {}
