@@ -302,11 +302,15 @@ def _lf_literal(v, t: str) -> str | None:
     return None
 
 
+# The most rows a literal frame holds (see ``local_frame``).
+LITERAL_ROWS = 1024
+
+
 def local_frame(
     spark,
     rows,
     schema,
-    max_literal_rows: int = 1024,
+    max_literal_rows: int = LITERAL_ROWS,
 ) -> DataFrame:
     """Driver-local rows as a DataFrame WITHOUT the default python scan.
 

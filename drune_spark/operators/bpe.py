@@ -96,11 +96,9 @@ def bpe_train(
         _spaced(F.col("word")).alias("repr"), "freq"
     )
     words = words.persist()
-    tbl = replay.collect("bpe_train", words)
-    if tbl is not None:
-        words.unpersist()
-        reprs = tbl.column("repr").to_pylist()
-        freqs = tbl.column("freq").to_pylist()
+
+    def replayed(g):
+        reprs, freqs = list(g.cols["repr"]), g.cols["freq"].tolist()
         merges = []
         for step in range(1, n_merges + 1):
             counts: dict = {}
@@ -119,10 +117,15 @@ def bpe_train(
             merges.append((step, best_pair, merged, best_count))
             pat, rep = f" {best_pair} ", f" {merged} "
             reprs = [rp.replace(pat, rep) for rp in reprs]
-        return replay.frame(
-            spark, merges,
-            "step int, pair string, merged string, pair_count bigint",
-        )
+        return merges
+
+    hit = replay.gate(
+        "bpe_train", [words], (),
+        "step int, pair string, merged string, pair_count bigint", replayed,
+    )
+    if hit is not None:
+        words.unpersist()
+        return hit
     merges = []
     for step in range(1, n_merges + 1):
         syms = F.split(F.trim(F.col("repr")), " ")
@@ -333,11 +336,8 @@ def wordpiece_train(
     # max(sym_count)² — where a product could leave int64 (the
     # distributed ANSI path would raise) the loop falls through to the
     # distributed rounds on the still-persisted words table.
-    tbl = replay.collect("wordpiece_train", words)
-    if tbl is not None:
-        reprs = tbl.column("repr").to_pylist()
-        freqs = tbl.column("freq").to_pylist()
-        ok = True
+    def replayed(g):
+        reprs, freqs = list(g.cols["repr"]), g.cols["freq"].tolist()
         py_merges: list = []
         for step in range(1, n_merges + 1):
             sym_counts: dict = {}
@@ -356,9 +356,8 @@ def wordpiece_train(
             if max_pc * scale >= (1 << 63) or max_cnt * max_cnt >= (
                 1 << 63
             ):
-                ok = False
-                replay.decline("wordpiece_train", "overflow", len(reprs))
-                break
+                return replay.decline("wordpiece_train", "overflow",
+                                      len(reprs))
             pair = None
             score = pc = -1
             for (sa, sb), c in pair_counts.items():
@@ -370,13 +369,16 @@ def wordpiece_train(
             py_merges.append((step, pair, merged, pc, score))
             pat, rep = f" {pair} ", f" {merged} "
             reprs = [rp.replace(pat, rep) for rp in reprs]
-        if ok:
-            words.unpersist()
-            return replay.frame(
-                spark, py_merges,
-                "step int, pair string, merged string,"
-                " pair_count bigint, score bigint",
-            )
+        return py_merges
+
+    hit = replay.gate(
+        "wordpiece_train", [words], (),
+        "step int, pair string, merged string, pair_count bigint,"
+        " score bigint", replayed,
+    )
+    if hit is not None:
+        words.unpersist()
+        return hit
     for step in range(1, n_merges + 1):
         base = words.select(
             F.split(F.trim(F.col("repr")), " ").alias("sym"), "freq"

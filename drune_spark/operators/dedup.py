@@ -134,16 +134,18 @@ def _grouped_doc_arrays(exploded: DataFrame) -> DataFrame:
     grouped id arrays move); ``sort_array`` ascending == numpy/python
     sort order == UTF8 binary order for string ids (UTF-8 byte order
     preserves codepoint order), so pair generation below sees Spark's
-    exact ``a < b`` ordering."""
+    exact ``a < b`` ordering. ``collect_list`` drops NULLs, so it
+    collects one-element arrays, which keep a NULL id for the gate."""
     return (
         exploded.groupBy("shingle")
-        .agg(F.sort_array(F.collect_list("doc")).alias("ds"))
+        .agg(F.sort_array(F.flatten(F.collect_list(F.array("doc"))))
+             .alias("ds"))
         .select("ds")
     )
 
 
 def _pair_counts(groups: list):
-    """Independent pure-python reference of ``_pair_counts_arrow``
+    """Independent pure-python reference of ``_pair_counts_codes``
     (Counter + combinations over the same grouped arrays); exists so
     pytest can pin the vectorized implementation against a second,
     trivially-auditable derivation of the same integers."""
@@ -160,39 +162,31 @@ def _pair_counts(groups: list):
     return sizes, common
 
 
-def _pair_counts_arrow(gdf: DataFrame):
+def _pair_counts_codes(ds, n_u: int):
     """Vectorized exact pair-intersection counts + per-doc set sizes
-    from the grouped doc arrays: one Arrow transfer (no Row pickling)
-    and numpy pair generation — grouped by array length m, each group
-    contributes its triu (i<j) index pairs, so per-pair counts and
-    sizes are the SAME integers the distributed self-join + aggregates
-    produce (measured: 0.14 s transfer + ~0.15 s counting vs 0.43 s
-    collect + 0.58 s Counter at 260k cells / 1.13M candidate pairs).
+    from the grouped doc arrays ``ds`` (``replay.Lists`` of doc codes
+    into the ``n_u`` sorted distinct ids, one list per shingle) — numpy
+    pair generation grouped by array length m: each group contributes
+    its triu (i<j) index pairs, so per-pair counts and sizes are the
+    SAME integers the distributed self-join + aggregates produce
+    (measured: 0.14 s transfer + ~0.15 s counting vs 0.43 s collect +
+    0.58 s Counter at 260k cells / 1.13M candidate pairs).
 
-    Returns (uniq, sizes, a_codes, b_codes, counts): uniq = sorted
-    distinct doc ids (value order == Spark order, see
-    ``_grouped_doc_arrays``), sizes[i] = |shingle set of uniq[i]|,
-    and for every candidate pair counts[p] = |intersection| with
-    uniq[a_codes[p]] < uniq[b_codes[p]]. Raises ``OverflowError`` on
-    pair volumes past ``_PAIRS_DRIVER_MAX_PAIRS`` — callers decide the
-    cutoff BEFORE transferring; this is the last-resort guard.
+    Returns (sizes, a_codes, b_codes, counts): sizes[i] = |shingle set
+    of id i|, and for every candidate pair counts[p] = |intersection|
+    with a_codes[p] < b_codes[p] (value order == Spark order, see
+    ``_grouped_doc_arrays``); ``None`` when the pair volume passes
+    ``_PAIRS_DRIVER_MAX_PAIRS`` — estimated from the group sizes BEFORE
+    any quadratic allocation.
     """
     import numpy as np
 
-    col = gdf.toArrow().column("ds").combine_chunks()
-    offsets = np.asarray(col.offsets, dtype=np.int64)
+    offsets, codes = ds.offs, ds.values.astype(np.int64)
     lens = np.diff(offsets)
-    n_pairs = int((lens * (lens - 1) // 2).sum())
-    if n_pairs > _PAIRS_DRIVER_MAX_PAIRS:
-        raise OverflowError(
-            f"candidate pair volume {n_pairs} exceeds the driver replay "
-            f"cap {_PAIRS_DRIVER_MAX_PAIRS}"
-        )
-    flat = col.values.to_numpy(zero_copy_only=False)
-    uniq, codes = np.unique(flat, return_inverse=True)
-    codes = codes.astype(np.int64)
-    sizes = np.bincount(codes, minlength=len(uniq)).astype(np.int64)
-    n_u = max(1, len(uniq))
+    if int((lens * (lens - 1) // 2).sum()) > _PAIRS_DRIVER_MAX_PAIRS:
+        return None
+    sizes = np.bincount(codes, minlength=n_u).astype(np.int64)
+    n_u = max(1, n_u)
     if n_u >= 3_000_000_000:  # int64 pair-key packing bound (n_u² < 2⁶³)
         raise OverflowError(f"{n_u} distinct ids overflow int64 pair keys")
     keys_parts = []
@@ -206,13 +200,11 @@ def _pair_counts_arrow(gdf: DataFrame):
         keys_parts.append(a * n_u + b)
     if not keys_parts:
         z = np.empty(0, np.int64)
-        return uniq, sizes, z, z, z
-    keys = np.concatenate(keys_parts)
-    uk, counts = np.unique(keys, return_counts=True)
-    return uniq, sizes, uk // n_u, uk % n_u, counts.astype(np.int64)
+        return sizes, z, z, z
+    uk, counts = np.unique(np.concatenate(keys_parts), return_counts=True)
+    return sizes, uk // n_u, uk % n_u, counts.astype(np.int64)
 
 
-_PAIRS_DRIVER_ID_TYPES = ("bigint", "int", "string")
 # Candidate-pair cap for the driver replay (Σ m(m-1)/2 over shingle
 # groups): 64M int64 pair keys ≈ 0.5 GB transient numpy — the same
 # memory class as the grouped collect itself. Above it the distributed
@@ -220,25 +212,25 @@ _PAIRS_DRIVER_ID_TYPES = ("bigint", "int", "string")
 _PAIRS_DRIVER_MAX_PAIRS = 64_000_000
 
 
-def _driver_pair_counts(op: str, exploded: DataFrame, n_cells: int):
-    """The shared driver-fast-path gate for the exact pair operators:
-    returns ``(id_type, uniq, sizes, a_codes, b_codes, counts)`` when
-    the pair computation should replay on the driver, or ``None`` when
-    the distributed self-join should run (cell table above the cutoff,
-    unsupported id type for the literal-frame return, or a pair volume
-    past ``_PAIRS_DRIVER_MAX_PAIRS`` — estimated from the group sizes
-    BEFORE any quadratic allocation). Genuine failures (MemoryError,
-    numpy bugs) propagate loudly; nothing is silently retried."""
-    id_type = exploded.schema["doc"].dataType.simpleString()
-    if id_type not in _PAIRS_DRIVER_ID_TYPES:
-        return replay.decline(op, "id_type", n_cells)
-    if not replay.admit(op, n_cells):
-        return None
-    try:
-        res = _pair_counts_arrow(_grouped_doc_arrays(exploded))
-    except OverflowError:
-        return replay.decline(op, "pair_volume", n_cells)
-    return (id_type, *res)
+def _pair_replay(op: str, exploded: DataFrame, n_cells: int, schema: str,
+                 result):
+    """The replay of the exact pair operators: one grouped collect of
+    the (doc, shingle) cells through ``replay.gate``, then
+    ``result(uniq, sizes, a_codes, b_codes, counts)`` (see
+    ``_pair_counts_codes``) gives the result columns. Returns the
+    frame, or ``None`` for the distributed self-join (cell table above
+    the cutoff, or a pair volume past ``_PAIRS_DRIVER_MAX_PAIRS``).
+    Genuine failures (MemoryError, numpy bugs) propagate loudly;
+    nothing is silently retried."""
+
+    def kernel(g):
+        hit = _pair_counts_codes(g.cols["ds"], len(g.nodes))
+        if hit is None:
+            return replay.decline(op, "pair_volume", n_cells)
+        return result(g.nodes, *hit)
+
+    return replay.gate(op, [_grouped_doc_arrays(exploded)], ("ds",), schema,
+                       kernel, codes=True, size=n_cells)
 
 
 def ngram_jaccard_pairs(
@@ -311,26 +303,17 @@ def ngram_jaccard_pairs(
     # cells ≈ tens of MB of grouped id arrays) — or past the candidate
     # pair-volume cap — the distributed self-join below runs unchanged,
     # the production path at corpus scale.
-    hit = _driver_pair_counts("ngram_jaccard_pairs", exploded, n_cells)
+    def jaccard(uniq, sizes, ac, bc, counts):
+        j = counts / (sizes[ac] + sizes[bc] - counts)
+        keep = j >= threshold
+        return {"id_a": uniq[ac[keep]], "id_b": uniq[bc[keep]],
+                "jaccard": j[keep]}
+
+    hit = _pair_replay("ngram_jaccard_pairs", exploded, n_cells,
+                       "id_a {id}, id_b {id}, jaccard double", jaccard)
     if hit is not None:
-        id_type, uniq, sizes, ac, bc, counts = hit
         exploded.unpersist()
-        rows = []
-        if len(counts):
-            j = counts / (sizes[ac] + sizes[bc] - counts)
-            keep = j >= threshold
-            rows = list(
-                zip(
-                    uniq[ac[keep]].tolist(),
-                    uniq[bc[keep]].tolist(),
-                    j[keep].tolist(),
-                )
-            )
-        return replay.frame(
-            df.sparkSession,
-            rows,
-            f"id_a {id_type}, id_b {id_type}, jaccard double",
-        )
+        return hit
     # Sizes from the cells (shingles are array_distinct'd per doc).
     # Docs with zero shingles (< k tokens) drop out, but they cannot
     # share a shingle with anything, so no pair loses its size row.
@@ -400,16 +383,19 @@ def _popcount_u64(x):
     return (x * np.uint64(0x0101010101010101)) >> np.uint64(56)
 
 
-def _setsim_replay_state(tok: DataFrame, n_cells: int):
-    """Replay gate for ``prefix_filter_join``: decides whether the exact
-    all-pairs computation should replace the distributed PPJoin, and if
-    so returns its compact state ``(uniq_docs, sizes, kind, arr,
-    id_type)`` — ``kind`` is ``"dense"`` (0/1 doc-token float matrix for
-    the BLAS kernel) or ``"masks"`` (uint64 bit-packed token sets for
-    the SWAR kernel). Returns ``None`` to decline (cell table above the
-    cutoff, unsupported/NULL-bearing id column, duplicate (doc, token)
+# prefix_filter_join's result columns, in both modes
+_SETSIM_SCHEMA = ("a {id}, b {id}, size_a bigint, size_b bigint, "
+                  "n_common bigint, jaccard_ppm bigint")
+
+
+def _setsim_replay(tok: DataFrame, n_cells: int, t: int):
+    """Replay gate for ``prefix_filter_join``: the exact all-pairs
+    computation in place of the distributed PPJoin, or ``None`` to
+    decline (cell table above the cutoff, duplicate (doc, token)
     cells, or past the mask/word-op budgets — all estimated BEFORE any
-    quadratic allocation).
+    quadratic allocation). The kernel packs the cells into ``kind``
+    ``"dense"`` (0/1 doc-token float matrix for the BLAS kernel) or
+    ``"masks"`` (uint64 bit-packed token sets for the SWAR kernel).
 
     Why set intersections, not the §20 per-token triu expansion: word
     tokens (unlike k-gram shingles) include stopword-class tokens shared
@@ -429,66 +415,58 @@ def _setsim_replay_state(tok: DataFrame, n_cells: int):
     """
     op = "prefix_filter_join"
     id_type = tok.schema["doc"].dataType.simpleString()
-    if id_type not in _PAIRS_DRIVER_ID_TYPES:
-        return replay.decline(op, "id_type", n_cells)
-    if n_cells == 0:
-        return replay.decline(op, "empty", n_cells)
-    if not replay.admit(op, n_cells):
-        return None
-    import numpy as np
 
-    at = tok.toArrow()
-    # NULL doc ids: the distributed equi-joins drop them silently, but
-    # here they would surface as float64 (int ids) breaking the bigint
-    # schema, or as None objects np.unique cannot order — decline.
-    if at.column("doc").null_count > 0:
-        return replay.decline(op, "null_id", n_cells)
-    doc_col = at.column("doc").combine_chunks().to_numpy(
-        zero_copy_only=False)
-    tok_col = at.column("token").combine_chunks().to_numpy(
-        zero_copy_only=False)
-    uniq_docs, dcodes = np.unique(doc_col, return_inverse=True)
-    uniq_toks, tcodes = np.unique(tok_col, return_inverse=True)
-    n, v = len(uniq_docs), len(uniq_toks)
-    w = (v + 63) // 64
-    if (n * w > _SETSIM_DRIVER_MAX_MASK_WORDS
-            or n * (n - 1) // 2 * w > _SETSIM_DRIVER_MAX_WORDOPS):
-        return replay.decline(op, "mask_budget", n_cells)
-    # The distributed path COUNTS duplicate (doc, token) cells (a
-    # repeated doc id contributes its cells once per row to sizes and
-    # intersections); the bitmask OR / matrix assignment would dedupe
-    # them. Cells are distinct whenever doc ids are unique — anything
-    # else declines.
-    if len(np.unique(dcodes.astype(np.int64) * np.int64(v)
-                     + tcodes.astype(np.int64))) != n_cells:
-        return replay.decline(op, "duplicate_id", n_cells)
-    dcodes = dcodes.astype(np.int64)
-    tcodes = tcodes.astype(np.int64)
-    # Cells are distinct (just verified), so the per-doc cell count IS
-    # the distinct-token set size — no popcount pass needed.
-    sizes = np.bincount(dcodes, minlength=n).astype(np.int64)
-    if n * v <= _SETSIM_DRIVER_MAX_DENSE:
-        # BLAS kernel state: every partial sum in X·Xᵀ is an integer
-        # ≤ V, far below the 2²⁴/2⁵³ exact-integer range of the chosen
-        # float dtype, so ANY BLAS summation order yields the exact
-        # count.
-        dtype = np.float32 if v < (1 << 24) else np.float64
-        mat = np.zeros((n, v), dtype=dtype)
-        mat[dcodes, tcodes] = 1.0
-        return uniq_docs, sizes, "dense", mat, id_type
-    masks = np.zeros((n, w), dtype=np.uint64)
-    np.bitwise_or.at(
-        masks,
-        (dcodes, tcodes >> 6),
-        np.uint64(1) << (tcodes.astype(np.uint64) & np.uint64(63)),
-    )
-    return uniq_docs, sizes, "masks", masks, id_type
+    def kernel(g):
+        import numpy as np
+
+        uniq_docs, dcodes = g.nodes, g.cols["doc"].astype(np.int64)
+        uniq_toks, tcodes = np.unique(g.cols["token"], return_inverse=True)
+        tcodes = tcodes.astype(np.int64)
+        n, v = len(uniq_docs), len(uniq_toks)
+        w = (v + 63) // 64
+        if (n * w > _SETSIM_DRIVER_MAX_MASK_WORDS
+                or n * (n - 1) // 2 * w > _SETSIM_DRIVER_MAX_WORDOPS):
+            return replay.decline(op, "mask_budget", n_cells)
+        # The distributed path COUNTS duplicate (doc, token) cells (a
+        # repeated doc id contributes its cells once per row to sizes
+        # and intersections); the bitmask OR / matrix assignment would
+        # dedupe them. Cells are distinct whenever doc ids are unique —
+        # anything else declines (a per-cell rule, not the gate's
+        # per-row one: each doc spans many cell rows).
+        if len(np.unique(dcodes * np.int64(v) + tcodes)) != n_cells:
+            return replay.decline(op, "duplicate_id", n_cells)
+        # Cells are distinct (just verified), so the per-doc cell count
+        # IS the distinct-token set size — no popcount pass needed.
+        sizes = np.bincount(dcodes, minlength=n).astype(np.int64)
+        if n * v <= _SETSIM_DRIVER_MAX_DENSE:
+            # BLAS kernel state: every partial sum in X·Xᵀ is an
+            # integer ≤ V, far below the 2²⁴/2⁵³ exact-integer range of
+            # the chosen float dtype, so ANY BLAS summation order
+            # yields the exact count.
+            dtype = np.float32 if v < (1 << 24) else np.float64
+            arr = np.zeros((n, v), dtype=dtype)
+            arr[dcodes, tcodes] = 1.0
+            kind = "dense"
+        else:
+            arr = np.zeros((n, w), dtype=np.uint64)
+            np.bitwise_or.at(
+                arr,
+                (dcodes, tcodes >> 6),
+                np.uint64(1) << (tcodes.astype(np.uint64) & np.uint64(63)),
+            )
+            kind = "masks"
+        return uniq_docs, sizes, kind, arr
+
+    return replay.gate(
+        op, [tok], ("doc",), _SETSIM_SCHEMA, kernel, codes=True,
+        size=n_cells, build=lambda spark, state, _: _setsim_pairs_frame(
+            spark, *state, t, id_type))
 
 
 def _setsim_pairs_frame(spark, uniq_docs, sizes, kind, arr, t: int,
                         id_type: str) -> DataFrame:
     """Materialize the exact all-pairs set-similarity rows from the
-    packed ``_setsim_replay_state`` via one broadcast + mapInArrow: each
+    packed ``_setsim_replay`` state via one broadcast + mapInArrow: each
     of ``defaultParallelism`` tasks computes a slice of the pair matrix
     with the SAME integer arithmetic as the distributed PPJoin (int64
     sizes/intersections, cross-multiplied threshold, ppm floor-div on
@@ -582,10 +560,7 @@ def _setsim_pairs_frame(spark, uniq_docs, sizes, kind, arr, t: int,
 
     return spark.range(0, nparts, 1, nparts).mapInArrow(
         gen,
-        schema=(
-            f"a {id_type}, b {id_type}, size_a bigint, "
-            "size_b bigint, n_common bigint, jaccard_ppm bigint"
-        ),
+        schema=_SETSIM_SCHEMA.format(id=id_type),
     )
 
 
@@ -658,13 +633,10 @@ def prefix_filter_join(
     # result never transits the driver. Above any bound the distributed
     # PPJoin below runs unchanged — the production path, whose prefix
     # filter is what scales.
-    hit = _setsim_replay_state(tok, n_cells)
+    hit = _setsim_replay(tok, n_cells, t)
     if hit is not None:
-        uniq_docs, sizes, kind, arr, id_type = hit
         tok.unpersist()
-        return _setsim_pairs_frame(
-            df.sparkSession, uniq_docs, sizes, kind, arr, t, id_type
-        )
+        return hit
     sizes = tok.groupBy("doc").agg(F.count(F.lit(1)).alias("sz"))
     dfreq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("tdf"))
     from pyspark.sql import Window
@@ -845,62 +817,35 @@ def _scored(cands: DataFrame, sigs_a: DataFrame, sigs_b: DataFrame,
     )
 
 
-def _replay_frame(spark, id_type: str, uniq, ids: dict, **extra):
-    """The Arrow-backed result frame of a replay, held: one ``id_type``
-    column per ``ids`` entry (name → code array into the sorted distinct
-    ids ``uniq``), then one column per ``extra`` entry (name → (SQL
-    type, values)), in that order."""
-    import numpy as np
-    import pyarrow as pa
-
-    arrow = {"string": pa.string(), "int": pa.int32(), "bigint": pa.int64(),
-             "double": pa.float64()}
-    uniq_arr = np.asarray(uniq)
-    cols = {name: pa.array(uniq_arr[codes] if len(codes) else [],
-                           type=arrow[id_type])
-            for name, codes in ids.items()}
-    cols.update({name: pa.array(vals, type=arrow[t])
-                 for name, (t, vals) in extra.items()})
-    schema = ", ".join([f"{name} {id_type}" for name in ids]
-                       + [f"{name} {t}" for name, (t, _) in extra.items()])
-    table = pa.table(cols)
-    return replay.hold(spark.createDataFrame(table, schema=schema), table)
-
-
 def _minhash_replay_pairs(df, text_col, id_col, num_perm, bands, k,
                           seed, min_est_jaccard):
     """Replay gate for ``minhash_lsh_pairs``: the (id_a, id_b,
     est_jaccard) frame from the shared numpy kernel, or ``None`` for
     the distributed path. See the caller's docstring."""
     op = "minhash_lsh_pairs"
-    id_type = df.schema[id_col].dataType.simpleString()
-    if id_type not in _PAIRS_DRIVER_ID_TYPES:
-        return replay.decline(op, "id_type")
-    at = replay.collect(
-        op, _doc_shingle_frame(df, text_col, id_col, k, hashed=True)
-    )
-    if at is None:
-        return None
-    state = _doc_shingle_state(at, hashed=True)
-    if isinstance(state, str):
-        return replay.decline(op, "null_or_duplicate_id", at.num_rows)
-    import numpy as np
 
-    uniq, offs, flat, row_codes = state
-    n = len(uniq)
-    cand = _md5_band_candidates(
-        flat, offs, row_codes, n, num_perm, bands, seed,
-        _PAIRS_DRIVER_MAX_PAIRS,
-    )
-    if cand is None:
-        return replay.decline(op, "pair_volume", n)
-    ck, agree = cand
-    est = agree.astype(np.float64) / num_perm
-    keep = est >= min_est_jaccard
-    ck, est = ck[keep], est[keep]
-    return _replay_frame(
-        df.sparkSession, id_type, uniq, {"id_a": ck // n, "id_b": ck % n},
-        est_jaccard=("double", est),
+    def kernel(g):
+        import numpy as np
+
+        uniq, sh = g.nodes, g.cols["shingles"]
+        n = len(uniq)
+        cand = _md5_band_candidates(
+            sh.values, sh.offs, g.cols["doc"], n, num_perm, bands, seed,
+            _PAIRS_DRIVER_MAX_PAIRS,
+        )
+        if cand is None:
+            return replay.decline(op, "pair_volume", n)
+        ck, agree = cand
+        est = agree.astype(np.float64) / num_perm
+        keep = est >= min_est_jaccard
+        ck, est = ck[keep], est[keep]
+        return {"id_a": uniq[ck // n], "id_b": uniq[ck % n],
+                "est_jaccard": est}
+
+    return replay.gate(
+        op, [_doc_shingle_frame(df, text_col, id_col, k, hashed=True)],
+        ("doc",), "id_a {id}, id_b {id}, est_jaccard double", kernel,
+        codes=True, unique=True,
     )
 
 
@@ -1003,15 +948,15 @@ def lsh_census_eval(
         "n_both bigint, n_only_exact bigint, n_only_lsh bigint, "
         "recall_ppm bigint, precision_ppm bigint"
     )
-    at = replay.collect(
-        "lsh_census_eval", _doc_shingle_frame(docs, text_col, id_col, k)
+    hit = replay.gate(
+        "lsh_census_eval", [_doc_shingle_frame(docs, text_col, id_col, k)],
+        ("doc",), out_schema,
+        lambda g: _lsh_census_replay(
+            g, num_perm, bands, seed, min_est_jaccard, exact_threshold),
+        codes=True, unique=True, empty=[(0, 0, 0, 0, 0)],
     )
-    if at is not None:
-        row = _lsh_census_replay(
-            at, num_perm, bands, seed, min_est_jaccard, exact_threshold,
-        )
-        if row is not None:
-            return replay.frame(docs.sparkSession, [row], out_schema)
+    if hit is not None:
+        return hit
     exact = ngram_jaccard_pairs(
         docs, text_col, id_col, k=k, threshold=exact_threshold
     ).select("id_a", "id_b").withColumn("e", F.lit(1))
@@ -1054,45 +999,11 @@ def _doc_shingle_frame(docs, text_col, id_col, k, hashed=False):
     return sh
 
 
-def _doc_shingle_state(at, hashed=False, col="shingles"):
-    """A collected (doc, ``col``) array table — a ``_doc_shingle_frame``
-    or the simhash token words — decoded into replay state: ``(uniq,
-    offs, flat, row_codes)`` where ``uniq`` is the sorted distinct doc
-    ids (value order == Spark ``<`` for ints and strings), ``flat`` the
-    concatenated per-doc array elements (an int64 ndarray when
-    ``hashed``), ``offs`` the per-ROW boundaries (row r owns
-    ``flat[offs[r]:offs[r+1]]``), and ``row_codes[r]`` row r's code in
-    ``uniq`` order. Returns the decline reason instead — ``"null_id"``
-    on NULL ids or arrays, ``"duplicate_id"`` on duplicate ids (the
-    distributed pipelines handle those; the replay declines)."""
-    import numpy as np
-
-    if at.column("doc").null_count > 0 or at.column(col).null_count > 0:
-        return "null_id"
-    doc_vals = at.column("doc").to_pylist()
-    n = len(doc_vals)
-    uniq = sorted(set(doc_vals))
-    if len(uniq) != n:
-        return "duplicate_id"  # sig rows would duplicate too
-    code_of = {v: i for i, v in enumerate(uniq)}
-    sh_col = at.column(col).combine_chunks()
-    offs = np.asarray(sh_col.offsets, dtype=np.int64)
-    if hashed:
-        flat = sh_col.values.to_numpy(zero_copy_only=False).astype(
-            np.int64, copy=False
-        )
-    else:
-        flat = sh_col.values.to_pylist()
-    row_codes = np.fromiter(
-        (code_of[v] for v in doc_vals), dtype=np.int64, count=n
-    )
-    return uniq, offs, flat, row_codes
-
-
 def _md5_signatures(hvals, offs, row_codes, n, num_perm, seed):
     """Vectorized portable-MinHash signature matrix (n × num_perm
     int64) over md5_u32 shingle hashes ``hvals`` laid out per
-    ``offs``/``row_codes`` (see ``_doc_shingle_state``): a
+    ``offs``/``row_codes`` (a ``replay.Lists`` column and its row's
+    doc codes, as ``replay.gate`` decodes them): a
     per-permutation ``min((a·h+b) mod P)`` segmented fold — a, b < 2³¹
     and h < 2³² keep every product < 2⁶³, the same bound the Spark
     fold relies on. ``np.minimum.reduceat`` over the per-row segments
@@ -1141,7 +1052,7 @@ def _md5_band_candidates(hvals, offs, row_codes, n, num_perm, bands,
                          seed, max_pairs):
     """Numpy replay of the MinHash + banding candidate stage over
     precomputed md5_u32 shingle hashes ``hvals`` (int64, laid out per
-    ``offs``/``row_codes`` — see ``_doc_shingle_state``): signatures
+    ``offs``/``row_codes``, as ``_md5_signatures``): signatures
     from ``_md5_signatures``, banding by band-slice EQUALITY — what the
     SQL oracle twin joins on (the xxhash64 bucket of ``_band_rows`` is
     a pure transport encoding of the slice). Docs with zero shingles
@@ -1255,11 +1166,12 @@ def _cross_slice_candidates(sig_old, sig_new, slices, max_pairs):
     return np.unique(np.concatenate(parts))
 
 
-def _lsh_census_replay(at, num_perm, bands, seed, min_est_jaccard,
+def _lsh_census_replay(g, num_perm, bands, seed, min_est_jaccard,
                        exact_threshold):
     """Numpy replay of the LSH census (see ``lsh_census_eval``) over a
-    collected ``_doc_shingle_frame``. Returns the single result tuple,
-    or ``None`` to decline to the distributed composition. The shingle
+    ``_doc_shingle_frame`` as ``replay.gate`` decodes it. Returns the
+    single result row, or ``None`` to decline to the distributed
+    composition. The shingle
     arrays are SPARK-computed (the same expressions both distributed
     sides consume), so the replay's parity surface is only the md5_u32
     mirror, the integer permutation fold, and two IEEE double
@@ -1267,13 +1179,8 @@ def _lsh_census_replay(at, num_perm, bands, seed, min_est_jaccard,
     import numpy as np
 
     op = "lsh_census_eval"
-    state = _doc_shingle_state(at)
-    if isinstance(state, str):
-        return replay.decline(op, "null_or_duplicate_id", at.num_rows)
-    uniq, offs, flat, row_codes = state
-    n = len(uniq)
-    if n == 0:
-        return (0, 0, 0, 0, 0)
+    row_codes, offs, flat = g.cols["doc"], *g.cols["shingles"]
+    n = len(g.nodes)
     cell_codes = np.repeat(row_codes, np.diff(offs))
 
     # ---- shared cell tables (doc code, shingle) — shingles are
@@ -1289,7 +1196,7 @@ def _lsh_census_replay(at, num_perm, bands, seed, min_est_jaccard,
               for g in inv.values() if len(g) > 1]
     n_pairs_est = sum(len(g) * (len(g) - 1) // 2 for g in groups)
     if n_pairs_est > _PAIRS_DRIVER_MAX_PAIRS:
-        return None
+        return replay.decline(op, "pair_volume", n)
     e_keys = np.empty(0, dtype=np.int64)
     if groups:
         lens = np.array([len(g) for g in groups])
@@ -1340,13 +1247,13 @@ def _lsh_census_replay(at, num_perm, bands, seed, min_est_jaccard,
     n_both = len(e_set & l_set)
     n_exact = len(e_set)
     n_lsh = len(l_set)
-    return (
+    return [(
         n_both,
         n_exact - n_both,
         n_lsh - n_both,
         n_both * 1_000_000 // max(n_exact, 1),
         n_both * 1_000_000 // max(n_lsh, 1),
-    )
+    )]
 
 
 def connected_components(
@@ -1405,7 +1312,7 @@ def connected_components(
         ]
 
     def replayed(size=None):
-        return replay.graph(
+        return replay.gate(
             "connected_components", [both], ("src", "dst"),
             "node {id}, label {id}", components, size=size,
         )
@@ -1577,13 +1484,9 @@ def _simhash_replay_pairs(df, text_col, id_col, max_hamming):
     md5 token words (the same bits the distributed ``simhash_bits``
     fold consumes — the replay's python surface is the vote sum,
     banding and hamming on 0/1 ints, NO hashing and NO floats), or
-    ``None`` for the distributed path. Declines on NULL/duplicate ids,
-    NULL token arrays, unsupported id types, or bucket pair volume past
-    ``_PAIRS_DRIVER_MAX_PAIRS``."""
+    ``None`` for the distributed path. Besides the gate's rules it
+    declines on a bucket pair volume past ``_PAIRS_DRIVER_MAX_PAIRS``."""
     op = "simhash_near_dup_pairs_portable"
-    id_type = df.schema[id_col].dataType.simpleString()
-    if id_type not in _PAIRS_DRIVER_ID_TYPES:
-        return replay.decline(op, "id_type")
     from drune_spark.functions.partitioning import fan_out
 
     # Collect ONE uint64 per token — md5 halves packed by Spark as
@@ -1602,17 +1505,20 @@ def _simhash_replay_pairs(df, text_col, id_col, max_hamming):
             F.conv(F.substring(h, 1, 8), 16, 10).cast("long"), 32
         ).bitwiseOR(F.conv(F.substring(h, 9, 8), 16, 10).cast("long")),
     )
-    at = replay.collect(op, fan_out(df).select(
-        F.col(id_col).alias("doc"), packed.alias("tok64"),
-    ))
-    if at is None:
-        return None
-    state = _doc_shingle_state(at, hashed=True, col="tok64")
-    if isinstance(state, str):
-        return replay.decline(op, state, at.num_rows)
+    return replay.gate(
+        op, [fan_out(df).select(F.col(id_col).alias("doc"),
+                                packed.alias("tok64"))],
+        ("doc",), "id_a {id}, id_b {id}, hamming int",
+        lambda g: _simhash_pairs(op, g, max_hamming), codes=True,
+        unique=True,
+    )
+
+
+def _simhash_pairs(op, g, max_hamming):
+    """The SimHash replay kernel over the gate's decoded token words."""
     import numpy as np
 
-    uniq, offs, flat, row_codes = state
+    uniq, row_codes, (offs, flat) = g.nodes, g.cols["doc"], g.cols["tok64"]
     n = len(uniq)
     # Per-token bit matrix (LSB-first across the full 64-bit word ==
     # md5_bits64 element order), per-doc vote = 2·Σbits − n_tokens,
@@ -1643,10 +1549,8 @@ def _simhash_replay_pairs(df, text_col, id_col, max_hamming):
     a, b2 = ck // n, ck % n
     ham = (sig[a] != sig[b2]).sum(axis=1).astype(np.int32)
     keep = ham <= max_hamming
-    return _replay_frame(
-        df.sparkSession, id_type, uniq, {"id_a": a[keep], "id_b": b2[keep]},
-        hamming=("int", ham[keep]),
-    )
+    return {"id_a": uniq[a[keep]], "id_b": uniq[b2[keep]],
+            "hamming": ham[keep]}
 
 
 def simhash_near_dup_pairs_portable(
@@ -1709,7 +1613,10 @@ def simhash_near_dup_pairs_portable(
                 )
             ).alias("hamming"),
         )
-        .dropDuplicates(["id_a", "id_b"])
+        # a pair meets in up to 4 chunks; min() is deterministic even
+        # when a repeated id brings two signatures to one pair
+        .groupBy("id_a", "id_b")
+        .agg(F.min("hamming").alias("hamming"))
         .filter(F.col("hamming") <= max_hamming)
     )
 
@@ -2458,37 +2365,35 @@ def _incremental_replay(new_df, existing_df, text_col, id_col, num_perm,
     verdict frame from the shared numpy minhash kernel
     (``_md5_signatures`` + the asymmetric ``_cross_slice_candidates``
     banding), or ``None`` for the distributed batch-probe path. Its
-    cutoff counts the docs of BOTH frames; declines on NULL/duplicate
-    ids, NULL shingle arrays, unsupported id types, or a cross-bucket
-    pair volume past ``_PAIRS_DRIVER_MAX_PAIRS``. est = agree/num_perm
+    cutoff counts the docs of BOTH frames; besides the gate's rules it
+    declines on a cross-bucket pair volume past
+    ``_PAIRS_DRIVER_MAX_PAIRS``. est = agree/num_perm
     is the same exact dyadic double on both paths; n_matches counts
     the deduped candidate set exactly like the distributed
     dropDuplicates + groupBy."""
     op = "incremental_minhash_dedup"
-    id_type = new_df.schema[id_col].dataType.simpleString()
-    if (
-        id_type != existing_df.schema[id_col].dataType.simpleString()
-        or id_type not in _PAIRS_DRIVER_ID_TYPES
-    ):
-        return replay.decline(op, "id_type")
-    hit = replay.collect(
-        op,
-        _doc_shingle_frame(new_df, text_col, id_col, k, hashed=True),
-        _doc_shingle_frame(existing_df, text_col, id_col, k, hashed=True),
+
+    def side(df, name):
+        return _doc_shingle_frame(df, text_col, id_col, k, hashed=True).select(
+            F.col("doc").alias(name), F.col("shingles").alias(name + "_sh"))
+
+    return replay.gate(
+        op, [side(new_df, "new"), side(existing_df, "old")], ("new", "old"),
+        f"{id_col} {{id}}, n_matches bigint, best_est double, is_dup int",
+        lambda g: _incremental_verdicts(
+            op, g, num_perm, bands, seed, min_est_jaccard),
+        unique=True,
     )
-    if hit is None:
-        return None
-    st_new = _doc_shingle_state(hit[0], hashed=True)
-    st_old = _doc_shingle_state(hit[1], hashed=True)
-    if isinstance(st_new, str) or isinstance(st_old, str):
-        return replay.decline(
-            op, "null_or_duplicate_id", hit[0].num_rows + hit[1].num_rows
-        )
+
+
+def _incremental_verdicts(op, g, num_perm, bands, seed, min_est_jaccard):
+    """The incremental MinHash replay kernel: one verdict per new doc."""
     import numpy as np
 
-    uniq_n, offs_n, flat_n, rc_n = st_new
-    uniq_o, offs_o, flat_o, rc_o = st_old
-    n_new, n_old = len(uniq_n), len(uniq_o)
+    uniq_n, rc_n = np.unique(g.cols["new"], return_inverse=True)
+    rc_o = np.unique(g.cols["old"], return_inverse=True)[1]
+    (offs_n, flat_n), (offs_o, flat_o) = g.cols["new_sh"], g.cols["old_sh"]
+    n_new, n_old = len(rc_n), len(rc_o)
     sig_n = _md5_signatures(flat_n, offs_n, rc_n, n_new, num_perm, seed)
     sig_o = _md5_signatures(flat_o, offs_o, rc_o, n_old, num_perm, seed)
     ck = _cross_slice_candidates(
@@ -2506,12 +2411,8 @@ def _incremental_replay(new_df, existing_df, text_col, id_col, num_perm,
         ni, est = ni[keep], est[keep]
         np.add.at(n_matches, ni, 1)
         np.maximum.at(best, ni, est)
-    return _replay_frame(
-        new_df.sparkSession, id_type, uniq_n, {id_col: np.arange(n_new)},
-        n_matches=("bigint", n_matches),
-        best_est=("double", best),
-        is_dup=("int", (n_matches > 0).astype(np.int32)),
-    )
+    return {"id": uniq_n, "n_matches": n_matches, "best_est": best,
+            "is_dup": (n_matches > 0).astype(np.int32)}
 
 
 def incremental_minhash_dedup(
@@ -2648,30 +2549,25 @@ def containment_pairs(
     # both nonnegative, so int64 floor_divide == Spark div exactly,
     # and c·10⁶ ≤ cutoff·10⁶ < 2⁶³). Both directions of each unordered
     # pair are emitted, as in the join.
-    hit = _driver_pair_counts("containment_pairs", exploded, n_cells)
+    def containment(uniq, sizes, ac, bc, counts):
+        xs, ys = np.concatenate([ac, bc]), np.concatenate([bc, ac])
+        common = np.concatenate([counts, counts])
+        ppm = common * 1_000_000 // sizes[xs]
+        keep = ppm >= min_containment_ppm
+        return {"id_a": uniq[xs[keep]], "id_b": uniq[ys[keep]],
+                "n_common": common[keep], "size_a": sizes[xs[keep]],
+                "containment_ppm": ppm[keep]}
+
+    import numpy as np
+
+    hit = _pair_replay(
+        "containment_pairs", exploded, n_cells,
+        "id_a {id}, id_b {id}, n_common bigint, size_a bigint, "
+        "containment_ppm bigint", containment,
+    )
     if hit is not None:
-        id_type, uniq, sizes, ac, bc, counts = hit
         exploded.unpersist()
-        rows = []
-        if len(counts):
-            for xs, ys in ((ac, bc), (bc, ac)):
-                ppm = counts * 1_000_000 // sizes[xs]
-                keep = ppm >= min_containment_ppm
-                rows.extend(
-                    zip(
-                        uniq[xs[keep]].tolist(),
-                        uniq[ys[keep]].tolist(),
-                        counts[keep].tolist(),
-                        sizes[xs[keep]].tolist(),
-                        ppm[keep].tolist(),
-                    )
-                )
-        return replay.frame(
-            df.sparkSession,
-            rows,
-            f"id_a {id_type}, id_b {id_type}, n_common bigint, "
-            f"size_a bigint, containment_ppm bigint",
-        )
+        return hit
     sizes = exploded.groupBy("doc").agg(
         F.count(F.lit(1)).alias("n_shingles")
     )

@@ -19,15 +19,17 @@ teleport base.
 Replay contract. Each iterative operator (and ``connected_components``
 in dedup.py) also replays on the driver below its ``replay.CUTOFFS``
 entry, where the distributed rounds would be job sequencing rather than
-work. Every replay enters through ``replay.graph``, which applies the
-shared rules once: id columns of one type among int, bigint and string,
-the bounded fetch, a NULL id declines, an empty input gives the empty
-result typed by the node type, and results are literal frames with a
-DDL schema. Anything else runs distributed, and both paths return the
-same schema and rows (``tests/test_replay.py`` checks every graph
-replay under ``replay.distributed()``). A kernel keeps only its own
-rules: parameters, weight and overflow guards, duplicate assignments
-and id domains.
+work. Every replay enters through ``replay.gate``, the front end of
+all 21 replays, which applies the shared rules once: id columns of one
+type among int, bigint and string, the bounded fetch, a NULL id
+declines, an empty input gives the empty result typed by the node
+type, and results are held frames of a DDL schema. Anything else runs
+distributed, and both paths return the same schema and rows
+(``tests/test_replay.py`` checks every graph replay under
+``replay.distributed()``). A kernel keeps only its own rules:
+parameters, weight and overflow guards, duplicate assignments and id
+domains. ``label_propagation``'s integer label encoding takes int and
+bigint ids only; any other id type raises ``TypeError`` in both modes.
 """
 
 from __future__ import annotations
@@ -130,7 +132,7 @@ def _pagerank_driver_replay(
             rank = base_vec + (int(damping_pct) * c_sum) // 100
         return list(zip(nodes.tolist(), rank.tolist()))
 
-    return replay.graph(
+    return replay.gate(
         op, [edges.select("src", "dst", "w")], ("src", "dst"),
         "node {id}, rank_int bigint", ranks, codes=True,
     )
@@ -266,7 +268,7 @@ def _bfs_driver_result(
             for v in g.nodes[level].tolist()
         ]
 
-    return replay.graph(
+    return replay.gate(
         op,
         [
             edges.select(F.col(src).alias("a"), F.col(dst).alias("b")),
@@ -413,7 +415,7 @@ def _kcore_driver_result(
         keep = np.flatnonzero(alive)
         return list(zip(g.nodes[keep].tolist(), deg[keep].tolist()))
 
-    return replay.graph(
+    return replay.gate(
         op, [edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))],
         ("a", "b"), "node {id}, degree bigint", peel, codes=True,
     )
@@ -474,9 +476,9 @@ def _lpa_driver_result(
     keys, the argmax via the SAME integer encoding ``max(cnt·K +
     (K−1−label))`` the distributed loop aggregates. Its own declines:
     ``rounds < 1`` (the distributed path keeps the node type for
-    ``label`` there), string ids and ids outside [0, 2³³) — the
-    encoding's domain, where the ANSI distributed path is the one that
-    defines overflow behavior."""
+    ``label`` there) and ids outside [0, 2³³) — the encoding's domain,
+    where the ANSI distributed path is the one that defines overflow
+    behavior."""
     op = "label_propagation"
     if int(rounds) < 1:
         return replay.decline(op, "params")
@@ -512,10 +514,9 @@ def _lpa_driver_result(
         keep = np.flatnonzero(present)
         return list(zip(nodes[keep].tolist(), label[keep].tolist()))
 
-    return replay.graph(
+    return replay.gate(
         op, [edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))],
         ("a", "b"), "node {id}, label bigint", propagate, codes=True,
-        id_types=("int", "bigint"),
     )
 
 
@@ -547,8 +548,15 @@ def label_propagation(
 
     Returns (node, label) after ``rounds`` rounds. Below its
     ``replay.CUTOFFS`` entry the rounds replay on the driver in exact
-    int64 numpy (see ``_lpa_driver_result``).
+    int64 numpy (see ``_lpa_driver_result``). The encoding is defined
+    for integer ids only: any other id type raises ``TypeError`` before
+    any Spark job.
     """
+    for c in (src, dst):
+        t = edges.schema[c].dataType.simpleString()
+        if t not in ("int", "bigint"):
+            raise TypeError(
+                f"label_propagation needs int or bigint ids; {c} is {t}")
     hit = _lpa_driver_result(edges, rounds, src, dst)
     if hit is not None:
         return hit
@@ -645,7 +653,7 @@ def k_truss(
         final = _support(cur_edges)
         return [(u, v, final[(u, v)]) for u, v in cur_edges]
 
-    hit = replay.graph(
+    hit = replay.gate(
         "k_truss", [e], ("u", "v"), "src {id}, dst {id}, support bigint",
         peel,
     )
@@ -840,7 +848,7 @@ def anf_reach(
             out_rows.append((r, *_metrics(masks)))
         return out_rows
 
-    hit = replay.graph(
+    hit = replay.gate(
         "anf_reach", [e0], ("a", "b"),
         "radius int, cells bigint, reach_mass bigint", reach,
         empty=[(r, 0, 0) for r in range(rounds + 1)],
@@ -975,7 +983,7 @@ def _modularity_driver_result(
             rows.append((c, l2, d, q))
         return rows
 
-    return replay.graph(
+    return replay.gate(
         op,
         [
             edges.select(F.col(src).alias("a"), F.col(dst).alias("b")),
@@ -1223,7 +1231,7 @@ def hits_int(
         int(spark.conf.get("spark.sql.shuffle.partitions")),
     ))
     e = edges.select("src", "dst", "w").persist()
-    hit = replay.graph(
+    hit = replay.gate(
         "hits_int", [e], ("src", "dst"), _HITS_SCHEMA,
         lambda g: _hits_replay(g, n_iters, scale), codes=True,
     )

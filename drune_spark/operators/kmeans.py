@@ -108,7 +108,7 @@ def _ivf_driver_result(
     with_stats: bool,
 ):
     """Driver replay gate for ``ivf_train``: returns the final
-    (centroid_id, centroid, n_members, sse) rows when the Lloyd loop
+    (centroid_id, centroid, n_members, sse) frame when the Lloyd loop
     should run on the driver, or ``None`` for the distributed loop.
 
     Parity is structural: the quantized codes are collected AFTER the
@@ -119,88 +119,80 @@ def _ivf_driver_result(
     members, the round-half-up mean ``(2s + n) // (2n)`` (numpy int64
     floor division == the python ``//`` the distributed control loop
     itself uses), scatter-added SSE. Ragged/mismatched dims, NULL-bearing
-    codes, non-integer ids or out-of-budget sizes decline to the
-    distributed path. The cutoff counts code cells (rows × dim), so the
-    gate compares the cached frame's count itself."""
+    codes or out-of-budget sizes decline to the distributed path, as
+    do the gate's id rules. The cutoff counts code cells (rows × dim):
+    the gate admits the cached frame's count times ``dim``."""
     op = "ivf_train"
-    if q.schema[id_col].dataType.simpleString() not in ("bigint", "int"):
-        return replay.decline(op, "id_type")
-    n = q.count()
-    if n == 0:
-        return replay.decline(op, "empty", 0)
-    if not replay.admit(op, n * dim):
-        return None
-    # distance-matrix op budget per round (n·k·dim int64 mults)
-    if n * max(1, k) * dim > 512_000_000:
-        return replay.decline(op, "op_budget", n * dim)
-    import numpy as np
 
-    at = q.toArrow()
-    ids = at.column(id_col).combine_chunks().to_numpy(
-        zero_copy_only=False)
-    qv = at.column("qv").combine_chunks()
-    offs = np.asarray(qv.offsets, dtype=np.int64)
-    lens = np.diff(offs)
-    if (lens != dim).any():
-        return replay.decline(op, "ragged_dim", n * dim)
-    flat = qv.values.to_numpy(zero_copy_only=False)
-    flat = flat[offs[0]:offs[-1]]
-    if flat.dtype != np.int64:  # NULL elements surface as float
-        return replay.decline(op, "null_code", n * dim)
-    codes = flat.reshape(int(n), dim)
-    if ids.dtype.kind not in "iu":
-        return replay.decline(op, "null_id", n * dim)
-    mmax = int(np.abs(codes).max(initial=0))
-    # Bound EVERY int64 sum by the actual sizes, not the default
-    # cutoff: dist ≤ dim·(2M)² per row and SSE ≤ n·dim·(2M)², so
-    # require n·dim·4M² < 2⁶² (python-int arithmetic — the guard
-    # itself cannot overflow). Past it the distributed ANSI path is
-    # the one that raises loudly instead of wrapping.
-    if mmax > 0 and int(n) * dim * 4 * mmax * mmax >= (1 << 62):
-        return replay.decline(op, "overflow", n * dim)
-    order = np.argsort(ids)
-    ids_s, codes_s = ids[order].astype(np.int64), codes[order]
-    kk = min(int(k), int(n))
-    # Duplicate ids among the k lowest seeds: the distributed rebuild
-    # keys its accumulator by cid and COLLAPSES both entries into one
-    # shared mean, while this replay would keep two independently
-    # updating centroid rows — decline to the distributed path.
-    if len(np.unique(ids_s[:kk])) != kk:
-        return replay.decline(op, "duplicate_id", n * dim)
-    cids = ids_s[:kk]
-    cents = codes_s[:kk].copy()
+    def lloyd(g):
+        import numpy as np
 
-    def _assign(c):
-        # per-centroid loop: n·dim transients instead of an n·k·dim
-        # difference tensor (k=256 at the cell cutoff would be ~4 GB)
-        dist = np.empty((len(codes_s), len(c)), dtype=np.int64)
-        for j in range(len(c)):
-            d = codes_s - c[j]
-            dist[:, j] = (d * d).sum(axis=1)
-        a = dist.argmin(axis=1)  # first min == lowest centroid_id
-        return a, dist[np.arange(len(a)), a]
+        n, ids, (offs, flat) = g.n_rows, g.cols[id_col], g.cols["qv"]
+        # distance-matrix op budget per round (n·k·dim int64 mults)
+        if n * max(1, k) * dim > 512_000_000:
+            return replay.decline(op, "op_budget", n * dim)
+        if (np.diff(offs) != dim).any():
+            return replay.decline(op, "ragged_dim", n * dim)
+        if flat.dtype != np.int64:  # NULL elements surface as objects
+            return replay.decline(op, "null_code", n * dim)
+        codes = flat.reshape(n, dim)
+        mmax = int(np.abs(codes).max(initial=0))
+        # Bound EVERY int64 sum by the actual sizes, not the default
+        # cutoff: dist ≤ dim·(2M)² per row and SSE ≤ n·dim·(2M)², so
+        # require n·dim·4M² < 2⁶² (python-int arithmetic — the guard
+        # itself cannot overflow). Past it the distributed ANSI path is
+        # the one that raises loudly instead of wrapping.
+        if mmax > 0 and int(n) * dim * 4 * mmax * mmax >= (1 << 62):
+            return replay.decline(op, "overflow", n * dim)
+        order = np.argsort(ids)
+        ids_s, codes_s = ids[order].astype(np.int64), codes[order]
+        kk = min(int(k), int(n))
+        # Duplicate ids among the k lowest seeds: the distributed rebuild
+        # keys its accumulator by cid and COLLAPSES both entries into one
+        # shared mean, while this replay would keep two independently
+        # updating centroid rows — decline to the distributed path.
+        if len(np.unique(ids_s[:kk])) != kk:
+            return replay.decline(op, "duplicate_id", n * dim)
+        cids = ids_s[:kk]
+        cents = codes_s[:kk].copy()
 
-    for _ in range(int(n_iters)):
-        asg, _ = _assign(cents)
-        cnt = np.bincount(asg, minlength=kk).astype(np.int64)
-        sums = np.zeros((kk, dim), dtype=np.int64)
-        np.add.at(sums, asg, codes_s)
-        nz = cnt > 0
-        cents[nz] = (2 * sums[nz] + cnt[nz, None]) // (
-            2 * cnt[nz, None]
-        )
-    if with_stats:
-        asg, dmin = _assign(cents)
-        cnt = np.bincount(asg, minlength=kk).astype(np.int64)
-        sse = np.zeros(kk, dtype=np.int64)
-        np.add.at(sse, asg, dmin)
-    else:
-        cnt = sse = np.zeros(kk, dtype=np.int64)
-    return [
-        (int(cids[j]), [int(x) for x in cents[j]], int(cnt[j]),
-         int(sse[j]))
-        for j in range(kk)
-    ]
+        def _assign(c):
+            # per-centroid loop: n·dim transients instead of an n·k·dim
+            # difference tensor (k=256 at the cell cutoff would be ~4 GB)
+            dist = np.empty((len(codes_s), len(c)), dtype=np.int64)
+            for j in range(len(c)):
+                d = codes_s - c[j]
+                dist[:, j] = (d * d).sum(axis=1)
+            a = dist.argmin(axis=1)  # first min == lowest centroid_id
+            return a, dist[np.arange(len(a)), a]
+
+        for _ in range(int(n_iters)):
+            asg, _ = _assign(cents)
+            cnt = np.bincount(asg, minlength=kk).astype(np.int64)
+            sums = np.zeros((kk, dim), dtype=np.int64)
+            np.add.at(sums, asg, codes_s)
+            nz = cnt > 0
+            cents[nz] = (2 * sums[nz] + cnt[nz, None]) // (
+                2 * cnt[nz, None]
+            )
+        if with_stats:
+            asg, dmin = _assign(cents)
+            cnt = np.bincount(asg, minlength=kk).astype(np.int64)
+            sse = np.zeros(kk, dtype=np.int64)
+            np.add.at(sse, asg, dmin)
+        else:
+            cnt = sse = np.zeros(kk, dtype=np.int64)
+        return [
+            (int(cids[j]), [int(x) for x in cents[j]], int(cnt[j]),
+             int(sse[j]))
+            for j in range(kk)
+        ]
+
+    return replay.gate(
+        op, [q], (id_col,),
+        "centroid_id long, centroid array<long>, n_members long, sse long",
+        lloyd, id_types=("int", "bigint"), size=lambda: q.count() * dim,
+    )
 
 
 def ivf_train(
@@ -239,12 +231,7 @@ def ivf_train(
             q, n_centroids, n_iters, dim, id_col, with_stats,
         )
         if hit is not None:
-            return replay.frame(
-                spark,
-                hit,
-                "centroid_id long, centroid array<long>, "
-                "n_members long, sse long",
-            )
+            return hit
         seeds = q.orderBy(F.col(id_col)).limit(n_centroids).collect()
         centroids = [
             (int(r[id_col]), [int(v) for v in r["qv"]]) for r in seeds

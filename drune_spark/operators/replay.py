@@ -4,22 +4,24 @@ Twenty-one operators also carry a numpy/python "driver replay" of their
 semantics that runs below a size cutoff, where the distributed plan
 would spend its time scheduling jobs rather than working (the F1 Query
 centralized-vs-distributed choice, made per call from the input size).
-Each operator keeps its own decline rules (duplicate ids, parameters,
-overflow bounds); this module holds what the gates share: the cutoffs,
-the bounded collect, one DEBUG log record per decision (op, path,
-reason, size, cutoff; nothing is built while the logger is off and no
-record runs a Spark job), ``distributed()``, the test switch that
-forces the distributed path, and ``graph``, the front end of the ten
-graph replays with their shared id rules. A decline after a successful
-collect logs a second record, which supersedes the replay one.
+This module holds what the gates share: the cutoffs, the bounded
+collect, one DEBUG log record per decision (op, path, reason, size,
+cutoff; nothing is built while the logger is off and no record runs a
+Spark job), ``distributed()``, the test switch that forces the
+distributed path, and ``gate``, the front end all 21 replays enter
+through, with the id-type, NULL-id, duplicate-id and empty-input rules
+and the one result builder, ``frame``. Each kernel keeps only its own
+declines (parameters, budgets, overflow bounds). A decline after a
+successful collect logs a second record, which supersedes the replay
+one.
 
 A replay's result already sits on the driver when its frame is built,
-so the builders (``frame`` and dedup's ``_replay_frame``) ``hold`` the
-Arrow table beside the frame. A gate fed that very frame takes the
-``held`` table instead of fetching it back through Spark: no persist,
-no count, no collect job. Held tables are keyed weakly by the frame
-object, so one lives exactly as long as its frame; a frame derived
-from a held one (a select, a filter) is not held.
+so ``frame`` ``hold``s the Arrow table beside the frame. A gate fed
+that very frame takes the ``held`` table instead of fetching it back
+through Spark: no persist, no count, no collect job. Held tables are
+keyed weakly by the frame object, so one lives exactly as long as its
+frame; a frame derived from a held one (a select, a filter) is not
+held.
 """
 
 from __future__ import annotations
@@ -30,6 +32,8 @@ from contextlib import contextmanager
 from typing import NamedTuple
 
 from pyspark import StorageLevel
+
+from drune_spark.functions.partitioning import LITERAL_ROWS, local_frame
 
 log = logging.getLogger(__name__)
 
@@ -156,62 +160,119 @@ def collect(op: str, *frames):
     return tables[0] if len(tables) == 1 else tuple(tables)
 
 
-# The id types a graph replay takes; any other runs distributed.
+# The id types a replay takes; any other runs distributed.
 ID_TYPES = ("int", "bigint", "string")
 
 
-class Graph(NamedTuple):
-    """A graph replay's input: ``cols`` maps each fetched column to a
-    numpy array (strings and NULL-bearing columns as object arrays),
-    the id columns as codes into ``nodes`` (the sorted distinct ids)
-    when the kernel asked for codes; ``n_rows`` counts the first
-    frame's rows."""
+class Lists(NamedTuple):
+    """A fetched list column: row ``r`` owns ``values[offs[r]:offs[r+1]]``."""
+
+    offs: object
+    values: object
+
+
+class Input(NamedTuple):
+    """A replay's fetched input: ``cols`` maps each column to a numpy
+    array (strings and NULL-bearing columns as object arrays; a list
+    column as ``Lists``), the id columns as codes into ``nodes`` (the
+    sorted distinct ids) when the gate was asked for codes; ``n_rows``
+    counts the first frame's rows."""
 
     cols: dict
     nodes: object
     n_rows: int
 
 
-def frame(spark, rows, schema: str):
-    """A replay result as a literal frame of DDL ``schema``, held. A
-    literal frame's size estimate is its real size, so a caller's join
-    over it plans a broadcast from the start instead of racing AQE for
-    one."""
+def frame(spark, data, schema: str):
+    """A replay result as a held frame of DDL ``schema``; ``data`` is a
+    list of rows or a dict of columns (numpy arrays or lists) in schema
+    order. Up to ``LITERAL_ROWS`` rows it is a literal frame, whose size
+    estimate is its real size, so a caller's join over it plans a
+    broadcast from the start instead of racing AQE for one; a larger
+    result is one Arrow frame, never a pickled ``parallelize`` of rows."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    fields = to_arrow_schema(StructType.fromDDL(schema))
+    if isinstance(data, dict):
+        cols = list(data.values())
+    else:
+        data = list(data)
+        cols = [list(c) for c in zip(*data)] or [[]] * len(fields)
+    table = pa.table([pa.array(c, type=f.type)
+                      for f, c in zip(fields, cols)], schema=fields)
+    if table.num_rows > LITERAL_ROWS:
+        df = spark.createDataFrame(table, schema=schema)
+    else:
+        if isinstance(data, dict):
+            data = zip(*(c.to_pylist() for c in table.columns))
+        df = local_frame(spark, data, schema)
+    return hold(df, table)
+
+
+def _is_list(t) -> bool:
     import pyarrow as pa
 
-    from drune_spark.functions.partitioning import local_frame
-
-    rows = list(rows)
-    df = local_frame(spark, rows, schema)
-    cols = list(zip(*rows)) or [()] * len(df.columns)
-    return hold(df, pa.table(dict(zip(df.columns, map(list, cols)))))
+    return pa.types.is_list(t) or pa.types.is_large_list(t)
 
 
-def graph(op: str, frames, ids, schema: str, kernel, *, codes=False,
-          id_types=ID_TYPES, label=None, size=None, empty=()):
-    """The front end of every graph replay: the rules they share, so
-    both execution modes see the same inputs the same way.
+def _numpy(a):
+    """An Arrow column as numpy; a list column as ``Lists``."""
+    import numpy as np
 
-    1. The ``ids`` columns (across ``frames``) share one type among
-       ``id_types``, and the ``label`` column, if any, has an id type
-       of its own; otherwise ``op`` declines ``id_type`` before any
-       Spark job.
+    if _is_list(a.type):
+        a = a.combine_chunks()
+        offs = np.asarray(a.offsets, dtype=np.int64)
+        values = a.values.slice(offs[0], offs[-1] - offs[0])
+        return Lists(offs - offs[0], _numpy(values))
+    if a.null_count:
+        return np.asarray(a.to_pylist(), dtype=object)
+    return a.to_numpy(zero_copy_only=False)
+
+
+def gate(op: str, frames, ids, schema: str, kernel, *, codes=False,
+         unique=False, id_types=ID_TYPES, label=None, size=None,
+         empty=(), build=frame):
+    """The front end of every replay: the rules they share, so both
+    execution modes see the same inputs the same way.
+
+    1. The ``ids`` columns (across ``frames``; a list column by its
+       element type) share one type among ``id_types``, and the
+       ``label`` column, if any, has an id type of its own; otherwise
+       ``op`` declines ``id_type`` before any Spark job.
     2. The bounded fetch: when every frame is ``held``, ``admit`` of
        their total rows and no Spark job; else ``collect``, or, when
-       the caller already counted the rows (``size``), ``admit`` plus
-       one Arrow fetch of each frame.
+       the caller counts the input itself (``size``: its count, or a
+       callable that counts after rule 1), ``admit`` plus one Arrow
+       fetch of each frame.
     3. A NULL id declines ``null_id`` (read from Arrow, no job): the
        distributed joins drop NULL keys while its unions keep them.
-    4. When every frame is empty the result is the ``empty`` rows.
-    5. Otherwise ``kernel(Graph)`` returns the result rows, or ``None``
-       after declining for a reason of its own.
+       With ``unique``, an id repeated within one ``ids`` column
+       declines ``duplicate_id``; a NULL list row declines
+       ``null_list``.
+    4. When every frame is empty the result is a ``frame`` of the
+       ``empty`` rows.
+    5. Otherwise the columns reach ``kernel(Input)`` as numpy, the ids
+       as codes into the sorted distinct ids when ``codes``. The
+       kernel returns its result, or ``None`` after declining for a
+       reason of its own.
+    6. ``build(spark, result, schema)`` makes the result frame; the
+       default, ``frame``, takes rows or columns.
 
-    Returns the result ``frame``, or ``None``: run distributed."""
+    Returns that frame (``schema`` with ``{id}`` and ``{label}``
+    formatted to the input's types), or ``None``: run distributed."""
     cols = {c: f for f in frames for c in f.columns}
-    types = {cols[c].schema[c].dataType.simpleString() for c in ids}
+
+    def type_of(c):
+        t = cols[c].schema[c].dataType
+        return getattr(t, "elementType", t).simpleString()
+
+    types = {type_of(c) for c in ids}
     id_type = types.pop() if len(types) == 1 else None
-    label_type = label and cols[label].schema[label].dataType.simpleString()
-    if id_type not in id_types or (label and label_type not in ID_TYPES):
+    label_type = label and type_of(label)
+    if (ids and id_type not in id_types) or (
+            label and label_type not in ID_TYPES):
         return decline(op, "id_type")
     schema = schema.format(id=id_type, label=label_type)
     tables = [held(f) for f in frames]
@@ -224,30 +285,37 @@ def graph(op: str, frames, ids, schema: str, kernel, *, codes=False,
             return None
         if len(frames) == 1:
             tables = (tables,)
-    elif admit(op, size):
+    elif admit(op, size() if callable(size) else size):
         tables = [f.toArrow() for f in frames]
     else:
         return None
+    import pyarrow.compute as pc
+
     arrow = {c: t.column(c) for t in tables for c in t.column_names}
     n_rows = tables[0].num_rows
-    if any(arrow[c].null_count for c in ids):
+    id_cols = [pc.list_flatten(arrow[c]) if _is_list(arrow[c].type)
+               else arrow[c] for c in ids]
+    if any(a.null_count for a in id_cols):
         return decline(op, "null_id", n_rows)
+    if unique and any(pc.count_distinct(a).as_py() < len(a)
+                      for a in id_cols):
+        return decline(op, "duplicate_id", n_rows)
+    if any(a.null_count for a in arrow.values() if _is_list(a.type)):
+        return decline(op, "null_list", n_rows)
     spark = frames[0].sparkSession
     if not any(t.num_rows for t in tables):
         return frame(spark, empty, schema)
     import numpy as np
 
-    arrays = {
-        c: np.asarray(a.to_pylist(), dtype=object) if a.null_count
-        else a.to_numpy(zero_copy_only=False)
-        for c, a in arrow.items()
-    }
+    arrays = {c: _numpy(a) for c, a in arrow.items()}
     nodes = None
     if codes:
-        nodes = np.unique(np.concatenate([arrays[c] for c in ids]))
+        nodes = np.unique(np.concatenate([
+            getattr(arrays[c], "values", arrays[c]) for c in ids]))
         for c in ids:
-            arrays[c] = np.searchsorted(nodes, arrays[c])
-    rows = kernel(Graph(arrays, nodes, n_rows))
-    if rows is None:
-        return None
-    return frame(spark, rows, schema)
+            a = arrays[c]
+            arrays[c] = (Lists(a.offs, np.searchsorted(nodes, a.values))
+                         if isinstance(a, Lists)
+                         else np.searchsorted(nodes, a))
+    out = kernel(Input(arrays, nodes, n_rows))
+    return None if out is None else build(spark, out, schema)

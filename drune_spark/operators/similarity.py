@@ -1208,8 +1208,6 @@ def _nsw_driver_rows(
     enc_mod = 1 << 33
     shift = 1_000_000
     n, d = V.shape
-    if n == 0:
-        return []
     if bool((ids < 0).any()):
         return None  # % / encode arithmetic assumes nonnegative ids
 
@@ -1377,40 +1375,35 @@ def nsw_greedy_search(
     # ~0.1 s scheduling latency each for a corpus that fits one Arrow
     # transfer. Below the row cutoff (replay.CUTOFFS, 5000 rows — n·d
     # doubles plus n²/(2·n_cells) pair cosines is the driver-compute
-    # class there) the whole thing replays on the
-    # driver bit-exactly (see _nsw_driver_rows); above it, or when the
-    # replay declines (ragged dims, zero norms, negative ids), the
+    # class there) the whole thing replays on the driver bit-exactly
+    # (see _nsw_driver_rows); above it, or when the replay declines
+    # (ragged dims, NULL elements, zero norms, negative ids), the
     # distributed path below runs unchanged.
-    tbl = replay.collect("nsw_greedy_search", emb.select(
-        F.col(id_col).alias("nid"),
-        to_double_array(F.col(vec_col)).alias("v"),
-    ))
-    if tbl is not None:
+    def replayed(g):
         import numpy as np
 
-        n_rows = tbl.num_rows
-        ids = tbl.column("nid").combine_chunks().to_numpy(
-            zero_copy_only=False
-        ).astype(np.int64)
-        vcol = tbl.column("v").combine_chunks()
-        lens = np.diff(np.asarray(vcol.offsets, dtype=np.int64))
+        ids, (offs, values) = g.cols["nid"], g.cols["v"]
+        lens = np.diff(offs)
         rows = None
-        if n_rows == 0 or (len(lens) and (lens == lens[0]).all()):
-            V = (
-                vcol.values.to_numpy(zero_copy_only=False)
-                .astype(np.float64, copy=False)
-                .reshape(n_rows, int(lens[0]) if len(lens) else 0)
-            )
+        # a NULL element makes ``values`` an object array
+        if values.dtype != object and (lens == lens[0]).all():
+            V = values.astype(np.float64).reshape(g.n_rows, int(lens[0]))
             rows = _nsw_driver_rows(
-                ids, V, n_cells, m_edges, hops, query_mod
-            )
-        if rows is not None:
-            return replay.frame(
-                emb.sparkSession,
-                rows,
-                "query_id bigint, node bigint, cos_micro bigint",
-            )
-        replay.decline("nsw_greedy_search", "vector_domain", n_rows)
+                ids.astype(np.int64), V, n_cells, m_edges, hops, query_mod)
+        if rows is None:
+            return replay.decline("nsw_greedy_search", "vector_domain",
+                                  g.n_rows)
+        return rows
+
+    hit = replay.gate(
+        "nsw_greedy_search",
+        [emb.select(F.col(id_col).alias("nid"),
+                    to_double_array(F.col(vec_col)).alias("v"))],
+        ("nid",), "query_id {id}, node bigint, cos_micro bigint", replayed,
+        unique=True, id_types=("int", "bigint"),
+    )
+    if hit is not None:
+        return hit
 
     c = fan_out(emb).select(
         F.col(id_col).alias("nid"),
@@ -1528,8 +1521,9 @@ def nsw_greedy_search(
     if entry is None:
         for f in (c, ca, edges, queries):
             f.unpersist()
+        id_t = c.schema["nid"].dataType.simpleString()
         return emb.sparkSession.createDataFrame(
-            [], "query_id bigint, node bigint, cos_micro bigint"
+            [], f"query_id {id_t}, node bigint, cos_micro bigint"
         )
     # Eager materialization BEFORE the walk: each hop consumes `state`
     # twice (candidate join + move-if-better left join), so a lazy

@@ -59,6 +59,15 @@ DEFAULT_CONF = {
 }
 
 
+def default_driver_mem() -> str:
+    """The driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: a
+    quarter of physical memory, capped at 32g — 32g on a 128 GiB box,
+    4g on a 16 GiB one, where a fixed 32g let the JVM grow until the
+    kernel killed it."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(32 << 10, total // 4 >> 20)}m"
+
+
 def get_spark(
     app_name: str = "drune_spark",
     master: Optional[str] = None,
@@ -70,10 +79,11 @@ def get_spark(
     )
     conf = {**DEFAULT_CONF, **(options or {})}
     # Driver heap: with no spark-defaults.conf the local-mode JVM runs
-    # the 1 GiB -Xmx DEFAULT on this 128 GiB box — the root cause of
-    # the whole marathon-cache OOM family (BENCH_r04 rc=1, the
+    # the 1 GiB -Xmx DEFAULT — the root cause of the whole
+    # marathon-cache OOM family on a 128 GiB box (BENCH_r04 rc=1, the
     # scale_curve heap crashes): 32 executor threads + accumulated
-    # persist marks simply don't fit in 1 GiB. Builder-time only —
+    # persist marks simply don't fit in 1 GiB. The default is derived
+    # from the machine (``default_driver_mem``). Builder-time only —
     # spark.driver.memory is immutable on a live session, so it must
     # NOT be in DEFAULT_CONF (tune_session would try to set it and
     # throw CANNOT_MODIFY). No effect when a session already exists
@@ -81,7 +91,7 @@ def get_spark(
     # harness.
     conf.setdefault(
         "spark.driver.memory",
-        os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem(),
     )
     if HAS_DELTA:
         # Auto-enable Delta when delta-spark is installed: the writers'

@@ -5,9 +5,9 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# The session's default driver heap (32g) lets the test JVM grow past the
-# RAM of a small box, where the kernel kills it and every later Spark
-# test fails. 4g holds the whole suite; children (CLI tests) inherit it.
+# The session's default driver heap (a quarter of RAM, up to 32g) lets
+# the test JVM of a large box grow past what the suite needs; 4g holds
+# the whole suite on any box. Children (CLI tests) inherit it.
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
 
 

@@ -154,3 +154,19 @@ class TestHelpers:
             assert merged[key] == value
         for key in base:
             assert key in merged
+
+
+class TestDriverMemory:
+    @pytest.mark.parametrize("gib, want", [
+        (128, "32768m"), (256, "32768m"), (16, "4096m"), (2, "512m")])
+    def test_default_is_a_quarter_of_ram_capped_at_32g(
+        self, monkeypatch, gib, want
+    ):
+        """No JVM starts: the default is plain arithmetic on sysconf."""
+        import os
+
+        from drune_spark.session import default_driver_mem
+
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": (gib << 30) // 4096}
+        monkeypatch.setattr(os, "sysconf", pages.__getitem__)
+        assert default_driver_mem() == want

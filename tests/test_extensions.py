@@ -391,13 +391,16 @@ class TestDedup:
                    for r in fast)
 
     def test_pair_counts_arrow_matches_python(self, spark):
-        """The vectorized Arrow/numpy pair counter must produce the
+        """The vectorized numpy pair counter must produce the
         identical (pair -> count) and (doc -> size) maps as the
         Counter/combinations fallback, including string ids."""
+        import numpy as np
+
+        from drune_spark.operators import replay
         from drune_spark.operators.dedup import (
             _grouped_doc_arrays,
             _pair_counts,
-            _pair_counts_arrow,
+            _pair_counts_codes,
             shingle_cells,
         )
 
@@ -413,7 +416,11 @@ class TestDedup:
             )
             cells = shingle_cells(docs, "text", "doc_id", 2)
             g = _grouped_doc_arrays(cells)
-            uniq, sizes, ac, bc, counts = _pair_counts_arrow(g)
+            ds = replay._numpy(g.toArrow().column("ds"))
+            uniq = np.unique(ds.values)
+            sizes, ac, bc, counts = _pair_counts_codes(
+                ds._replace(values=np.searchsorted(uniq, ds.values)),
+                len(uniq))
             szs, common = _pair_counts(g.collect())
             assert {
                 (uniq[a].item() if hasattr(uniq[a], "item") else uniq[a],

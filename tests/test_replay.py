@@ -1,8 +1,8 @@
 """The replay module: the bounded collect, the decision records and the
 ``distributed()`` switch, plus the edge cases where the two execution
 modes used to disagree (empty inputs, NULL ids, a corpus that runs out
-of pairs), and a differential of every graph replay against its
-distributed path."""
+of pairs), and a differential of every replay, graph and non-graph,
+against its distributed path."""
 
 import logging
 
@@ -150,6 +150,19 @@ class TestModeEdgeCases:
         assert out == (True, True)
         assert jobs == []
 
+    @pytest.mark.parametrize("id_type", ["smallint", "date"])
+    def test_hits_int_empty_other_id_types(self, spark, both_modes, id_type):
+        """Ids outside replay.ID_TYPES run distributed in both modes; an
+        empty edge list returns no rows with ``node`` typed as its ids."""
+        from drune_spark.operators.graph import hits_int
+
+        edges = spark.createDataFrame(
+            [], f"src {id_type}, dst {id_type}, w bigint")
+        fast, slow = both_modes(lambda: _outcome(hits_int(edges)))
+        assert fast == slow
+        assert fast == ([("node", id_type), ("kind", "string"),
+                         ("score_int", "bigint")], [])
+
     @pytest.mark.parametrize("trainer", ["bpe_train", "wordpiece_train"])
     def test_trainers_stop_when_pairs_run_out(
         self, spark, both_modes, trainer
@@ -172,6 +185,30 @@ class TestModeEdgeCases:
         assert fast == slow == []
 
 
+    def test_label_propagation_rejects_string_ids(
+        self, spark, both_modes, jobs_in
+    ):
+        """Non-numeric string ids (a 3-node path plus a pair) raise
+        TypeError naming the column in both modes before any Spark
+        job; the distributed loop used to fail partway with
+        CAST_INVALID_INPUT at ``K - 1 - label``."""
+        from drune_spark.operators.graph import label_propagation
+
+        pairs = [(1, 2), (2, 3), (10, 11)]
+        sym = [(f"n{a}", f"n{b}") for a, b in pairs]
+        edges = spark.createDataFrame(
+            sym + [(b, a) for a, b in sym], "src string, dst string")
+
+        def build():
+            with pytest.raises(TypeError, match="src is string"):
+                label_propagation(edges, rounds=2)
+            return True
+
+        out, jobs = jobs_in("lpa_string", lambda: both_modes(build))
+        assert out == (True, True)
+        assert jobs == []
+
+
 class TestHandOff:
     """A replay's result frame holds the Arrow table it was built from,
     and connected_components reads a held ``pairs`` table directly."""
@@ -186,11 +223,12 @@ class TestHandOff:
 
     @staticmethod
     def _builders(spark):
+        import datetime
+
         import numpy as np
 
         from drune_spark.operators.bpe import bpe_train
         from drune_spark.operators.dedup import (
-            _replay_frame,
             minhash_lsh_pairs,
             ngram_jaccard_pairs,
         )
@@ -205,11 +243,20 @@ class TestHandOff:
                 spark, TestHandOff.EDGE_ROWS, TestHandOff.EDGE_SCHEMA),
             "frame_empty": lambda: replay.frame(
                 spark, [], TestHandOff.EDGE_SCHEMA),
-            "replay_frame": lambda: _replay_frame(
-                spark, "string", np.array(['q"1', "b\\2", "c\n3"],
-                                          dtype=object),
-                {"id_a": np.array([0, 2]), "id_b": np.array([1, 1])},
-                n=("bigint", [2**63 - 1, -2**63]), x=("double", [0.1, 2.0])),
+            "frame_date": lambda: replay.frame(
+                spark, [(1, datetime.date(2020, 1, 2)), (None, None)],
+                "a smallint, d date"),
+            "replay_frame": lambda: replay.frame(
+                spark, {"id_a": np.array(['q"1', "c\n3"], dtype=object),
+                        "id_b": np.array(["b\\2", "b\\2"], dtype=object),
+                        "n": np.array([2**63 - 1, -2**63]),
+                        "x": [0.1, 2.0]},
+                "id_a string, id_b string, n bigint, x double"),
+            "frame_arrow": lambda: replay.frame(
+                spark, {"a": np.arange(replay.LITERAL_ROWS + 1),
+                        "s": [None, "x"] * (replay.LITERAL_ROWS // 2)
+                        + ["y"]},
+                "a int, s string"),
             "minhash_lsh_pairs": lambda: minhash_lsh_pairs(
                 docs, "text", "doc_id", min_est_jaccard=0.1),
             "ngram_jaccard_pairs": lambda: ngram_jaccard_pairs(
@@ -220,12 +267,12 @@ class TestHandOff:
         }
 
     @pytest.mark.parametrize("builder", [
-        "frame", "frame_empty", "replay_frame", "minhash_lsh_pairs",
-        "ngram_jaccard_pairs", "kcore", "bpe_train"])
+        "frame", "frame_empty", "frame_date", "replay_frame",
+        "frame_arrow", "minhash_lsh_pairs", "ngram_jaccard_pairs", "kcore", "bpe_train"])
     def test_held_table_is_the_fetched_table(self, spark, builder):
         """Each builder's held table equals ``toArrow()`` of its frame
         in schema and values: NULLs, int64 bounds, strings with quotes,
-        backslashes and newlines, and doubles."""
+        backslashes and newlines, doubles, smallints and dates."""
         df = self._builders(spark)[builder]()
         held, fetched = replay.held(df), df.toArrow()
         assert held is not None
@@ -314,16 +361,6 @@ class TestHandOff:
             ("distributed", "above_cutoff", 4, 3)]
 
 
-# The replays that are not graph operators; every other key of
-# replay.CUTOFFS is an edge replay and needs a GRAPH_OPS entry below.
-NON_GRAPH_REPLAYS = {
-    "ngram_jaccard_pairs", "containment_pairs", "prefix_filter_join",
-    "minhash_lsh_pairs", "incremental_minhash_dedup", "lsh_census_eval",
-    "simhash_near_dup_pairs_portable", "bpe_train", "wordpiece_train",
-    "ivf_train", "nsw_greedy_search",
-}
-
-
 def _graph_ops():
     """op -> build(case) for every graph replay; a case carries the
     edge list (src, dst, w), its node frame, a node -> community
@@ -402,11 +439,11 @@ def _outcome(df):
 
 class TestGraphDifferential:
     def test_lists_every_graph_replay(self):
-        """A new edge replay cannot ship without a mode-equivalence
-        case: the differential covers every replay.CUTOFFS key that is
-        not a known non-graph replay."""
-        assert NON_GRAPH_REPLAYS <= set(replay.CUTOFFS)
-        assert GRAPH_OPS == sorted(set(replay.CUTOFFS) - NON_GRAPH_REPLAYS)
+        """A new replay cannot ship without a mode-equivalence case:
+        the graph and the non-graph differentials together cover
+        exactly the keys of replay.CUTOFFS."""
+        assert not set(GRAPH_OPS) & set(NON_GRAPH_OPS)
+        assert sorted(GRAPH_OPS + NON_GRAPH_OPS) == sorted(replay.CUTOFFS)
 
     @pytest.mark.parametrize("op", GRAPH_OPS)
     def test_modes_agree(self, op, graph_cases, both_modes, records):
@@ -416,6 +453,15 @@ class TestGraphDifferential:
         once, with ``null_id``, in the default mode."""
         build = _graph_ops()[op]
         for name, case in graph_cases.items():
+            if op == "label_propagation" and name.startswith("string"):
+                # its integer label encoding rejects string ids up front
+                def rejects():
+                    with pytest.raises(TypeError, match="src is string"):
+                        build(case)
+                    return True
+
+                assert both_modes(rejects) == (True, True), name
+                continue
             seen = len(records())
             fast, slow = both_modes(lambda: _outcome(build(case)))
             assert fast == slow, (op, name)
@@ -423,10 +469,8 @@ class TestGraphDifferential:
                 r for r in records()[seen:]
                 if r.op == op and r.reason == "null_id"
             ]
-            # k_truss's canonical u < v filter drops NULL ids first;
-            # label_propagation declines string ids by their type
-            want = int(name.endswith("_null") and op != "k_truss" and not (
-                op == "label_propagation" and name.startswith("string")))
+            # k_truss's canonical u < v filter drops NULL ids first
+            want = int(name.endswith("_null") and op != "k_truss")
             assert len(declines) == want, (op, name)
 
     @pytest.mark.parametrize("pairs, reached", [
@@ -444,3 +488,151 @@ class TestGraphDifferential:
             lambda: _outcome(bfs_khop(edges, seeds, k=10)))
         assert fast == slow
         assert fast[1] == sorted(repr((i, i)) for i in range(reached))
+
+
+def _result(build):
+    """``_outcome`` of ``build()``, or the name of the error it raised."""
+    try:
+        return _outcome(build())
+    except Exception as e:  # noqa: BLE001 — compared across modes
+        return type(e).__name__
+
+
+def _nongraph_ops():
+    """op -> build(case) for every non-graph replay."""
+    from drune_spark.operators import bpe, dedup, kmeans, similarity
+
+    return {
+        "ngram_jaccard_pairs": lambda c: dedup.ngram_jaccard_pairs(
+            c.docs, "text", c.id),
+        "containment_pairs": lambda c: dedup.containment_pairs(
+            c.docs, "text", c.id),
+        "prefix_filter_join": lambda c: dedup.prefix_filter_join(
+            c.docs, "text", c.id),
+        "minhash_lsh_pairs": lambda c: dedup.minhash_lsh_pairs(
+            c.docs, "text", c.id, min_est_jaccard=0.25),
+        "incremental_minhash_dedup": lambda c:
+            dedup.incremental_minhash_dedup(
+                c.docs, c.docs, "text", c.id,
+                min_est_jaccard=0.25),
+        "lsh_census_eval": lambda c: dedup.lsh_census_eval(
+            c.docs, "text", c.id),
+        "simhash_near_dup_pairs_portable": lambda c:
+            dedup.simhash_near_dup_pairs_portable(
+                c.docs, "text", c.id, max_hamming=20),
+        "bpe_train": lambda c: bpe.bpe_train(c.corpus, n_merges=3),
+        "wordpiece_train": lambda c: bpe.wordpiece_train(
+            c.corpus, n_merges=3),
+        "ivf_train": lambda c: kmeans.ivf_train(
+            c.vecs, n_centroids=2, n_iters=2, dim=2, id_col=c.id),
+        "nsw_greedy_search": lambda c: similarity.nsw_greedy_search(
+            c.vecs, n_cells=2, m_edges=2, hops=2, query_mod=2, id_col=c.id),
+    }
+
+
+NON_GRAPH_OPS = sorted(_nongraph_ops())
+_TEXTS = [
+    "the quick brown fox jumps over the lazy dog and runs",
+    "the quick brown fox jumps over the sleepy dog and runs",
+    "completely different words about spark sql engines",
+    "quick brown fox jumps over the lazy dog",
+]
+_VECS = [[1.0, 0.0], [0.0, 1.0], [0.9, 0.2], [0.2, 0.9], [0.7, 0.6]]
+# The replays that need unique ids decline a repeated one (ivf only
+# among its seeds, the lowest ids; the repeated id here is the lowest).
+_UNIQUE = {"prefix_filter_join", "minhash_lsh_pairs", "lsh_census_eval",
+           "incremental_minhash_dedup", "simhash_near_dup_pairs_portable",
+           "ivf_train", "nsw_greedy_search"}
+# The vector operators take integer ids: they decline string and date
+# ids, and their distributed paths then fail on them, with the same
+# error in both modes; so does ivf's distributed seeding on a NULL id
+# or a NULL vector element (``int(None)``).
+_INTEGER = {"ivf_train", "nsw_greedy_search"}
+_RAISES = {(op, name) for op in _INTEGER for name in ("string", "date")
+           } | {("ivf_train", "null"), ("ivf_train", "null_element")}
+_ID_FREE = {"bpe_train", "wordpiece_train"}  # the trainers read no ids
+
+
+class _Inputs:
+    """One differential case: documents, vectors and a corpus keyed by
+    ``ids`` (one per row) in an id column ``id`` of ``id_type``."""
+
+    def __init__(self, spark, id_type, ids, id_col="doc_id", vecs=_VECS):
+        self.id = id_col
+        self.docs = spark.createDataFrame(
+            list(zip(ids, _TEXTS * 2)), f"{id_col} {id_type}, text string")
+        self.vecs = spark.createDataFrame(
+            list(zip(ids, vecs)),
+            f"{id_col} {id_type}, embedding array<double>")
+        # "a" is a 1-symbol word: it has no pair to merge
+        self.corpus = spark.createDataFrame(
+            [("ab ab abc",), ("a",), ("bca ab",)][:len(ids)],
+            "text string")
+
+
+def _nongraph_cases(spark):
+    """case -> (inputs, the decline reason each op records by default
+    (``None``: it replays))."""
+    import datetime
+
+    def wants(reason, ops=NON_GRAPH_OPS):
+        return {op: reason if op in ops else None for op in NON_GRAPH_OPS}
+
+    days = [datetime.date(2020, 1, d) for d in range(1, 5)]
+    return {
+        "bigint": (_Inputs(spark, "bigint", [1, 2, 3, 4]), wants(None)),
+        "int_key": (_Inputs(spark, "int", [4, 3, 2, 1], "key"),
+                    wants(None)),
+        "string": (_Inputs(spark, "string", ["d1", "d2", "d3", "d4"]),
+                   wants("id_type", _INTEGER)),
+        "date": (_Inputs(spark, "date", days),
+                 wants("id_type", set(NON_GRAPH_OPS) - _ID_FREE)),
+        "null": (_Inputs(spark, "bigint", [1, None, 3, 4]),
+                 wants("null_id", set(NON_GRAPH_OPS) - _ID_FREE)),
+        "duplicate": (_Inputs(spark, "bigint", [1, 1, 3, 4]),
+                      wants("duplicate_id", _UNIQUE)),
+        # int ids: a result type hard-coded to bigint shows here
+        "empty": (_Inputs(spark, "int", [], "key"), wants(None)),
+        # read by the vector operators only
+        "null_element": (
+            _Inputs(spark, "bigint", [1, 2, 3, 4],
+                    vecs=[[1.0, None]] + _VECS[1:]),
+            {**wants(None), "ivf_train": "null_code",
+             "nsw_greedy_search": "vector_domain"}),
+    }
+
+
+@pytest.fixture(scope="module")
+def nongraph_cases(spark):
+    return _nongraph_cases(spark)
+
+
+class TestReplayDifferential:
+    @pytest.mark.parametrize("op", NON_GRAPH_OPS)
+    def test_modes_agree(self, op, nongraph_cases, both_modes, records):
+        """Same schema and rows from the replay and the distributed
+        path on bigint, string and int ids (the int ids in a column
+        named ``key``), date ids, a NULL id, a repeated id, an empty
+        input with int ids and a NULL vector element; in the default
+        mode each case replays or records its one decline reason."""
+        build = _nongraph_ops()[op]
+        for name, (case, want) in nongraph_cases.items():
+            if op in _ID_FREE and name not in ("bigint", "empty"):
+                continue
+            if name == "null_element" and op not in _INTEGER:
+                continue
+
+            def run():
+                marks.append(len(records()))
+                return _result(lambda: build(case))
+
+            marks = []
+            fast, slow = both_modes(run)
+            assert fast == slow, (op, name)
+            assert isinstance(fast, str) == ((op, name) in _RAISES), fast
+            default = [r for r in records()[marks[0]:marks[1]]
+                       if r.op == op]
+            declines = {r.reason for r in default
+                        if r.path == "distributed"}
+            assert declines == ({want[op]} if want[op] else set()), (
+                op, name, [(r.path, r.reason) for r in default])
