@@ -9018,25 +9018,15 @@ def q_stream_dedup_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup key set outgrows executor memory and RocksDB is the standard
     answer). Same exact result as the default HDFS-backed provider —
     one oracle text covers both (provider changes WHERE state lives,
-    never WHAT is emitted); provider restored after the drain."""
+    never WHAT is emitted); the drain's conf scope,
+    ``session_conf``, sets the provider and restores it after."""
     _tune(spark)
-    from drune_spark.streaming.runner import streamed_distinct
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+    from drune_spark.streaming.runner import (
+        ROCKSDB, session_conf, streamed_distinct,
     )
-    try:
-        path = os.path.join(sf_dir, "events.parquet")
-        return streamed_distinct(spark, path)
-    finally:
-        if prev:
-            spark.conf.set(key, prev)
-        else:
-            spark.conf.unset(key)
+
+    with session_conf(spark, ROCKSDB):
+        return streamed_distinct(spark, os.path.join(sf_dir, "events.parquet"))
 
 
 def q_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

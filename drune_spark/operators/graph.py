@@ -552,11 +552,7 @@ def label_propagation(
     for integer ids only: any other id type raises ``TypeError`` before
     any Spark job.
     """
-    for c in (src, dst):
-        t = edges.schema[c].dataType.simpleString()
-        if t not in ("int", "bigint"):
-            raise TypeError(
-                f"label_propagation needs int or bigint ids; {c} is {t}")
+    replay.integer_ids("label_propagation", edges, src, dst)
     hit = _lpa_driver_result(edges, rounds, src, dst)
     if hit is not None:
         return hit

@@ -191,7 +191,7 @@ def _ivf_driver_result(
     return replay.gate(
         op, [q], (id_col,),
         "centroid_id long, centroid array<long>, n_members long, sse long",
-        lloyd, id_types=("int", "bigint"), size=lambda: q.count() * dim,
+        lloyd, size=lambda: q.count() * dim,
     )
 
 
@@ -213,8 +213,11 @@ def ivf_train(
     centroid_id is the seed vector's id (first ``n_centroids`` by
     ``id_col``, the same deterministic seeding ``ivf_assign`` uses —
     similarity.py), so trained centroids drop into the existing
-    assign/search layout unchanged.
+    assign/search layout unchanged. Ids must be int or bigint
+    (``TypeError`` before any Spark job otherwise); a NULL id, or a
+    NULL vector or element among the seeds, raises ``ValueError``.
     """
+    replay.integer_ids("ivf_train", corpus, id_col)
     spark = corpus.sparkSession
     q = quantize_unsigned(corpus, vec_col, id_col).persist()
     try:
@@ -233,6 +236,13 @@ def ivf_train(
         if hit is not None:
             return hit
         seeds = q.orderBy(F.col(id_col)).limit(n_centroids).collect()
+        # NULLs sort first, so a NULL id anywhere is among the seeds
+        for r in seeds:
+            if r[id_col] is None:
+                raise ValueError(f"ivf_train: {id_col} holds a NULL id")
+            if r["qv"] is None or None in r["qv"]:
+                raise ValueError(
+                    f"ivf_train: {vec_col} holds a NULL vector element")
         centroids = [
             (int(r[id_col]), [int(v) for v in r["qv"]]) for r in seeds
         ]

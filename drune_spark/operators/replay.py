@@ -164,6 +164,16 @@ def collect(op: str, *frames):
 ID_TYPES = ("int", "bigint", "string")
 
 
+def integer_ids(op: str, df, *cols) -> None:
+    """Raise ``TypeError`` naming the column, before any Spark job,
+    unless each of ``cols`` is int or bigint: the operators with an
+    integer encoding of their ids take no other type, in either mode."""
+    for c in cols:
+        t = df.schema[c].dataType.simpleString()
+        if t not in ("int", "bigint"):
+            raise TypeError(f"{op} needs int or bigint ids; {c} is {t}")
+
+
 class Lists(NamedTuple):
     """A fetched list column: row ``r`` owns ``values[offs[r]:offs[r+1]]``."""
 
@@ -232,13 +242,13 @@ def _numpy(a):
 
 
 def gate(op: str, frames, ids, schema: str, kernel, *, codes=False,
-         unique=False, id_types=ID_TYPES, label=None, size=None,
+         unique=False, label=None, size=None,
          empty=(), build=frame):
     """The front end of every replay: the rules they share, so both
     execution modes see the same inputs the same way.
 
     1. The ``ids`` columns (across ``frames``; a list column by its
-       element type) share one type among ``id_types``, and the
+       element type) share one type among ``ID_TYPES``, and the
        ``label`` column, if any, has an id type of its own; otherwise
        ``op`` declines ``id_type`` before any Spark job.
     2. The bounded fetch: when every frame is ``held``, ``admit`` of
@@ -271,7 +281,7 @@ def gate(op: str, frames, ids, schema: str, kernel, *, codes=False,
     types = {type_of(c) for c in ids}
     id_type = types.pop() if len(types) == 1 else None
     label_type = label and type_of(label)
-    if (ids and id_type not in id_types) or (
+    if (ids and id_type not in ID_TYPES) or (
             label and label_type not in ID_TYPES):
         return decline(op, "id_type")
     schema = schema.format(id=id_type, label=label_type)

@@ -1359,12 +1359,16 @@ def nsw_greedy_search(
     unrolled-CTE oracle replays every hop exactly.
 
     Returns (query_id, node, cos_micro): the node the walk settled on
-    and its floored-micro cosine to the query.
+    and its floored-micro cosine to the query. Ids must be int or
+    bigint (the argmax encodes them); any other type raises
+    ``TypeError`` before any Spark job.
 
     No counterpart in /root/reference; driver-mandated ANN extension
     (graph-based serving path alongside IVF/PQ/LSH).
     """
     from drune_spark.functions.partitioning import fan_out
+
+    replay.integer_ids("nsw_greedy_search", emb, id_col)
 
     enc_mod = 1 << 33
     shift = 1_000_000
@@ -1400,7 +1404,7 @@ def nsw_greedy_search(
         [emb.select(F.col(id_col).alias("nid"),
                     to_double_array(F.col(vec_col)).alias("v"))],
         ("nid",), "query_id {id}, node bigint, cos_micro bigint", replayed,
-        unique=True, id_types=("int", "bigint"),
+        unique=True,
     )
     if hit is not None:
         return hit

@@ -252,11 +252,7 @@ class Pipeline:
         self.write()
 
     # -- streaming execution (SURVEY §2.12, additive) ------------------------
-    def execute_streaming(
-        self,
-        trigger_available_now: bool = True,
-        checkpoint_dir: Optional[str] = None,
-    ) -> None:
+    def execute_streaming(self, checkpoint_dir: Optional[str] = None) -> None:
         """Run the SAME declarative pipeline as a Structured Streaming job:
         file sources become file streams, the schema-apply projection and
         narrow steps run per micro-batch, and the target is written
@@ -267,19 +263,21 @@ class Pipeline:
           failure COUNTS (and therefore on_fail='fail' aborts) are a
           batch-only concept — streaming drops/set_nulls rows, and when a
           ``validation_log_table``/failed-records path is configured the
-          failure rows stream into it as a parallel append sink;
+          failure rows stream into it as an append sink;
         - steps must be stream-capable (filter/sql projections, stateless
           joins against static frames — plus aggregations when the
           target's mode is 'merge', which upserts each micro-batch's
           changed keys via foreachBatch); other blocking ops raise at
           plan time;
         - ``availableNow`` drains current data then stops, which makes a
-          backfill use the exact code path of the live stream.
+          backfill use the exact code path of the live stream. Both
+          queries run through ``streaming.runner.drain``, the failure log
+          first and the target second, as the batch path writes them;
+          ``checkpoint_dir`` (the log's is ``checkpoint_dir + "_failures"``)
+          keeps their checkpoints, else temporary ones are removed.
         """
-        import tempfile
-
         from drune_spark.quality.manager import apply_constraints
-        from drune_spark.streaming.runner import _raw_stream
+        from drune_spark.streaming.runner import _raw_stream, drain
 
         if self.model.target is None or self.model.target.path is None:
             raise RuntimeError("streaming execution needs a file target")
@@ -322,10 +320,28 @@ class Pipeline:
         current = streams[self.model.sources[0].name] if self.model.sources else None
         current = self.runner.run(self.model.steps, streams, current)
 
+        # Constraint-failure rows stream into the configured audit sink
+        # (their own checkpoint; same exactly-once semantics).
+        log_sink = self._log_sink()
+        if failure_streams and log_sink:
+            failures = failure_streams[0]
+            for frame in failure_streams[1:]:
+                failures = failures.unionByName(frame)
+            kind = log_sink_kind(log_sink)
+
+            def start_log(w):
+                if kind == "table":
+                    # Table-name sinks stream via toTable — previously
+                    # these rows were silently dropped (round-1 advisory).
+                    return w.toTable(log_sink)
+                return (w.format(kind).option("header", "true")
+                        .option("path", log_sink).start())
+
+            drain(failures, sink=start_log,
+                  checkpoint=checkpoint_dir and checkpoint_dir + "_failures")
+
         tgt = self.model.target
         from drune_spark.sinks.writers import _file_path
-        out_path = _file_path(tgt)
-        ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="drune_ckpt_")
         if tgt.mode == "merge":
             # Stateful (aggregating) pipelines: file sinks are append-only,
             # so update-mode results upsert per micro-batch through
@@ -341,50 +357,14 @@ class Pipeline:
             def _upsert(batch_df: DataFrame, _batch_id: int) -> None:
                 merge_upsert(self.spark, batch_df, tgt, key=key)
 
-            writer = (
-                current.writeStream.outputMode("update")
-                .foreachBatch(_upsert)
-                .option("checkpointLocation", ckpt)
-            )
+            drain(current, "update",
+                  sink=lambda w: w.foreachBatch(_upsert).start(),
+                  checkpoint=checkpoint_dir)
         else:
-            writer = (
-                current.writeStream.format(tgt.format)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .option("path", out_path)
-            )
-        if trigger_available_now:
-            writer = writer.trigger(availableNow=True)
-        query = writer.start()
-
-        # Constraint-failure rows stream into the configured audit sink in
-        # parallel (their own checkpoint; same exactly-once semantics).
-        failure_query = None
-        log_sink = self._log_sink()
-        if failure_streams and log_sink:
-            failures = failure_streams[0]
-            for frame in failure_streams[1:]:
-                failures = failures.unionByName(frame)
-            fw = (
-                failures.writeStream
-                .outputMode("append")
-                .option("checkpointLocation", ckpt + "_failures")
-                .trigger(availableNow=True)
-            )
-            kind = log_sink_kind(log_sink)
-            if kind == "table":
-                # Table-name sinks stream via toTable — previously these
-                # rows were silently dropped (round-1 advisory).
-                failure_query = fw.toTable(log_sink)
-            else:
-                failure_query = (
-                    fw.format(kind).option("header", "true")
-                    .option("path", log_sink).start()
-                )
-        if trigger_available_now:
-            query.awaitTermination()
-            if failure_query is not None:
-                failure_query.awaitTermination()
+            drain(current,
+                  sink=lambda w: w.format(tgt.format)
+                  .option("path", _file_path(tgt)).start(),
+                  checkpoint=checkpoint_dir)
 
     # -- golden test mode (O5) ----------------------------------------------
     def golden_test(self, expected: DataFrame,

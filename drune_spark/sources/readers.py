@@ -50,18 +50,40 @@ def resolve_dynamic_path(spec: SourceSpec, runtime_path: Optional[str]) -> Optio
     return os.path.join(spec.path, os.path.basename(runtime_path))
 
 
-def _cast_ntz_to_timestamp(df: DataFrame) -> DataFrame:
-    """Normalize any TIMESTAMP_NTZ column to TIMESTAMP. The session
-    timezone is pinned to UTC (session.py DEFAULT_CONF), so the cast is
-    lossless: the same wall-clock instant, now with event-time semantics
-    that ``unix_micros``/``window``/``withWatermark`` accept."""
+def _nanos_columns(path: str) -> list[str]:
+    """The columns pyarrow reads as ``timestamp[ns`` in the parquet file
+    at ``path``; none when its footer cannot be read (a directory)."""
+    try:
+        import pyarrow.parquet as pq
+        schema = pq.read_schema(path.replace("file://", ""))
+    except Exception:
+        return []
+    return [f.name for f in schema if str(f.type).startswith("timestamp[ns")]
+
+
+def _event_time(df: DataFrame, nanos_cols: list[str]) -> DataFrame:
+    """TIMESTAMP columns from a raw parquet read (batch or stream).
+
+    - ``nanos_cols`` that arrive as bigint (read with
+      ``spark.sql.legacy.parquet.nanosAsLong``) hold ns since epoch and
+      convert to a microsecond timestamp by integer division — exact, no
+      float. INT96 also looks like timestamp[ns] to pyarrow, but Spark
+      reads it as TIMESTAMP directly, so only longs convert.
+    - TIMESTAMP_NTZ columns cast to TIMESTAMP. The session timezone is
+      pinned to UTC (session.py DEFAULT_CONF), so the cast is lossless:
+      the same wall-clock instant, now with event-time semantics that
+      ``unix_micros``/``window``/``withWatermark`` accept.
+    """
     from pyspark.sql import functions as F
     from pyspark.sql.types import TimestampNTZType
 
-    ntz = [f.name for f in df.schema.fields
-           if isinstance(f.dataType, TimestampNTZType)]
-    for c in ntz:
-        df = df.withColumn(c, F.col(c).cast("timestamp"))
+    raw_types = dict(df.dtypes)
+    for c in nanos_cols:
+        if raw_types.get(c) == "bigint":
+            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    for f in df.schema.fields:
+        if isinstance(f.dataType, TimestampNTZType):
+            df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
     return df
 
 
@@ -70,15 +92,14 @@ def read_parquet_nanos_safe(
 ) -> DataFrame:
     """Read parquet whose timestamp columns may arrive in any physical
     flavor — the testdata has been regenerated between rounds with
-    different writers, so this adapts per-file instead of assuming one:
+    different writers, so this adapts per-file instead of assuming one
+    (the rules are ``_event_time``'s):
 
     - TIMESTAMP(NANOS): Spark rejects it outright ([PARQUET_TYPE_ILLEGAL]).
       With ``spark.sql.legacy.parquet.nanosAsLong`` the column arrives as
-      a bigint (ns since epoch); convert to a microsecond timestamp via
-      integer division — exact, no float.
+      a bigint, which converts to a microsecond timestamp.
     - timestamp[us/ms] WITHOUT timezone: Spark 4 infers TIMESTAMP_NTZ,
-      which breaks ``unix_micros``/``withWatermark``; cast to TIMESTAMP
-      (lossless under the pinned UTC session).
+      which breaks ``unix_micros``/``withWatermark``; cast to TIMESTAMP.
     - timestamp with tz / INT96: plain read already yields TIMESTAMP.
     """
     cache_on = (
@@ -90,44 +111,23 @@ def read_parquet_nanos_safe(
     if cached is not None:
         targets = cached[0]
     elif targets is None:
-        try:
-            import pyarrow.parquet as pq
-            schema = pq.read_schema(path.replace("file://", ""))
-            targets = [
-                f.name for f in schema if str(f.type).startswith("timestamp[ns")
-            ]
-        except Exception:
-            targets = []
-    if not targets:
-        if cached is not None:
-            df = spark.read.schema(cached[1]).parquet(path)
-        else:
-            df = spark.read.parquet(path)
-            if cache_on:
-                # Raw Spark schema per path, cached for the process: the
-                # footer-inference job (~0.05-0.1 s of sequencing) runs
-                # once per path instead of once per query. Metadata only
-                # — the schema came from these same files; rows are
-                # untouched (SPARK_GRAFT_SCHEMA_CACHE=0 disables).
-                _NANOS_READ_CACHE[path] = (targets, df.schema)
-        return _cast_ntz_to_timestamp(df)
-    # Leave the conf set for the session: execution re-reads it, and all
-    # nanos-bearing reads route through this helper anyway.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        targets = _nanos_columns(path)
+    if targets:
+        # Leave the conf set for the session: execution re-reads it, and
+        # all nanos-bearing reads route through this helper anyway.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     if cached is not None:
         df = spark.read.schema(cached[1]).parquet(path)
     else:
         df = spark.read.parquet(path)
         if cache_on:
+            # Raw Spark schema per path, cached for the process: the
+            # footer-inference job (~0.05-0.1 s of sequencing) runs
+            # once per path instead of once per query. Metadata only
+            # — the schema came from these same files; rows are
+            # untouched (SPARK_GRAFT_SCHEMA_CACHE=0 disables).
             _NANOS_READ_CACHE[path] = (targets, df.schema)
-    from pyspark.sql import functions as F
-    raw_types = dict(df.dtypes)
-    for c in targets:
-        # INT96 looks like timestamp[ns] to pyarrow but Spark reads it as
-        # TIMESTAMP directly — only convert columns that arrive as longs.
-        if raw_types.get(c) == "bigint":
-            df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    return _cast_ntz_to_timestamp(df)
+    return _event_time(df, targets)
 
 
 def read_source(

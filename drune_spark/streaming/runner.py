@@ -8,8 +8,15 @@ the same declarative ops run as micro-batch streams. Patterns:
 - ``trigger(availableNow=True)`` drains everything currently available
   then stops — which makes a streaming job batch-equivalent and lets the
   DuckDB oracle check it exactly,
-- memory sink for tests; production would use kafka/delta sinks with
-  checkpointing (the ``writeStream`` options are the only difference).
+- every query in the package runs through ``drain`` (below): it scopes
+  the session conf, owns the checkpoint, runs the availableNow trigger
+  and, by default, reads the result back from a memory sink whose temp
+  view it drops again, so a call leaves no view, conf or checkpoint
+  behind. Other sinks (``foreachBatch``, a file path, ``toTable``) are a
+  caller hook that starts the query; production would use kafka/delta
+  sinks with durable checkpoints (the ``writeStream`` options are the
+  only difference). Per-micro-batch progress and observed metrics of
+  every run attach in this one place.
 
 At scale the stateful window agg shuffles by (window, key); watermarks
 bound the state store size, and ``availableNow`` backfills historical
@@ -18,38 +25,133 @@ data with the same code path as the live stream.
 
 from __future__ import annotations
 
+import glob
+import itertools
 import os
+import shutil
 import tempfile
-import uuid
+import time
+from contextlib import ExitStack, contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from drune_spark.sources.readers import _event_time, _nanos_columns
 
-class state_partitions:
-    """Temporarily size ``spark.sql.shuffle.partitions`` for a stateful
-    streaming query: each shuffle partition owns a state-store instance,
-    and store open/commit overhead dominates small-to-medium streams
-    (32 stores ≈ 7.5s vs 8 ≈ 1.3s for the sf0.1 window query). A real
-    deployment sizes this to active-key cardinality / executor count;
-    availableNow queries here run synchronously, so restoring the conf
-    afterwards is safe."""
+# Shuffle partitions of every drained query: each one owns a state-store
+# instance, and store open/commit overhead dominates small-to-medium
+# streams (32 stores ≈ 7.5s vs 8 ≈ 1.3s for the sf0.1 window query). A
+# real deployment sizes this to active-key cardinality / executor count.
+STATE_PARTITIONS = 8
 
-    def __init__(self, spark: SparkSession, n: int | None):
-        self.spark = spark
-        self.n = n
-        self.prev: str | None = None
+# The RocksDB state store: state spills to local SST files instead of
+# living on the JVM heap. transformWithStateInPandas requires it.
+ROCKSDB = {
+    "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state."
+        "RocksDBStateStoreProvider",
+}
 
-    def __enter__(self):
-        if self.n is not None:
-            self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-        return self
+_memory_sinks = itertools.count()
 
-    def __exit__(self, *exc):
-        if self.prev is not None:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        return False
+
+@contextmanager
+def session_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set ``conf`` on the session for the block; on exit, also on an
+    error, restore each key's previous value or unset it if it had
+    none."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def drain(
+    stream: DataFrame,
+    mode: str = "append",
+    sink=None,
+    checkpoint: str | None = None,
+    conf: dict[str, str] | None = None,
+) -> DataFrame | None:
+    """Run ``stream`` once with ``trigger(availableNow=True)`` — every
+    row available now, then stop — and return its result.
+
+    The query runs with ``STATE_PARTITIONS`` shuffle partitions plus
+    ``conf``, all restored afterwards, and checkpoints to a temporary
+    directory removed afterwards unless ``checkpoint`` names one (a
+    restart resumes from it). ``sink`` is ``None`` for a memory sink:
+    the result frame is bound before its temp view is dropped, so the
+    rows live exactly as long as the frame. Otherwise ``sink`` takes the
+    configured ``DataStreamWriter``, starts the query
+    (``foreachBatch``, a file path, ``toTable``) and returns it; drain
+    then returns ``None``. No query is left active, also on an error.
+    """
+    spark = stream.sparkSession
+    scoped = {
+        "spark.sql.shuffle.partitions": str(STATE_PARTITIONS),
+        **(conf or {}),
+    }
+    with session_conf(spark, scoped), ExitStack() as scratch:
+        writer = (
+            stream.writeStream.outputMode(mode)
+            .option(
+                "checkpointLocation",
+                checkpoint
+                or scratch.enter_context(tempfile.TemporaryDirectory()),
+            )
+            .trigger(availableNow=True)
+        )
+        name = None
+        if sink is None:
+            name = f"drune_drain_{next(_memory_sinks)}"
+            query = writer.format("memory").queryName(name).start()
+        else:
+            query = sink(writer)
+        try:
+            query.awaitTermination()
+            return spark.table(name) if name else None
+        finally:
+            query.stop()
+            if name:
+                spark.catalog.dropTempView(name)
+
+
+def _pin_order(batches: list[list[str]]) -> None:
+    """FileStreamSource takes files in (mtime, path) order: give batch
+    ``b``'s files an mtime 100 s after batch ``b - 1``'s, so a drain
+    with ``maxFilesPerTrigger=1`` reads them in list order."""
+    now = time.time()
+    for b, paths in enumerate(batches):
+        for p in paths:
+            os.utime(p, (now - 600 + 100 * b,) * 2)
+
+
+def _write_splits(
+    df: DataFrame, key: str, n_splits: int, path: str, cols: list[str]
+) -> None:
+    """Write ``cols`` of ``df`` as one file per ``path/sp=<b>``
+    directory, ``b = key % n_splits`` (ONE partitioned write — separate
+    filtered writes cost a scan job each), with the files pinned to
+    drain in ``b`` order."""
+    (
+        df.withColumn("sp", F.pmod(key, F.lit(n_splits)))
+        .repartition(n_splits, "sp")
+        .select(*cols, "sp")
+        .write.mode("overwrite")
+        .partitionBy("sp")
+        .parquet(path)
+    )
+    _pin_order([
+        glob.glob(os.path.join(path, f"sp={b}", "*"))
+        for b in range(n_splits)  # an empty split writes no directory
+    ])
 
 
 def _raw_stream(
@@ -57,31 +159,21 @@ def _raw_stream(
     events_path: str,
     options: dict[str, str] | None = None,
 ) -> DataFrame:
-    """File-stream source over parquet, nanos/INT96-safe.
-
-    Nanos-timestamp parquet needs the nanosAsLong read path; the stream
-    inherits the raw (long) schema and converts in-stream. INT96 files
-    also look like timestamp[ns] to pyarrow but Spark reads them as
-    TIMESTAMP directly — only convert columns that actually arrive as
-    longs. File-stream sources take a directory; a single-file path
-    streams from its parent with a glob filter on the basename.
+    """File-stream source over parquet, with the timestamp rules of
+    ``read_parquet_nanos_safe``: nanos columns stream as longs
+    (nanosAsLong) and convert in-stream, naive ones cast from NTZ (which
+    ``withWatermark`` rejects). File-stream sources take a directory,
+    whose first part file is probed; a single-file path streams from its
+    parent with a glob filter on the basename.
     """
-    import glob as globmod
-
-    import pyarrow.parquet as pq
     schema_file = events_path
     if os.path.isdir(events_path):
-        parts = sorted(globmod.glob(os.path.join(events_path, "*.parquet")))
+        parts = sorted(glob.glob(os.path.join(events_path, "*.parquet")))
         schema_file = parts[0] if parts else events_path
-    raw_schema = pq.read_schema(schema_file)
-    nanos_cols = [f.name for f in raw_schema
-                  if str(f.type).startswith("timestamp[ns")]
+    nanos_cols = _nanos_columns(schema_file)
     if nanos_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.read.parquet(events_path)
-    raw_types = dict(raw.dtypes)
-    nanos_cols = [c for c in nanos_cols if raw_types.get(c) == "bigint"]
-    reader = spark.readStream.schema(raw.schema)
+    reader = spark.readStream.schema(spark.read.parquet(events_path).schema)
     for key, value in (options or {}).items():
         reader = reader.option(key, value)
     if os.path.isdir(events_path):
@@ -91,13 +183,7 @@ def _raw_stream(
             reader.option("pathGlobFilter", os.path.basename(events_path))
             .parquet(os.path.dirname(events_path))
         )
-    for c in nanos_cols:
-        stream = stream.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    # us/ms-naive parquet arrives as TIMESTAMP_NTZ, which withWatermark
-    # rejects (EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE) — cast to TIMESTAMP,
-    # lossless under the pinned UTC session.
-    from drune_spark.sources.readers import _cast_ntz_to_timestamp
-    return _cast_ntz_to_timestamp(stream)
+    return _event_time(stream, nanos_cols)
 
 
 def windowed_event_counts(
@@ -106,7 +192,6 @@ def windowed_event_counts(
     window: str = "1 hour",
     watermark: str = "1 day",
     ts_col: str = "ts",
-    n_state_partitions: int | None = 8,
     slide: str | None = None,
 ) -> DataFrame:
     """Tumbling (or, with ``slide``, SLIDING/hopping) window counts +
@@ -131,19 +216,7 @@ def windowed_event_counts(
             F.sum(F.col("value").cast("decimal(18,3)")).alias("total_dec"),
         )
     )
-    name = f"win_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory() as ckpt, \
-            state_partitions(spark, n_state_partitions):
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table(name).select(
+    return drain(agg, "complete").select(
         F.unix_millis(F.col("window.start")).alias("window_start_ms"),
         "event_type",
         "n_events",
@@ -157,7 +230,6 @@ def stream_static_enrich(
     dim: DataFrame,
     on: tuple[str, str],
     group_cols: list[str],
-    n_state_partitions: int | None = 8,
 ) -> DataFrame:
     """Stream-static enrichment join + grouped aggregation.
 
@@ -178,19 +250,7 @@ def stream_static_enrich(
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(18,3)")).alias("total_dec"),
     )
-    name = f"enrich_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory() as ckpt, \
-            state_partitions(spark, n_state_partitions):
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table(name).select(
+    return drain(agg, "complete").select(
         *group_cols,
         "n_events",
         F.col("total_dec").cast("double").alias("total_value"),
@@ -204,7 +264,6 @@ def stream_stream_join(
     right_type: str = "purchase",
     horizon: str = "2 hours",
     watermark: str = "1 day",
-    n_state_partitions: int | None = 8,
     how: str = "inner",
 ) -> DataFrame:
     """Stream-STREAM join with an event-time range condition — the
@@ -270,25 +329,12 @@ def stream_stream_join(
         "r_id",
         (F.unix_micros("r_ts") - F.unix_micros("l_ts")).alias("gap_us"),
     )
-    name = f"ssj_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory() as ckpt, \
-            state_partitions(spark, n_state_partitions):
-        query = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table(name).select("user_id", "l_id", "r_id", "gap_us")
+    return drain(out)
 
 
 def streamed_distinct(
     spark: SparkSession,
     events_path: str,
-    n_state_partitions: int | None = 8,
 ) -> DataFrame:
     """Streaming deduplication: first-seen (event_type, day) pairs via
     ``dropDuplicates`` in append mode — the at-least-once-delivery
@@ -310,26 +356,13 @@ def streamed_distinct(
         F.expr("unix_micros(ts) div 86400000000").alias("day"),
     )
     dd = stream.dropDuplicates(["event_type", "day"])
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory() as ckpt, \
-            state_partitions(spark, n_state_partitions):
-        query = (
-            dd.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table(name).select("event_type", "day")
+    return drain(dd)
 
 
 def session_window_counts(
     spark: SparkSession,
     events_path: str,
     gap: str = "30 minutes",
-    n_state_partitions: int | None = 8,
 ) -> DataFrame:
     """NATIVE ``session_window`` streaming aggregation — Spark's
     built-in merging-window sessionizer (vs. the custom
@@ -360,19 +393,7 @@ def session_window_counts(
             F.sum(F.col("value").cast("decimal(18,3)")).alias("total_dec"),
         )
     )
-    name = f"sess_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory() as ckpt, \
-            state_partitions(spark, n_state_partitions):
-        query = (
-            agg.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table(name).select(
+    return drain(agg).select(
         "user_id",
         F.unix_millis(F.col("session_window.start")).alias(
             "session_start_ms"),
@@ -386,7 +407,6 @@ def streamed_distinct_within_watermark(
     spark: SparkSession,
     events_path: str,
     delay: str = "5 hours",
-    n_state_partitions: int | None = 8,
 ) -> DataFrame:
     """``dropDuplicatesWithinWatermark`` — the UNBOUNDED-key streaming
     dedup (message-id shape): state for a key is kept only until the
@@ -417,8 +437,6 @@ def streamed_distinct_within_watermark(
     yield two rows (hours 1 and 31), all others one row (hour 1) — a
     closed form the DuckDB oracle states directly.
     """
-    import shutil
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -437,14 +455,10 @@ def streamed_distinct_within_watermark(
         + [("__clock", 40 * HOUR_US)],
     ]
 
-    in_dir = tempfile.mkdtemp(prefix="drune_dedup_wm_")
-    name = f"ddwm_{uuid.uuid4().hex[:8]}"
-    try:
-        import time as _time
-
-        now = _time.time()
-        for b, rows in enumerate(batches):
-            path = os.path.join(in_dir, f"b{b}.parquet")
+    with tempfile.TemporaryDirectory(prefix="drune_dedup_wm_") as in_dir:
+        paths = [os.path.join(in_dir, f"b{b}.parquet")
+                 for b in range(len(batches))]
+        for path, rows in zip(paths, batches):
             pq.write_table(
                 pa.table({
                     "event_type": [r[0] for r in rows],
@@ -454,9 +468,7 @@ def streamed_distinct_within_watermark(
                 }),
                 path,
             )
-            # FileStreamSource batches by (mtime, path): pin both so
-            # micro-batch order is deterministic.
-            os.utime(path, (now - 600 + 100 * b, now - 600 + 100 * b))
+        _pin_order([[p] for p in paths])
         stream = (
             spark.readStream.schema("event_type string, ts_us bigint")
             .option("maxFilesPerTrigger", "1")
@@ -465,35 +477,17 @@ def streamed_distinct_within_watermark(
             .withWatermark("ts", delay)
             .dropDuplicatesWithinWatermark(["event_type"])
         )
-        with tempfile.TemporaryDirectory() as ckpt, \
-                state_partitions(spark, n_state_partitions):
-            query = (
-                stream.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
         # The memory sink holds rows driver-side — the input dir can go.
-        out = (
-            spark.table(name)
-            .filter(F.col("event_type") != "__clock")
-            .select(
-                "event_type",
-                F.expr("ts_us div 3600000000").alias("ts_hour"),
-            )
-        )
-    finally:
-        shutil.rmtree(in_dir, ignore_errors=True)
-    return out
+        out = drain(stream)
+    return out.filter(F.col("event_type") != "__clock").select(
+        "event_type",
+        F.expr("ts_us div 3600000000").alias("ts_hour"),
+    )
 
 
 def stream_upsert(
     spark: SparkSession,
     events_path: str,
-    n_state_partitions: int | None = 8,
     options: dict[str, str] | None = None,
 ) -> DataFrame:
     """Streaming upsert sink via foreachBatch — the stream→MERGE
@@ -520,12 +514,8 @@ def stream_upsert(
         "event_id",
         F.col("event_type").alias("last_type"),
     )
-    state_dir = tempfile.mkdtemp(prefix="drune_stream_upsert_")
-    state_path = os.path.join(state_dir, "state.parquet")
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import shutil
-
         sess = batch_df.sparkSession
         try:
             existing = sess.read.parquet(state_path)
@@ -552,23 +542,12 @@ def stream_upsert(
         shutil.rmtree(state_path, ignore_errors=True)
         os.rename(tmp_out, state_path)
 
-    with tempfile.TemporaryDirectory() as ckpt, \
-            state_partitions(spark, n_state_partitions):
-        query = (
-            stream.writeStream
-            .foreachBatch(merge_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    # Materialize the final state driver-side (keys-sized) so the
-    # scratch state dir can be removed immediately instead of leaking
-    # one mkdtemp per call (the returned frame must not lazily read
-    # from a deleted path).
-    import shutil
-
-    rows = spark.read.parquet(state_path).collect()
+    with tempfile.TemporaryDirectory(prefix="drune_stream_upsert_") as d:
+        state_path = os.path.join(d, "state.parquet")
+        drain(stream, sink=lambda w: w.foreachBatch(merge_batch).start())
+        # Materialize the final state driver-side (keys-sized): the
+        # returned frame must not lazily read from the removed dir.
+        rows = spark.read.parquet(state_path).collect()
     from drune_spark.functions.partitioning import local_frame
     out = local_frame(
         spark,
@@ -576,7 +555,6 @@ def stream_upsert(
         "user_id bigint, ts_us bigint, event_id bigint, "
         "last_type string",
     )
-    shutil.rmtree(state_dir, ignore_errors=True)
     return out.select(
         "user_id",
         F.col("ts_us").alias("last_ts_us"),
@@ -590,7 +568,6 @@ def stream_anti_filter(
     events_path: str,
     seen: DataFrame,
     on: tuple[str, str] = ("event_id", "seen_id"),
-    n_state_partitions: int | None = 8,
 ) -> DataFrame:
     """Stream-static LEFT ANTI join — the ingest-time skip-list: rows
     whose key already exists in a STATIC reference (yesterday's
@@ -621,19 +598,7 @@ def stream_anti_filter(
         "event_type",
         F.expr("unix_micros(ts) div 86400000000").alias("day"),
     )
-    name = f"anti_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory() as ckpt, \
-            state_partitions(spark, n_state_partitions):
-        query = (
-            kept.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table(name)
+    return drain(kept)
 
 
 def stream_cms_sketch(
@@ -643,7 +608,6 @@ def stream_cms_sketch(
     width: int = 128,
     top_k: int = 10,
     n_splits: int = 4,
-    n_state_partitions: int | None = 8,
 ) -> DataFrame:
     """Streaming count-min sketch via foreachBatch — the
     sketch-MERGEABILITY demonstration: each micro-batch reduces to its
@@ -664,50 +628,28 @@ def stream_cms_sketch(
     Returns (user_id, true_n, cms_count) for the ``top_k``
     true-heaviest users, estimate from the merged sketch.
     """
-    import shutil
-
     from drune_spark.operators.sketches import cms_build, cms_estimate
 
     ev = spark.read.parquet(events_path).select("user_id", "event_id")
-    split_dir = tempfile.mkdtemp(prefix="drune_cms_stream_")
-    try:
-        # ONE partitioned write builds every split dir (4 separate
-        # filtered writes cost 4 scan jobs and took the gate to 23s)
-        (
-            ev.withColumn(
-                "sp", F.pmod("event_id", F.lit(n_splits))
-            )
-            .repartition(n_splits, "sp")
-            .select("user_id", "sp")
-            .write.mode("overwrite")
-            .partitionBy("sp")
-            .parquet(os.path.join(split_dir, "in"))
+    cells: dict[tuple[int, int], int] = {}
+
+    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+        grid = cms_build(
+            batch_df, "user_id", depth=depth, width=width
+        ).collect()
+        for r in grid:
+            key = (r.j, r.bucket)
+            cells[key] = cells.get(key, 0) + r.n
+
+    with tempfile.TemporaryDirectory(prefix="drune_cms_stream_") as d:
+        in_dir = os.path.join(d, "in")
+        _write_splits(ev, "event_id", n_splits, in_dir, ["user_id"])
+        drain(
+            spark.readStream.schema("user_id bigint")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(os.path.join(in_dir, "sp=*")),
+            sink=lambda w: w.foreachBatch(merge_batch).start(),
         )
-        cells: dict[tuple[int, int], int] = {}
-
-        def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-            grid = cms_build(
-                batch_df, "user_id", depth=depth, width=width
-            ).collect()
-            for r in grid:
-                key = (r.j, r.bucket)
-                cells[key] = cells.get(key, 0) + r.n
-
-        with tempfile.TemporaryDirectory() as ckpt, \
-                state_partitions(spark, n_state_partitions):
-            query = (
-                spark.readStream.schema("user_id bigint")
-                .option("maxFilesPerTrigger", "1")
-                .parquet(os.path.join(split_dir, "in", "sp=*"))
-                .writeStream
-                .foreachBatch(merge_batch)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
-    finally:
-        shutil.rmtree(split_dir, ignore_errors=True)
 
     from drune_spark.functions.partitioning import local_frame
     sketch = local_frame(
@@ -737,7 +679,6 @@ def stream_admission(
     id_col: str = "event_id",
     quota: int = 25,
     n_splits: int = 4,
-    n_state_partitions: int | None = 8,
 ) -> DataFrame:
     """Streaming per-key admission quota via foreachBatch — the ingest
     budget enforcer ("first N documents per source, then stop paying
@@ -762,87 +703,57 @@ def stream_admission(
 
     Returns the admitted (key_col, id_col) rows — ≤ quota · |keys|.
     """
-    import shutil
+    from pyspark.sql import Window
+
+    from drune_spark.functions.partitioning import local_frame
 
     ev = spark.read.parquet(events_path).select(
         F.col(key_col).alias("k"), F.col(id_col).alias("i")
     )
-    split_dir = tempfile.mkdtemp(prefix="drune_admit_stream_")
-    out_dir = os.path.join(split_dir, "admitted")
     seen: dict[str, int] = {}
-    try:
-        (
-            ev.withColumn("sp", F.pmod("i", F.lit(n_splits)))
-            .repartition(n_splits, "sp")
-            .select("k", "i", "sp")
-            .write.mode("overwrite")
-            .partitionBy("sp")
-            .parquet(os.path.join(split_dir, "in"))
+
+    def admit(batch_df: DataFrame, batch_id: int) -> None:
+        m = local_frame(
+            spark, list(seen.items()) or [("", 0)],
+            "k string, prior long",
         )
-        # FileStreamSource orders batches by (mtime, path): pin mtimes
-        # so sp=0..n-1 drain in that exact order.
-        import time as _time
-
-        now = _time.time()
-        for b in range(n_splits):
-            d = os.path.join(split_dir, "in", f"sp={b}")
-            for fn in os.listdir(d):
-                p = os.path.join(d, fn)
-                os.utime(p, (now - 600 + 100 * b,) * 2)
-
-        from pyspark.sql import Window
-
-        def admit(batch_df: DataFrame, batch_id: int) -> None:
-            from drune_spark.functions.partitioning import \
-                local_frame
-            m = local_frame(
-                spark, list(seen.items()) or [("", 0)],
-                "k string, prior long",
+        w = Window.partitionBy("k").orderBy("i")
+        adm = (
+            batch_df.withColumn("rk", F.row_number().over(w))
+            .join(F.broadcast(m), "k", "left")
+            .filter(
+                F.col("rk") + F.coalesce("prior", F.lit(0)) <= quota
             )
-            w = Window.partitionBy("k").orderBy("i")
-            adm = (
-                batch_df.withColumn("rk", F.row_number().over(w))
-                .join(F.broadcast(m), "k", "left")
-                .filter(
-                    F.col("rk") + F.coalesce("prior", F.lit(0)) <= quota
-                )
-                .select("k", "i")
-            )
-            # Sink keyed by batch_id (overwrite) so a micro-batch RETRY
-            # replaces rather than duplicates its rows (ADVICE r7). The
-            # driver-side counters stay at-least-once: a retried batch
-            # re-folds its counts, so a production deployment must make
-            # the whole admit() idempotent (e.g. persist per-batch
-            # counter deltas alongside the sink and fold on read) —
-            # fine here because the availableNow drain retries nothing.
-            adm.write.mode("overwrite").parquet(
-                os.path.join(out_dir, f"batch={batch_id}")
-            )
-            for r in adm.groupBy("k").count().collect():
-                seen[r.k] = seen.get(r.k, 0) + r["count"]
+            .select("k", "i")
+        )
+        # Sink keyed by batch_id (overwrite) so a micro-batch RETRY
+        # replaces rather than duplicates its rows (ADVICE r7). The
+        # driver-side counters stay at-least-once: a retried batch
+        # re-folds its counts, so a production deployment must make
+        # the whole admit() idempotent (e.g. persist per-batch
+        # counter deltas alongside the sink and fold on read) —
+        # fine here because the availableNow drain retries nothing.
+        adm.write.mode("overwrite").parquet(
+            os.path.join(out_dir, f"batch={batch_id}")
+        )
+        for r in adm.groupBy("k").count().collect():
+            seen[r.k] = seen.get(r.k, 0) + r["count"]
 
-        with tempfile.TemporaryDirectory() as ckpt, \
-                state_partitions(spark, n_state_partitions):
-            query = (
-                spark.readStream.schema("k string, i bigint")
-                .option("maxFilesPerTrigger", "1")
-                .parquet(os.path.join(split_dir, "in", "sp=*"))
-                .writeStream
-                .foreachBatch(admit)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
+    with tempfile.TemporaryDirectory(prefix="drune_admit_stream_") as d:
+        in_dir, out_dir = os.path.join(d, "in"), os.path.join(d, "admitted")
+        _write_splits(ev, "i", n_splits, in_dir, ["k", "i"])
+        drain(
+            spark.readStream.schema("k string, i bigint")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(os.path.join(in_dir, "sp=*")),
+            sink=lambda w: w.foreachBatch(admit).start(),
+        )
         rows = [
             (r.k, r.i)
             for r in spark.read.option("recursiveFileLookup", "true")
             .parquet(out_dir)
             .collect()
         ]  # ≤ quota·|keys| admitted cells — bounded driver fetch
-    finally:
-        shutil.rmtree(split_dir, ignore_errors=True)
-    from drune_spark.functions.partitioning import local_frame
     return local_frame(
         spark, sorted(rows), f"{key_col} string, {id_col} bigint"
     )
@@ -853,7 +764,6 @@ def stream_resume_counts(
     events_path: str,
     key_col: str = "event_type",
     n_splits: int = 4,
-    n_state_partitions: int | None = 8,
 ) -> DataFrame:
     """Checkpoint-recovery / exactly-once proof — the restart story
     every other streaming gate leaves untested: a keyed count
@@ -871,72 +781,43 @@ def stream_resume_counts(
     in the checkpoint, not the driver. Returns (key_col, n) ordered
     by key.
     """
-    import shutil
-
     ev = spark.read.parquet(events_path).select(
         F.col(key_col).alias("k"), F.col("event_id").alias("i")
     )
-    root = tempfile.mkdtemp(prefix="drune_resume_stream_")
-    in_dir = os.path.join(root, "in")
-    stage = os.path.join(root, "stage")
-    ckpt = os.path.join(root, "ckpt")
-    name = f"resume_{uuid.uuid4().hex[:8]}"
-    try:
-        (
-            ev.withColumn("sp", F.pmod("i", F.lit(n_splits)))
-            .repartition(n_splits, "sp")
-            .select("k", "sp")
-            .write.mode("overwrite")
-            .partitionBy("sp")
-            .parquet(stage)
-        )
-        os.makedirs(in_dir, exist_ok=True)
+    with tempfile.TemporaryDirectory(prefix="drune_resume_stream_") as root:
+        in_dir = os.path.join(root, "in")
+        stage = os.path.join(root, "stage")
+        ckpt = os.path.join(root, "ckpt")
+        _write_splits(ev, "i", n_splits, stage, ["k"])
+        os.makedirs(in_dir)
 
         def land(splits) -> None:
-            import time as _time
-
-            now = _time.time()
             for b in splits:
-                d = os.path.join(stage, f"sp={b}")
-                for fn in os.listdir(d):
-                    # skip _SUCCESS markers and .crc sidecars — copying
-                    # a hidden .part-*.crc under a visible name makes
-                    # the stream read it as parquet and fail
-                    if fn.startswith((".", "_")) or not fn.endswith(
-                        ".parquet"
-                    ):
-                        continue
-                    dst = os.path.join(in_dir, f"sp{b}_{fn}")
-                    shutil.copy(os.path.join(d, fn), dst)
-                    os.utime(dst, (now - 600 + 100 * b,) * 2)
+                # part files only: a hidden .part-*.crc copied under a
+                # visible name makes the stream read it as parquet and
+                # fail. copy2 keeps the pinned mtime, so batch order holds.
+                for src in glob.glob(
+                        os.path.join(stage, f"sp={b}", "*.parquet")):
+                    shutil.copy2(src, os.path.join(
+                        in_dir, f"sp{b}_{os.path.basename(src)}"))
 
-        def drain() -> None:
-            q = (
+        def run() -> DataFrame:
+            return drain(
                 spark.readStream.schema("k string")
                 .option("maxFilesPerTrigger", "1")
                 .parquet(in_dir)
                 .groupBy("k")
-                .count()
-                .writeStream.format("memory")
-                .queryName(name)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+                .count(),
+                "complete",
+                checkpoint=ckpt,
             )
-            q.awaitTermination()
 
-        with state_partitions(spark, n_state_partitions):
-            land(range(n_splits // 2))
-            drain()                      # run 1: first half only
-            land(range(n_splits // 2, n_splits))
-            drain()                      # run 2: SAME checkpoint, new files
-        rows = [
-            (r.k, int(r["count"]))
-            for r in spark.table(name).collect()
+        land(range(n_splits // 2))
+        run()                            # run 1: first half only
+        land(range(n_splits // 2, n_splits))
+        rows = [                         # run 2: SAME checkpoint, new files
+            (r.k, int(r["count"])) for r in run().collect()
         ]  # |keys|-row fetch
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     from drune_spark.functions.partitioning import local_frame
     return local_frame(
         spark, sorted(rows), f"{key_col} string, n bigint"
@@ -948,7 +829,6 @@ def stream_dlq(
     events_path: str,
     rules: list[tuple[str, str, str, dict]] | None = None,
     n_splits: int = 4,
-    n_state_partitions: int | None = 8,
 ) -> DataFrame:
     """Streaming dead-letter routing — the ingest-quality pattern every
     production pipeline needs: each micro-batch is screened by the SAME
@@ -971,8 +851,6 @@ def stream_dlq(
 
     Returns (route, reason, key, n) counts from the two sinks.
     """
-    import shutil
-
     from drune_spark.quality.rules import RuleRegistry
 
     if rules is None:
@@ -990,42 +868,29 @@ def stream_dlq(
     for reason, ok in reversed(checks):
         reason_expr = F.when(~ok, F.lit(reason)).otherwise(reason_expr)
 
-    split_dir = tempfile.mkdtemp(prefix="drune_dlq_stream_")
-    main_dir = os.path.join(split_dir, "main")
-    dlq_dir = os.path.join(split_dir, "dlq")
-    try:
-        (
-            spark.read.parquet(events_path)
-            .select("event_id", "event_type", "value")
-            .withColumn("sp", F.pmod("event_id", F.lit(n_splits)))
-            .repartition(n_splits, "sp")
-            .write.mode("overwrite")
-            .partitionBy("sp")
-            .parquet(os.path.join(split_dir, "in"))
+    def route(batch_df: DataFrame, batch_id: int) -> None:
+        tagged = batch_df.withColumn("reason", reason_expr)
+        tagged.filter("reason <> 'ok'").write.mode("overwrite") \
+            .parquet(os.path.join(dlq_dir, f"batch={batch_id}"))
+        tagged.filter("reason = 'ok'").drop("reason") \
+            .write.mode("overwrite") \
+            .parquet(os.path.join(main_dir, f"batch={batch_id}"))
+
+    with tempfile.TemporaryDirectory(prefix="drune_dlq_stream_") as d:
+        in_dir = os.path.join(d, "in")
+        main_dir, dlq_dir = os.path.join(d, "main"), os.path.join(d, "dlq")
+        cols = ["event_id", "event_type", "value"]
+        _write_splits(
+            spark.read.parquet(events_path), "event_id", n_splits, in_dir,
+            cols,
         )
-
-        def route(batch_df: DataFrame, batch_id: int) -> None:
-            tagged = batch_df.withColumn("reason", reason_expr)
-            tagged.filter("reason <> 'ok'").write.mode("overwrite") \
-                .parquet(os.path.join(dlq_dir, f"batch={batch_id}"))
-            tagged.filter("reason = 'ok'").drop("reason") \
-                .write.mode("overwrite") \
-                .parquet(os.path.join(main_dir, f"batch={batch_id}"))
-
-        with tempfile.TemporaryDirectory() as ckpt, \
-                state_partitions(spark, n_state_partitions):
-            query = (
-                spark.readStream
-                .schema("event_id bigint, event_type string, value double")
-                .option("maxFilesPerTrigger", "1")
-                .parquet(os.path.join(split_dir, "in", "sp=*"))
-                .writeStream
-                .foreachBatch(route)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
+        drain(
+            spark.readStream
+            .schema("event_id bigint, event_type string, value double")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(os.path.join(in_dir, "sp=*")),
+            sink=lambda w: w.foreachBatch(route).start(),
+        )
 
         opts = {"recursiveFileLookup": "true"}
         dlq_counts = [
@@ -1040,8 +905,6 @@ def stream_dlq(
             .groupBy("event_type")
             .agg(F.count(F.lit(1)).alias("n")).collect()
         ]
-    finally:
-        shutil.rmtree(split_dir, ignore_errors=True)
     from drune_spark.functions.partitioning import local_frame
     return local_frame(
         spark,

@@ -14,9 +14,6 @@ state; Arrow batches keep the per-key Python work vectorized.
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
 from collections.abc import Iterator
 from typing import Any
 
@@ -144,16 +141,13 @@ def sessionize_stream(
     gap: str = "30 minutes",
     watermark: str = "0 seconds",
     max_files_per_trigger: int | None = None,
-    n_state_partitions: int | None = 8,
 ) -> DataFrame:
     """Custom stateful sessionization (the applyInPandasWithState
     equivalent of ``F.session_window``) over a bounded file stream.
     Returns CLOSED sessions (user_id, session_start_us, session_end_us,
     n_events); sessions still open when the stream drains are not
     emitted — by design, they have not ended."""
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from drune_spark.streaming.runner import _raw_stream
+    from drune_spark.streaming.runner import _raw_stream, drain
 
     gap_us = int(pd.Timedelta(gap).total_seconds() * 1_000_000)
     stream = _raw_stream(
@@ -168,21 +162,7 @@ def sessionize_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    from drune_spark.streaming.runner import state_partitions
-
-    name = f"sess_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory() as ckpt, \
-            state_partitions(spark, n_state_partitions):
-        query = (
-            sessions.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    return spark.table(name)
+    return drain(sessions)
 
 
 def user_monitor_stream(
@@ -190,7 +170,6 @@ def user_monitor_stream(
     events_path: str,
     ts_col: str = "ts",
     max_files_per_trigger: int | None = None,
-    n_state_partitions: int | None = 8,
 ) -> DataFrame:
     """Run the stateful monitor over a (bounded) event stream with
     ``availableNow`` and return the final per-user state.
@@ -204,7 +183,7 @@ def user_monitor_stream(
     """
     from pyspark.sql import functions as F
 
-    from drune_spark.streaming.runner import _raw_stream
+    from drune_spark.streaming.runner import _raw_stream, drain
 
     stream = _raw_stream(
         spark, events_path,
@@ -218,20 +197,7 @@ def user_monitor_stream(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    from drune_spark.streaming.runner import state_partitions as _sp
-
-    name = f"mon_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory() as ckpt, _sp(spark, n_state_partitions):
-        query = (
-            monitored.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    updates = spark.table(name)
+    updates = drain(monitored, "update")
     # Keep the final (highest n_events) update per user.
     from pyspark.sql import Window
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
@@ -312,14 +278,13 @@ def type_count_stream(
     spark: SparkSession,
     events_path: str,
     max_files_per_trigger: int | None = None,
-    n_state_partitions: int | None = 8,
 ) -> DataFrame:
     """Run the v2-state per-(user, event_type) counter over a bounded
     file stream (availableNow) and return the final counters.
 
     transformWithStateInPandas requires the RocksDB state store; the
-    provider conf is scoped to the query and restored afterwards (local
-    HDFS-backed stores don't support the v2 API's column families).
+    drain scopes the provider conf to the query (local HDFS-backed
+    stores don't support the v2 API's column families).
 
     Update-mode memory sink: counters are monotone, so the final state
     per (user_id, event_type) is the max-n_events emission.
@@ -327,7 +292,7 @@ def type_count_stream(
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from drune_spark.streaming.runner import _raw_stream, state_partitions
+    from drune_spark.streaming.runner import ROCKSDB, _raw_stream, drain
 
     proc = _TypeCountProcessor()
     stream = _raw_stream(
@@ -341,32 +306,7 @@ def type_count_stream(
         outputMode="Update",
         timeMode="None",
     )
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(provider_key, None)
-    name = f"twsc_{uuid.uuid4().hex[:8]}"
-    try:
-        spark.conf.set(
-            provider_key,
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        with tempfile.TemporaryDirectory() as ckpt, \
-                state_partitions(spark, n_state_partitions):
-            query = (
-                counted.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            query.awaitTermination()
-    finally:
-        if prev_provider is not None:
-            spark.conf.set(provider_key, prev_provider)
-        else:
-            spark.conf.unset(provider_key)
-    updates = spark.table(name)
+    updates = drain(counted, "update", conf=ROCKSDB)
     w = Window.partitionBy("user_id", "event_type").orderBy(
         F.col("n_events").desc()
     )

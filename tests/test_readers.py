@@ -67,7 +67,8 @@ class TestReadSource:
     # The driver has regenerated events.parquet with a different
     # timestamp flavor between rounds (ns in r1/r2, us-naive in r3).
     # Whatever the writer emits, `ts` must land as TIMESTAMP with the
-    # same UTC instants — parametrized so future drift fails in pytest,
+    # same UTC instants, from the batch reader and from the file stream
+    # (drained) alike — parametrized so future drift fails in pytest,
     # not in the driver gate.
     @pytest.mark.parametrize("flavor", ["ns", "us_ntz", "us_ltz", "int96", "ms_ntz"])
     def test_timestamp_flavor_drift(self, spark, tmp_path, flavor):
@@ -101,16 +102,19 @@ class TestReadSource:
             arr = pa.array(instants, type=pa.timestamp(unit, tz=tz))
             pq.write_table(pa.table({"ts": arr}), p)
 
-        df = read_parquet_nanos_safe(spark, p)
-        assert dict(df.dtypes)["ts"] == "timestamp", flavor
-        got = sorted(r.ts for r in df.collect())
+        from drune_spark.streaming.runner import _raw_stream, drain
+
         want = instants
         if flavor == "ms_ntz":  # ms storage truncates sub-ms precision
             want = [t.replace(microsecond=t.microsecond // 1000 * 1000)
                     for t in instants]
-        assert [t.replace(tzinfo=None) for t in got] == want, flavor
-        # event-time ops must accept it (this is what NTZ breaks)
-        df.selectExpr("unix_micros(ts)").collect()
+        for df in (read_parquet_nanos_safe(spark, p),
+                   drain(_raw_stream(spark, p).withWatermark("ts", "1 day"))):
+            assert dict(df.dtypes)["ts"] == "timestamp", flavor
+            got = sorted(r.ts for r in df.collect())
+            assert [t.replace(tzinfo=None) for t in got] == want, flavor
+            # event-time ops must accept it (this is what NTZ breaks)
+            df.selectExpr("unix_micros(ts)").collect()
 
     # r10 optimization: per-process schema caches (readers._NANOS_READ_CACHE
     # and __spark_entry__._SCHEMA_CACHE) skip the footer-inference job on

@@ -208,6 +208,31 @@ class TestModeEdgeCases:
         assert out == (True, True)
         assert jobs == []
 
+    @pytest.mark.parametrize("op", ["ivf_train", "nsw_greedy_search"])
+    def test_vector_ops_reject_string_ids(
+        self, spark, both_modes, jobs_in, op
+    ):
+        """The vector operators raise TypeError naming the id column
+        in both modes before any Spark job; their distributed paths
+        used to fail deep in the run (``int()`` on the seeds,
+        CAST_INVALID_INPUT in the NSW walk)."""
+        from drune_spark.operators import kmeans, similarity
+
+        run = {"ivf_train": kmeans.ivf_train,
+               "nsw_greedy_search": similarity.nsw_greedy_search}[op]
+        vecs = spark.createDataFrame(
+            [(f"v{i}", [1.0, float(i)]) for i in range(4)],
+            "vec_id string, embedding array<double>")
+
+        def build():
+            with pytest.raises(TypeError, match="vec_id is string"):
+                run(vecs)
+            return True
+
+        out, jobs = jobs_in(op, lambda: both_modes(build))
+        assert out == (True, True)
+        assert jobs == []
+
 
 class TestHandOff:
     """A replay's result frame holds the Arrow table it was built from,
@@ -491,11 +516,12 @@ class TestGraphDifferential:
 
 
 def _result(build):
-    """``_outcome`` of ``build()``, or the name of the error it raised."""
+    """``_outcome`` of ``build()``, or the error it raised as
+    ``"<type>: <message>"``."""
     try:
         return _outcome(build())
     except Exception as e:  # noqa: BLE001 — compared across modes
-        return type(e).__name__
+        return f"{type(e).__name__}: {e}"
 
 
 def _nongraph_ops():
@@ -543,13 +569,18 @@ _VECS = [[1.0, 0.0], [0.0, 1.0], [0.9, 0.2], [0.2, 0.9], [0.7, 0.6]]
 _UNIQUE = {"prefix_filter_join", "minhash_lsh_pairs", "lsh_census_eval",
            "incremental_minhash_dedup", "simhash_near_dup_pairs_portable",
            "ivf_train", "nsw_greedy_search"}
-# The vector operators take integer ids: they decline string and date
-# ids, and their distributed paths then fail on them, with the same
-# error in both modes; so does ivf's distributed seeding on a NULL id
-# or a NULL vector element (``int(None)``).
+# The vector operators take integer ids: string and date ids raise
+# ``TypeError`` naming the id column before any Spark job, in both
+# modes; ivf's distributed seeding raises ``ValueError`` on a NULL id
+# (after the replay declines it) and on a NULL vector element.
 _INTEGER = {"ivf_train", "nsw_greedy_search"}
-_RAISES = {(op, name) for op in _INTEGER for name in ("string", "date")
-           } | {("ivf_train", "null"), ("ivf_train", "null_element")}
+_RAISES = {
+    (op, t): f"TypeError: {op} needs int or bigint ids; doc_id is {t}"
+    for op in _INTEGER for t in ("string", "date")} | {
+    ("ivf_train", "null"): "ValueError: ivf_train: doc_id holds a NULL id",
+    ("ivf_train", "null_element"):
+        "ValueError: ivf_train: embedding holds a NULL vector element",
+}
 _ID_FREE = {"bpe_train", "wordpiece_train"}  # the trainers read no ids
 
 
@@ -583,10 +614,11 @@ def _nongraph_cases(spark):
         "bigint": (_Inputs(spark, "bigint", [1, 2, 3, 4]), wants(None)),
         "int_key": (_Inputs(spark, "int", [4, 3, 2, 1], "key"),
                     wants(None)),
+        # the vector operators raise before their gates
         "string": (_Inputs(spark, "string", ["d1", "d2", "d3", "d4"]),
-                   wants("id_type", _INTEGER)),
+                   wants(None)),
         "date": (_Inputs(spark, "date", days),
-                 wants("id_type", set(NON_GRAPH_OPS) - _ID_FREE)),
+                 wants("id_type", set(NON_GRAPH_OPS) - _ID_FREE - _INTEGER)),
         "null": (_Inputs(spark, "bigint", [1, None, 3, 4]),
                  wants("null_id", set(NON_GRAPH_OPS) - _ID_FREE)),
         "duplicate": (_Inputs(spark, "bigint", [1, 1, 3, 4]),
@@ -629,7 +661,10 @@ class TestReplayDifferential:
             marks = []
             fast, slow = both_modes(run)
             assert fast == slow, (op, name)
-            assert isinstance(fast, str) == ((op, name) in _RAISES), fast
+            if (op, name) in _RAISES:
+                assert fast == _RAISES[op, name]
+            else:
+                assert not isinstance(fast, str), (op, name, fast)
             default = [r for r in records()[marks[0]:marks[1]]
                        if r.op == op]
             declines = {r.reason for r in default

@@ -538,7 +538,12 @@ class TestKafkaMock:
 
 class TestStreamedDistinct:
     def test_matches_batch_distinct(self, spark, tmp_path):
-        from drune_spark.streaming.runner import streamed_distinct
+        """The streamed distinct keys, and the native session windows
+        the stream finalizes (ending by the last event time), equal the
+        batch answers on the same rows."""
+        from drune_spark.streaming.runner import (
+            session_window_counts, streamed_distinct,
+        )
         import datetime as dt
 
         rows = []
@@ -569,6 +574,27 @@ class TestStreamedDistinct:
             ).distinct().collect()
         )
         assert got == want and len(got) == 6
+
+        sessions = sorted(
+            tuple(r) for r in session_window_counts(spark, path).collect()
+        )
+        last = df.agg(F.max("ts")).first()[0]
+        batch = sorted(
+            tuple(r) for r in df.groupBy(
+                F.session_window("ts", "30 minutes"), "user_id"
+            ).agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.col("value").cast("decimal(18,3)")).alias("v"),
+            ).filter(F.col("session_window.end") <= F.lit(last)).select(
+                "user_id",
+                F.unix_millis("session_window.start"),
+                F.unix_millis("session_window.end"),
+                "n",
+                F.col("v").cast("double"),
+            ).collect()
+        )
+        # one session a day; the last day's is still open
+        assert sessions == batch and len(batch) == 2
 
     def test_within_watermark_expiry_readmits(self, spark, tmp_path):
         """dropDuplicatesWithinWatermark semantics under the constructed
@@ -833,3 +859,78 @@ class TestStreamAntiFilter:
             for r in stream_anti_filter(spark, path, seen).collect()
         )
         assert out == [1, 3, 5, 7, 9, 11]
+
+
+class TestDrain:
+    def test_leaves_no_session_state(self, spark, tmp_path, monkeypatch):
+        """Under the hostile session's 200 shuffle partitions, a
+        memory-sink operator, a foreachBatch operator, two failing
+        queries and ``execute_streaming()`` leave the conf at 200, the
+        state-store provider as it was, no new temp view, no active
+        query and no checkpoint directory behind; the memory-sink frame
+        stays readable after its view is dropped."""
+        import tempfile
+
+        from pyspark.errors import StreamingQueryException
+
+        from drune_spark.config.models import PipelineModel
+        from drune_spark.pipeline import Pipeline
+        from drune_spark.streaming.runner import (
+            ROCKSDB, drain, stream_cms_sketch, streamed_distinct,
+        )
+
+        scratch = tmp_path / "tmp"
+        scratch.mkdir()
+        monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+        provider = next(iter(ROCKSDB))
+        df = spark.createDataFrame(
+            [(i, dt.datetime(2024, 1, 1 + i % 3), i % 2, "click", 1.0)
+             for i in range(12)],
+            "event_id long, ts timestamp, user_id long, "
+            "event_type string, value double",
+        )
+        path = str(tmp_path / "ev")
+        df.write.parquet(path)
+        src = spark.readStream.schema(df.schema).parquet(path)
+
+        def boom(batch_df, batch_id):
+            raise RuntimeError("boom")
+
+        prev_partitions = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "200")
+        try:
+            views = {t.name for t in spark.catalog.listTables()}
+            before = spark.conf.get(provider, None)
+            distinct = streamed_distinct(spark, path)
+            assert stream_cms_sketch(spark, path, top_k=2).count() == 2
+            with pytest.raises(StreamingQueryException, match="boom"):
+                drain(src, sink=lambda w: w.foreachBatch(boom).start(),
+                      conf=ROCKSDB)
+            with pytest.raises(StreamingQueryException):
+                drain(src.withColumn(
+                    "x", F.raise_error(F.lit("boom")).cast("int")))
+            Pipeline(spark, PipelineModel.model_validate({
+                "pipeline_name": "drain_hygiene",
+                "sources": [{"name": "ev", "type": "file",
+                             "format": "parquet", "path": path,
+                             "schema": {"columns": [
+                                 {"name": "cd_event", "from": "event_id",
+                                  "type": "long",
+                                  "constraints": [{"rule": "isbetween:[0, 5]",
+                                                   "on_fail": "drop"}]}]}}],
+                "steps": [],
+                "target": {"name": "out", "type": "file",
+                           "format": "parquet",
+                           "path": str(tmp_path / "out"),
+                           "mode": "overwrite"},
+            }), failed_records_path=str(tmp_path / "failed.csv")
+            ).execute_streaming()
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "200"
+            assert spark.conf.get(provider, None) == before
+            assert {t.name for t in spark.catalog.listTables()} == views
+            assert spark.streams.active == []
+            assert os.listdir(scratch) == []
+            assert distinct.count() == 3
+            assert len(os.listdir(tmp_path / "failed.csv")) > 0
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev_partitions)

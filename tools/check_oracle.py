@@ -20,6 +20,12 @@ Usage: python tools/check_oracle.py [--hostile] [sf_dir] [query ...]
 non-UTC timezone, AQE off, 200 shuffle partitions. Every query's
 ``tune_session`` must absorb it — run this after touching session/
 timezone-sensitive code.
+
+After each query a ``LEAK <query>`` line reports session state the query
+left behind: a temp view it created, or a change to one of ``WATCHED``
+other than the value ``tune_session`` sets. The line is a report only;
+it never fails the query (a pipeline may register source views on
+purpose, and the report shows which ones do).
 """
 
 from __future__ import annotations
@@ -32,6 +38,11 @@ from decimal import Decimal
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
+
+WATCHED = (
+    "spark.sql.shuffle.partitions",
+    "spark.sql.streaming.stateStore.providerClass",
+)
 
 
 def canon(value) -> str:
@@ -82,6 +93,24 @@ def fetch_duckdb_arrow(con, sql: str) -> tuple[list[str], list[tuple]]:
     return cols, rows
 
 
+def session_state(spark) -> tuple[set[str], dict[str, str | None]]:
+    """Temp view names and the ``WATCHED`` conf values."""
+    views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+    return views, {k: spark.conf.get(k, None) for k in WATCHED}
+
+
+def leaks(before, after) -> list[str]:
+    """What changed between two ``session_state`` snapshots, except a
+    watched conf set to the value ``tune_session`` applies."""
+    from drune_spark.session import DEFAULT_CONF
+
+    out = [f"view {v}" for v in sorted(after[0] - before[0])]
+    for k, v in after[1].items():
+        if v != before[1][k] and v != DEFAULT_CONF.get(k):
+            out.append(f"{k} {before[1][k]} -> {v}")
+    return out
+
+
 def main() -> int:
     args = sys.argv[1:]
     hostile = "--hostile" in args
@@ -121,6 +150,7 @@ def main() -> int:
             continue
         import time
         t0 = time.time()
+        before = session_state(spark)
         try:
             sdf = fn(spark, sf_dir)
             srows = [tuple(r) for r in sdf.collect()]
@@ -129,6 +159,10 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL {name}: spark error: {type(e).__name__}: {e}")
             continue
+        finally:
+            left = leaks(before, session_state(spark))
+            if left:
+                print(f"LEAK {name}: {'; '.join(left)}")
         if name not in oracles:
             print(f"  ok {name}: rows-only ({len(srows)} rows, "
                   f"{time.time()-t0:.1f}s) [no oracle]")
