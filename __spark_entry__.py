@@ -9018,12 +9018,11 @@ def q_stream_dedup_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup key set outgrows executor memory and RocksDB is the standard
     answer). Same exact result as the default HDFS-backed provider —
     one oracle text covers both (provider changes WHERE state lives,
-    never WHAT is emitted); the drain's conf scope,
+    never WHAT is emitted); the session's conf scope,
     ``session_conf``, sets the provider and restores it after."""
     _tune(spark)
-    from drune_spark.streaming.runner import (
-        ROCKSDB, session_conf, streamed_distinct,
-    )
+    from drune_spark.session import session_conf
+    from drune_spark.streaming.runner import ROCKSDB, streamed_distinct
 
     with session_conf(spark, ROCKSDB):
         return streamed_distinct(spark, os.path.join(sf_dir, "events.parquet"))

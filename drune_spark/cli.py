@@ -43,10 +43,11 @@ def run(pipeline_name: str, project: str, profile: str | None,
     """Execute a pipeline: read -> schema -> constraints -> steps -> write."""
     proj = Project(project, profile=profile)
     pipe = proj.pipeline(pipeline_name)
-    pipe.read()
-    pipe.run(stop_at=stop_at)
     if stop_at is None:
-        pipe.write()
+        pipe.execute()
+    else:
+        pipe.read()
+        pipe.run(stop_at=stop_at)
     click.echo(f"pipeline '{pipeline_name}' completed")
 
 

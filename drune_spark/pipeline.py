@@ -12,13 +12,17 @@ only action: constraint counts ride that write as observed metrics. A
 source runs one earlier action (filling its flag-frame cache) only when
 it has a fail rule, which must abort before anything is written, or
 when a failure-log sink reads its flag frame too. ``run(stop_at=...)``
-supports breakpointed execution and re-entry (step_manager.py:54-99).
+supports breakpointed execution and re-entry (step_manager.py:54-99);
+the step output it hands back is persisted, so the caller's actions and
+the write compute the step chain once. A cache no action has filled is
+released before the write, which then plans from the source, uncached.
 """
 
 from __future__ import annotations
 
 import glob
 import os
+import weakref
 from typing import Any, Optional
 
 import yaml
@@ -45,7 +49,8 @@ from drune_spark.quality.manager import (
     QualityResult,
     apply_constraints,
 )
-from drune_spark.sources.readers import read_source
+from drune_spark.session import session_conf
+from drune_spark.sources.readers import read_source, resolve_dynamic_path
 from drune_spark.sinks.writers import (
     log_sink_kind, write_target, write_validation_log,
 )
@@ -53,6 +58,19 @@ from drune_spark.sinks.writers import (
 
 class GoldenTestFailure(AssertionError):
     pass
+
+
+def _unpersist(frames: list[DataFrame]) -> None:
+    while frames:
+        frames.pop().unpersist()
+
+
+def _cache_filled(df: DataFrame) -> bool:
+    """Whether every partition of ``df``'s cache has been computed."""
+    cached = df.sparkSession._jsparkSession.sharedState().cacheManager() \
+        .lookupCachedData(df._jdf)
+    return not cached.isEmpty() and cached.get().cachedRepresentation() \
+        .cacheBuilder().isCachedColumnBuffersLoaded()
 
 
 def _merge_yaml_dir(path: str) -> dict[str, Any]:
@@ -150,8 +168,14 @@ class Pipeline:
         # every constrained source's result, by source name: write() takes
         # its counts and releases its flag-frame cache, if it has one
         self.quality: dict[str, QualityResult] = {}
+        # the frame the last run() persisted (at most one), until
+        # write(), golden_test(), read(), reset(), the next run() or the
+        # pipeline's collection releases it
+        self._held: list[DataFrame] = []
+        weakref.finalize(self, _unpersist, self._held).atexit = False
 
     def reset(self) -> None:
+        _unpersist(self._held)
         self.runner.reset()
         self.sources = {}
         self.target_df = None
@@ -160,11 +184,17 @@ class Pipeline:
     # -- read phase ----------------------------------------------------------
     def read(self, src_paths: Optional[dict[str, str]] = None) -> "Pipeline":
         src_paths = src_paths or {}
+        _unpersist(self._held)
         for replaced in self.quality.values():
             replaced.unpersist()
         self.quality = {}
         for spec in self.model.sources:
             df = read_source(self.spark, spec, src_paths.get(spec.name))
+            if spec.type == "file":
+                # A cache over these files (another pipeline's unwritten
+                # run() result) would serve their old rows to this read.
+                self.spark.catalog.refreshByPath(
+                    resolve_dynamic_path(spec, src_paths.get(spec.name)))
             if spec.schema_ is not None:
                 df = apply_schema(df, spec.schema_)
                 if spec.schema_.primary_key:
@@ -212,15 +242,52 @@ class Pipeline:
 
     # -- step phase ----------------------------------------------------------
     def run(self, stop_at: Optional[str] = None) -> Optional[DataFrame]:
+        """Run the steps (up to and including ``stop_at``) and return their
+        output, persisted: the caller's actions on it, and ``write()``,
+        read one computation of the step chain. The pipeline holds the
+        cache until ``write()``, ``golden_test()``, ``read()``,
+        ``reset()``, the next ``run()`` or its own collection releases
+        it; a later ``read()`` of the same files, by any pipeline,
+        refreshes a cache still held over them. A resumed run (after
+        ``run(stop_at=...)``) releases the earlier result first and
+        recomputes the steps before its breakpoint.
+
+        The cache is built with ``canChangeCachedPlanOutputPartitioning``
+        scoped on, so AQE coalesces it as it would an uncached read;
+        without it the cache keeps ``spark.sql.shuffle.partitions``
+        partitions and ``write()`` spreads them over as many files."""
+        _unpersist(self._held)
         self.target_df = self.runner.run(
             self.model.steps, self.sources, self.target_df, stop_at
         )
+        if self.target_df is not None:
+            with session_conf(self.spark, {
+                "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning":
+                    "true",
+            }):
+                self._held.append(self.target_df.persist())
         return self.target_df
 
     # -- write phase ---------------------------------------------------------
     def write(self) -> None:
+        """Write ``target_df`` to the target; the write also resolves the
+        constraint counts. It releases the frame ``run()`` persisted,
+        pass or fail: first, if no action has filled its cache, so the
+        write plans from the source as an uncached frame would (filling
+        a cache only the write reads costs a job's worth of memory for
+        nothing), else after the write."""
         if self.model.target is None or self.target_df is None:
             raise RuntimeError("nothing to write: no target config or no data")
+        try:
+            self._write()
+        finally:
+            _unpersist(self._held)
+            for quality in self.quality.values():
+                quality.unpersist()
+
+    def _write(self) -> None:
+        if self._held and not _cache_filled(self._held[0]):
+            _unpersist(self._held)
         tgt = self.model.target
         df = self.target_df
         if tgt.schema_ is not None and tgt.schema_.columns:
@@ -244,11 +311,17 @@ class Pipeline:
                 quality.recount()
             else:
                 quality.take_observed()
-            quality.unpersist()
 
     def execute(self, src_paths: Optional[dict[str, str]] = None) -> None:
+        """read → steps → write, with the step output unpersisted: the
+        write is its only reader. (``run()``'s ``persist()`` plans the
+        whole chain once more on the driver, about 40 ms for
+        medallion_etl's gold query, though ``write()`` would release
+        the unfilled cache.)"""
         self.read(src_paths)
-        self.run()
+        self.target_df = self.runner.run(
+            self.model.steps, self.sources, self.target_df
+        )
         self.write()
 
     # -- streaming execution (SURVEY §2.12, additive) ------------------------
@@ -370,25 +443,30 @@ class Pipeline:
     def golden_test(self, expected: DataFrame,
                     actual: Optional[DataFrame] = None) -> None:
         """Reference equality: schema ==, count ==, exceptAll both ways
-        empty, volatile columns dropped (spark_engine.py:206-230)."""
+        empty, volatile columns dropped (spark_engine.py:206-230). Like
+        ``write()``, it ends the run: it releases the frame ``run()``
+        persisted, pass or fail."""
         if actual is None:
             actual = self.target_df
         if actual is None:
             raise RuntimeError("no result to test")
-        a = actual.drop(*VOLATILE_COLUMNS)
-        e = expected.drop(*VOLATILE_COLUMNS)
-        if sorted(a.columns) != sorted(e.columns):
-            raise GoldenTestFailure(f"schema mismatch: {a.columns} vs {e.columns}")
-        a = a.select(*sorted(a.columns))
-        e = e.select(*sorted(e.columns))
-        n_a, n_e = a.count(), e.count()
-        if n_a != n_e:
-            raise GoldenTestFailure(f"row count {n_a} != {n_e}")
-        extra = a.exceptAll(e)
-        missing = e.exceptAll(a)
-        n_extra, n_missing = extra.count(), missing.count()
-        if n_extra or n_missing:
-            raise GoldenTestFailure(
-                f"{n_extra} unexpected rows, {n_missing} missing rows; "
-                f"sample unexpected: {extra.limit(5).collect()}"
-            )
+        try:
+            a = actual.drop(*VOLATILE_COLUMNS)
+            e = expected.drop(*VOLATILE_COLUMNS)
+            if sorted(a.columns) != sorted(e.columns):
+                raise GoldenTestFailure(f"schema mismatch: {a.columns} vs {e.columns}")
+            a = a.select(*sorted(a.columns))
+            e = e.select(*sorted(e.columns))
+            n_a, n_e = a.count(), e.count()
+            if n_a != n_e:
+                raise GoldenTestFailure(f"row count {n_a} != {n_e}")
+            extra = a.exceptAll(e)
+            missing = e.exceptAll(a)
+            n_extra, n_missing = extra.count(), missing.count()
+            if n_extra or n_missing:
+                raise GoldenTestFailure(
+                    f"{n_extra} unexpected rows, {n_missing} missing rows; "
+                    f"sample unexpected: {extra.limit(5).collect()}"
+                )
+        finally:
+            _unpersist(self._held)

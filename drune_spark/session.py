@@ -14,6 +14,7 @@ Defaults chosen for the 100 TB design brief:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 from typing import Any, Optional
 
 from pyspark.sql import SparkSession
@@ -130,3 +131,21 @@ def tune_session(spark: SparkSession) -> SparkSession:
         except Exception:
             pass
     return spark
+
+
+@contextmanager
+def session_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set ``conf`` on the session for the block; on exit, also on an
+    error, restore each key's previous value or unset it if it had
+    none."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -19,6 +19,7 @@ raw lazy scan — projections land on top declaratively.
 
 from __future__ import annotations
 
+import glob
 import os
 from typing import Optional
 
@@ -52,10 +53,17 @@ def resolve_dynamic_path(spec: SourceSpec, runtime_path: Optional[str]) -> Optio
 
 def _nanos_columns(path: str) -> list[str]:
     """The columns pyarrow reads as ``timestamp[ns`` in the parquet file
-    at ``path``; none when its footer cannot be read (a directory)."""
+    at ``path``, or in a directory's first part file; none when no
+    footer can be read."""
+    path = path.replace("file://", "")
+    if os.path.isdir(path):
+        parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
+        if not parts:
+            return []
+        path = parts[0]
     try:
         import pyarrow.parquet as pq
-        schema = pq.read_schema(path.replace("file://", ""))
+        schema = pq.read_schema(path)
     except Exception:
         return []
     return [f.name for f in schema if str(f.type).startswith("timestamp[ns")]

@@ -31,11 +31,12 @@ import os
 import shutil
 import tempfile
 import time
-from contextlib import ExitStack, contextmanager
+from contextlib import ExitStack
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from drune_spark.session import session_conf
 from drune_spark.sources.readers import _event_time, _nanos_columns
 
 # Shuffle partitions of every drained query: each one owns a state-store
@@ -53,24 +54,6 @@ ROCKSDB = {
 }
 
 _memory_sinks = itertools.count()
-
-
-@contextmanager
-def session_conf(spark: SparkSession, conf: dict[str, str]):
-    """Set ``conf`` on the session for the block; on exit, also on an
-    error, restore each key's previous value or unset it if it had
-    none."""
-    prev = {k: spark.conf.get(k, None) for k in conf}
-    try:
-        for k, v in conf.items():
-            spark.conf.set(k, v)
-        yield
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def drain(
@@ -162,15 +145,11 @@ def _raw_stream(
     """File-stream source over parquet, with the timestamp rules of
     ``read_parquet_nanos_safe``: nanos columns stream as longs
     (nanosAsLong) and convert in-stream, naive ones cast from NTZ (which
-    ``withWatermark`` rejects). File-stream sources take a directory,
-    whose first part file is probed; a single-file path streams from its
-    parent with a glob filter on the basename.
+    ``withWatermark`` rejects). File-stream sources take a directory; a
+    single-file path streams from its parent with a glob filter on the
+    basename.
     """
-    schema_file = events_path
-    if os.path.isdir(events_path):
-        parts = sorted(glob.glob(os.path.join(events_path, "*.parquet")))
-        schema_file = parts[0] if parts else events_path
-    nanos_cols = _nanos_columns(schema_file)
+    nanos_cols = _nanos_columns(events_path)
     if nanos_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     reader = spark.readStream.schema(spark.read.parquet(events_path).schema)
@@ -516,15 +495,10 @@ def stream_upsert(
     )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        try:
-            existing = sess.read.parquet(state_path)
-        except Exception:  # noqa: BLE001 — first batch, no state yet
-            existing = None
-        unioned = (
-            batch_df if existing is None
-            else batch_df.unionByName(existing)
-        )
+        unioned = batch_df
+        if os.path.exists(state_path):  # none before the first batch
+            unioned = batch_df.unionByName(
+                batch_df.sparkSession.read.parquet(state_path))
         w = Window.partitionBy("user_id").orderBy(
             F.col("ts_us").desc(), F.col("event_id").desc()
         )

@@ -300,6 +300,189 @@ class TestCorpusPrepPipeline:
         assert out.filter("doc_id % 17 = 0").count() == 0
 
 
+class TestRunHoldsStepOutput:
+    """``Pipeline.run()`` persists the step output it returns, coalesced
+    as an uncached read would be, and ``write()`` releases it."""
+
+    CONF = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+
+    def _pipeline(self, spark, tmp_path, name):
+        from drune_spark.config.models import PipelineModel
+
+        src = tmp_path / "docs"
+        if not src.exists():
+            self._corpus(src)
+        out = str(tmp_path / f"{name}.parquet")
+        model = PipelineModel.model_validate({
+            "pipeline_name": name,
+            "sources": [{"name": "documents", "type": "file",
+                         "format": "parquet", "path": str(src)}],
+            "steps": [
+                {"name": "scrub", "type": "redact",
+                 "params": {"text_col": "text"}},
+                {"name": "quality_gate", "type": "quality_filter",
+                 "params": {"text_col": "text", "id_col": "doc_id"}},
+                {"name": "exact_dedup", "type": "dedup",
+                 "params": {"text_col": "text", "id_col": "doc_id"}},
+            ],
+            "target": {"name": name, "type": "file", "format": "parquet",
+                       "path": out, "mode": "overwrite"},
+        })
+        return Pipeline(spark, model), str(src), out
+
+    @staticmethod
+    def _corpus(path):
+        """48 documents of 40 random words in 4 part files: every fifth
+        carries an email address, 6 repeat earlier ones and 2 repeat one
+        phrase (the quality gate drops those)."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        rng = np.random.default_rng(7)
+        letters = np.array(list("abcdefghijklmnopqrstuvwxyz"))
+        vocab = ["".join(rng.choice(letters, rng.integers(3, 8)))
+                 for _ in range(2000)]
+        texts = [" ".join(rng.choice(vocab, 40)) for _ in range(40)]
+        texts = [f"{t} user{i}@example.com" if i % 5 == 0 else t
+                 for i, t in enumerate(texts)]
+        texts += texts[:6] + [" ".join(["the same three words"] * 12)] * 2
+        path.mkdir()
+        for k in range(4):
+            ids = list(range(k, len(texts), 4))
+            pq.write_table(
+                pa.table({"doc_id": pa.array(ids, pa.int64()),
+                          "text": [texts[i] for i in ids]}),
+                path / f"part-{k}.parquet")
+
+    @staticmethod
+    def _persisted(spark):
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    @staticmethod
+    def _scans(spark, jobs, n_rows):
+        """Stages among ``jobs`` that read all ``n_rows`` source rows: a
+        read of the cache counts one record per cached batch."""
+        sc = spark.sparkContext
+        store = sc._jsc.sc().statusStore()
+        return sum(
+            store.lastStageAttempt(sid).inputRecords() >= n_rows
+            for j in jobs for sid in sc.statusTracker().getJobInfo(j).stageIds
+        )
+
+    def test_step_chain_runs_once_and_writes_as_execute(
+            self, spark, tmp_path, jobs_in):
+        import glob
+
+        pipe, src, out = self._pipeline(spark, tmp_path, "cached")
+        n_rows = spark.read.parquet(src).count()
+        persisted, conf = self._persisted(spark), spark.conf.get(self.CONF)
+
+        def flow():
+            pipe.read()
+            docs = pipe.run()
+            assert spark.conf.get(self.CONF) == conf
+            docs.count()
+            pipe.target_df = docs.join(docs.select("doc_id"), "doc_id",
+                                       "left_semi")
+            pipe.write()
+
+        _, jobs = jobs_in("run_holds_step_output", flow)
+        assert self._scans(spark, jobs, n_rows) == 1
+        assert self._persisted(spark) == persisted
+        assert spark.conf.get(self.CONF) == conf
+
+        plain, _, plain_out = self._pipeline(spark, tmp_path, "plain")
+        plain.execute()
+
+        def parts(path):
+            return len(glob.glob(f"{path}/part-*.parquet"))
+
+        assert parts(out) == parts(plain_out)
+        rows = [sorted(map(tuple, spark.read.parquet(p).collect()))
+                for p in (out, plain_out)]
+        assert rows[0] == rows[1] and rows[0]
+
+    def test_write_only_result_is_written_from_source(
+            self, spark, tmp_path, monkeypatch):
+        """read → run() → write() with no action between: the write
+        plans from the source and never fills the cache."""
+        import drune_spark.pipeline as pipeline_mod
+
+        written = []
+        real_write = pipeline_mod.write_target
+
+        def capture(spark_, df, spec):
+            written.append(df._jdf.queryExecution().optimizedPlan().toString())
+            return real_write(spark_, df, spec)
+
+        monkeypatch.setattr(pipeline_mod, "write_target", capture)
+        pipe, _, out = self._pipeline(spark, tmp_path, "write_only")
+        persisted = self._persisted(spark)
+        pipe.read()
+        pipe.run()
+        pipe.write()
+        assert "InMemoryRelation" not in written[0]
+        assert self._persisted(spark) == persisted
+        assert spark.read.parquet(out).count() > 0
+
+    def test_unwritten_result_does_not_serve_a_later_read(
+            self, spark, tmp_path):
+        """A held, filled result over files rewritten in place (same file
+        names) must not serve a second pipeline's read of them."""
+        import glob
+
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        first, src, _ = self._pipeline(spark, tmp_path, "first")
+        first.read()
+        first.run().count()
+        for part in sorted(glob.glob(f"{src}/part-*.parquet")):
+            table = pq.read_table(part)
+            pq.write_table(table.filter(pc.less(table["doc_id"], 24)), part)
+        second, _, out = self._pipeline(spark, tmp_path, "second")
+        second.execute()
+        ids = [r.doc_id for r in spark.read.parquet(out).collect()]
+        assert ids and max(ids) < 24
+        assert first.target_df is not None  # still alive, still unwritten
+
+    @pytest.mark.parametrize(
+        "end", ["read", "reset", "run", "golden_test", "drop", "failed_write"])
+    def test_unwritten_run_result_is_released(self, spark, tmp_path, end,
+                                              monkeypatch):
+        import gc
+
+        import drune_spark.pipeline as pipeline_mod
+
+        pipe, _, _ = self._pipeline(spark, tmp_path, "replaced")
+        persisted = self._persisted(spark)
+        pipe.read()
+        docs = pipe.run()
+        docs.count()
+        assert self._persisted(spark) == persisted + 1
+        if end == "golden_test":
+            pipe.golden_test(docs)
+        elif end == "run":
+            # a second run() holds its own result in place of the first
+            pipe.run().count()
+            persisted += 1
+        elif end == "failed_write":
+            def fail(*_):
+                raise OSError("disk full")
+
+            monkeypatch.setattr(pipeline_mod, "write_target", fail)
+            with pytest.raises(OSError):
+                pipe.write()
+        elif end == "drop":
+            # collecting the pipeline releases what it held
+            del pipe
+            gc.collect()
+        else:
+            getattr(pipe, end)()
+        assert self._persisted(spark) == persisted
+
+
 class TestAnalyticsSteps:
     def test_profile_histogram_percentile_steps_chain(self, spark):
         from drune_spark.config.models import StepConfig

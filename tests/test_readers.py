@@ -68,11 +68,15 @@ class TestReadSource:
     # timestamp flavor between rounds (ns in r1/r2, us-naive in r3).
     # Whatever the writer emits, `ts` must land as TIMESTAMP with the
     # same UTC instants, from the batch reader and from the file stream
-    # (drained) alike — parametrized so future drift fails in pytest,
-    # not in the driver gate.
+    # (drained) alike, read as a file or as its directory, on a session
+    # that has not yet set nanosAsLong (cold) and on one an earlier
+    # nanos read left it set on (warm) — parametrized so future drift
+    # fails in pytest, not in the driver gate.
     @pytest.mark.parametrize("flavor", ["ns", "us_ntz", "us_ltz", "int96", "ms_ntz"])
-    def test_timestamp_flavor_drift(self, spark, tmp_path, flavor):
+    def test_timestamp_flavor_drift(self, spark, tmp_path, flavor,
+                                    monkeypatch):
         import datetime as dt
+        import glob
 
         import pyarrow as pa
         import pyarrow.parquet as pq
@@ -82,14 +86,15 @@ class TestReadSource:
             dt.datetime(2024, 6, 15, 12, 30, 45, 500000),
             dt.datetime(2025, 12, 31, 23, 59, 59, 0),
         ]
-        p = str(tmp_path / f"ev_{flavor}.parquet")
+        dpath = tmp_path / f"ev_{flavor}.parquet"
+        d = str(dpath)
         if flavor == "int96":
             sdf = spark.createDataFrame(
                 [(t,) for t in instants], ["ts"])
             spark.conf.set(
                 "spark.sql.parquet.outputTimestampType", "INT96")
             try:
-                sdf.write.parquet(p)
+                sdf.coalesce(1).write.parquet(d)
             finally:
                 spark.conf.set(
                     "spark.sql.parquet.outputTimestampType",
@@ -100,7 +105,10 @@ class TestReadSource:
                 "us_ltz": ("us", "UTC"), "ms_ntz": ("ms", None),
             }[flavor]
             arr = pa.array(instants, type=pa.timestamp(unit, tz=tz))
-            pq.write_table(pa.table({"ts": arr}), p)
+            dpath.mkdir()
+            pq.write_table(pa.table({"ts": arr}),
+                           f"{d}/part-00000.parquet")
+        (part,) = glob.glob(f"{d}/*.parquet")
 
         from drune_spark.streaming.runner import _raw_stream, drain
 
@@ -108,13 +116,27 @@ class TestReadSource:
         if flavor == "ms_ntz":  # ms storage truncates sub-ms precision
             want = [t.replace(microsecond=t.microsecond // 1000 * 1000)
                     for t in instants]
-        for df in (read_parquet_nanos_safe(spark, p),
-                   drain(_raw_stream(spark, p).withWatermark("ts", "1 day"))):
-            assert dict(df.dtypes)["ts"] == "timestamp", flavor
-            got = sorted(r.ts for r in df.collect())
-            assert [t.replace(tzinfo=None) for t in got] == want, flavor
-            # event-time ops must accept it (this is what NTZ breaks)
-            df.selectExpr("unix_micros(ts)").collect()
+        # every read probes its path afresh, not the per-path cache
+        monkeypatch.setenv("SPARK_GRAFT_SCHEMA_CACHE", "0")
+        nanos_as_long = "spark.sql.legacy.parquet.nanosAsLong"
+        for warm in (False, True):
+            for p in (part, d):
+                case = (flavor, "warm" if warm else "cold", p)
+                if warm:
+                    spark.conf.set(nanos_as_long, "true")
+                else:
+                    spark.conf.unset(nanos_as_long)
+                batch = read_parquet_nanos_safe(spark, p)
+                stream = drain(
+                    _raw_stream(spark, p).withWatermark("ts", "1 day"))
+                for df in (batch, stream):
+                    assert dict(df.dtypes)["ts"] == "timestamp", case
+                    got = sorted(r.ts for r in df.collect())
+                    assert [t.replace(tzinfo=None) for t in got] == want, \
+                        case
+                    # event-time ops must accept it (this is what NTZ
+                    # breaks)
+                    df.selectExpr("unix_micros(ts)").collect()
 
     # r10 optimization: per-process schema caches (readers._NANOS_READ_CACHE
     # and __spark_entry__._SCHEMA_CACHE) skip the footer-inference job on

@@ -444,6 +444,20 @@ class TestObservedCounts:
         assert counts == self._eager_counts(spark, pipe)
         assert spark.read.parquet(out).count() == 3
 
+    def test_run_then_write_counts_ride_the_write(self, spark, jobs_in,
+                                                  tmp_path):
+        """read → run() → write(): no action fills run()'s cache, so the
+        write plans from the source and the counts ride it."""
+        pipe, out = self._pipeline(spark, tmp_path, [])
+        pipe.read()
+        pipe.run()
+        pipe.write()
+        counts, jobs = jobs_in("dq_run_write_counts",
+                               lambda: pipe.quality["s"].counts)
+        assert jobs == []
+        assert counts == self._eager_counts(spark, pipe)
+        assert spark.read.parquet(out).count() == 3
+
     def test_partial_action_before_write_is_recounted(self, spark, tmp_path):
         pipe, _ = self._pipeline(spark, tmp_path, [])
         pipe.read()

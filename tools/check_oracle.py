@@ -42,6 +42,8 @@ import duckdb
 WATCHED = (
     "spark.sql.shuffle.partitions",
     "spark.sql.streaming.stateStore.providerClass",
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
+    "spark.sql.legacy.parquet.nanosAsLong",
 )
 
 
